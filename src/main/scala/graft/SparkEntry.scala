@@ -2949,9 +2949,9 @@ object SparkEntry {
         signalLabel.as("label"))
       val m = Slope.fit(df, "features", "label",
         SlopeParams(family = "gaussian", nSigma = 40))
-      // scoring side spread (r17): the 40-step linpred explode +
-      // per-step aggregation ran on the 3-split scan layout — see
-      // q_slope_predict; verified value-identical vs the oracle.
+      // the scan has 3 splits; the repartition spreads the per-row
+      // scoring pass (40 linear predictors per row) over OpParallelism
+      // tasks
       val scores = SlopeScore.scoreMany(m, df.repartition(OpParallelism),
         "features", "label", Seq("mse", "mae"))
       val mse = scores("mse")

@@ -79,33 +79,9 @@ object SlopeCv {
     // imposes), and a cell's train multiset is identical either way, so
     // the fitted values are bit-for-bit unchanged. Above the gate every
     // cell fit stays fully distributed.
-    def toVec(a: Any): org.apache.spark.ml.linalg.Vector = a match {
-      case v: org.apache.spark.ml.linalg.Vector => v
-      case s: scala.collection.Seq[_] =>
-        org.apache.spark.ml.linalg.Vectors.dense(
-          s.map(_.asInstanceOf[Double]).toArray)
-      case other => throw new IllegalArgumentException(
-        s"unsupported features type: ${other.getClass}")
-    }
     val headRow = withFolds.take(1)
     require(headRow.nonEmpty, "empty input")
-    val pFeat = toVec(headRow(0).get(0)).size
-    // project through the SAME casts Slope.fit applies before its own
-    // collect, so slice values (and the content-sort keys derived from
-    // them) are identical to what a per-cell fit would see
-    val featCast = df.schema(featuresCol).dataType match {
-      case _: org.apache.spark.sql.types.ArrayType =>
-        col(featuresCol).cast("array<double>")
-      case _ => col(featuresCol)
-    }
-    val labCast = params.family match {
-      case "binomial" | "multinomial" => col(labelCol).cast("string")
-      case _ => df.schema(labelCol).dataType match {
-        case _: org.apache.spark.sql.types.ArrayType =>
-          col(labelCol).cast("array<double>")
-        case _ => col(labelCol).cast("double")
-      }
-    }
+    val pFeat = Slope.toVec(headRow(0).get(0)).size
     // vectorize and content-sort the shared collect ONCE: the r11
     // scale gate caught per-cell toVec + sortRowsInPlace re-doing
     // O(n log n) work (and O(n) vector allocation) number*repeats*|qs|
@@ -119,10 +95,12 @@ object SlopeCv {
         Array[Any], Array[Array[Int]]) =
       if (withFolds.count() * pFeat.toLong <=
             Slope.effectiveLocalCellLimit(params)) {
-        val rows = withFolds.select(
-          (featCast +: labCast +:
-            (0 until repeats).map(r => col(s"__fold_$r"))): _*).collect()
-        val xs = rows.map(r => toVec(r.get(0)))
+        // project through the SAME casts Slope.fit applies before its
+        // own collect, so slice values (and the content-sort keys
+        // derived from them) are identical to what a per-cell fit sees
+        val rows = Slope.selectFrame(withFolds, featuresCol, labelCol, family,
+          (0 until repeats).map(r => col(s"__fold_$r"))).collect()
+        val xs = rows.map(r => Slope.toVec(r.get(0)))
         val ys: Array[Any] = rows.map(_.get(1))
         val folds = rows.map(r =>
           Array.tabulate(repeats)(i => r.getInt(2 + i)))
@@ -145,22 +123,26 @@ object SlopeCv {
         params.copy(q = Some(qs.head)))
     val sigma = fullFit.sigma
 
+    // A local cell fits AND scores from the shared collect: its
+    // held-out rows go through the same scoring kernel scoreMany runs,
+    // on the driver, so the cell launches no Spark job.
     def runCell(cell: (Double, Int, Int)): Seq[((Double, String), Array[Double])] = {
       val (q, rep, fold) = cell
-      val foldCol = col(s"__fold_$rep")
-      val test = withFolds.filter(foldCol === fold)
       val cellParams = params.copy(q = Some(q), sigma = Some(sigma))
-      val m =
+      val scores =
         if (localData != null) {
           val (xsAll, ysAll, foldsAll) = localData
-          val keep = Array.range(0, xsAll.length)
-            .filter(i => foldsAll(i)(rep) != fold)
-          Slope.fitLocal(keep.map(xsAll), keep.map(ysAll), cellParams)
+          val (train, test) = Array.range(0, xsAll.length)
+            .partition(i => foldsAll(i)(rep) != fold)
+          val m = Slope.fitLocal(train.map(xsAll), train.map(ysAll), cellParams)
+          SlopeScore.scoreRows(m, test.map(xsAll), test.map(ysAll), ms)
         } else {
-          Slope.fit(withFolds.filter(foldCol =!= fold), featuresCol, labelCol,
-            cellParams)
+          val foldCol = col(s"__fold_$rep")
+          val m = Slope.fit(withFolds.filter(foldCol =!= fold), featuresCol,
+            labelCol, cellParams)
+          SlopeScore.scoreMany(m, withFolds.filter(foldCol === fold),
+            featuresCol, labelCol, ms)
         }
-      val scores = SlopeScore.scoreMany(m, test, featuresCol, labelCol, ms)
       ms.map(measure => ((q, measure), scores(measure)))
     }
 

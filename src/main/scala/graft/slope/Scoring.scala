@@ -1,16 +1,22 @@
 package graft.slope
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Model scoring over a DataFrame (reference `R/score.R`): per-path-step
   * mse / mae / deviance / misclass / AUC with the reference's
   * family-measure validity matrix (`R/trainOwl.R:74-79`).
   *
-  * Plan shape: one narrow map producing per-step contributions, an
-  * explode to (step, ...) rows, then a groupBy(step) aggregation —
-  * map-side combine reduces every partition to nSteps rows, so the
-  * shuffle is tiny at any scale. AUC aggregates per distinct
+  * Plan shape: every measure except AUC comes out of ONE per-row
+  * kernel ([[StepErrors]]). It computes a row's linear predictor at
+  * every path step over the row's nonzeros, applies the family's
+  * per-measure formula, and adds the results into a (measure x step)
+  * buffer plus a row count. A DataFrame is scored by one
+  * `treeAggregate` of that kernel (combiner-only: no explode, no
+  * shuffle, nMeasures x nSteps + 1 doubles per task result);
+  * driver-resident rows (a local CV cell's held-out fold) run the same
+  * kernel in a loop, with no Spark job. AUC aggregates per distinct
   * probability first (midrank identity), never a global row rank.
   */
 object SlopeScore {
@@ -21,96 +27,67 @@ object SlopeScore {
     "poisson" -> Seq("mse", "mae"),
     "multinomial" -> Seq("mse", "mae", "deviance"))
 
-  /** Score several measures in ONE data pass each family allows
-    * (AUC needs its own ranked aggregation and runs separately).
-    * Returns measure -> one value per path step. */
-  def scoreMany(model: SlopeModel, df: DataFrame, featuresCol: String,
-                labelCol: String, measures: Seq[String]): Map[String, Array[Double]] = {
+  /** Validated, de-duplicated measures split into (auc, kernel). */
+  private def splitMeasures(model: SlopeModel, measures: Seq[String])
+    : (Seq[String], Seq[String]) = {
     val valid = ValidMeasures(model.family)
     measures.foreach(m => require(valid.contains(m),
       s"measure $m invalid for family ${model.family}; valid: ${valid.mkString(", ")}"))
-    val (aucMs, aggMs) = measures.distinct.partition(_ == "auc")
-    val aggResults: Map[String, Array[Double]] =
-      if (aggMs.isEmpty) Map.empty
-      else {
-        val scored = SlopeServe.predictions(model, df, featuresCol,
-          if (model.family == "gaussian" || model.family == "poisson") Seq("link")
-          else Seq("response"))
-        val e = explodedErrors(model, scored, labelCol)
-        val aggCols = aggMs.map(m => measureAgg(model, m).as(m))
-        val rows = e.groupBy("step").agg(aggCols.head, aggCols.tail: _*)
-          .orderBy("step").collect()
-        aggMs.map(m => m -> rows.map(_.getAs[Double](m))).toMap
-      }
-    aggResults ++
-      aucMs.map(m => m -> scoreAuc(model, df, featuresCol, labelCol))
+    measures.distinct.partition(_ == "auc")
   }
 
-  /** Per-row exploded (step, ...) frame feeding [[measureAgg]]. */
-  private def explodedErrors(model: SlopeModel, scored: DataFrame,
-                             labelCol: String): DataFrame = model.family match {
-    case "gaussian" if model.m > 1 =>
-      // multi-task: per-row length-m error vector; measures below
-      // average over all n*m cells (mean over the error matrix)
-      val y = col(labelCol).cast("array<double>")
-      scored.select(y.as("ya"), posexplode(col("linpred")).as(Seq("step", "lp")))
-        .select(col("step"),
-          zip_with(col("lp"), col("ya"), (l, t) => l - t).as("errs"))
-    case "gaussian" | "poisson" =>
-      val y = col(labelCol).cast("double")
-      scored.select(y.as("y"), posexplode(col("linpred")).as(Seq("step", "lp")))
-        .select(col("step"), (element_at(col("lp"), 1) - col("y")).as("err"))
-    case "binomial" =>
-      val y2 = when(col(labelCol).cast("string") === model.classNames(1), 1.0)
-        .otherwise(0.0)
-      scored.select(y2.as("y2"), posexplode(col("response")).as(Seq("step", "r")))
-        .select(col("step"), col("y2"), element_at(col("r"), 1).as("p"))
-    case "multinomial" =>
-      val names = array(model.classNames.map(lit(_)): _*)
-      val yIdx = array_position(names, col(labelCol).cast("string")).cast("int")
-      scored.select(yIdx.as("yi"), posexplode(col("response")).as(Seq("step", "r")))
+  /** Score several measures; returns measure -> one value per path step.
+    * Every non-AUC measure shares ONE pass over the rows; AUC needs its
+    * own ranked aggregation and runs separately.
+    *
+    * Counted rows: every row whose features and label are both non-null.
+    * Rows with a null feature vector or a null label are skipped in
+    * every family and are not in any measure's denominator, AUC's
+    * included (for
+    * binomial and multinomial this is a change: a null label used to
+    * count as the first class / as no class). A label that is not one
+    * of the model's classes still counts (binomial: the first class;
+    * multinomial: no class). With no counted rows every value is NaN. */
+  def scoreMany(model: SlopeModel, df: DataFrame, featuresCol: String,
+                labelCol: String, measures: Seq[String]): Map[String, Array[Double]] = {
+    val (aucMs, sumMs) = splitMeasures(model, measures)
+    kernelSums(model, sumMs) { kernel =>
+      Slope.selectFrame(df, featuresCol, labelCol, model.family).rdd
+        .treeAggregate(kernel.zero)(
+          (buf, r) =>
+            if (r.isNullAt(0) || r.isNullAt(1)) buf
+            else kernel.add(buf, Slope.toVec(r.get(0)), r.get(1)),
+          kernel.merge)
+    } ++ aucMs.map(m => m -> scoreAuc(model, df, featuresCol, labelCol))
   }
 
-  /** Aggregation expression for one non-AUC measure over the exploded
-    * frame (same formulas as [[score]]). */
-  private def measureAgg(model: SlopeModel, measure: String)
-    : org.apache.spark.sql.Column = model.family match {
-    case "gaussian" if model.m > 1 => measure match {
-      case "mse" => avg(aggregate(transform(col("errs"), e => e * e),
-        lit(0.0), (a, v) => a + v) / model.m)
-      case "mae" => avg(aggregate(transform(col("errs"), e => abs(e)),
-        lit(0.0), (a, v) => a + v) / model.m)
-    }
-    case "gaussian" | "poisson" => measure match {
-      case "mse" => avg(col("err") * col("err"))
-      case "mae" => avg(abs(col("err")))
-    }
-    case "binomial" => measure match {
-      case "mse" => avg(pow(col("p") + (lit(1.0) - col("y2")) - 1.0, 2) +
-        pow(col("p") - col("y2"), 2))
-      case "mae" => avg(abs(col("p") + (lit(1.0) - col("y2")) - 1.0) +
-        abs(col("p") - col("y2")))
-      case "misclass" => avg(when((lit(1.0) - col("y2")) === 1.0 && col("p") > 0.5, 1.0)
-        .when(col("y2") === 1.0 && col("p") <= 0.5, 1.0).otherwise(0.0))
-      case "deviance" =>
-        val pc = least(greatest(col("p"), lit(1e-5)), lit(1.0 - 1e-5))
-        avg(lit(-2.0) * ((lit(1.0) - col("y2")) * log(lit(1.0) - pc) +
-          col("y2") * log(pc)))
-    }
-    case "multinomial" =>
-      val probs = col("r")
-      val yOneHot = transform(sequence(lit(1), lit(model.nClasses)),
-        i => when(i === col("yi"), 1.0).otherwise(0.0))
-      measure match {
-        case "mse" => avg(aggregate(zip_with(probs, yOneHot, (p, y) => pow(p - y, 2)),
-          lit(0.0), (a, v) => a + v) / model.nClasses)
-        case "mae" => avg(aggregate(zip_with(probs, yOneHot, (p, y) => abs(p - y)),
-          lit(0.0), (a, v) => a + v) / model.nClasses)
-        case "deviance" => avg(aggregate(zip_with(probs, yOneHot, (p, y) =>
-          lit(-2.0) * y * log(least(greatest(p, lit(1e-5)), lit(1.0 - 1e-5)))),
-          lit(0.0), (a, v) => a + v))
+  /** [[scoreMany]] over driver-resident rows, with no Spark job: `xs`
+    * and `ys` carry the casts `Slope.selectFrame` applies (SlopeCv's
+    * shared collect). Same kernel, same null-row rule; AUC uses the
+    * same midrank estimator as the distributed plan. */
+  private[slope] def scoreRows(model: SlopeModel, xs: Array[Vector], ys: Array[Any],
+                               measures: Seq[String]): Map[String, Array[Double]] = {
+    val (aucMs, sumMs) = splitMeasures(model, measures)
+    kernelSums(model, sumMs) { kernel =>
+      var buf = kernel.zero
+      var i = 0
+      while (i < xs.length) {
+        if (xs(i) != null && ys(i) != null) buf = kernel.add(buf, xs(i), ys(i))
+        i += 1
       }
+      buf
+    } ++ aucMs.map(m => m -> aucRows(model, xs, ys))
   }
+
+  /** Per-step means of the kernel measures, from the buffer `sum`
+    * accumulates over the counted rows. */
+  private def kernelSums(model: SlopeModel, measures: Seq[String])(
+      sum: StepErrors => Array[Double]): Map[String, Array[Double]] =
+    if (measures.isEmpty) Map.empty
+    else {
+      val kernel = new StepErrors(model, measures)
+      kernel.result(sum(kernel))
+    }
 
   /** Score one measure; returns one value per path step. */
   def score(model: SlopeModel, df: DataFrame, featuresCol: String,
@@ -153,11 +130,6 @@ object SlopeScore {
         (sum("w1") * sum("w0"))).as("auc_w"))
   }
 
-  /** Scalable midrank AUC per step: aggregate per distinct probability
-    * first (midrank of a tie group = count-before + (n+1)/2), then a
-    * per-step range-bucketed prefix sum for the running count
-    * ([[graft.functions.PrefixSum]]) — a step's |distinct probs| ≈ n
-    * rows never funnel through one task (R/score.R:137-150 rank form). */
   /** Reliability curve + expected calibration error — the audit a
     * learned quality filter needs before its scores become sampling
     * WEIGHTS (an uncalibrated filter silently over/under-samples).
@@ -193,10 +165,20 @@ object SlopeScore {
     perBin.crossJoin(broadcast(ece))
   }
 
+  /** Scalable midrank AUC per step: aggregate per distinct probability
+    * first (midrank of a tie group = count-before + (n+1)/2), then a
+    * per-step range-bucketed prefix sum for the running count
+    * ([[graft.functions.PrefixSum]]) — a step's |distinct probs| ≈ n
+    * rows never funnel through one task (R/score.R:137-150 rank form).
+    * Counts the same rows as [[scoreMany]]'s kernel. */
   private def scoreAuc(model: SlopeModel, df: DataFrame, featuresCol: String,
                        labelCol: String): Array[Double] = {
-    val scored = SlopeServe.predictions(model, df, featuresCol, Seq("response"))
-    val e = explodedErrors(model, scored, labelCol)
+    val counted = df.filter(col(featuresCol).isNotNull && col(labelCol).isNotNull)
+    val y2 = when(col(labelCol).cast("string") === model.classNames(1), 1.0)
+      .otherwise(0.0)
+    val e = SlopeServe.predictions(model, counted, featuresCol, Seq("response"))
+      .select(y2.as("y2"), posexplode(col("response")).as(Seq("step", "r")))
+      .select(col("step"), col("y2"), element_at(col("r"), 1).as("p"))
     val g = e.groupBy("step", "p")
       .agg(count(lit(1)).as("n"), sum("y2").as("n1"))
     graft.functions.PrefixSum.inclusive(g, Seq("step"), "p", "n", "cn")
@@ -208,4 +190,195 @@ object SlopeScore {
         (sum("n1") * (sum("n") - sum("n1")))).as("v"))
       .orderBy("step").collect().map(_.getDouble(1))
   }
+
+  /** [[scoreAuc]]'s estimator over driver-resident rows, in its
+    * Mann-Whitney form: each positive scores the negatives below its
+    * probability plus half the negatives tied with it, which equals the
+    * midrank sum minus n1(n1+1)/2. Two primitive sorts per step and one
+    * merge walk. */
+  private def aucRows(model: SlopeModel, xs: Array[Vector],
+                      ys: Array[Any]): Array[Double] = {
+    val counted = xs.indices.filter(i => xs(i) != null && ys(i) != null)
+    val (pos, neg) = counted.partition(i => ys(i).toString == model.classNames(1))
+    Array.tabulate(model.nSteps) { s =>
+      def probs(rows: IndexedSeq[Int]) = {
+        val pr = rows.map(i =>
+          1.0 / (1.0 + math.exp(-model.linearPredictor(xs(i), s)(0)))).toArray
+        java.util.Arrays.sort(pr)
+        pr
+      }
+      val (p1, p0) = (probs(pos), probs(neg))
+      var below = 0 // negatives < p
+      var upTo = 0  // negatives <= p
+      var acc = 0.0
+      for (p <- p1) {
+        while (below < p0.length && p0(below) < p) below += 1
+        upTo = math.max(upTo, below)
+        while (upTo < p0.length && p0(upTo) == p) upTo += 1
+        acc += below + (upTo - below) / 2.0
+      }
+      acc / (p1.length.toDouble * p0.length)
+    }
+  }
+}
+
+/** The per-row kernel behind [[SlopeScore.scoreMany]]: for one row it
+  * computes the linear predictor at every path step
+  * ([[BackendKernels.linPred]], over the row's nonzeros) and adds each
+  * requested measure's per-row term into `buf(measure * nSteps + step)`;
+  * the last slot counts rows, and [[result]] divides by it. The
+  * per-measure formulas are the reference's (`R/score.R`): gaussian
+  * and poisson errors on the link scale, binomial and multinomial on
+  * the response scale, multi-task gaussian averaged over the m targets.
+  *
+  * Serializable so `treeAggregate` ships it to the tasks; the scratch
+  * arrays are transient, so each task's deserialized copy (and each
+  * driver-side instance) has its own. */
+private[slope] final class StepErrors(model: SlopeModel, measures: Seq[String])
+    extends Serializable {
+  import StepErrors._
+
+  private val nSteps = model.nSteps
+  private val m = model.m
+  private val p = model.p
+  private val nClasses = model.nClasses
+  private val nMeasures = measures.length
+  private val codes: Array[Int] = measures.map {
+    case "mse" => Mse
+    case "mae" => Mae
+    case "deviance" => Deviance
+    case "misclass" => Misclass
+  }.toArray
+  private val kind = model.family match {
+    case "gaussian" if m > 1 => MultiTask
+    case "gaussian" | "poisson" => Link
+    case "binomial" => Binomial
+    case "multinomial" => Multinomial
+  }
+  private val w = linPredWeights(model)
+  private val b = model.intercepts
+  private val positive = model.classNames.lift(1).orNull // binomial's class 1
+  private val classIndex: Map[String, Int] = model.classNames.zipWithIndex.toMap
+
+  @transient private lazy val lp = new Array[Double](m)
+  @transient private lazy val prob = new Array[Double](m + 1)
+
+  def zero: Array[Double] = new Array[Double](nMeasures * nSteps + 1)
+
+  /** Adds one row (non-null features and label) to `buf`. */
+  def add(buf: Array[Double], x: Vector, y: Any): Array[Double] = {
+    require(x.size == p, s"feature vector length ${x.size} != model's $p")
+    val yv = if (kind == Link) Slope.anyToDouble(y) else 0.0
+    val ya = if (kind == MultiTask) Slope.anyToDoubleArray(y) else null
+    require(ya == null || ya.length == m,
+      s"label array length ${ya.length} != model's $m targets")
+    val y2 = if (kind == Binomial && y.toString == positive) 1.0 else 0.0
+    val yi = if (kind == Multinomial) classIndex.getOrElse(y.toString, -1) else -1
+    var s = 0
+    while (s < nSteps) {
+      BackendKernels.linPred(x, w(s), b(s), lp)
+      if (kind == Binomial) prob(0) = 1.0 / (1.0 + math.exp(-lp(0)))
+      else if (kind == Multinomial) softmax()
+      var i = 0
+      while (i < nMeasures) {
+        buf(i * nSteps + s) += term(codes(i), yv, ya, y2, yi)
+        i += 1
+      }
+      s += 1
+    }
+    buf(nMeasures * nSteps) += 1.0
+    buf
+  }
+
+  def merge(b1: Array[Double], b2: Array[Double]): Array[Double] = {
+    var i = 0
+    while (i < b1.length) { b1(i) += b2(i); i += 1 }
+    b1
+  }
+
+  /** measure -> per-step mean over the counted rows (NaN if none). */
+  def result(buf: Array[Double]): Map[String, Array[Double]] = {
+    val n = buf(nMeasures * nSteps)
+    measures.indices.map(i =>
+      measures(i) -> Array.tabulate(nSteps)(s => buf(i * nSteps + s) / n)).toMap
+  }
+
+  /** Class probabilities with the reference class's 0 logit appended. */
+  private def softmax(): Unit = {
+    var mx = 0.0
+    var k = 0
+    while (k < m) { if (lp(k) > mx) mx = lp(k); k += 1 }
+    var tot = 0.0
+    k = 0
+    while (k <= m) {
+      prob(k) = math.exp((if (k < m) lp(k) else 0.0) - mx)
+      tot += prob(k)
+      k += 1
+    }
+    k = 0
+    while (k <= m) { prob(k) /= tot; k += 1 }
+  }
+
+  /** One row's term for one measure at the step held in `lp` / `prob`. */
+  private def term(code: Int, yv: Double, ya: Array[Double], y2: Double,
+                   yi: Int): Double = kind match {
+    case Link =>
+      val err = lp(0) - yv
+      if (code == Mse) err * err else math.abs(err)
+    case MultiTask =>
+      var acc = 0.0
+      var k = 0
+      while (k < m) {
+        val e = lp(k) - ya(k)
+        acc += (if (code == Mse) e * e else math.abs(e))
+        k += 1
+      }
+      acc / m
+    case Binomial =>
+      val pr = prob(0)
+      // mse/mae sum over the reference's two response columns (class 0
+      // and class 1 probability against their one-hot labels)
+      code match {
+        case Mse => sq(pr + (1.0 - y2) - 1.0) + sq(pr - y2)
+        case Mae => math.abs(pr + (1.0 - y2) - 1.0) + math.abs(pr - y2)
+        case Misclass =>
+          if ((1.0 - y2) == 1.0 && pr > 0.5 || y2 == 1.0 && pr <= 0.5) 1.0 else 0.0
+        case Deviance =>
+          val pc = clamp(pr)
+          -2.0 * ((1.0 - y2) * math.log(1.0 - pc) + y2 * math.log(pc))
+      }
+    case Multinomial =>
+      var acc = 0.0
+      var c = 0
+      while (c < nClasses) {
+        val yc = if (c == yi) 1.0 else 0.0
+        acc += (code match {
+          case Mse => sq(prob(c) - yc)
+          case Mae => math.abs(prob(c) - yc)
+          case Deviance => -2.0 * yc * math.log(clamp(prob(c)))
+        })
+        c += 1
+      }
+      if (code == Deviance) acc else acc / nClasses
+  }
+}
+
+private object StepErrors {
+  final val Mse = 0
+  final val Mae = 1
+  final val Deviance = 2
+  final val Misclass = 3
+
+  final val Link = 0
+  final val MultiTask = 1
+  final val Binomial = 2
+  final val Multinomial = 3
+
+  /** linPred's layout: w(step)(k) is coefficient column k of that step. */
+  private def linPredWeights(model: SlopeModel): Array[Array[Array[Double]]] =
+    Array.tabulate(model.nSteps, model.m)((s, k) => java.util.Arrays.copyOfRange(
+      model.coefs(s), k * model.p, (k + 1) * model.p))
+
+  private def sq(v: Double): Double = v * v
+  private def clamp(pr: Double): Double = math.min(math.max(pr, 1e-5), 1.0 - 1e-5)
 }

@@ -2,7 +2,7 @@ package graft.slope
 
 import graft.slope.kernels.{LambdaSequence, Screening}
 import org.apache.spark.ml.linalg.{DenseVector, SparseVector, Vector, Vectors}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{avg, col}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
 
@@ -143,12 +143,14 @@ object Slope {
     }
 
   /** The cast projection `fit` consumes: features as Vector or
-    * array<double>, label cast per family — ONE definition so
-    * [[collectLocal]] and `fit` can never drift. */
-  private def selectFrame(df: DataFrame, featuresCol: String,
-                          labelCol: String, params: SlopeParams): DataFrame = {
-    val labelIsClass =
-      params.family == "binomial" || params.family == "multinomial"
+    * array<double> (column `f`), label cast per family (column `l`),
+    * then any `extra` columns — ONE definition so [[collectLocal]],
+    * `fit`, SlopeCv's shared collect and SlopeScore's scoring pass can
+    * never drift. */
+  private[slope] def selectFrame(df: DataFrame, featuresCol: String,
+                                 labelCol: String, family: String,
+                                 extra: Seq[Column] = Nil): DataFrame = {
+    val labelIsClass = family == "binomial" || family == "multinomial"
     val labelIsArray = df.schema(labelCol).dataType.isInstanceOf[ArrayType]
     val featExpr = df.schema(featuresCol).dataType match {
       case _: ArrayType => col(featuresCol).cast(ArrayType(DoubleType))
@@ -158,10 +160,10 @@ object Slope {
       if (labelIsClass) col(labelCol).cast(StringType)
       else if (labelIsArray) col(labelCol).cast(ArrayType(DoubleType))
       else col(labelCol).cast(DoubleType)
-    df.select(featExpr.as("f"), labExpr.as("l"))
+    df.select(featExpr.as("f") +: labExpr.as("l") +: extra: _*)
   }
 
-  private def toVec(a: Any): Vector = a match {
+  private[slope] def toVec(a: Any): Vector = a match {
     case v: Vector => v
     case s: scala.collection.Seq[_] =>
       Vectors.dense(s.map(_.asInstanceOf[Double]).toArray)
@@ -184,7 +186,7 @@ object Slope {
   def collectLocal(df: DataFrame, featuresCol: String, labelCol: String,
                    params: SlopeParams = SlopeParams())
       : (Array[Vector], Array[Any]) = {
-    val rows = selectFrame(df, featuresCol, labelCol, params).collect()
+    val rows = selectFrame(df, featuresCol, labelCol, params.family).collect()
     require(rows.nonEmpty, "empty input")
     val xs = new Array[Vector](rows.length)
     val rawY = new Array[Any](rows.length)
@@ -217,7 +219,7 @@ object Slope {
       s"array-typed (multi-target) labels are only supported for " +
         s"family=gaussian, got ${params.family}")
 
-    val sel = selectFrame(df, featuresCol, labelCol, params)
+    val sel = selectFrame(df, featuresCol, labelCol, params.family)
 
     val first = sel.take(1)
     require(first.nonEmpty, "empty input")
@@ -420,7 +422,7 @@ object Slope {
       0
   }
 
-  private def anyToDouble(a: Any): Double = a match {
+  private[slope] def anyToDouble(a: Any): Double = a match {
     case d: Double => d
     case f: Float => f.toDouble
     case i: Int => i.toDouble
@@ -434,7 +436,7 @@ object Slope {
   }
 
   /** Multi-target label row -> Array[Double] (Spark hands back Seq). */
-  private def anyToDoubleArray(a: Any): Array[Double] = a match {
+  private[slope] def anyToDoubleArray(a: Any): Array[Double] = a match {
     case arr: Array[Double] => arr
     case s: scala.collection.Seq[_] => s.map(anyToDouble).toArray
     case other => throw new IllegalArgumentException(

@@ -1,5 +1,6 @@
 package graft.slope
 
+import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -179,22 +180,137 @@ class ServingSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"weights=1: $aOne vs ${unweighted(lastStep)}")
   }
 
-  test("score: gaussian mse matches manual computation") {
-    val (xs, ys) = fixture(5, 120, 3, "gaussian")
-    val model = Slope.fitLocal(xs, ys, SlopeParams(nSigma = 6))
-    import spark.implicits._
-    val df = xs.zip(ys).map { case (x, y) => (x.toArray, y.asInstanceOf[Double]) }
-      .toSeq.toDF("features", "label")
-    val mse = SlopeScore.score(model, df, "features", "label", "mse")
-    assert(mse.length == model.nSteps)
-    for (s <- 0 until model.nSteps) {
-      val manual = xs.indices.map { i =>
-        val e = model.linearPredictor(xs(i), s)(0) - ys(i).asInstanceOf[Double]
-        e * e
-      }.sum / xs.length
-      assert(math.abs(mse(s) - manual) < 1e-9, s"step $s: ${mse(s)} vs $manual")
+  /** Rows as a (features, label) frame, features in one of the three
+    * accepted encodings. Labels are Double, String or Array[Double];
+    * a null feature vector or label stays null. */
+  private def scoringFrame(xs: Array[Vector], ys: Array[Any],
+                           encoding: String) = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.types._
+    val featType = if (encoding == "array") ArrayType(DoubleType)
+      else org.apache.spark.ml.linalg.SQLDataTypes.VectorType
+    val labelType = ys(0) match {
+      case _: Double => DoubleType
+      case _: String => StringType
+      case _ => ArrayType(DoubleType)
     }
-    assert(mse.last < mse.head, "mse should improve along the path")
+    val rows = xs.indices.map { i =>
+      val f = if (xs(i) == null) null else encoding match {
+        case "array" => xs(i).toArray.toSeq
+        case "dense" => xs(i).toDense
+        case "sparse" => xs(i).toSparse
+      }
+      val y = ys(i) match {
+        case a: Array[Double] => a.toSeq
+        case other => other
+      }
+      org.apache.spark.sql.Row(f, y)
+    }
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("features", featType), StructField("label", labelType))))
+  }
+
+  test("score: every family's measures match a row-by-row reference") {
+    // features with exact zeros, so the sparse encoding has gaps
+    def sparsify(xs: Array[Vector]): Array[Vector] = xs.map(x =>
+      Vectors.dense(x.toArray.map(v => if (math.abs(v) < 0.4) 0.0 else v)))
+    def clamp(v: Double) = math.min(math.max(v, 1e-5), 1.0 - 1e-5)
+    val mtRng = new scala.util.Random(11)
+    val mtXs = sparsify(Array.fill(150)(
+      Vectors.dense(Array.fill(4)(mtRng.nextGaussian()))))
+    val mtYs: Array[Any] = mtXs.map(x => Array(
+      2.0 * x(0) - 1.5 * x(2) + 0.3 * mtRng.nextGaussian() + 1.0,
+      -3.0 * x(1) + 0.3 * mtRng.nextGaussian() - 2.0))
+    def problem(seed: Int, n: Int, family: String) = {
+      val (xs, ys) = fixture(seed, n, 4, family)
+      (sparsify(xs), ys)
+    }
+    val cases: Seq[(String, (Array[Vector], Array[Any]), Seq[String])] = Seq(
+      ("gaussian", problem(5, 120, "gaussian"), Seq("mse", "mae")),
+      ("binomial", problem(21, 200, "binomial"),
+        Seq("mse", "mae", "deviance", "misclass")),
+      ("poisson", problem(22, 200, "poisson"), Seq("mse", "mae")),
+      ("multinomial", problem(23, 240, "multinomial"), Seq("mse", "mae", "deviance")),
+      ("gaussian", (mtXs, mtYs), Seq("mse", "mae")))
+    for ((family, (xs, ys), measures) <- cases) {
+      val model = Slope.fitLocal(xs, ys, SlopeParams(family = family, nSigma = 6))
+      val tag = s"$family m=${model.m}"
+      // per-row terms, each measure's formula from R/score.R
+      def rowTerms(i: Int, s: Int): Map[String, Double] = {
+        val lp = model.linearPredictor(xs(i), s)
+        family match {
+          case "gaussian" | "poisson" =>
+            val y = ys(i) match {
+              case a: Array[Double] => a
+              case d => Array(d.asInstanceOf[Double])
+            }
+            val e = lp.indices.map(k => lp(k) - y(k))
+            Map("mse" -> e.map(v => v * v).sum / model.m,
+              "mae" -> e.map(math.abs).sum / model.m)
+          case "binomial" =>
+            val pr = 1.0 / (1.0 + math.exp(-lp(0)))
+            val y = if (ys(i) == model.classNames(1)) 1.0 else 0.0
+            Map("mse" -> 2 * (pr - y) * (pr - y),
+              "mae" -> 2 * math.abs(pr - y),
+              "deviance" -> -2 * (y * math.log(clamp(pr)) +
+                (1 - y) * math.log(1 - clamp(pr))),
+              "misclass" -> (if ((pr > 0.5) != (y == 1.0)) 1.0 else 0.0))
+          case "multinomial" =>
+            val logits = lp :+ 0.0
+            val ex = logits.map(v => math.exp(v - logits.max))
+            val pr = ex.map(_ / ex.sum)
+            val yi = model.classNames.indexOf(ys(i).toString)
+            val d = pr.indices.map(c => pr(c) - (if (c == yi) 1.0 else 0.0))
+            Map("mse" -> d.map(v => v * v).sum / model.nClasses,
+              "mae" -> d.map(math.abs).sum / model.nClasses,
+              "deviance" -> -2 * math.log(clamp(pr(yi))))
+        }
+      }
+      val reference = measures.map(m => m -> Array.tabulate(model.nSteps)(s =>
+        xs.indices.map(i => rowTerms(i, s)(m)).sum / xs.length)).toMap
+      for (encoding <- Seq("array", "dense", "sparse")) {
+        val got = SlopeScore.scoreMany(model, scoringFrame(xs, ys, encoding),
+          "features", "label", measures)
+        for (m <- measures; s <- 0 until model.nSteps)
+          assert(math.abs(got(m)(s) - reference(m)(s)) < 1e-9,
+            s"$tag $encoding $m step $s: ${got(m)(s)} vs ${reference(m)(s)}")
+      }
+      // the driver-array entry CV uses: same kernel, same values
+      val withAuc = if (family == "binomial") measures :+ "auc" else measures
+      val many = SlopeScore.scoreMany(model, scoringFrame(xs, ys, "array"),
+        "features", "label", withAuc)
+      val rows = SlopeScore.scoreRows(model, xs, ys, withAuc)
+      for (m <- withAuc; s <- 0 until model.nSteps)
+        assert(math.abs(rows(m)(s) - many(m)(s)) <=
+          1e-12 * math.max(1.0, math.abs(many(m)(s))),
+          s"$tag driver rows $m step $s: ${rows(m)(s)} vs ${many(m)(s)}")
+      if (family == "gaussian")
+        assert(many("mse").last < many("mse").head, s"$tag mse should improve along the path")
+    }
+  }
+
+  test("score: rows with a null label or null features are not counted") {
+    for (family <- Seq("gaussian", "binomial")) {
+      val (xs, ys) = fixture(24, 150, 3, family)
+      val model = Slope.fitLocal(xs, ys, SlopeParams(family = family, nSigma = 5))
+      val measures = SlopeScore.ValidMeasures(family)
+      // one null-feature row and one null-label row, each with a value
+      // that would move every measure if it were counted
+      val xsNull = xs :+ null :+ xs(1)
+      val ysNull = ys :+ ys(0) :+ null
+      val want = SlopeScore.scoreMany(model, scoringFrame(xs, ys, "array"),
+        "features", "label", measures)
+      val got = SlopeScore.scoreMany(model, scoringFrame(xsNull, ysNull, "array"),
+        "features", "label", measures)
+      val rows = SlopeScore.scoreRows(model, xsNull, ysNull, measures)
+      for (m <- measures; s <- 0 until model.nSteps) {
+        val tol = 1e-12 * math.max(1.0, math.abs(want(m)(s)))
+        assert(math.abs(got(m)(s) - want(m)(s)) <= tol,
+          s"$family $m step $s: ${got(m)(s)} vs ${want(m)(s)}")
+        assert(math.abs(rows(m)(s) - want(m)(s)) <= tol,
+          s"$family driver rows $m step $s: ${rows(m)(s)} vs ${want(m)(s)}")
+      }
+    }
   }
 
   test("score: binomial auc in [0.5, 1] and improves; invalid measure rejected") {
