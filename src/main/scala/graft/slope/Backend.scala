@@ -1,5 +1,7 @@
 package graft.slope
 
+import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.ml.linalg.{Vector, DenseVector, SparseVector}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
@@ -20,8 +22,12 @@ import org.apache.spark.storage.StorageLevel
   * `xCenter`/`xScale` use the same numbering with center 0 / scale 1 for
   * the intercept row.
   *
-  * Pass results are sums over rows, so a distributed `treeAggregate`
-  * and a local loop produce the same quantities (up to FP reorder).
+  * Pass results are sums over rows, so one distributed job per pass and
+  * a local loop produce the same quantities (up to FP reorder). Every
+  * call is a full data pass, so callers never ask twice for a point they
+  * already evaluated: the path loop hands its full-set evaluation to the
+  * next solve as its starting point, and FISTA reports the deviance from
+  * the evaluation it carries.
   */
 trait SlopeBackend {
   def n: Long
@@ -95,6 +101,39 @@ trait SlopeBackend {
 }
 
 private[slope] object BackendKernels extends Serializable {
+
+  /** `f(j, x_j)` for every stored entry of `x`, in index order: every
+    * slot of a dense vector, the listed ones of a sparse vector. Spark's
+    * `Vector.foreachActive` walks an iterator of `(index, value)` tuples
+    * built per entry; this loops over the backing arrays in the same
+    * order, so every sum built on it is unchanged. */
+  def foreachStored(x: Vector)(f: (Int, Double) => Unit): Unit = x match {
+    case d: DenseVector =>
+      val v = d.values
+      var j = 0
+      while (j < v.length) { f(j, v(j)); j += 1 }
+    case s: SparseVector =>
+      val idx = s.indices; val v = s.values
+      var t = 0
+      while (t < idx.length) { f(idx(t), v(t)); t += 1 }
+  }
+
+  /** Adds one row's gradient terms at pseudo-gradient `pg` into `buf`:
+    * s0 (m) at `from`, then A = x_j * pg_k over active feature slots
+    * (a x m, column-major) — the raw form [[standardizeGrad]] folds. */
+  def gradRowUpdate(x: Vector, pg: Array[Double], slots: Array[Int],
+                    buf: Array[Double], from: Int, a: Int, m: Int): Unit = {
+    var k = 0
+    while (k < m) { buf(from + k) += pg(k); k += 1 }
+    val aFrom = from + m
+    foreachStored(x) { (j, v) =>
+      val slot = slots(j)
+      if (slot >= 0) {
+        var kk = 0
+        while (kk < m) { buf(aFrom + kk * a + slot) += v * pg(kk); kk += 1 }
+      }
+    }
+  }
 
   /** lp_k = b_k + sum_j w_jk x_j computed over nnz only. */
   def linPred(x: Vector, w: Array[Array[Double]], b: Array[Double],
@@ -185,7 +224,7 @@ private[slope] object BackendKernels extends Serializable {
                     tmpSlot: Array[Int], tmpVal: Array[Double]): Unit = {
     val gLen = a * a
     var cnt = 0
-    x.foreachActive { (j, v) =>
+    foreachStored(x) { (j, v) =>
       val s = slots(j)
       if (s >= 0 && v != 0.0) { tmpSlot(cnt) = s; tmpVal(cnt) = v; cnt += 1 }
     }
@@ -267,11 +306,201 @@ private[slope] object BackendKernels extends Serializable {
   }
 }
 
+/** One distributed solver pass: `apply` folds one partition's rows into
+  * a fresh accumulator (per-task scratch lives there, once per task),
+  * `merge` combines two accumulators. Every pass is a named top-level
+  * class holding only what its tasks read, so launching one costs
+  * Spark's serializability check and nothing more: the closure cleaner
+  * returns at once for a class that is not a lambda, and no pass
+  * captures the backend. */
+private[slope] abstract class RowPass
+    extends ((TaskContext, Iterator[(Vector, Array[Double])]) => Array[Double])
+    with Serializable {
+  def zero(): Array[Double]
+  def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
+    var i = 0
+    while (i < a.length) { a(i) += b(i); i += 1 }
+    a
+  }
+}
+
+/** Effective weights/offsets of one evaluated point
+  * ([[BackendKernels.effectiveWeights]]). */
+private[slope] final class PointWeights(val w: Array[Array[Double]], val b: Array[Double])
+  extends Serializable
+
+/** The driver state of one evaluation pass — its points and the
+  * raw-feature -> active-slot map — shipped as ONE broadcast. */
+private[slope] final class EvalState(val points: Array[PointWeights], val slots: Array[Int])
+  extends Serializable
+
+/** Feature sums, row count and sparse-row count: [sum(p), n, nSparse]. */
+private[slope] final class MeansPass(p: Int) extends RowPass {
+  def zero(): Array[Double] = new Array[Double](p + 2)
+  def apply(ctx: TaskContext, rows: Iterator[(Vector, Array[Double])]): Array[Double] = {
+    val acc = zero()
+    while (rows.hasNext) {
+      // row shapes were validated at ingest (Slope.fit's row mapper)
+      val x = rows.next()._1
+      BackendKernels.foreachStored(x)((j, v) => acc(j) += v)
+      acc(p) += 1
+      if (x.isInstanceOf[SparseVector]) acc(p + 1) += 1
+    }
+    acc
+  }
+}
+
+/** sum_i |x_ij - c_j| per feature. Uncentered (`center` None) only the
+  * stored entries contribute. */
+private[slope] final class L1Pass(p: Int, center: Option[Broadcast[Array[Double]]])
+    extends RowPass {
+  def zero(): Array[Double] = new Array[Double](p)
+  def apply(ctx: TaskContext, rows: Iterator[(Vector, Array[Double])]): Array[Double] = {
+    val acc = zero()
+    val c = center.map(_.value).orNull
+    while (rows.hasNext) {
+      val x = rows.next()._1
+      if (c == null) BackendKernels.foreachStored(x)((j, v) => acc(j) += math.abs(v))
+      else { var j = 0; while (j < p) { acc(j) += math.abs(x(j) - c(j)); j += 1 } }
+    }
+    acc
+  }
+}
+
+/** Sufficient statistics of the l2 / sd / max scales:
+  * [sumsq(p), max(p), n]; implicit zeros of sparse rows count in max. */
+private[slope] final class SpreadPass(p: Int) extends RowPass {
+  def zero(): Array[Double] = {
+    val z = new Array[Double](2 * p + 1)
+    java.util.Arrays.fill(z, p, 2 * p, Double.NegativeInfinity)
+    z
+  }
+  def apply(ctx: TaskContext, rows: Iterator[(Vector, Array[Double])]): Array[Double] = {
+    val acc = zero()
+    while (rows.hasNext) {
+      val x = rows.next()._1
+      BackendKernels.foreachStored(x)((j, v) => acc(j) += v * v)
+      x match {
+        case d: DenseVector =>
+          var j = 0
+          while (j < p) { if (d.values(j) > acc(p + j)) acc(p + j) = d.values(j); j += 1 }
+        case s: SparseVector =>
+          var j = 0
+          while (j < p) { if (0.0 > acc(p + j)) acc(p + j) = 0.0; j += 1 }
+          BackendKernels.foreachStored(s)((j, v) => if (v > acc(p + j)) acc(p + j) = v)
+      }
+      acc(2 * p) += 1
+    }
+    acc
+  }
+  override def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
+    var j = 0
+    while (j < p) {
+      a(j) += b(j)
+      if (b(p + j) > a(p + j)) a(p + j) = b(p + j)
+      j += 1
+    }
+    a(2 * p) += b(2 * p)
+    a
+  }
+}
+
+/** Label moments per target: [sum(m), sumsq(m), n]. */
+private[slope] final class YMomentsPass(m: Int) extends RowPass {
+  def zero(): Array[Double] = new Array[Double](2 * m + 1)
+  def apply(ctx: TaskContext, rows: Iterator[(Vector, Array[Double])]): Array[Double] = {
+    val acc = zero()
+    while (rows.hasNext) {
+      val y = rows.next()._2
+      var k = 0
+      while (k < m) { acc(k) += y(k); acc(m + k) += y(k) * y(k); k += 1 }
+      acc(2 * m) += 1
+    }
+    acc
+  }
+}
+
+/** The fused evaluation pass behind `evalActive` (one point) and
+  * `evalPairActive` (two points). Buffer: the primal at every point but
+  * the last, then [primal, dual, s0(m), A(a*m)] at the last; the dual
+  * and gradient parts only when asked for. */
+private[slope] final class EvalPass(state: Broadcast[EvalState], nPoints: Int,
+                                    family: Family, a: Int, m: Int,
+                                    needDual: Boolean, needGrad: Boolean)
+    extends RowPass {
+  def zero(): Array[Double] =
+    new Array[Double](nPoints + 1 + (if (needGrad) m + a * m else 0))
+  def apply(ctx: TaskContext, rows: Iterator[(Vector, Array[Double])]): Array[Double] = {
+    val st = state.value
+    val last = nPoints - 1
+    val acc = zero()
+    val lp = new Array[Double](m)
+    val pg = new Array[Double](m)
+    while (rows.hasNext) {
+      val (x, y) = rows.next()
+      var t = 0
+      while (t <= last) {
+        BackendKernels.linPred(x, st.points(t).w, st.points(t).b, lp)
+        acc(t) += family.primalRow(y, lp)
+        t += 1
+      }
+      if (needDual) acc(last + 1) += family.dualRow(y, lp)
+      if (needGrad) {
+        family.pseudoGradientRow(y, lp, pg)
+        BackendKernels.gradRowUpdate(x, pg, st.slots, acc, last + 2, a, m)
+      }
+    }
+    acc
+  }
+}
+
+/** Raw Gram + X^T y accumulation ([[BackendKernels.gramRowUpdate]]). */
+private[slope] final class GramPass(slots: Broadcast[Array[Int]], a: Int, m: Int)
+    extends RowPass {
+  def zero(): Array[Double] = new Array[Double](a * a + a + a * m + m)
+  def apply(ctx: TaskContext, rows: Iterator[(Vector, Array[Double])]): Array[Double] = {
+    val acc = zero()
+    val s = slots.value
+    val tmpSlot = new Array[Int](a)
+    val tmpVal = new Array[Double](a)
+    while (rows.hasNext) {
+      val (x, y) = rows.next()
+      BackendKernels.gramRowUpdate(x, y, s, acc, a, m, tmpSlot, tmpVal)
+    }
+    acc
+  }
+}
+
+/** Raw X^T v over every coefficient row plus sum v: [A(pInt*m), vSum(m)]. */
+private[slope] final class XtvPass(rowV: Array[Double] => Array[Double], pInt: Int,
+                                   m: Int, fitIntercept: Boolean) extends RowPass {
+  def zero(): Array[Double] = new Array[Double](pInt * m + m)
+  def apply(ctx: TaskContext, rows: Iterator[(Vector, Array[Double])]): Array[Double] = {
+    val acc = zero()
+    val off = if (fitIntercept) 1 else 0
+    while (rows.hasNext) {
+      val (x, y) = rows.next()
+      val v = rowV(y)
+      var k = 0
+      while (k < m) { acc(pInt * m + k) += v(k); k += 1 }
+      BackendKernels.foreachStored(x) { (j, vx) =>
+        var kk = 0
+        while (kk < m) { acc(kk * pInt + j + off) += vx * v(kk); kk += 1 }
+      }
+    }
+    acc
+  }
+}
+
 /** Distributed backend over an RDD of (features, preprocessed labels).
-  * All passes are single `treeAggregate`s (depth 2) with broadcast
-  * coefficient state — the MLlib pattern (cf. Spark's
-  * `LeastSquaresAggregator`). Designed so a 1000-executor cluster does
-  * one shuffle-free map + tree reduction per solver pass.
+  * Every solver pass is ONE Spark job over the persisted rows, with the
+  * pass's driver state in one broadcast (the MLlib pattern, cf. Spark's
+  * `LeastSquaresAggregator`). Up to 64 partitions a pass is a plain
+  * `runJob` whose partition results merge on the driver as they arrive;
+  * wider inputs reduce through a `treeAggregate` of depth `treeDepth`.
+  * A 1000-executor cluster does one shuffle-free map + reduction per
+  * solver pass, and the driver adds no per-job bookkeeping on top (see
+  * [[RowPass]]).
   */
 class DistributedBackend(
     rowsIn: RDD[(Vector, Array[Double])],
@@ -281,9 +510,9 @@ class DistributedBackend(
     treeDepth: Int = 2,
     knownN: Long = -1L) extends SlopeBackend {
 
-  // Size-aware task sizing: every solver pass is ONE treeAggregate job
-  // over these rows, so the pass wall time is (rows-per-task x per-row
-  // kernel cost) + the per-job floor. Two failure modes, both measured
+  // Size-aware task sizing: every solver pass is ONE job over these
+  // rows, so the pass wall time is (rows-per-task x per-row kernel
+  // cost) + the per-job floor. Two failure modes, both measured
   // on the bench box (r17 optimization round, guide §2.5):
   //  - too MANY near-empty tasks: a small fit forced down the
   //    distributed path pays ~110 ms/job of launch + collection when
@@ -333,11 +562,6 @@ class DistributedBackend(
 
   rows.persist(StorageLevel.MEMORY_AND_DISK)
 
-  // shallow trees for small fan-in: depth 2 inserts an extra stage per
-  // job; with <= 64 tiny partials the driver combine is faster than a
-  // scheduled intermediate stage
-  private val effDepth =
-    if (rows.getNumPartitions <= 64) 1 else treeDepth
   // callers that already counted (Slope.fit does, for the backend
   // decision) pass n in — saves a full scan per fit
   lazy val n: Long = if (knownN >= 0) knownN else rows.count()
@@ -350,253 +574,133 @@ class DistributedBackend(
 
   private def sc = rows.sparkContext
 
+  /** The one launcher every pass goes through. With <= 64 partitions a
+    * tree level would only add a scheduled stage: `runJob` runs the
+    * pass object itself as the task function and the handler merges
+    * partition results on the driver as they arrive — what
+    * `treeAggregate(depth = 1)` does, minus its closure cleaning (five
+    * cleaner runs per job, two of them parsing Spark's own RDD and
+    * SparkContext bytecode). Wider inputs keep `treeAggregate`'s tree.
+    * Must stay in this file: job call sites read `... at Backend.scala:`. */
+  private def runPass(pass: RowPass): Array[Double] = {
+    val parts = rows.getNumPartitions
+    if (parts <= 64) {
+      var acc: Array[Double] = null
+      sc.runJob(rows, pass, 0 until parts, (_: Int, part: Array[Double]) =>
+        acc = if (acc == null) part else pass.merge(acc, part))
+      if (acc == null) pass.zero() else acc
+    } else {
+      rows.mapPartitions(it => Iterator.single(pass(TaskContext.get(), it)))
+        .treeAggregate(pass.zero())(pass.merge, pass.merge, treeDepth)
+    }
+  }
+
   def featureMeansAndSparsity(): (Array[Double], Boolean) = {
     val p = pRaw
-    val (sum, cnt, sparse) = rows.treeAggregate(
-      (new Array[Double](p), 0L, false))(
-      seqOp = { case ((acc, c, sp), (x, _)) =>
-        // row shapes were validated at ingest (Slope.fit's row mapper)
-        x.foreachActive((j, v) => acc(j) += v)
-        (acc, c + 1, sp || x.isInstanceOf[SparseVector])
-      },
-      combOp = { case ((a1, c1, s1), (a2, c2, s2)) =>
-        var j = 0; while (j < p) { a1(j) += a2(j); j += 1 }
-        (a1, c1 + c2, s1 || s2)
-      }, depth = effDepth)
-    (sum.map(_ / cnt), sparse)
+    val res = runPass(new MeansPass(p))
+    val cnt = res(p)
+    (Array.tabulate(p)(j => res(j) / cnt), res(p + 1) > 0)
   }
 
   def scaleStats(center: Array[Double], scale: String): Array[Double] = {
     val p = pRaw
-    val bc = sc.broadcast(center)
     scale match {
       case "none" => Array.fill(p)(1.0)
       case "l1" =>
-        rows.treeAggregate(new Array[Double](p))(
-          { case (acc, (x, _)) =>
-            // sum |x_j - c_j|: centered l1 needs every slot when centered;
-            // if centers are all zero (sparse path) nnz iteration suffices
-            val c = bc.value
-            if (c.forall(_ == 0.0)) x.foreachActive((j, v) => acc(j) += math.abs(v))
-            else { var j = 0; while (j < p) { acc(j) += math.abs(x(j) - c(j)); j += 1 } }
-            acc
-          },
-          { (a1, a2) => var j = 0; while (j < p) { a1(j) += a2(j); j += 1 }; a1 },
-          depth = effDepth)
+        // centered l1 needs every slot; with all-zero centers (sparse
+        // path) the stored entries suffice
+        val bc = if (center.exists(_ != 0.0)) Some(sc.broadcast(center)) else None
+        try runPass(new L1Pass(p, bc))
+        finally bc.foreach(_.destroy())
       case "l2" | "sd" | "max" =>
         // sufficient stats: sumsq, max (centered l2/sd derive from moments)
-        val (sumsq, mx, cnt) = rows.treeAggregate(
-          (new Array[Double](p), Array.fill(p)(Double.NegativeInfinity), 0L))(
-          { case ((sq, mxa, c), (x, _)) =>
-            val ctr = bc.value
-            x.foreachActive { (j, v) => sq(j) += v * v }
-            x match {
-              case d: DenseVector =>
-                var j = 0
-                while (j < p) { if (d.values(j) > mxa(j)) mxa(j) = d.values(j); j += 1 }
-              case s: SparseVector =>
-                // implicit zeros participate in max
-                var j = 0
-                while (j < p) { if (0.0 > mxa(j)) mxa(j) = 0.0; j += 1 }
-                s.foreachActive((j, v) => if (v > mxa(j)) mxa(j) = v)
-            }
-            (sq, mxa, c + 1)
-          },
-          { case ((q1, m1, c1), (q2, m2, c2)) =>
-            var j = 0
-            while (j < p) {
-              q1(j) += q2(j); if (m2(j) > m1(j)) m1(j) = m2(j); j += 1
-            }
-            (q1, m1, c1 + c2)
-          }, depth = effDepth)
+        val res = runPass(new SpreadPass(p))
+        val cnt = res(2 * p)
         scale match {
           case "l2" =>
-            Array.tabulate(p)(j => math.sqrt(math.max(0.0, sumsq(j) - cnt * center(j) * center(j))))
+            Array.tabulate(p)(j => math.sqrt(math.max(0.0, res(j) - cnt * center(j) * center(j))))
           case "sd" =>
             Array.tabulate(p)(j =>
-              math.sqrt(math.max(0.0, sumsq(j) - cnt * center(j) * center(j)) / (cnt - 1.0)))
+              math.sqrt(math.max(0.0, res(j) - cnt * center(j) * center(j)) / (cnt - 1.0)))
           case "max" =>
-            Array.tabulate(p)(j => mx(j) - center(j))
+            Array.tabulate(p)(j => res(p + j) - center(j))
         }
     }
   }
 
   def yMoments(): (Array[Double], Array[Double]) = {
     val mm = m
-    val (sum, sumsq, cnt) = rows.treeAggregate(
-      (new Array[Double](mm), new Array[Double](mm), 0L))(
-      { case ((s, q, c), (_, y)) =>
-        var k = 0; while (k < mm) { s(k) += y(k); q(k) += y(k) * y(k); k += 1 }
-        (s, q, c + 1)
-      },
-      { case ((s1, q1, c1), (s2, q2, c2)) =>
-        var k = 0; while (k < mm) { s1(k) += s2(k); q1(k) += q2(k); k += 1 }
-        (s1, q1, c1 + c2)
-      }, depth = effDepth)
-    val mean = sum.map(_ / cnt)
+    val res = runPass(new YMomentsPass(mm))
+    val cnt = res(2 * mm)
+    val mean = Array.tabulate(mm)(k => res(k) / cnt)
     val sd = Array.tabulate(mm)(k =>
-      math.sqrt(math.max(0.0, sumsq(k) / cnt - mean(k) * mean(k))))
+      math.sqrt(math.max(0.0, res(mm + k) / cnt - mean(k) * mean(k))))
     (mean, sd)
+  }
+
+  /** One [[EvalPass]] at `points` (each |active| x m): primals at every
+    * point, dual and gradient terms at the last. */
+  private def evalPass(active: Array[Int], points: Seq[Array[Double]], family: Family,
+                       needDual: Boolean, needGrad: Boolean): Array[Double] = {
+    val weights = points.map { beta =>
+      val (w, b) = BackendKernels.effectiveWeights(
+        active, beta, m, pRaw, fitIntercept, xCenter, xScale)
+      new PointWeights(w, b)
+    }
+    val bc = sc.broadcast(new EvalState(weights.toArray,
+      BackendKernels.slotMap(active, pRaw, fitIntercept)))
+    try runPass(new EvalPass(bc, points.length, family, active.length, m,
+      needDual, needGrad))
+    finally bc.destroy()
+  }
+
+  /** Raw gradient terms at `from` in a pass buffer -> standardized
+    * gradient. */
+  private def gradAt(active: Array[Int], res: Array[Double], from: Int): Array[Double] = {
+    val a = active.length
+    val s0 = java.util.Arrays.copyOfRange(res, from, from + m)
+    val rawA = java.util.Arrays.copyOfRange(res, from + m, from + m + a * m)
+    BackendKernels.standardizeGrad(active, rawA, s0, m, fitIntercept, xCenter, xScale)
   }
 
   def evalActive(active: Array[Int], betaActive: Array[Double], family: Family,
                  needDual: Boolean, needGrad: Boolean): (Double, Double, Array[Double]) = {
-    val a = active.length
-    val mm = m
-    val (w, b) = BackendKernels.effectiveWeights(
-      active, betaActive, mm, pRaw, fitIntercept, xCenter, xScale)
-    val bcW = sc.broadcast(w)
-    val bcB = sc.broadcast(b)
-    val fi = fitIntercept
-    val bcSlot = sc.broadcast(BackendKernels.slotMap(active, pRaw, fi))
-
     // buffer: [primal, dual, s0(m), A(a*m)]
-    val bufLen = 2 + mm + (if (needGrad) a * mm else 0)
-    // per-task scratch (r17): linPred/pseudoGradientRow fully overwrite
-    // their outputs, and every task deserializes its own closure copy,
-    // so these arrays are task-private — the two per-ROW allocations
-    // they replace were ~20% of the row kernel at m=1
-    val lp = new Array[Double](mm)
-    val pg = new Array[Double](mm)
-    val result = rows.treeAggregate(new Array[Double](bufLen))(
-      { (buf, row) =>
-        val (x, y) = row
-        BackendKernels.linPred(x, bcW.value, bcB.value, lp)
-        buf(0) += family.primalRow(y, lp)
-        if (needDual) buf(1) += family.dualRow(y, lp)
-        if (needGrad) {
-          family.pseudoGradientRow(y, lp, pg)
-          var k = 0
-          while (k < mm) { buf(2 + k) += pg(k); k += 1 }
-          val slots = bcSlot.value
-          x.foreachActive { (j, v) =>
-            val slot = slots(j)
-            if (slot >= 0) {
-              var kk = 0
-              while (kk < mm) { buf(2 + mm + kk * a + slot) += v * pg(kk); kk += 1 }
-            }
-          }
-        }
-        buf
-      },
-      { (b1, b2) =>
-        var i = 0; while (i < bufLen) { b1(i) += b2(i); i += 1 }; b1
-      }, depth = effDepth)
-
-    bcW.destroy(); bcB.destroy(); bcSlot.destroy()
-
-    val grad = if (needGrad) {
-      val s0 = java.util.Arrays.copyOfRange(result, 2, 2 + mm)
-      val rawA = java.util.Arrays.copyOfRange(result, 2 + mm, bufLen)
-      BackendKernels.standardizeGrad(active, rawA, s0, mm, fi, xCenter, xScale)
-    } else new Array[Double](0)
-    (result(0), result(1), grad)
+    val res = evalPass(active, Seq(betaActive), family, needDual, needGrad)
+    (res(0), res(1), if (needGrad) gradAt(active, res, 2) else new Array[Double](0))
   }
 
-  /** ONE treeAggregate for the speculative FISTA step: candidate primal
-    * + full next-point evaluation share the row scan (the per-pass job
-    * count drops from 2 to 1 — at 100 TB that halves both scheduling
-    * latency AND data I/O for every non-gaussian solver pass). Each
-    * accumulator slot sums exactly the per-row terms the two separate
-    * jobs would; values agree with the composed form up to
-    * treeAggregate's combine-order noise (sub-ULP), the same variance
-    * any two runs of the separate jobs already have. */
+  /** ONE job for the speculative FISTA step: candidate primal + full
+    * next-point evaluation share the row scan (the per-pass job count
+    * drops from 2 to 1 — at 100 TB that halves both scheduling latency
+    * AND data I/O for every non-gaussian solver pass). Each accumulator
+    * slot sums exactly the per-row terms the two separate jobs would;
+    * values agree with the composed form up to the driver merge's
+    * arrival-order noise (sub-ULP), the same variance any two runs of
+    * the separate jobs already have. */
   override def evalPairActive(active: Array[Int], candActive: Array[Double],
                               nextActive: Array[Double], family: Family)
     : (Double, Double, Double, Array[Double]) = {
-    val a = active.length
-    val mm = m
-    val (wc, bc) = BackendKernels.effectiveWeights(
-      active, candActive, mm, pRaw, fitIntercept, xCenter, xScale)
-    val (wn, bn) = BackendKernels.effectiveWeights(
-      active, nextActive, mm, pRaw, fitIntercept, xCenter, xScale)
-    val bcWc = sc.broadcast(wc)
-    val bcBc = sc.broadcast(bc)
-    val bcWn = sc.broadcast(wn)
-    val bcBn = sc.broadcast(bn)
-    val fi = fitIntercept
-    val bcSlot = sc.broadcast(BackendKernels.slotMap(active, pRaw, fi))
-
     // buffer: [gCand, gNext, dualNext, s0(m), A(a*m)]  (grad terms at next)
-    val bufLen = 3 + mm + a * mm
-    // per-task scratch (r17) — see evalActive
-    val lp = new Array[Double](mm)
-    val pg = new Array[Double](mm)
-    val result = rows.treeAggregate(new Array[Double](bufLen))(
-      { (buf, row) =>
-        val (x, y) = row
-        BackendKernels.linPred(x, bcWc.value, bcBc.value, lp)
-        buf(0) += family.primalRow(y, lp)
-        BackendKernels.linPred(x, bcWn.value, bcBn.value, lp)
-        buf(1) += family.primalRow(y, lp)
-        buf(2) += family.dualRow(y, lp)
-        family.pseudoGradientRow(y, lp, pg)
-        var k = 0
-        while (k < mm) { buf(3 + k) += pg(k); k += 1 }
-        val slots = bcSlot.value
-        x.foreachActive { (j, v) =>
-          val slot = slots(j)
-          if (slot >= 0) {
-            var kk = 0
-            while (kk < mm) { buf(3 + mm + kk * a + slot) += v * pg(kk); kk += 1 }
-          }
-        }
-        buf
-      },
-      { (b1, b2) =>
-        var i = 0; while (i < bufLen) { b1(i) += b2(i); i += 1 }; b1
-      }, depth = effDepth)
-
-    bcWc.destroy(); bcBc.destroy(); bcWn.destroy(); bcBn.destroy()
-    bcSlot.destroy()
-
-    val s0 = java.util.Arrays.copyOfRange(result, 3, 3 + mm)
-    val rawA = java.util.Arrays.copyOfRange(result, 3 + mm, bufLen)
-    val grad = BackendKernels.standardizeGrad(active, rawA, s0, mm, fi,
-      xCenter, xScale)
-    (result(0), result(1), result(2), grad)
+    val res = evalPass(active, Seq(candActive, nextActive), family,
+      needDual = true, needGrad = true)
+    (res(0), res(1), res(2), gradAt(active, res, 3))
   }
 
   def gramXty(active: Array[Int]): (Array[Double], Array[Double]) = {
     val a = active.length
-    val mm = m
-    val bcSlot = sc.broadcast(BackendKernels.slotMap(active, pRaw, fitIntercept))
-    val bufLen = a * a + a + a * mm + mm
-    val res = rows.treeAggregate(new Array[Double](bufLen))(
-      { (buf, row) =>
-        BackendKernels.gramRowUpdate(row._1, row._2, bcSlot.value, buf, a, mm,
-          new Array[Int](a), new Array[Double](a))
-        buf
-      },
-      { (b1, b2) =>
-        var i = 0; while (i < bufLen) { b1(i) += b2(i); i += 1 }; b1
-      }, depth = effDepth)
-    bcSlot.destroy()
-    BackendKernels.assembleGram(active, res, a, mm, n, fitIntercept, xCenter, xScale)
+    val bc = sc.broadcast(BackendKernels.slotMap(active, pRaw, fitIntercept))
+    val res =
+      try runPass(new GramPass(bc, a, m))
+      finally bc.destroy()
+    BackendKernels.assembleGram(active, res, a, m, n, fitIntercept, xCenter, xScale)
   }
 
   def xtv(rowV: Array[Double] => Array[Double]): Array[Double] = {
     val a = pInt
     val mm = m
-    val p = pRaw
     val fi = fitIntercept
-    val bufLen = a * mm + mm
-    val res = rows.treeAggregate(new Array[Double](bufLen))(
-      { (buf, row) =>
-        val (x, y) = row
-        val v = rowV(y)
-        var k = 0
-        while (k < mm) { buf(a * mm + k) += v(k); k += 1 }
-        x.foreachActive { (j, vx) =>
-          val slot = if (fi) j + 1 else j
-          var kk = 0
-          while (kk < mm) { buf(kk * a + slot) += vx * v(kk); kk += 1 }
-        }
-        buf
-      },
-      { (b1, b2) =>
-        var i = 0; while (i < bufLen) { b1(i) += b2(i); i += 1 }; b1
-      }, depth = effDepth)
+    val res = runPass(new XtvPass(rowV, a, mm, fi))
     val out = new Array[Double](a * mm)
     var k = 0
     while (k < mm) {
@@ -642,7 +746,7 @@ class LocalBackend(
     var sparse = false
     var i = 0
     while (i < xs.length) {
-      xs(i).foreachActive((j, v) => sum(j) += v)
+      BackendKernels.foreachStored(xs(i))((j, v) => sum(j) += v)
       sparse ||= xs(i).isInstanceOf[SparseVector]
       i += 1
     }
@@ -658,7 +762,7 @@ class LocalBackend(
         val centered = center.exists(_ != 0.0)
         var i = 0
         while (i < xs.length) {
-          if (!centered) xs(i).foreachActive((j, v) => acc(j) += math.abs(v))
+          if (!centered) BackendKernels.foreachStored(xs(i))((j, v) => acc(j) += math.abs(v))
           else { var j = 0; while (j < p) { acc(j) += math.abs(xs(i)(j) - center(j)); j += 1 } }
           i += 1
         }
@@ -679,7 +783,9 @@ class LocalBackend(
             case s: SparseVector =>
               var j = 0
               while (j < p) { if (0.0 > mx(j)) mx(j) = 0.0; j += 1 }
-              s.foreachActive { (j, v) => sumsq(j) += v * v; if (v > mx(j)) mx(j) = v }
+              BackendKernels.foreachStored(s) { (j, v) =>
+                sumsq(j) += v * v; if (v > mx(j)) mx(j) = v
+              }
           }
           i += 1
         }
@@ -760,15 +866,7 @@ class LocalBackend(
         if (needDual) buf(1) += family.dualRow(y, lp)
         if (needGrad) {
           family.pseudoGradientRow(y, lp, pg)
-          var k = 0
-          while (k < m) { buf(2 + k) += pg(k); k += 1 }
-          x.foreachActive { (j, v) =>
-            val slot = slotOf(j)
-            if (slot >= 0) {
-              var kk = 0
-              while (kk < m) { buf(2 + m + kk * a + slot) += v * pg(kk); kk += 1 }
-            }
-          }
+          BackendKernels.gradRowUpdate(x, pg, slotOf, buf, 2, a, m)
         }
         i += 1
       }
@@ -836,7 +934,7 @@ class LocalBackend(
       val v = rowV(ys(i))
       var k = 0
       while (k < m) { vSum(k) += v(k); k += 1 }
-      xs(i).foreachActive { (j, vx) =>
+      BackendKernels.foreachStored(xs(i)) { (j, vx) =>
         val slot = if (fi) j + 1 else j
         var kk = 0
         while (kk < m) { acc(kk * a + slot) += vx * v(kk); kk += 1 }

@@ -40,13 +40,13 @@ case class SlopeParams(
     // ---- Spark execution knobs (not in the reference) ----
     /** Collect to a driver-local backend when n*p is below this; the
       * path loop then runs with zero job-launch overhead. Distributed
-      * treeAggregate passes otherwise. The 40M default is MEASURED,
+      * passes (one Spark job each) otherwise. The 40M default is MEASURED,
       * not guessed (r11 scale gate): at the sf1 CV frame (6M × 7 =
       * 42M, just over the gate) the distributed cells cost 114 s while
       * forcing the local path cost 128-389 s with 7-33 s GC per run —
       * the local backend's per-row boxed label encoding allocates
       * O(cells·n) tiny arrays, so above ~megarow frames the job
-      * overhead of treeAggregate passes is CHEAPER than driver heap
+      * overhead of distributed passes is CHEAPER than driver heap
       * churn. The dist≡local certificates make this dispatch point a
       * pure performance knob; results are identical on either side. */
     localCellLimit: Long = 40L * 1000 * 1000,
@@ -112,7 +112,7 @@ case class SlopeModel(
     while (k < m) {
       var s = intercepts(step)(k)
       val offset = k * p
-      x.foreachActive((j, v) => s += c(offset + j) * v)
+      BackendKernels.foreachStored(x)((j, v) => s += c(offset + j) * v)
       out(k) = s
       k += 1
     }
@@ -584,10 +584,29 @@ object Slope {
       if (sigmaIsUser) (p + off).toLong * m
       else params.maxVariables.getOrElse(n * m)
 
-    // ---- null deviance at beta = 0 (src/owl.cpp:94-96) ----
-    val nullDeviance =
-      2.0 * backend.evalActive(Array.empty, Array.empty, family,
-        needDual = false, needGrad = false)._1
+    // ---- path state ----
+    val fullSet = Array.range(0, pInt)
+    var beta = new Array[Double](pInt * m) // column-major pInt x m
+    var betaPrev = new Array[Double](pInt * m)
+    // The last full-set evaluation (primal, dual, gradient) and the
+    // point it was taken at: the null model at beta = 0 first, which
+    // also gives the null deviance (src/owl.cpp:94-96), then each KKT
+    // pass or full-set FISTA solve. Screening and the KKT check read it
+    // through `evalAtBeta`, and a FISTA solve starting at that point
+    // takes its restriction to the active set, so no pass re-evaluates
+    // a point this loop already evaluated.
+    var evalPoint = beta.clone()
+    var fullEval = backend.evalActive(fullSet, beta, family,
+      needDual = true, needGrad = true)
+    val nullDeviance = 2.0 * fullEval._1
+    def evalAtBeta(): (Double, Double, Array[Double]) = {
+      if (!java.util.Arrays.equals(beta, evalPoint)) {
+        evalPoint = beta.clone()
+        fullEval = backend.evalActive(fullSet, beta, family,
+          needDual = true, needGrad = true)
+      }
+      fullEval
+    }
     // sum of squared internal y per target (for ADMM deviance, driver-side)
     val sumYsq = {
       var s = 0.0
@@ -596,14 +615,8 @@ object Slope {
       s
     }
 
-    // ---- path state ----
-    val fullSet = Array.range(0, pInt)
-    var beta = new Array[Double](pInt * m) // column-major pInt x m
-    var betaPrev = new Array[Double](pInt * m)
     var screening = params.screening
     var everActive: Array[Int] = if (intercept) Array(0) else Array.empty
-    // gradient at betaPrev, reused from the previous step's last KKT pass
-    var gradAtBetaPrev: Array[Double] = null
 
     // ADMM auxiliary state, warm-started across the path (src/owl.cpp:123-127)
     val z = new Array[Double](pInt)
@@ -702,12 +715,18 @@ object Slope {
         (zOut, passes, dev, StepDiagnostics(primals, duals, times))
       } else {
         val betaA = gather(beta, active)
+        val init =
+          if (!java.util.Arrays.equals(beta, evalPoint)) None
+          else Some((fullEval._1, fullEval._2, gather(fullEval._3, active)))
         val res = Fista.fit(backend, active, betaA, lamSig, family, intercept,
           params.maxPasses, params.tolRelGap, params.tolInfeas,
           params.diagnostics,
           lrInit = if (params.carryLearningRate) carriedLr else 1.0,
-          adaptiveRestart = params.adaptiveRestart)
+          adaptiveRestart = params.adaptiveRestart, init = init)
         carriedLr = res.finalLr
+        // a full-set solve ends holding the full-set evaluation at its
+        // result, which the KKT check and the next solve then reuse
+        if (a == pInt) { evalPoint = res.beta.clone(); fullEval = res.finalEval }
         (res.beta, res.passes, res.deviance,
           StepDiagnostics(res.primals, res.duals, res.times))
       }
@@ -725,14 +744,12 @@ object Slope {
 
       if (screening) {
         // step 1: strong set from the gradient at beta_prev
-        // (src/owl.cpp:150-162)
-        if (gradAtBetaPrev == null)
-          gradAtBetaPrev = backend.evalActive(fullSet, betaPrev, family,
-            needDual = false, needGrad = true)._3
+        // (src/owl.cpp:150-162) — the previous step's last KKT pass, or
+        // the null model at step 0 (beta still equals beta_prev here)
         val sigPrev = if (k == 0) sigmaMax else sigmas(k - 1)
         val lamSig = lambda.map(_ * sigK)
         val lamSigPrev = lambda.map(_ * sigPrev)
-        strongSet = Screening.strongSet(gradAtBetaPrev, pInt, m, lamSig,
+        strongSet = Screening.strongSet(evalAtBeta()._3, pInt, m, lamSig,
           lamSigPrev, intercept)
         // step 2: start from the ever-active set (src/owl.cpp:163-168)
         everActive = Screening.union(everActive, nonzeroRows(betaPrev))
@@ -749,7 +766,6 @@ object Slope {
         val (b, pass, dev, diag) = solveSubset(fullSet, sigK, lamMaxSig)
         scatter(b, fullSet, beta)
         stepPasses = pass; stepDev = dev; stepDiag = diag
-        gradAtBetaPrev = null // not computed on this branch; recompute if needed
       } else {
         var kktViolation = true
         while (kktViolation) {
@@ -764,12 +780,10 @@ object Slope {
             scatter(b, activeSet, beta)
             stepPasses = pass; stepDev = dev; stepDiag = diag
           }
-          // full-set gradient -> KKT check (src/owl.cpp:277-307)
-          val grad = backend.evalActive(fullSet, beta, family,
-            needDual = false, needGrad = true)._3
-          gradAtBetaPrev = grad // valid for the next step's screening once loop exits
+          // full-set evaluation -> KKT check (src/owl.cpp:277-307); it
+          // also starts a KKT re-solve or the next step
           val lamSig = lambda.map(_ * sigK)
-          val possible = Screening.kktCheck(grad, beta, pInt, m, lamSig,
+          val possible = Screening.kktCheck(evalAtBeta()._3, beta, pInt, m, lamSig,
             params.tolInfeas, intercept)
           val strongFailures = Screening.intersect(possible, strongSet)
           var checkFailures = Screening.diff(strongFailures, activeSet)

@@ -4,7 +4,9 @@ import graft.slope.kernels.{Prox, Screening}
 
 /** Per-sigma-step solver result (reference `src/results.h:8-30`).
   * `finalLr` reports the last accepted FISTA learning rate so the path
-  * loop can warm-start the next sigma step's line search. */
+  * loop can warm-start the next sigma step's line search; `finalEval`
+  * is the (primal, dual, gradient) evaluation at `beta`, so the path
+  * loop need not evaluate that point again. */
 case class SolveResult(
     beta: Array[Double], // |active| x m, column-major
     passes: Int,
@@ -12,18 +14,23 @@ case class SolveResult(
     primals: Array[Double],
     duals: Array[Double],
     times: Array[Double],
-    finalLr: Double = 1.0)
+    finalLr: Double,
+    finalEval: (Double, Double, Array[Double]))
 
 /** FISTA with backtracking line search and duality-gap + infeasibility
   * stopping — the reference's generic solver (`src/families/family.h:87-223`).
   *
-  * Driver-held state is |active| x m; each pass issues ONE fused
-  * distributed evaluation (primal + dual + gradient) plus one
-  * primal-only pass per line-search probe. The learning rate persists
-  * across passes (reference `family.h:111`) so probes are rare after
-  * warm-up.
+  * Driver-held state is |active| x m; each pass costs ONE backend pass:
+  * the line-search candidate's primal fused with the full evaluation
+  * (primal + dual + gradient) at the next momentum point. Only a
+  * rejected candidate costs more — one primal-only pass per further
+  * probe, then one evaluation at the accepted point. The learning rate
+  * persists across passes (reference `family.h:111`) so probes are rare
+  * after warm-up. A solve asks for no evaluation it already holds: the
+  * caller passes the one at `betaInit` when it has it, and the returned
+  * deviance comes from the evaluation carried at the returned beta.
   */
-object Fista {
+private[slope] object Fista {
 
   def fit(backend: SlopeBackend,
           active: Array[Int],
@@ -36,7 +43,8 @@ object Fista {
           tolInfeas: Double,
           diagnostics: Boolean,
           lrInit: Double = 1.0,
-          adaptiveRestart: Boolean = false): SolveResult = {
+          adaptiveRestart: Boolean = false,
+          init: Option[(Double, Double, Array[Double])] = None): SolveResult = {
 
     val a = active.length
     val m = backend.m
@@ -73,12 +81,12 @@ object Fista {
       out
     }
 
-    // one evaluation carried across iterations: primed here, then
-    // refreshed by the fused speculative pass at each accepted step —
-    // steady state is ONE data scan per pass (was two: gradient pass +
-    // line-search primal pass), with identical iterates
-    var carried: (Double, Double, Array[Double]) =
-      backend.evalActive(active, beta, family, needDual = true, needGrad = true)
+    // one evaluation (primal, dual, gradient) carried across
+    // iterations, always at `beta`: the caller's `init` or one pass here,
+    // then refreshed by the fused speculative pass at each accepted step
+    // — steady state is ONE data scan per pass, with identical iterates
+    var carried: (Double, Double, Array[Double]) = init.getOrElse(
+      backend.evalActive(active, beta, family, needDual = true, needGrad = true))
 
     /** prox(beta - lr*grad) with the tail-only sorted-L1 prox. */
     def proxStep(grad: Array[Double], lr: Double): Array[Double] = {
@@ -121,11 +129,9 @@ object Fista {
     }
 
     var passes = 0
-    var lastPrimal = 0.0
     var done = false
     while (passes < maxPasses && !done) {
       val (g0, dual, grad) = carried
-      lastPrimal = g0
 
       // sorted-L1 penalty at current beta
       val absTail = tailAbs(beta).sortBy(-(_: Double))
@@ -244,19 +250,14 @@ object Fista {
       }
     }
 
-    // On a maxPasses-exhausted exit the loop's last recorded primal was
-    // evaluated at the beta from the START of the final pass, while the
-    // returned beta carries one further prox+momentum update — recompute
-    // so the reported deviance matches the returned coefficients.
-    // (Converged exits are unaffected: beta was not updated after the
-    // final evaluation.)
-    if (!done) lastPrimal = backend.primalActive(active, beta, family)
-
-    SolveResult(beta, passes, 2.0 * lastPrimal,
+    // `carried` is at the returned beta on both exits — on a
+    // maxPasses-exhausted one too, where beta moved after the last
+    // stopping check — so the deviance matches the returned coefficients
+    SolveResult(beta, passes, 2.0 * carried._1,
       if (diagnostics) primals.toArray else Array.empty,
       if (diagnostics) duals.toArray else Array.empty,
       if (diagnostics) times.toArray else Array.empty,
-      finalLr = learningRate)
+      finalLr = learningRate, finalEval = carried)
   }
 }
 

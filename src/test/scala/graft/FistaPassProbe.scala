@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** Pass-count / wall-time probe for the distributed binomial FISTA fit
   * (the q_slope_binom_dist shape): baseline vs lr-carry vs adaptive
-  * restart vs both. Every FISTA pass on the distributed backend is 1-2
-  * treeAggregate jobs, so total passes IS the 100-TB cost model — this
+  * restart vs both. Every FISTA pass on the distributed backend is one
+  * Spark job (two when the speculative line-search candidate is
+  * rejected), so total passes IS the 100-TB cost model — this
   * probe is the evidence artifact for the round-9 "≥25% fewer passes"
   * criterion (PERF_DISTRIBUTED.md records the output).
   */

@@ -205,6 +205,68 @@ class MlApiSpec extends AnyFunSuite {
     } finally backend.unpersist()
   }
 
+  test("distributed fit: one job per backend pass, no repeated evaluation") {
+    import org.apache.spark.graft.ListenerBusShim
+    import org.apache.spark.ml.linalg.{Vector, Vectors}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val rng = new scala.util.Random(29)
+    val n = 600; val p = 6
+    val rows = Array.fill(n) {
+      val x = Array.fill(p)(rng.nextGaussian())
+      val prob = 1.0 / (1.0 + math.exp(-(1.2 * x(0) - 0.8 * x(1) + 0.5 * x(2))))
+      (Vectors.dense(x): Vector, Array(if (rng.nextDouble() < prob) 1.0 else -1.0))
+    }
+    val sc = spark.sparkContext
+    val dist = new DistributedBackend(sc.parallelize(rows.toSeq, 4), p, 1, true,
+      knownN = n)
+    val backend = new CountingBackend(dist)
+    val group = "graft-pass-budget"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+          e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    // pinned path: 6 steps, every FISTA solve capped at 6 passes
+    val params = SlopeParams(family = "binomial", nSigma = 6, maxPasses = 6,
+      tolDevChange = 0.0, tolDevRatio = 2.0)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "pass budget")
+    val model =
+      try Slope.fitBackend(backend, params, Array.empty, Array("a", "b"), 2)
+      finally {
+        sc.clearJobGroup()
+        ListenerBusShim.drain(sc)
+        sc.removeSparkListener(listener)
+        dist.unpersist()
+      }
+    assert(model.nSteps == 6)
+    assert(model.passes.max == 6, model.passes.mkString(","))
+    val calls = backend.calls
+    assert(jobs.get == calls.length,
+      s"${jobs.get} Spark jobs for ${calls.length} backend passes: " +
+        calls.map(_.kind).mkString(", "))
+
+    def same(a: Array[Double], b: Array[Double]): Boolean =
+      a.indices.forall(i => a(i) == b(i))
+    var lastFull: Array[Double] = null
+    var prev: CountingBackend.Call = null
+    for ((c, i) <- calls.zipWithIndex if c.points.nonEmpty) {
+      // nothing re-evaluates the point the last full-set pass evaluated
+      if (lastFull != null)
+        assert(!c.points.exists(same(_, lastFull)),
+          s"call $i (${c.kind}) repeats the last full-set evaluation")
+      // nor the point the pass right before it evaluated in full
+      if (prev != null && prev.full && prev.active.sameElements(c.active))
+        assert(!c.points.exists(same(_, prev.points.last)),
+          s"call $i (${c.kind}) repeats call ${i - 1} (${prev.kind})")
+      if (c.kind == "evalActive" && c.active.length == backend.pInt)
+        lastFull = c.points.head
+      prev = c
+    }
+    assert(calls.count(_.kind == "evalPairActive") >= model.passes.sum)
+  }
+
   test("distributed backend binomial == local binomial") {
     val gen = RandomProblem.generate(spark, 400, 3, family = "binomial", seed = 13)
     val p = SlopeParams(family = "binomial", nSigma = 6)
@@ -384,4 +446,62 @@ class MlApiSpec extends AnyFunSuite {
         s"class $k intercept: graft ${fit.intercepts(0)(k)} vs mllib $wantB")
     }
   }
+}
+
+/** Forwards every call to `inner` and records each data pass: its kind,
+  * active set and evaluated points, scattered to full pInt x m vectors,
+  * and whether the last point got a full (primal, dual, gradient)
+  * evaluation. */
+class CountingBackend(inner: SlopeBackend) extends SlopeBackend {
+  import CountingBackend.Call
+  val calls = scala.collection.mutable.ArrayBuffer[Call]()
+  def n: Long = inner.n
+  def pRaw: Int = inner.pRaw
+  def m: Int = inner.m
+  def fitIntercept: Boolean = inner.fitIntercept
+
+  private def record(kind: String, active: Array[Int] = Array.empty,
+                     points: Seq[Array[Double]] = Nil, full: Boolean = false): Unit =
+    calls += Call(kind, active, full, points.map { b =>
+      val full = new Array[Double](pInt * m)
+      for (k <- 0 until m; i <- active.indices)
+        full(k * pInt + active(i)) = b(k * active.length + i)
+      full
+    })
+
+  def featureMeansAndSparsity(): (Array[Double], Boolean) = {
+    record("featureMeansAndSparsity"); inner.featureMeansAndSparsity()
+  }
+  def scaleStats(center: Array[Double], scale: String): Array[Double] = {
+    record("scaleStats"); inner.scaleStats(center, scale)
+  }
+  def yMoments(): (Array[Double], Array[Double]) = {
+    record("yMoments"); inner.yMoments()
+  }
+  def setStandardization(c: Array[Double], s: Array[Double]): Unit =
+    inner.setStandardization(c, s)
+  def evalActive(active: Array[Int], betaActive: Array[Double], family: Family,
+                 needDual: Boolean, needGrad: Boolean): (Double, Double, Array[Double]) = {
+    record("evalActive", active, Seq(betaActive), needDual && needGrad)
+    inner.evalActive(active, betaActive, family, needDual, needGrad)
+  }
+  override def evalPairActive(active: Array[Int], candActive: Array[Double],
+                              nextActive: Array[Double], family: Family)
+    : (Double, Double, Double, Array[Double]) = {
+    record("evalPairActive", active, Seq(candActive, nextActive), full = true)
+    inner.evalPairActive(active, candActive, nextActive, family)
+  }
+  def gramXty(active: Array[Int]): (Array[Double], Array[Double]) = {
+    record("gramXty"); inner.gramXty(active)
+  }
+  override def activeMatrixXty(active: Array[Int])
+    : Option[(Array[Double], Array[Double])] = inner.activeMatrixXty(active)
+  def xtv(rowV: Array[Double] => Array[Double]): Array[Double] = {
+    record("xtv"); inner.xtv(rowV)
+  }
+}
+
+object CountingBackend {
+  final case class Call(kind: String, active: Array[Int], full: Boolean,
+                        points: Seq[Array[Double]])
 }
