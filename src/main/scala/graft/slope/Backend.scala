@@ -6,6 +6,8 @@ import org.apache.spark.ml.linalg.{Vector, DenseVector, SparseVector}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
 
+import scala.reflect.ClassTag
+
 /** Data-access layer for the SLOPE solvers.
   *
   * Everything n-dimensional (rows, residuals, linear predictors) stays
@@ -22,44 +24,127 @@ import org.apache.spark.storage.StorageLevel
   * `xCenter`/`xScale` use the same numbering with center 0 / scale 1 for
   * the intercept row.
   *
-  * Pass results are sums over rows, so one distributed job per pass and
-  * a local loop produce the same quantities (up to FP reorder). Every
-  * call is a full data pass, so callers never ask twice for a point they
-  * already evaluated: the path loop hands its full-set evaluation to the
-  * next solve as its starting point, and FISTA reports the deviance from
-  * the evaluation it carries.
+  * Every pass is written once, here: a [[RowPass]] object that folds
+  * rows into a buffer, plus its driver-side fold. A backend only says
+  * where the rows live and how a pass runs over them ([[runPass]]) —
+  * one Spark job, or pinned chunks on the driver — and merges partial
+  * buffers in a fixed order, so a pass is a function of the data and
+  * its partitioning. Every call is a full data pass, so callers never
+  * ask twice for a point they already evaluated: the path loop hands
+  * its full-set evaluation to the next solve as its starting point, and
+  * FISTA reports the deviance from the evaluation it carries.
   */
-trait SlopeBackend {
+abstract class SlopeBackend(val pRaw: Int, // feature count, excluding intercept
+                            val m: Int, // internal targets
+                            val fitIntercept: Boolean) {
   def n: Long
-  def pRaw: Int // feature count, excluding intercept
-  def m: Int // internal targets
-  def fitIntercept: Boolean
   final def pInt: Int = pRaw + (if (fitIntercept) 1 else 0)
+
+  private var xCenter: Array[Double] = new Array[Double](pInt)
+  private var xScale: Array[Double] = Array.fill(pInt)(1.0)
+
+  /** Install standardization vectors (coefficient-row numbering). */
+  final def setStandardization(c: Array[Double], s: Array[Double]): Unit = {
+    xCenter = c; xScale = s
+  }
+
+  /** The one launcher: folds every row through `pass` and merges the
+    * partial buffers with `pass.merge` in a fixed order. */
+  private[slope] def runPass(pass: RowPass): Array[Double]
+
+  /** `state` as a pass's tasks read it: one broadcast on a cluster, the
+    * plain reference on the driver. */
+  private[slope] def ship[S: ClassTag](state: S): Shipped[S]
+
+  /** [[runPass]] of a pass that reads driver `state`, released after. */
+  private def runPassWith[S: ClassTag](state: S)(pass: Shipped[S] => RowPass)
+    : Array[Double] = {
+    val shipped = ship(state)
+    try runPass(pass(shipped)) finally shipped.release()
+  }
 
   /** Per-feature raw means (for centering, length pRaw) plus whether any
     * row uses a sparse representation — detected exactly in the same
     * aggregate (not a sample), since the flag steers the centering
-    * default. This pass also validates per-row vector lengths, so the
-    * later fused kernels can assume well-shaped rows. */
-  def featureMeansAndSparsity(): (Array[Double], Boolean)
+    * default. Row shapes and values were validated at ingest. */
+  def featureMeansAndSparsity(): (Array[Double], Boolean) = {
+    val res = runPass(new MeansPass(pRaw))
+    val cnt = res(pRaw)
+    (Array.tabulate(pRaw)(j => res(j) / cnt), res(pRaw + 1) > 0)
+  }
 
   /** Scale statistic per feature given centers (0s if no centering):
     * "l1" | "l2" | "sd" | "max" | "none", reference `src/standardize.h`. */
-  def scaleStats(center: Array[Double], scale: String): Array[Double]
+  def scaleStats(center: Array[Double], scale: String): Array[Double] = {
+    val p = pRaw
+    scale match {
+      case "none" => Array.fill(p)(1.0)
+      case "l1" =>
+        // centered l1 needs every slot; with all-zero centers (sparse
+        // path) the stored entries suffice
+        if (center.exists(_ != 0.0)) runPassWith(center)(c => new L1Pass(p, Some(c)))
+        else runPass(new L1Pass(p, None))
+      case "l2" | "sd" | "max" =>
+        // sufficient stats: sumsq, max (centered l2/sd derive from moments)
+        val res = runPass(new SpreadPass(p))
+        val cnt = res(2 * p)
+        scale match {
+          case "l2" =>
+            Array.tabulate(p)(j => math.sqrt(math.max(0.0, res(j) - cnt * center(j) * center(j))))
+          case "sd" =>
+            Array.tabulate(p)(j =>
+              math.sqrt(math.max(0.0, res(j) - cnt * center(j) * center(j)) / (cnt - 1.0)))
+          case "max" =>
+            Array.tabulate(p)(j => res(p + j) - center(j))
+        }
+    }
+  }
 
   /** Per-target label mean and population sd (multinomial lambdaMax
     * needs stddev(y, 1) — reference `src/lambdaMax.h:30-31`). */
-  def yMoments(): (Array[Double], Array[Double])
+  def yMoments(): (Array[Double], Array[Double]) = {
+    val res = runPass(new YMomentsPass(m))
+    val cnt = res(2 * m)
+    val mean = Array.tabulate(m)(k => res(k) / cnt)
+    val sd = Array.tabulate(m)(k =>
+      math.sqrt(math.max(0.0, res(m + k) / cnt - mean(k) * mean(k))))
+    (mean, sd)
+  }
 
-  /** Install standardization vectors (coefficient-row numbering). */
-  def setStandardization(xCenter: Array[Double], xScale: Array[Double]): Unit
+  /** One [[EvalPass]] at `points` (each |active| x m): primals at every
+    * point, dual and gradient terms at the last. */
+  private def evalPass(active: Array[Int], points: Seq[Array[Double]], family: Family,
+                       needDual: Boolean, needGrad: Boolean): Array[Double] = {
+    val weights = points.map { beta =>
+      val (w, b) = BackendKernels.effectiveWeights(
+        active, beta, m, pRaw, fitIntercept, xCenter, xScale)
+      new PointWeights(w, b)
+    }
+    val state = new EvalState(weights.toArray,
+      BackendKernels.slotMap(active, pRaw, fitIntercept))
+    runPassWith(state)(s =>
+      new EvalPass(s, points.length, family, active.length, m, needDual, needGrad))
+  }
+
+  /** Raw gradient terms at `from` in a pass buffer -> standardized
+    * gradient. */
+  private def gradAt(active: Array[Int], res: Array[Double], from: Int): Array[Double] = {
+    val a = active.length
+    val s0 = java.util.Arrays.copyOfRange(res, from, from + m)
+    val rawA = java.util.Arrays.copyOfRange(res, from + m, from + m + a * m)
+    BackendKernels.standardizeGrad(active, rawA, s0, m, fitIntercept, xCenter, xScale)
+  }
 
   /** Fused pass at coefficients `betaActive` (|active| x m, column-major)
     * over standardized active columns: returns
     * (sum primal, sum dual (0 unless needDual), gradient |active| x m).
     */
   def evalActive(active: Array[Int], betaActive: Array[Double], family: Family,
-                 needDual: Boolean, needGrad: Boolean): (Double, Double, Array[Double])
+                 needDual: Boolean, needGrad: Boolean): (Double, Double, Array[Double]) = {
+    // buffer: [primal, dual, s0(m), A(a*m)]
+    val res = evalPass(active, Seq(betaActive), family, needDual, needGrad)
+    (res(0), res(1), if (needGrad) gradAt(active, res, 2) else new Array[Double](0))
+  }
 
   /** Primal-only pass (line-search probes). */
   final def primalActive(active: Array[Int], betaActive: Array[Double],
@@ -68,25 +153,30 @@ trait SlopeBackend {
 
   /** Fused TWO-POINT pass for the speculative FISTA step: primal at
     * the line-search candidate `candActive` PLUS the full
-    * (primal, dual, gradient) at the momentum point `nextActive`, so
-    * the accepted-step case costs ONE data scan per pass instead of
-    * two. Values are identical to composing [[primalActive]] +
-    * [[evalActive]] (each accumulator sums the same per-row terms in
-    * the same order); the default does exactly that — distributed
-    * backends override with one fused aggregation.
+    * (primal, dual, gradient) at the momentum point `nextActive`, in
+    * ONE data scan instead of two (at 100 TB that halves both
+    * scheduling latency and data I/O for every non-gaussian solver
+    * pass). Values equal composing [[primalActive]] + [[evalActive]]
+    * exactly: each accumulator sums the same per-row terms in the same
+    * order, and partial buffers merge in the same fixed order.
     * Returns (gCand, gNext, dualNext, gradNext). */
   def evalPairActive(active: Array[Int], candActive: Array[Double],
                      nextActive: Array[Double], family: Family)
     : (Double, Double, Double, Array[Double]) = {
-    val gCand = primalActive(active, candActive, family)
-    val (gNext, dualNext, gradNext) =
-      evalActive(active, nextActive, family, needDual = true, needGrad = true)
-    (gCand, gNext, dualNext, gradNext)
+    // buffer: [gCand, gNext, dualNext, s0(m), A(a*m)]  (grad terms at next)
+    val res = evalPass(active, Seq(candActive, nextActive), family,
+      needDual = true, needGrad = true)
+    (res(0), res(1), res(2), gradAt(active, res, 3))
   }
 
   /** Gram matrix of standardized active columns (|a| x |a|, column-major)
     * and Xs_active^T y (|a| x m). One pass; |a| must be driver-sized. */
-  def gramXty(active: Array[Int]): (Array[Double], Array[Double])
+  def gramXty(active: Array[Int]): (Array[Double], Array[Double]) = {
+    val a = active.length
+    val res = runPassWith(BackendKernels.slotMap(active, pRaw, fitIntercept))(s =>
+      new GramPass(s, a, m))
+    BackendKernels.assembleGram(active, res, a, m, n, fitIntercept, xCenter, xScale)
+  }
 
   /** Standardized active matrix (row-major n x |a|) + Xs^T y, for the
     * wide-ADMM Woodbury branch (m = 1 only). None when the rows are not
@@ -97,7 +187,30 @@ trait SlopeBackend {
 
   /** Xs^T v over all pInt rows, where v_row = rowV(y_row) (length m).
     * Used by lambdaMax (`src/lambdaMax.h`). */
-  def xtv(rowV: Array[Double] => Array[Double]): Array[Double]
+  def xtv(rowV: Array[Double] => Array[Double]): Array[Double] = {
+    val a = pInt
+    val res = runPass(new XtvPass(rowV, a, m, fitIntercept))
+    val out = new Array[Double](a * m)
+    var k = 0
+    while (k < m) {
+      val vSum = res(a * m + k)
+      var r = 0
+      while (r < a) {
+        out(k * a + r) =
+          if (fitIntercept && r == 0) vSum / xScale(0)
+          else (res(k * a + r) - xCenter(r) * vSum) / xScale(r)
+        r += 1
+      }
+      k += 1
+    }
+    out
+  }
+
+  /** The standardized value of coefficient row `row` in feature row `x`
+    * (`activeMatrixXty`'s entries). */
+  protected final def standardized(x: Vector, row: Int): Double =
+    if (fitIntercept && row == 0) 1.0 / xScale(0)
+    else (x(if (fitIntercept) row - 1 else row) - xCenter(row)) / xScale(row)
 }
 
 private[slope] object BackendKernels extends Serializable {
@@ -305,14 +418,13 @@ private[slope] object BackendKernels extends Serializable {
     g
   }
 }
-
-/** One distributed solver pass: `apply` folds one partition's rows into
-  * a fresh accumulator (per-task scratch lives there, once per task),
-  * `merge` combines two accumulators. Every pass is a named top-level
-  * class holding only what its tasks read, so launching one costs
-  * Spark's serializability check and nothing more: the closure cleaner
-  * returns at once for a class that is not a lambda, and no pass
-  * captures the backend. */
+/** One solver pass: `apply` folds a run of rows (a partition, or a
+  * chunk of the driver's rows) into a fresh accumulator, with per-run
+  * scratch allocated there, once; `merge` combines two accumulators.
+  * Every pass is a named top-level class holding only what its tasks
+  * read, so launching one on Spark costs the serializability check and
+  * nothing more: the closure cleaner returns at once for a class that
+  * is not a lambda, and no pass captures the backend. */
 private[slope] abstract class RowPass
     extends ((TaskContext, Iterator[(Vector, Array[Double])]) => Array[Double])
     with Serializable {
@@ -322,6 +434,28 @@ private[slope] abstract class RowPass
     while (i < a.length) { a(i) += b(i); i += 1 }
     a
   }
+  /** Whether the local backend splits large inputs into parallel chunks
+    * for this pass (the per-step evaluation and Gram passes); the
+    * once-per-fit set-up passes scan the rows in one run. */
+  def chunked: Boolean = false
+}
+
+/** Driver state a pass reads ([[SlopeBackend.ship]]); `release` frees
+  * it once the pass has run. */
+private[slope] abstract class Shipped[S] extends Serializable {
+  def value: S
+  def release(): Unit
+}
+
+/** One broadcast, destroyed on release. */
+private[slope] final class BroadcastState[S](bc: Broadcast[S]) extends Shipped[S] {
+  def value: S = bc.value
+  def release(): Unit = bc.destroy()
+}
+
+/** The plain reference, for passes that never leave the driver. */
+private[slope] final class HeldState[S](val value: S) extends Shipped[S] {
+  def release(): Unit = ()
 }
 
 /** Effective weights/offsets of one evaluated point
@@ -330,7 +464,7 @@ private[slope] final class PointWeights(val w: Array[Array[Double]], val b: Arra
   extends Serializable
 
 /** The driver state of one evaluation pass — its points and the
-  * raw-feature -> active-slot map — shipped as ONE broadcast. */
+  * raw-feature -> active-slot map — shipped as ONE value. */
 private[slope] final class EvalState(val points: Array[PointWeights], val slots: Array[Int])
   extends Serializable
 
@@ -340,7 +474,6 @@ private[slope] final class MeansPass(p: Int) extends RowPass {
   def apply(ctx: TaskContext, rows: Iterator[(Vector, Array[Double])]): Array[Double] = {
     val acc = zero()
     while (rows.hasNext) {
-      // row shapes were validated at ingest (Slope.fit's row mapper)
       val x = rows.next()._1
       BackendKernels.foreachStored(x)((j, v) => acc(j) += v)
       acc(p) += 1
@@ -352,7 +485,7 @@ private[slope] final class MeansPass(p: Int) extends RowPass {
 
 /** sum_i |x_ij - c_j| per feature. Uncentered (`center` None) only the
   * stored entries contribute. */
-private[slope] final class L1Pass(p: Int, center: Option[Broadcast[Array[Double]]])
+private[slope] final class L1Pass(p: Int, center: Option[Shipped[Array[Double]]])
     extends RowPass {
   def zero(): Array[Double] = new Array[Double](p)
   def apply(ctx: TaskContext, rows: Iterator[(Vector, Array[Double])]): Array[Double] = {
@@ -424,10 +557,11 @@ private[slope] final class YMomentsPass(m: Int) extends RowPass {
   * `evalPairActive` (two points). Buffer: the primal at every point but
   * the last, then [primal, dual, s0(m), A(a*m)] at the last; the dual
   * and gradient parts only when asked for. */
-private[slope] final class EvalPass(state: Broadcast[EvalState], nPoints: Int,
+private[slope] final class EvalPass(state: Shipped[EvalState], nPoints: Int,
                                     family: Family, a: Int, m: Int,
                                     needDual: Boolean, needGrad: Boolean)
     extends RowPass {
+  override def chunked: Boolean = true
   def zero(): Array[Double] =
     new Array[Double](nPoints + 1 + (if (needGrad) m + a * m else 0))
   def apply(ctx: TaskContext, rows: Iterator[(Vector, Array[Double])]): Array[Double] = {
@@ -455,8 +589,9 @@ private[slope] final class EvalPass(state: Broadcast[EvalState], nPoints: Int,
 }
 
 /** Raw Gram + X^T y accumulation ([[BackendKernels.gramRowUpdate]]). */
-private[slope] final class GramPass(slots: Broadcast[Array[Int]], a: Int, m: Int)
+private[slope] final class GramPass(slots: Shipped[Array[Int]], a: Int, m: Int)
     extends RowPass {
+  override def chunked: Boolean = true
   def zero(): Array[Double] = new Array[Double](a * a + a + a * m + m)
   def apply(ctx: TaskContext, rows: Iterator[(Vector, Array[Double])]): Array[Double] = {
     val acc = zero()
@@ -492,23 +627,24 @@ private[slope] final class XtvPass(rowV: Array[Double] => Array[Double], pInt: I
   }
 }
 
-/** Distributed backend over an RDD of (features, preprocessed labels).
-  * Every solver pass is ONE Spark job over the persisted rows, with the
-  * pass's driver state in one broadcast (the MLlib pattern, cf. Spark's
-  * `LeastSquaresAggregator`). Up to 64 partitions a pass is a plain
-  * `runJob` whose partition results merge on the driver as they arrive;
-  * wider inputs reduce through a `treeAggregate` of depth `treeDepth`.
-  * A 1000-executor cluster does one shuffle-free map + reduction per
-  * solver pass, and the driver adds no per-job bookkeeping on top (see
-  * [[RowPass]]).
+/** Distributed backend over an RDD of (features, preprocessed labels):
+  * input sizing, persistence, and [[runPass]], which makes every solver
+  * pass ONE Spark job over the persisted rows, with the pass's driver
+  * state in one broadcast destroyed after the job (the MLlib pattern,
+  * cf. Spark's `LeastSquaresAggregator`). Up to 64 partitions a pass is
+  * a plain `runJob` whose partition results fold on the driver in
+  * partition order; wider inputs reduce through a `treeAggregate` of
+  * depth `treeDepth`. A 1000-executor cluster does one shuffle-free
+  * map + reduction per solver pass, and the driver adds no per-job
+  * bookkeeping on top (see [[RowPass]]).
   */
 class DistributedBackend(
     rowsIn: RDD[(Vector, Array[Double])],
-    val pRaw: Int,
-    val m: Int,
-    val fitIntercept: Boolean,
+    pRaw: Int,
+    m: Int,
+    fitIntercept: Boolean,
     treeDepth: Int = 2,
-    knownN: Long = -1L) extends SlopeBackend {
+    knownN: Long = -1L) extends SlopeBackend(pRaw, m, fitIntercept) {
 
   // Size-aware task sizing: every solver pass is ONE job over these
   // rows, so the pass wall time is (rows-per-task x per-row kernel
@@ -525,40 +661,34 @@ class DistributedBackend(
   //    the training rows, amortized over every solver pass).
   // The width derives from WORK (feature cells), never from a core
   // constant: ~100k cells/task (the exp/log-heavy non-gaussian row
-  // kernels run ~0.25 us/cell, so a task is ~25 ms of compute — the
-  // DistPartProbe sweep over {3, 8, 16, 32, 64} widths at sf0.1 put
-  // the minimum at 16-32), capped by the cluster's defaultParallelism
-  // — growing past the core count adds scheduling overhead with no
-  // concurrency. At 100-TB scale cells/100k far exceeds both the scan
-  // layout and the core count, so the policy only ever coalesces
-  // there (the pre-r17 behavior).
+  // kernels run ~0.25 us/cell, so a task is ~25 ms of compute — an r17
+  // sweep over {3, 8, 16, 32, 64} widths at sf0.1 put the minimum at
+  // 16-32), capped by the cluster's defaultParallelism — growing past
+  // the core count adds scheduling overhead with no concurrency. At
+  // 100-TB scale cells/100k far exceeds both the scan layout and the
+  // core count, so the policy only ever coalesces there (the pre-r17
+  // behavior).
   // Inputs with no prior count (knownN < 0) keep their layout: sizing
   // is not worth an extra full pass.
-  val rows: RDD[(Vector, Array[Double])] = {
-    val sized =
-      if (knownN < 0) rowsIn
-      else {
-        val cells = knownN.toDouble * math.max(1, pRaw) * math.max(1, m)
-        val target0 = math.min(
-          math.max(8, math.ceil(cells / 1e5).toLong),
-          rowsIn.sparkContext.defaultParallelism.toLong).toInt
-        // probe override (DistPartProbe): 0 = keep the input layout
-        val target = sys.props.get("graft.slope.distPartitionsOverride")
-          .map(_.toInt).filter(_ >= 0).getOrElse(target0)
-        val parts = rowsIn.getNumPartitions
-        if (target == 0 || target == parts) rowsIn
-        else if (target < parts) rowsIn.coalesce(target)
-        // growing costs a full shuffle of the training rows — pay it
-        // only when it at least DOUBLES the pass parallelism (the
-        // 3-split case it exists for), never to fine-tune an already
-        // -wide layout (measured at the 10x frame: repartition 30→32
-        // shuffled ~1 GB to gain 2 tasks and LOST ~6 s to the shuffle
-        // + GC)
-        else if (target >= 2 * parts) rowsIn.repartition(target)
-        else rowsIn
-      }
-    sized
-  }
+  val rows: RDD[(Vector, Array[Double])] =
+    if (knownN < 0) rowsIn
+    else {
+      val cells = knownN.toDouble * math.max(1, pRaw) * math.max(1, m)
+      val target = math.min(
+        math.max(8, math.ceil(cells / 1e5).toLong),
+        rowsIn.sparkContext.defaultParallelism.toLong).toInt
+      val parts = rowsIn.getNumPartitions
+      if (target == parts) rowsIn
+      else if (target < parts) rowsIn.coalesce(target)
+      // growing costs a full shuffle of the training rows — pay it
+      // only when it at least DOUBLES the pass parallelism (the
+      // 3-split case it exists for), never to fine-tune an already
+      // -wide layout (measured at the 10x frame: repartition 30→32
+      // shuffled ~1 GB to gain 2 tasks and LOST ~6 s to the shuffle
+      // + GC)
+      else if (target >= 2 * parts) rowsIn.repartition(target)
+      else rowsIn
+    }
 
   rows.persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -566,28 +696,36 @@ class DistributedBackend(
   // decision) pass n in — saves a full scan per fit
   lazy val n: Long = if (knownN >= 0) knownN else rows.count()
 
-  private var xCenter: Array[Double] = new Array[Double](pInt)
-  private var xScale: Array[Double] = Array.fill(pInt)(1.0)
-  def setStandardization(c: Array[Double], s: Array[Double]): Unit = {
-    xCenter = c; xScale = s
-  }
-
   private def sc = rows.sparkContext
 
-  /** The one launcher every pass goes through. With <= 64 partitions a
-    * tree level would only add a scheduled stage: `runJob` runs the
-    * pass object itself as the task function and the handler merges
-    * partition results on the driver as they arrive — what
-    * `treeAggregate(depth = 1)` does, minus its closure cleaning (five
-    * cleaner runs per job, two of them parsing Spark's own RDD and
-    * SparkContext bytecode). Wider inputs keep `treeAggregate`'s tree.
-    * Must stay in this file: job call sites read `... at Backend.scala:`. */
-  private def runPass(pass: RowPass): Array[Double] = {
+  private[slope] def ship[S: ClassTag](state: S): Shipped[S] =
+    new BroadcastState(sc.broadcast(state))
+
+  /** With <= 64 partitions a tree level would only add a scheduled
+    * stage: `runJob` runs the pass object itself as the task function,
+    * and the handler folds partition results on the driver in partition
+    * order — a buffer that arrives early waits for its predecessors, so
+    * repeated passes agree bit for bit. The held buffers are bounded by
+    * the job's result bytes, which `spark.driver.maxResultSize` caps.
+    * This is what `treeAggregate(depth = 1)` does, minus its closure
+    * cleaning (five cleaner runs per job, two of them parsing Spark's
+    * own RDD and SparkContext bytecode). Wider inputs keep
+    * `treeAggregate`'s tree. Must stay in this file: job call sites
+    * read `... at Backend.scala:`. */
+  private[slope] def runPass(pass: RowPass): Array[Double] = {
     val parts = rows.getNumPartitions
     if (parts <= 64) {
+      val held = new Array[Array[Double]](parts)
+      var next = 0
       var acc: Array[Double] = null
-      sc.runJob(rows, pass, 0 until parts, (_: Int, part: Array[Double]) =>
-        acc = if (acc == null) part else pass.merge(acc, part))
+      sc.runJob(rows, pass, 0 until parts, (i: Int, part: Array[Double]) => {
+        held(i) = part
+        while (next < parts && held(next) != null) {
+          acc = if (acc == null) held(next) else pass.merge(acc, held(next))
+          held(next) = null
+          next += 1
+        }
+      })
       if (acc == null) pass.zero() else acc
     } else {
       rows.mapPartitions(it => Iterator.single(pass(TaskContext.get(), it)))
@@ -595,304 +733,46 @@ class DistributedBackend(
     }
   }
 
-  def featureMeansAndSparsity(): (Array[Double], Boolean) = {
-    val p = pRaw
-    val res = runPass(new MeansPass(p))
-    val cnt = res(p)
-    (Array.tabulate(p)(j => res(j) / cnt), res(p + 1) > 0)
-  }
-
-  def scaleStats(center: Array[Double], scale: String): Array[Double] = {
-    val p = pRaw
-    scale match {
-      case "none" => Array.fill(p)(1.0)
-      case "l1" =>
-        // centered l1 needs every slot; with all-zero centers (sparse
-        // path) the stored entries suffice
-        val bc = if (center.exists(_ != 0.0)) Some(sc.broadcast(center)) else None
-        try runPass(new L1Pass(p, bc))
-        finally bc.foreach(_.destroy())
-      case "l2" | "sd" | "max" =>
-        // sufficient stats: sumsq, max (centered l2/sd derive from moments)
-        val res = runPass(new SpreadPass(p))
-        val cnt = res(2 * p)
-        scale match {
-          case "l2" =>
-            Array.tabulate(p)(j => math.sqrt(math.max(0.0, res(j) - cnt * center(j) * center(j))))
-          case "sd" =>
-            Array.tabulate(p)(j =>
-              math.sqrt(math.max(0.0, res(j) - cnt * center(j) * center(j)) / (cnt - 1.0)))
-          case "max" =>
-            Array.tabulate(p)(j => res(p + j) - center(j))
-        }
-    }
-  }
-
-  def yMoments(): (Array[Double], Array[Double]) = {
-    val mm = m
-    val res = runPass(new YMomentsPass(mm))
-    val cnt = res(2 * mm)
-    val mean = Array.tabulate(mm)(k => res(k) / cnt)
-    val sd = Array.tabulate(mm)(k =>
-      math.sqrt(math.max(0.0, res(mm + k) / cnt - mean(k) * mean(k))))
-    (mean, sd)
-  }
-
-  /** One [[EvalPass]] at `points` (each |active| x m): primals at every
-    * point, dual and gradient terms at the last. */
-  private def evalPass(active: Array[Int], points: Seq[Array[Double]], family: Family,
-                       needDual: Boolean, needGrad: Boolean): Array[Double] = {
-    val weights = points.map { beta =>
-      val (w, b) = BackendKernels.effectiveWeights(
-        active, beta, m, pRaw, fitIntercept, xCenter, xScale)
-      new PointWeights(w, b)
-    }
-    val bc = sc.broadcast(new EvalState(weights.toArray,
-      BackendKernels.slotMap(active, pRaw, fitIntercept)))
-    try runPass(new EvalPass(bc, points.length, family, active.length, m,
-      needDual, needGrad))
-    finally bc.destroy()
-  }
-
-  /** Raw gradient terms at `from` in a pass buffer -> standardized
-    * gradient. */
-  private def gradAt(active: Array[Int], res: Array[Double], from: Int): Array[Double] = {
-    val a = active.length
-    val s0 = java.util.Arrays.copyOfRange(res, from, from + m)
-    val rawA = java.util.Arrays.copyOfRange(res, from + m, from + m + a * m)
-    BackendKernels.standardizeGrad(active, rawA, s0, m, fitIntercept, xCenter, xScale)
-  }
-
-  def evalActive(active: Array[Int], betaActive: Array[Double], family: Family,
-                 needDual: Boolean, needGrad: Boolean): (Double, Double, Array[Double]) = {
-    // buffer: [primal, dual, s0(m), A(a*m)]
-    val res = evalPass(active, Seq(betaActive), family, needDual, needGrad)
-    (res(0), res(1), if (needGrad) gradAt(active, res, 2) else new Array[Double](0))
-  }
-
-  /** ONE job for the speculative FISTA step: candidate primal + full
-    * next-point evaluation share the row scan (the per-pass job count
-    * drops from 2 to 1 — at 100 TB that halves both scheduling latency
-    * AND data I/O for every non-gaussian solver pass). Each accumulator
-    * slot sums exactly the per-row terms the two separate jobs would;
-    * values agree with the composed form up to the driver merge's
-    * arrival-order noise (sub-ULP), the same variance any two runs of
-    * the separate jobs already have. */
-  override def evalPairActive(active: Array[Int], candActive: Array[Double],
-                              nextActive: Array[Double], family: Family)
-    : (Double, Double, Double, Array[Double]) = {
-    // buffer: [gCand, gNext, dualNext, s0(m), A(a*m)]  (grad terms at next)
-    val res = evalPass(active, Seq(candActive, nextActive), family,
-      needDual = true, needGrad = true)
-    (res(0), res(1), res(2), gradAt(active, res, 3))
-  }
-
-  def gramXty(active: Array[Int]): (Array[Double], Array[Double]) = {
-    val a = active.length
-    val bc = sc.broadcast(BackendKernels.slotMap(active, pRaw, fitIntercept))
-    val res =
-      try runPass(new GramPass(bc, a, m))
-      finally bc.destroy()
-    BackendKernels.assembleGram(active, res, a, m, n, fitIntercept, xCenter, xScale)
-  }
-
-  def xtv(rowV: Array[Double] => Array[Double]): Array[Double] = {
-    val a = pInt
-    val mm = m
-    val fi = fitIntercept
-    val res = runPass(new XtvPass(rowV, a, mm, fi))
-    val out = new Array[Double](a * mm)
-    var k = 0
-    while (k < mm) {
-      val vSum = res(a * mm + k)
-      var r = 0
-      while (r < a) {
-        out(k * a + r) =
-          if (fi && r == 0) vSum / xScale(0)
-          else (res(k * a + r) - xCenter(r) * vSum) / xScale(r)
-        r += 1
-      }
-      k += 1
-    }
-    out
-  }
-
   def unpersist(): Unit = rows.unpersist()
 }
 
 /** Local backend over collected rows — used when n*p is driver-sized
-  * (all reference-scale problems). Identical formulas, zero job overhead:
-  * this is what makes the path loop (up to 100 sigma steps x thousands of
-  * FISTA passes) feasible without 10^5 Spark jobs on small data, exactly
+  * (all reference-scale problems). It runs the same [[RowPass]] objects
+  * as the distributed backend with zero job overhead: this is what
+  * makes the path loop (up to 100 sigma steps x thousands of FISTA
+  * passes) feasible without 10^5 Spark jobs on small data, exactly
   * mirroring the reference's single-node execution.
   */
 class LocalBackend(
-    val xs: Array[Vector], // raw feature rows
-    val ys: Array[Array[Double]],
-    val pRaw: Int,
-    val m: Int,
-    val fitIntercept: Boolean) extends SlopeBackend {
+    xs: Array[Vector], // raw feature rows
+    ys: Array[Array[Double]],
+    pRaw: Int,
+    m: Int,
+    fitIntercept: Boolean) extends SlopeBackend(pRaw, m, fitIntercept) {
 
-  val n: Long = xs.length.toLong
+  private val rows: Array[(Vector, Array[Double])] = xs.zip(ys)
 
-  private var xCenter: Array[Double] = new Array[Double](pInt)
-  private var xScale: Array[Double] = Array.fill(pInt)(1.0)
-  def setStandardization(c: Array[Double], s: Array[Double]): Unit = {
-    xCenter = c; xScale = s
-  }
+  val n: Long = rows.length.toLong
 
-  def featureMeansAndSparsity(): (Array[Double], Boolean) = {
-    val sum = new Array[Double](pRaw)
-    var sparse = false
-    var i = 0
-    while (i < xs.length) {
-      BackendKernels.foreachStored(xs(i))((j, v) => sum(j) += v)
-      sparse ||= xs(i).isInstanceOf[SparseVector]
-      i += 1
-    }
-    (sum.map(_ / n), sparse)
-  }
+  private[slope] def ship[S: ClassTag](state: S): Shipped[S] = new HeldState(state)
 
-  def scaleStats(center: Array[Double], scale: String): Array[Double] = {
-    val p = pRaw
-    scale match {
-      case "none" => Array.fill(p)(1.0)
-      case "l1" =>
-        val acc = new Array[Double](p)
-        val centered = center.exists(_ != 0.0)
-        var i = 0
-        while (i < xs.length) {
-          if (!centered) BackendKernels.foreachStored(xs(i))((j, v) => acc(j) += math.abs(v))
-          else { var j = 0; while (j < p) { acc(j) += math.abs(xs(i)(j) - center(j)); j += 1 } }
-          i += 1
-        }
-        acc
-      case "l2" | "sd" | "max" =>
-        val sumsq = new Array[Double](p)
-        val mx = Array.fill(p)(Double.NegativeInfinity)
-        var i = 0
-        while (i < xs.length) {
-          xs(i) match {
-            case d: DenseVector =>
-              var j = 0
-              while (j < p) {
-                val v = d.values(j); sumsq(j) += v * v
-                if (v > mx(j)) mx(j) = v
-                j += 1
-              }
-            case s: SparseVector =>
-              var j = 0
-              while (j < p) { if (0.0 > mx(j)) mx(j) = 0.0; j += 1 }
-              BackendKernels.foreachStored(s) { (j, v) =>
-                sumsq(j) += v * v; if (v > mx(j)) mx(j) = v
-              }
-          }
-          i += 1
-        }
-        scale match {
-          case "l2" =>
-            Array.tabulate(p)(j => math.sqrt(math.max(0.0, sumsq(j) - n * center(j) * center(j))))
-          case "sd" =>
-            Array.tabulate(p)(j =>
-              math.sqrt(math.max(0.0, sumsq(j) - n * center(j) * center(j)) / (n - 1.0)))
-          case "max" =>
-            Array.tabulate(p)(j => mx(j) - center(j))
-        }
-    }
-  }
-
-  def yMoments(): (Array[Double], Array[Double]) = {
-    val sum = new Array[Double](m)
-    val sumsq = new Array[Double](m)
-    var i = 0
-    while (i < ys.length) {
-      var k = 0
-      while (k < m) { sum(k) += ys(i)(k); sumsq(k) += ys(i)(k) * ys(i)(k); k += 1 }
-      i += 1
-    }
-    val mean = sum.map(_ / n)
-    val sd = Array.tabulate(m)(k => math.sqrt(math.max(0.0, sumsq(k) / n - mean(k) * mean(k))))
-    (mean, sd)
-  }
-
-  /** Split [0, n) into chunks, run `body(chunkBuf, start, end)` in
-    * parallel (common ForkJoin pool), merge the per-chunk buffers. */
-  private def parallelChunks(bufLen: Int)(
-      body: (Array[Double], Int, Int) => Unit): Array[Double] = {
-    val nRows = xs.length
-    // fixed chunk count (not availableProcessors): the per-chunk merge
-    // order below is already deterministic, and pinning the chunk count
-    // makes the FP summation order identical across hosts — required for
-    // the golden-file oracle checks to hash-match
-    val nChunks = if (nRows < 16384) 1 else 32
-    if (nChunks == 1) {
-      val buf = new Array[Double](bufLen)
-      body(buf, 0, nRows)
-      buf
-    } else {
-      val bufs = Array.fill(nChunks)(new Array[Double](bufLen))
+  /** A [[RowPass.chunked]] pass over 16,384 rows or more runs as 32
+    * chunks on the common ForkJoin pool; any other pass, as one run.
+    * The chunk count is fixed (not the core count) and chunks merge in
+    * index order, so the summation order is the same on every host —
+    * which the golden-file oracle checks depend on. */
+  private[slope] def runPass(pass: RowPass): Array[Double] = {
+    val nRows = rows.length
+    if (!pass.chunked || nRows < 16384) pass(null, rows.iterator)
+    else {
+      val nChunks = 32
       val chunk = (nRows + nChunks - 1) / nChunks
+      val parts = new Array[Array[Double]](nChunks)
       java.util.stream.IntStream.range(0, nChunks).parallel().forEach { c =>
-        body(bufs(c), c * chunk, math.min(nRows, (c + 1) * chunk))
+        parts(c) = pass(null, rows.iterator.slice(c * chunk, (c + 1) * chunk))
       }
-      val out = bufs(0)
-      var c = 1
-      while (c < nChunks) {
-        val src = bufs(c)
-        var i = 0
-        while (i < bufLen) { out(i) += src(i); i += 1 }
-        c += 1
-      }
-      out
+      parts.reduceLeft(pass.merge)
     }
-  }
-
-  def evalActive(active: Array[Int], betaActive: Array[Double], family: Family,
-                 needDual: Boolean, needGrad: Boolean): (Double, Double, Array[Double]) = {
-    val a = active.length
-    val (w, b) = BackendKernels.effectiveWeights(
-      active, betaActive, m, pRaw, fitIntercept, xCenter, xScale)
-    val slotOf = BackendKernels.slotMap(active, pRaw, fitIntercept)
-    // buffer: [primal, dual, s0(m), rawA(a*m)]
-    val bufLen = 2 + m + a * m
-    val res = parallelChunks(bufLen) { (buf, start, end) =>
-      val lp = new Array[Double](m)
-      val pg = new Array[Double](m)
-      var i = start
-      while (i < end) {
-        val x = xs(i); val y = ys(i)
-        BackendKernels.linPred(x, w, b, lp)
-        buf(0) += family.primalRow(y, lp)
-        if (needDual) buf(1) += family.dualRow(y, lp)
-        if (needGrad) {
-          family.pseudoGradientRow(y, lp, pg)
-          BackendKernels.gradRowUpdate(x, pg, slotOf, buf, 2, a, m)
-        }
-        i += 1
-      }
-    }
-    val grad = if (needGrad) {
-      val s0 = java.util.Arrays.copyOfRange(res, 2, 2 + m)
-      val rawA = java.util.Arrays.copyOfRange(res, 2 + m, bufLen)
-      BackendKernels.standardizeGrad(active, rawA, s0, m, fitIntercept, xCenter, xScale)
-    } else new Array[Double](0)
-    (res(0), res(1), grad)
-  }
-
-  def gramXty(active: Array[Int]): (Array[Double], Array[Double]) = {
-    val a = active.length
-    val slotOf = BackendKernels.slotMap(active, pRaw, fitIntercept)
-    val buf = parallelChunks(a * a + a + a * m + m) { (chunkBuf, start, end) =>
-      val tmpSlot = new Array[Int](a)
-      val tmpVal = new Array[Double](a)
-      var i = start
-      while (i < end) {
-        BackendKernels.gramRowUpdate(xs(i), ys(i), slotOf, chunkBuf, a, m,
-          tmpSlot, tmpVal)
-        i += 1
-      }
-    }
-    BackendKernels.assembleGram(active, buf, a, m, n, fitIntercept, xCenter, xScale)
   }
 
   /** Rows are driver-resident: materialize the standardized active
@@ -901,58 +781,20 @@ class LocalBackend(
   override def activeMatrixXty(active: Array[Int])
     : Option[(Array[Double], Array[Double])] = {
     val a = active.length
-    val nR = xs.length
-    val xmat = new Array[Double](nR * a)
+    val xmat = new Array[Double](rows.length * a)
     val xty = new Array[Double](a)
-    val off = if (fitIntercept) 1 else 0
     var i = 0
-    while (i < nR) {
-      val x = xs(i)
-      val y = ys(i)(0)
+    while (i < rows.length) {
+      val (x, y) = rows(i)
       var s = 0
       while (s < a) {
-        val row = active(s)
-        val v =
-          if (fitIntercept && row == 0) 1.0 / xScale(0)
-          else (x(row - off) - xCenter(row)) / xScale(row)
+        val v = standardized(x, active(s))
         xmat(i * a + s) = v
-        xty(s) += v * y
+        xty(s) += v * y(0)
         s += 1
       }
       i += 1
     }
     Some((xmat, xty))
-  }
-
-  def xtv(rowV: Array[Double] => Array[Double]): Array[Double] = {
-    val a = pInt
-    val fi = fitIntercept
-    val acc = new Array[Double](a * m)
-    val vSum = new Array[Double](m)
-    var i = 0
-    while (i < xs.length) {
-      val v = rowV(ys(i))
-      var k = 0
-      while (k < m) { vSum(k) += v(k); k += 1 }
-      BackendKernels.foreachStored(xs(i)) { (j, vx) =>
-        val slot = if (fi) j + 1 else j
-        var kk = 0
-        while (kk < m) { acc(kk * a + slot) += vx * v(kk); kk += 1 }
-      }
-      i += 1
-    }
-    val out = new Array[Double](a * m)
-    var k = 0
-    while (k < m) {
-      var r = 0
-      while (r < a) {
-        out(k * a + r) =
-          if (fi && r == 0) vSum(k) / xScale(0)
-          else (acc(k * a + r) - xCenter(r) * vSum(k)) / xScale(r)
-        r += 1
-      }
-      k += 1
-    }
-    out
   }
 }

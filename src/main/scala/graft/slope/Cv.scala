@@ -35,6 +35,17 @@ case class SlopeCvResult(summary: Seq[CvCell], optima: Seq[CvCell],
   */
 object SlopeCv {
 
+  /** Names the CV pool's threads `slope-cv-N` (daemon: a cell that
+    * outlives a failed CV never holds the JVM open). */
+  private object CvThreads extends java.util.concurrent.ThreadFactory {
+    private val count = new java.util.concurrent.atomic.AtomicInteger
+    def newThread(r: Runnable): Thread = {
+      val t = new Thread(r, s"slope-cv-${count.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+  }
+
   def trainSlope(df: DataFrame, featuresCol: String, labelCol: String,
                  params: SlopeParams = SlopeParams(),
                  qs: Seq[Double] = Seq(0.2),
@@ -67,128 +78,131 @@ object SlopeCv {
     val withFolds = df.select(
       (col(featuresCol) +: col(labelCol) +: foldCols): _*).cache()
 
-    val grid = for {
-      q <- qs; rep <- 0 until repeats; fold <- 0 until number
-    } yield (q, rep, fold)
+    try {
+      val grid = for {
+        q <- qs; rep <- 0 until repeats; fold <- 0 until number
+      } yield (q, rep, fold)
 
-    // Collect-once cell path: when the training data is driver-sized
-    // (the same n*p gate Slope.fit applies per fit), pull the folded
-    // rows ONE time and slice per cell instead of re-collecting the
-    // train split number*repeats*|qs| times. Each slice is re-sorted by
-    // content (Slope.sortRowsInPlace — the same order Slope.fit
-    // imposes), and a cell's train multiset is identical either way, so
-    // the fitted values are bit-for-bit unchanged. Above the gate every
-    // cell fit stays fully distributed.
-    val headRow = withFolds.take(1)
-    require(headRow.nonEmpty, "empty input")
-    val pFeat = Slope.toVec(headRow(0).get(0)).size
-    // vectorize and content-sort the shared collect ONCE: the r11
-    // scale gate caught per-cell toVec + sortRowsInPlace re-doing
-    // O(n log n) work (and O(n) vector allocation) number*repeats*|qs|
-    // times — at the sf1 frame that was a 12x allocation storm (128 s,
-    // 7-11 s GC per rep). A filtered subset of a content-sorted
-    // sequence is itself content-sorted with the identical value
-    // sequence (ties are exact-duplicate rows), so each cell now just
-    // selects SHARED vector references and fits — bit-identical
-    // results, one sort instead of twelve.
-    val localData: (Array[org.apache.spark.ml.linalg.Vector],
-        Array[Any], Array[Array[Int]]) =
-      if (withFolds.count() * pFeat.toLong <=
-            Slope.effectiveLocalCellLimit(params)) {
-        // project through the SAME casts Slope.fit applies before its
-        // own collect, so slice values (and the content-sort keys
-        // derived from them) are identical to what a per-cell fit sees
-        val rows = Slope.selectFrame(withFolds, featuresCol, labelCol, family,
-          (0 until repeats).map(r => col(s"__fold_$r"))).collect()
-        val xs = rows.map(r => Slope.toVec(r.get(0)))
-        val ys: Array[Any] = rows.map(_.get(1))
-        val folds = rows.map(r =>
-          Array.tabulate(repeats)(i => r.getInt(2 + i)))
-        val ord = Slope.contentOrderIndices(xs, ys)
-        (ord.map(xs), ord.map(ys), ord.map(folds))
-      } else null
+      // Collect-once cell path: when the training data is driver-sized
+      // (the same n*p gate Slope.fit applies per fit), pull the folded
+      // rows ONE time and slice per cell instead of re-collecting the
+      // train split number*repeats*|qs| times. Each slice is re-sorted by
+      // content (Slope.sortRowsInPlace — the same order Slope.fit
+      // imposes), and a cell's train multiset is identical either way, so
+      // the fitted values are bit-for-bit unchanged. Above the gate every
+      // cell fit stays fully distributed.
+      val headRow = withFolds.take(1)
+      require(headRow.nonEmpty, "empty input")
+      val pFeat = Slope.toVec(headRow(0).get(0)).size
+      // vectorize and content-sort the shared collect ONCE: the r11
+      // scale gate caught per-cell toVec + sortRowsInPlace re-doing
+      // O(n log n) work (and O(n) vector allocation) number*repeats*|qs|
+      // times — at the sf1 frame that was a 12x allocation storm (128 s,
+      // 7-11 s GC per rep). A filtered subset of a content-sorted
+      // sequence is itself content-sorted with the identical value
+      // sequence (ties are exact-duplicate rows), so each cell now just
+      // selects SHARED vector references and fits — bit-identical
+      // results, one sort instead of twelve.
+      val localData: (Array[org.apache.spark.ml.linalg.Vector],
+          Array[Any], Array[Array[Int]]) =
+        if (withFolds.count() * pFeat.toLong <=
+              Slope.effectiveLocalCellLimit(params)) {
+          // project through the SAME casts Slope.fit applies before its
+          // own collect, so slice values (and the content-sort keys
+          // derived from them) are identical to what a per-cell fit sees
+          val rows = Slope.selectFrame(withFolds, featuresCol, labelCol, family,
+            (0 until repeats).map(r => col(s"__fold_$r"))).collect()
+          val xs = rows.map(r => Slope.toVec(r.get(0)))
+          val ys: Array[Any] = rows.map(_.get(1))
+          val folds = rows.map(r =>
+            Array.tabulate(repeats)(i => r.getInt(2 + i)))
+          val ord = Slope.contentOrderIndices(xs, ys)
+          (ord.map(xs), ord.map(ys), ord.map(folds))
+        } else null
 
-    // initial full fit fixes the sigma path (R/trainOwl.R:69,84) —
-    // over the SHARED collect when the data is driver-sized (r17
-    // optimization round): the localData arrays carry exactly fit's
-    // casts and content order (see the slice argument above), so
-    // fitLocal here is bit-identical to `Slope.fit(df, ...)`, minus
-    // the second full collect + O(n log n) sort that fit would pay.
-    // Above the gate the distributed fit is unchanged.
-    val fullFit =
-      if (localData != null)
-        Slope.fitLocal(localData._1, localData._2,
+      // initial full fit fixes the sigma path (R/trainOwl.R:69,84) —
+      // over the SHARED collect when the data is driver-sized (r17
+      // optimization round): the localData arrays carry exactly fit's
+      // casts and content order (see the slice argument above), so
+      // fitLocal here is bit-identical to `Slope.fit(df, ...)`, minus
+      // the second full collect + O(n log n) sort that fit would pay.
+      // Above the gate the distributed fit is unchanged.
+      val fullFit =
+        if (localData != null)
+          Slope.fitLocal(localData._1, localData._2,
+            params.copy(q = Some(qs.head)))
+        else Slope.fit(df, featuresCol, labelCol,
           params.copy(q = Some(qs.head)))
-      else Slope.fit(df, featuresCol, labelCol,
-        params.copy(q = Some(qs.head)))
-    val sigma = fullFit.sigma
+      val sigma = fullFit.sigma
 
-    // A local cell fits AND scores from the shared collect: its
-    // held-out rows go through the same scoring kernel scoreMany runs,
-    // on the driver, so the cell launches no Spark job.
-    def runCell(cell: (Double, Int, Int)): Seq[((Double, String), Array[Double])] = {
-      val (q, rep, fold) = cell
-      val cellParams = params.copy(q = Some(q), sigma = Some(sigma))
-      val scores =
-        if (localData != null) {
-          val (xsAll, ysAll, foldsAll) = localData
-          val (train, test) = Array.range(0, xsAll.length)
-            .partition(i => foldsAll(i)(rep) != fold)
-          val m = Slope.fitLocal(train.map(xsAll), train.map(ysAll), cellParams)
-          SlopeScore.scoreRows(m, test.map(xsAll), test.map(ysAll), ms)
-        } else {
-          val foldCol = col(s"__fold_$rep")
-          val m = Slope.fit(withFolds.filter(foldCol =!= fold), featuresCol,
-            labelCol, cellParams)
-          SlopeScore.scoreMany(m, withFolds.filter(foldCol === fold),
-            featuresCol, labelCol, ms)
-        }
-      ms.map(measure => ((q, measure), scores(measure)))
-    }
-
-    val results: Seq[((Double, Int, Int), Seq[((Double, String), Array[Double])])] =
-      if (parallelism <= 1) grid.map(c => c -> runCell(c))
-      else {
-        // concurrent Spark jobs from a driver pool (thread-safe in Spark)
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        val futures = grid.map(c => scala.concurrent.Future(c -> runCell(c)))
-        val out = scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(futures),
-          scala.concurrent.duration.Duration.Inf)
-        pool.shutdown()
-        out
+      // A local cell fits AND scores from the shared collect: its
+      // held-out rows go through the same scoring kernel scoreMany runs,
+      // on the driver, so the cell launches no Spark job.
+      def runCell(cell: (Double, Int, Int)): Seq[((Double, String), Array[Double])] = {
+        val (q, rep, fold) = cell
+        val cellParams = params.copy(q = Some(q), sigma = Some(sigma))
+        val scores =
+          if (localData != null) {
+            val (xsAll, ysAll, foldsAll) = localData
+            val (train, test) = Array.range(0, xsAll.length)
+              .partition(i => foldsAll(i)(rep) != fold)
+            val m = Slope.fitLocal(train.map(xsAll), train.map(ysAll), cellParams)
+            SlopeScore.scoreRows(m, test.map(xsAll), test.map(ysAll), ms)
+          } else {
+            val foldCol = col(s"__fold_$rep")
+            val m = Slope.fit(withFolds.filter(foldCol =!= fold), featuresCol,
+              labelCol, cellParams)
+            SlopeScore.scoreMany(m, withFolds.filter(foldCol === fold),
+              featuresCol, labelCol, ms)
+          }
+        ms.map(measure => ((q, measure), scores(measure)))
       }
 
-    // aggregate (q, measure, step) across number*repeats cells
-    val cells = grid.size / qs.size // = number*repeats per (q, measure)
-    val byKey = results.flatMap(_._2).groupBy(_._1)
-    val summary = for {
-      q <- qs
-      measure <- ms
-      step <- sigma.indices
-    } yield {
-      val vals = byKey((q, measure)).map(_._2)
-        .map(a => if (step < a.length) a(step) else Double.NaN)
-        .filterNot(_.isNaN)
-      val mean = vals.sum / vals.length
-      val sd = math.sqrt(vals.map(v => (v - mean) * (v - mean)).sum /
-        math.max(1, vals.length - 1))
-      val se = sd / math.sqrt(cells.toDouble)
-      val ci = Stats.qt(0.975, cells - 1.0) * se
-      CvCell(q, sigma(step), measure, mean, se, mean - ci, mean + ci)
-    }
+      val results: Seq[((Double, Int, Int), Seq[((Double, String), Array[Double])])] =
+        if (parallelism <= 1) grid.map(c => c -> runCell(c))
+        else {
+          // concurrent Spark jobs from a driver pool (thread-safe in Spark).
+          // The first failed cell fails the sequence; shutdownNow then
+          // keeps the cells still queued from starting.
+          val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism,
+            CvThreads)
+          try {
+            implicit val ec: scala.concurrent.ExecutionContext =
+              scala.concurrent.ExecutionContext.fromExecutor(pool)
+            val futures = grid.map(c => scala.concurrent.Future(c -> runCell(c)))
+            scala.concurrent.Await.result(
+              scala.concurrent.Future.sequence(futures),
+              scala.concurrent.duration.Duration.Inf)
+          } finally pool.shutdownNow()
+        }
 
-    // higher-is-better measures maximize; the reference applies
-    // which.min to every measure (trainOwl.R:165), which would pick the
-    // WORST model when tuning on AUC — deliberate deviation
-    val optima = ms.map { m =>
-      val cells = summary.filter(_.measure == m)
-      if (m == "auc") cells.maxBy(_.mean) else cells.minBy(_.mean)
-    }
+      // aggregate (q, measure, step) across number*repeats cells
+      val cells = grid.size / qs.size // = number*repeats per (q, measure)
+      val byKey = results.flatMap(_._2).groupBy(_._1)
+      val summary = for {
+        q <- qs
+        measure <- ms
+        step <- sigma.indices
+      } yield {
+        val vals = byKey((q, measure)).map(_._2)
+          .map(a => if (step < a.length) a(step) else Double.NaN)
+          .filterNot(_.isNaN)
+        val mean = vals.sum / vals.length
+        val sd = math.sqrt(vals.map(v => (v - mean) * (v - mean)).sum /
+          math.max(1, vals.length - 1))
+        val se = sd / math.sqrt(cells.toDouble)
+        val ci = Stats.qt(0.975, cells - 1.0) * se
+        CvCell(q, sigma(step), measure, mean, se, mean - ci, mean + ci)
+      }
 
-    withFolds.unpersist()
-    SlopeCvResult(summary, optima, fullFit)
+      // higher-is-better measures maximize; the reference applies
+      // which.min to every measure (trainOwl.R:165), which would pick the
+      // WORST model when tuning on AUC — deliberate deviation
+      val optima = ms.map { m =>
+        val cells = summary.filter(_.measure == m)
+        if (m == "auc") cells.maxBy(_.mean) else cells.minBy(_.mean)
+      }
+      SlopeCvResult(summary, optima, fullFit)
+    } finally withFolds.unpersist()
   }
 }

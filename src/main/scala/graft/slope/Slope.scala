@@ -171,6 +171,20 @@ object Slope {
       s"unsupported features type: ${other.getClass}")
   }
 
+  /** Whether every stored value of `v` is finite (implicit zeros are).
+    * NaN or infinite features would poison every pass sum, so both fit
+    * paths check each row at ingest, next to its length check (the
+    * reference rejects NA too, `R/owl.R:350`). */
+  private def allFinite(v: Vector): Boolean = {
+    val vals = v match {
+      case d: DenseVector => d.values
+      case s: SparseVector => s.values
+    }
+    var i = 0
+    while (i < vals.length && java.lang.Double.isFinite(vals(i))) i += 1
+    i == vals.length
+  }
+
   /** The local path's data prep as a reusable surface (r17
     * optimization round): the exact collect → cast → vectorize →
     * content-sort pipeline `fit` runs before [[fitLocal]]. A caller
@@ -231,7 +245,7 @@ object Slope {
       // driver-local path: zero Spark jobs inside the solver loop
       val (xs, rawY) = collectLocal(df, featuresCol, labelCol, params)
       fitLocal(xs, rawY, params)
-      // (fitLocal validates per-row feature lengths against xs(0))
+      // (fitLocal validates per-row feature lengths and values)
     } else {
       // distributed path
       val yDim =
@@ -263,6 +277,7 @@ object Slope {
         require(v.size == pExpected,
           s"feature vector length ${v.size} != expected $pExpected " +
             "(all rows must have the same dimensionality)")
+        require(allFinite(v), "non-finite (NaN or infinite) feature values are not allowed")
         (v, enc(r.get(1)))
       }
       val backend = new DistributedBackend(rdd, p, m, params.fitIntercept,
@@ -282,6 +297,8 @@ object Slope {
       require(xs(vi).size == p,
         s"feature vector length ${xs(vi).size} at row $vi != expected $p " +
           "(all rows must have the same dimensionality)")
+      require(allFinite(xs(vi)),
+        s"non-finite (NaN or infinite) feature values are not allowed (row $vi)")
       vi += 1
     }
     val labelIsArray = rawY(0) match {
@@ -538,14 +555,8 @@ object Slope {
     // not centered (reference sparse branch, standardize.h:56-58)
     val scaleCenters =
       if (params.scale == "sd" && !center) featMeans else xCenterRaw
-    // NaN features poison the sums of the moments pass — detect here (one
-    // free check on p-dimensional state; reference rejects NA, R/owl.R:350)
-    require(!featMeans.exists(_.isNaN),
-      "missing (NaN) values in features are not allowed")
     val xScaleRaw = backend.scaleStats(scaleCenters, params.scale)
       .map(s => if (s == 0.0) 1.0 else s) // zero-variance guard
-    require(!xScaleRaw.exists(_.isNaN),
-      "missing (NaN) values in features are not allowed")
     // coefficient-row numbering: slot 0 = intercept. The intercept
     // coordinate is scaled by sqrt(n) — exact reparameterization that
     // keeps the ones-column curvature at 1 instead of n, so first-order
@@ -567,9 +578,6 @@ object Slope {
 
     val (yMean, ySd) = backend.yMoments()
     val absGrad = lambdaMaxGradient(backend, family, yMean, ySd)
-    // covers scale="none" + center=false, where no moments pass ran
-    require(!absGrad.exists(_.isNaN),
-      "missing (NaN) values in features are not allowed")
     val sigmaMax = LambdaSequence.sigmaMax(absGrad, lambda)
 
     val sigmaIsUser = params.sigma.isDefined

@@ -173,36 +173,118 @@ class MlApiSpec extends AnyFunSuite {
     }
   }
 
-  test("fused evalPairActive == composed primal + eval (distributed)") {
-    import org.apache.spark.ml.linalg.Vectors
-    import org.apache.spark.storage.StorageLevel
+  test("fused evalPairActive == composed primal + eval, on both backends") {
+    import org.apache.spark.ml.linalg.{Vector, Vectors}
     val rng = new scala.util.Random(41)
-    val n = 300; val p = 4
-    val rows = Array.fill(n)((
-      Vectors.dense(Array.fill(p)(rng.nextGaussian())).asInstanceOf[org.apache.spark.ml.linalg.Vector],
+    val p = 4
+    def rows(n: Int) = Array.fill(n)((
+      Vectors.dense(Array.fill(p)(rng.nextGaussian())): Vector,
       Array(if (rng.nextBoolean()) 1.0 else -1.0)))
-    val rdd = spark.sparkContext.parallelize(rows.toSeq, 4)
-    val backend = new DistributedBackend(rdd, p, 1, true, knownN = n)
+    val small = rows(300)
+    // 20k rows: the local backend splits evaluation passes into chunks
+    val large = rows(20000)
+    val dist = new DistributedBackend(spark.sparkContext.parallelize(small.toSeq, 4),
+      p, 1, true, knownN = small.length)
+    def local(rs: Array[(Vector, Array[Double])]) =
+      new LocalBackend(rs.map(_._1), rs.map(_._2), p, 1, true)
     try {
-      backend.setStandardization(new Array[Double](p + 1),
-        Array.fill(p + 1)(1.0))
+      for ((name, backend) <- Seq("distributed" -> dist, "local" -> local(small),
+                                  "local chunked" -> local(large))) {
+        backend.setStandardization(new Array[Double](p + 1), Array.fill(p + 1)(1.0))
+        val active = (0 to p).toArray
+        val cand = Array.tabulate(p + 1)(j => 0.1 * (j + 1))
+        val next = Array.tabulate(p + 1)(j => -0.05 * (j + 1))
+        val fam = Family("binomial")
+        val (gc, gn, dn, grn) = backend.evalPairActive(active, cand, next, fam)
+        // the same per-row terms, summed and merged in the same order
+        assert(gc == backend.primalActive(active, cand, fam), name)
+        val (g2, d2, gr2) = backend.evalActive(active, next, fam,
+          needDual = true, needGrad = true)
+        assert(gn == g2 && dn == d2, name)
+        assert(grn.sameElements(gr2), name)
+      }
+    } finally dist.unpersist()
+  }
+
+  test("repeated distributed passes agree bit for bit") {
+    import org.apache.spark.ml.linalg.{Vector, Vectors}
+    val rng = new scala.util.Random(53)
+    val p = 10
+    val rows = Array.fill(16000) {
+      val x = Array.fill(p)(rng.nextGaussian())
+      (Vectors.dense(x): Vector, Array(if (x(0) + rng.nextGaussian() > 0) 1.0 else -1.0))
+    }
+    // no knownN: the backend keeps the 8-partition layout
+    val backend = new DistributedBackend(
+      spark.sparkContext.parallelize(rows.toSeq, 8), p, 1, true)
+    try {
+      assert(backend.rows.getNumPartitions == 8)
+      backend.setStandardization(new Array[Double](p + 1), Array.fill(p + 1)(1.0))
       val active = (0 to p).toArray
-      val cand = Array.tabulate(p + 1)(j => 0.1 * (j + 1))
-      val next = Array.tabulate(p + 1)(j => -0.05 * (j + 1))
+      val beta = Array.tabulate(p + 1)(j => 0.3 / (j + 1))
       val fam = Family("binomial")
-      val (gc, gn, dn, grn) = backend.evalPairActive(active, cand, next, fam)
-      // identical per-row terms; only treeAggregate's combine order can
-      // differ between runs (task completion races), so compare to
-      // relative ULP-scale tolerance — the same bound two separate
-      // primalActive calls satisfy against each other
-      def close(x: Double, y: Double): Boolean =
-        math.abs(x - y) <= 1e-12 * math.max(1.0, math.abs(y))
-      assert(close(gc, backend.primalActive(active, cand, fam)))
-      val (g2, d2, gr2) = backend.evalActive(active, next, fam,
-        needDual = true, needGrad = true)
-      assert(close(gn, g2) && close(dn, d2))
-      assert(grn.indices.forall(i => close(grn(i), gr2(i))))
+      def eval() = backend.evalActive(active, beta, fam, needDual = true, needGrad = true)
+      val (g0, d0, gr0) = eval()
+      for (r <- 1 until 20) {
+        val (g, d, gr) = eval()
+        assert(g == g0 && d == d0 && gr.sameElements(gr0), s"repeat $r differs")
+      }
     } finally backend.unpersist()
+  }
+
+  test("repeated distributed binomial fits agree bit for bit") {
+    val gen = RandomProblem.generate(spark, 8000, 10, family = "binomial",
+      seed = 31, slices = 8)
+    val params = SlopeParams(family = "binomial", nSigma = 8, localCellLimit = 0)
+    val fits = Seq.fill(3)(Slope.fit(gen.df, "features", "label", params))
+    for ((f, r) <- fits.zipWithIndex.tail) {
+      assert(f.nSteps == fits.head.nSteps, s"fit $r")
+      for (s <- 0 until f.nSteps) {
+        assert(f.coefs(s).sameElements(fits.head.coefs(s)), s"fit $r step $s")
+        assert(f.intercepts(s).sameElements(fits.head.intercepts(s)), s"fit $r step $s")
+      }
+    }
+  }
+
+  test("non-finite features fail at ingest with a message that names them") {
+    import spark.implicits._
+    val rng = new scala.util.Random(59)
+    for (bad <- Seq(Double.PositiveInfinity, Double.NaN)) {
+      val df = (0 until 50).map { i =>
+        val x = Array.fill(3)(rng.nextGaussian())
+        if (i == 17) x(1) = bad
+        (x, rng.nextGaussian())
+      }.toDF("features", "label")
+      for (params <- Seq(SlopeParams(), SlopeParams(localCellLimit = 0))) {
+        val e = intercept[Exception](Slope.fit(df, "features", "label", params))
+        val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+          .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
+        assert(msgs.contains("non-finite (NaN or infinite) feature values"),
+          s"$bad, localCellLimit ${params.localCellLimit}: $msgs")
+      }
+    }
+  }
+
+  test("a failed parallel CV stops its pool and releases its cached folds") {
+    import spark.implicits._
+    val rng = new scala.util.Random(61)
+    // one rare-class row: the fold that holds it out trains on one class
+    val df = (0 until 120).map { i =>
+      (Array.fill(3)(rng.nextGaussian()), if (i == 0) "rare" else "common")
+    }.toDF("features", "label")
+    val sc = spark.sparkContext
+    val cachedBefore = sc.getPersistentRDDs.size
+    val e = intercept[Exception] {
+      SlopeCv.trainSlope(df, "features", "label",
+        SlopeParams(family = "binomial", nSigma = 5), number = 4,
+        measures = Seq("deviance"), parallelism = 3)
+    }
+    assert(e.getMessage.contains("exactly 2 classes"), e.getMessage)
+    def cvThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(_.getName.startsWith("slope-cv-"))
+    cvThreads.foreach(_.join(30000))
+    assert(cvThreads.forall(!_.isAlive), cvThreads.map(_.getName).mkString(", "))
+    assert(sc.getPersistentRDDs.size == cachedBefore)
   }
 
   test("distributed fit: one job per backend pass, no repeated evaluation") {
@@ -448,17 +530,19 @@ class MlApiSpec extends AnyFunSuite {
   }
 }
 
-/** Forwards every call to `inner` and records each data pass: its kind,
-  * active set and evaluated points, scattered to full pInt x m vectors,
-  * and whether the last point got a full (primal, dual, gradient)
-  * evaluation. */
-class CountingBackend(inner: SlopeBackend) extends SlopeBackend {
+/** Runs every pass through `inner` and records each public pass call:
+  * its kind, active set and evaluated points, scattered to full
+  * pInt x m vectors, and whether the last point got a full (primal,
+  * dual, gradient) evaluation. The pass bodies are the shared ones
+  * (`super`); only the launcher is `inner`'s. */
+class CountingBackend(inner: SlopeBackend)
+    extends SlopeBackend(inner.pRaw, inner.m, inner.fitIntercept) {
   import CountingBackend.Call
   val calls = scala.collection.mutable.ArrayBuffer[Call]()
   def n: Long = inner.n
-  def pRaw: Int = inner.pRaw
-  def m: Int = inner.m
-  def fitIntercept: Boolean = inner.fitIntercept
+  private[slope] def runPass(pass: RowPass): Array[Double] = inner.runPass(pass)
+  private[slope] def ship[S: scala.reflect.ClassTag](state: S): Shipped[S] =
+    inner.ship(state)
 
   private def record(kind: String, active: Array[Int] = Array.empty,
                      points: Seq[Array[Double]] = Nil, full: Boolean = false): Unit =
@@ -469,35 +553,32 @@ class CountingBackend(inner: SlopeBackend) extends SlopeBackend {
       full
     })
 
-  def featureMeansAndSparsity(): (Array[Double], Boolean) = {
-    record("featureMeansAndSparsity"); inner.featureMeansAndSparsity()
+  override def featureMeansAndSparsity(): (Array[Double], Boolean) = {
+    record("featureMeansAndSparsity"); super.featureMeansAndSparsity()
   }
-  def scaleStats(center: Array[Double], scale: String): Array[Double] = {
-    record("scaleStats"); inner.scaleStats(center, scale)
+  override def scaleStats(center: Array[Double], scale: String): Array[Double] = {
+    record("scaleStats"); super.scaleStats(center, scale)
   }
-  def yMoments(): (Array[Double], Array[Double]) = {
-    record("yMoments"); inner.yMoments()
+  override def yMoments(): (Array[Double], Array[Double]) = {
+    record("yMoments"); super.yMoments()
   }
-  def setStandardization(c: Array[Double], s: Array[Double]): Unit =
-    inner.setStandardization(c, s)
-  def evalActive(active: Array[Int], betaActive: Array[Double], family: Family,
-                 needDual: Boolean, needGrad: Boolean): (Double, Double, Array[Double]) = {
+  override def evalActive(active: Array[Int], betaActive: Array[Double], family: Family,
+                          needDual: Boolean, needGrad: Boolean)
+    : (Double, Double, Array[Double]) = {
     record("evalActive", active, Seq(betaActive), needDual && needGrad)
-    inner.evalActive(active, betaActive, family, needDual, needGrad)
+    super.evalActive(active, betaActive, family, needDual, needGrad)
   }
   override def evalPairActive(active: Array[Int], candActive: Array[Double],
                               nextActive: Array[Double], family: Family)
     : (Double, Double, Double, Array[Double]) = {
     record("evalPairActive", active, Seq(candActive, nextActive), full = true)
-    inner.evalPairActive(active, candActive, nextActive, family)
+    super.evalPairActive(active, candActive, nextActive, family)
   }
-  def gramXty(active: Array[Int]): (Array[Double], Array[Double]) = {
-    record("gramXty"); inner.gramXty(active)
+  override def gramXty(active: Array[Int]): (Array[Double], Array[Double]) = {
+    record("gramXty"); super.gramXty(active)
   }
-  override def activeMatrixXty(active: Array[Int])
-    : Option[(Array[Double], Array[Double])] = inner.activeMatrixXty(active)
-  def xtv(rowV: Array[Double] => Array[Double]): Array[Double] = {
-    record("xtv"); inner.xtv(rowV)
+  override def xtv(rowV: Array[Double] => Array[Double]): Array[Double] = {
+    record("xtv"); super.xtv(rowV)
   }
 }
 
