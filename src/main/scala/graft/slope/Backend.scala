@@ -1,6 +1,6 @@
 package graft.slope
 
-import org.apache.spark.TaskContext
+import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.ml.linalg.{Vector, DenseVector, SparseVector}
 import org.apache.spark.rdd.RDD
@@ -29,10 +29,15 @@ import scala.reflect.ClassTag
   * where the rows live and how a pass runs over them ([[runPass]]) —
   * one Spark job, or pinned chunks on the driver — and merges partial
   * buffers in a fixed order, so a pass is a function of the data and
-  * its partitioning. Every call is a full data pass, so callers never
-  * ask twice for a point they already evaluated: the path loop hands
-  * its full-set evaluation to the next solve as its starting point, and
-  * FISTA reports the deviance from the evaluation it carries.
+  * its partitioning. The passes: [[moments]] (a fit's set-up: feature
+  * and label moments plus the lambda-max X^T v, in one scan) and
+  * [[l1Norms]] (the "l1" scale only); per path step, [[evalActive]]
+  * and [[evalPairActive]] (one evaluation scan at one or two points)
+  * and [[gramXty]] (the gaussian ADMM Gram). Every call is a full data
+  * pass, so callers never ask twice for what they already hold: the
+  * path loop hands its full-set evaluation to the next solve as its
+  * starting point, FISTA reports the deviance from the evaluation it
+  * carries, and the gaussian path slices a Gram from a superset's.
   */
 abstract class SlopeBackend(val pRaw: Int, // feature count, excluding intercept
                             val m: Int, // internal targets
@@ -63,53 +68,23 @@ abstract class SlopeBackend(val pRaw: Int, // feature count, excluding intercept
     try runPass(pass(shipped)) finally shipped.release()
   }
 
-  /** Per-feature raw means (for centering, length pRaw) plus whether any
-    * row uses a sparse representation — detected exactly in the same
-    * aggregate (not a sample), since the flag steers the centering
-    * default. Row shapes and values were validated at ingest. */
-  def featureMeansAndSparsity(): (Array[Double], Boolean) = {
-    val res = runPass(new MeansPass(pRaw))
-    val cnt = res(pRaw)
-    (Array.tabulate(pRaw)(j => res(j) / cnt), res(pRaw + 1) > 0)
-  }
+  /** The set-up moments of a fit in ONE pass ([[MomentsPass]]): feature
+    * sums, squares and maxima, the row and sparse-row counts, label sums
+    * and squares, and the raw lambda-max X^T v with row weights
+    * `rowV(y)` (`src/lambdaMax.h`). Each accumulator sums its own per-row
+    * terms in row order, apart from the others, so sharing the scan moves
+    * no bit of any of them. Row shapes and values were validated at
+    * ingest. */
+  def moments(rowV: Array[Double] => Array[Double]): Moments =
+    new Moments(pRaw, m, pInt, fitIntercept, runPass(new MomentsPass(pRaw, m, pInt,
+      fitIntercept, rowV)))
 
-  /** Scale statistic per feature given centers (0s if no centering):
-    * "l1" | "l2" | "sd" | "max" | "none", reference `src/standardize.h`. */
-  def scaleStats(center: Array[Double], scale: String): Array[Double] = {
-    val p = pRaw
-    scale match {
-      case "none" => Array.fill(p)(1.0)
-      case "l1" =>
-        // centered l1 needs every slot; with all-zero centers (sparse
-        // path) the stored entries suffice
-        if (center.exists(_ != 0.0)) runPassWith(center)(c => new L1Pass(p, Some(c)))
-        else runPass(new L1Pass(p, None))
-      case "l2" | "sd" | "max" =>
-        // sufficient stats: sumsq, max (centered l2/sd derive from moments)
-        val res = runPass(new SpreadPass(p))
-        val cnt = res(2 * p)
-        scale match {
-          case "l2" =>
-            Array.tabulate(p)(j => math.sqrt(math.max(0.0, res(j) - cnt * center(j) * center(j))))
-          case "sd" =>
-            Array.tabulate(p)(j =>
-              math.sqrt(math.max(0.0, res(j) - cnt * center(j) * center(j)) / (cnt - 1.0)))
-          case "max" =>
-            Array.tabulate(p)(j => res(p + j) - center(j))
-        }
-    }
-  }
-
-  /** Per-target label mean and population sd (multinomial lambdaMax
-    * needs stddev(y, 1) — reference `src/lambdaMax.h:30-31`). */
-  def yMoments(): (Array[Double], Array[Double]) = {
-    val res = runPass(new YMomentsPass(m))
-    val cnt = res(2 * m)
-    val mean = Array.tabulate(m)(k => res(k) / cnt)
-    val sd = Array.tabulate(m)(k =>
-      math.sqrt(math.max(0.0, res(m + k) / cnt - mean(k) * mean(k))))
-    (mean, sd)
-  }
+  /** sum_i |x_ij - c_j| per feature, the "l1" scale statistic. Centered
+    * l1 needs every slot; with all-zero centers (sparse path) the stored
+    * entries suffice. */
+  def l1Norms(center: Array[Double]): Array[Double] =
+    if (center.exists(_ != 0.0)) runPassWith(center)(c => new L1Pass(pRaw, Some(c)))
+    else runPass(new L1Pass(pRaw, None))
 
   /** One [[EvalPass]] at `points` (each |active| x m): primals at every
     * point, dual and gradient terms at the last. */
@@ -170,7 +145,9 @@ abstract class SlopeBackend(val pRaw: Int, // feature count, excluding intercept
   }
 
   /** Gram matrix of standardized active columns (|a| x |a|, column-major)
-    * and Xs_active^T y (|a| x m). One pass; |a| must be driver-sized. */
+    * and Xs_active^T y (|a| x m). One pass; |a| must be driver-sized.
+    * Each entry depends only on its own pair of columns, so the entries
+    * of a subset are a slice of a superset's ([[BackendKernels.sliceGram]]). */
   def gramXty(active: Array[Int]): (Array[Double], Array[Double]) = {
     val a = active.length
     val res = runPassWith(BackendKernels.slotMap(active, pRaw, fitIntercept))(s =>
@@ -184,27 +161,6 @@ abstract class SlopeBackend(val pRaw: Int, // feature count, excluding intercept
     * the cluster stays out of the ADMM inner loop. */
   def activeMatrixXty(active: Array[Int])
     : Option[(Array[Double], Array[Double])] = None
-
-  /** Xs^T v over all pInt rows, where v_row = rowV(y_row) (length m).
-    * Used by lambdaMax (`src/lambdaMax.h`). */
-  def xtv(rowV: Array[Double] => Array[Double]): Array[Double] = {
-    val a = pInt
-    val res = runPass(new XtvPass(rowV, a, m, fitIntercept))
-    val out = new Array[Double](a * m)
-    var k = 0
-    while (k < m) {
-      val vSum = res(a * m + k)
-      var r = 0
-      while (r < a) {
-        out(k * a + r) =
-          if (fitIntercept && r == 0) vSum / xScale(0)
-          else (res(k * a + r) - xCenter(r) * vSum) / xScale(r)
-        r += 1
-      }
-      k += 1
-    }
-    out
-  }
 
   /** The standardized value of coefficient row `row` in feature row `x`
     * (`activeMatrixXty`'s entries). */
@@ -396,6 +352,41 @@ private[slope] object BackendKernels extends Serializable {
     (gram, xty)
   }
 
+  /** The Gram and Xs^T y of `active` cut from those of `of` (both sorted
+    * coefficient rows; `gram` |of| x |of| and `xty` |of| x m, as
+    * [[SlopeBackend.gramXty]] returns them), or None unless `active` is
+    * a subset of `of`. Every [[assembleGram]] entry is a function of its
+    * own pair's raw sums, which the Gram pass accumulates row by row the
+    * same way whatever else is active, so the slice holds the bits a
+    * Gram pass over `active` would return. */
+  def sliceGram(of: Array[Int], gram: Array[Double], xty: Array[Double],
+                active: Array[Int], m: Int): Option[(Array[Double], Array[Double])] = {
+    val u = of.length; val a = active.length
+    val pos = new Array[Int](a)
+    var i = 0; var t = 0
+    while (i < a) {
+      while (t < u && of(t) < active(i)) t += 1
+      if (t == u || of(t) != active(i)) return None
+      pos(i) = t
+      i += 1
+    }
+    val g = new Array[Double](a * a)
+    val x = new Array[Double](a * m)
+    var j = 0
+    while (j < a) {
+      i = 0
+      while (i < a) { g(j * a + i) = gram(pos(j) * u + pos(i)); i += 1 }
+      j += 1
+    }
+    var k = 0
+    while (k < m) {
+      i = 0
+      while (i < a) { x(k * a + i) = xty(k * u + pos(i)); i += 1 }
+      k += 1
+    }
+    Some((g, x))
+  }
+
   /** Fold a raw accumulation (A = sum x_j * pg_k over active feature slots,
     * s0 = sum pg_k) into the standardized-space gradient. */
   def standardizeGrad(active: Array[Int], rawA: Array[Double], s0: Array[Double],
@@ -468,18 +459,138 @@ private[slope] final class PointWeights(val w: Array[Array[Double]], val b: Arra
 private[slope] final class EvalState(val points: Array[PointWeights], val slots: Array[Int])
   extends Serializable
 
-/** Feature sums, row count and sparse-row count: [sum(p), n, nSparse]. */
-private[slope] final class MeansPass(p: Int) extends RowPass {
-  def zero(): Array[Double] = new Array[Double](p + 2)
+/** The set-up moments pass behind [[SlopeBackend.moments]]. Buffer (see
+  * [[Moments]]): [sum x(p), n, nSparse, sum x^2(p), max x(p), sum y(m),
+  * sum y^2(m), X^T v(pInt*m), sum v(m)], with v = rowV(y) and the X^T v
+  * rows in coefficient-row numbering (an intercept row stays 0). Implicit
+  * zeros of sparse rows count in max. */
+private[slope] final class MomentsPass(p: Int, m: Int, pInt: Int, fitIntercept: Boolean,
+                                       rowV: Array[Double] => Array[Double])
+    extends RowPass {
+  import Moments._
+  def zero(): Array[Double] = {
+    val z = new Array[Double](sizeAt(p, m, pInt))
+    java.util.Arrays.fill(z, maxAt(p), maxAt(p) + p, Double.NegativeInfinity)
+    z
+  }
   def apply(ctx: TaskContext, rows: Iterator[(Vector, Array[Double])]): Array[Double] = {
     val acc = zero()
+    val sq = sumSqAt(p); val mx = maxAt(p); val sy = ySumAt(p); val syy = sy + m
+    val xv = xtvAt(p, m); val sv = xv + pInt * m
+    val off = if (fitIntercept) 1 else 0
     while (rows.hasNext) {
-      val x = rows.next()._1
-      BackendKernels.foreachStored(x)((j, v) => acc(j) += v)
-      acc(p) += 1
-      if (x.isInstanceOf[SparseVector]) acc(p + 1) += 1
+      val (x, y) = rows.next()
+      val v = rowV(y)
+      if (x.isInstanceOf[SparseVector]) {
+        acc(sparseAt(p)) += 1
+        var j = 0
+        while (j < p) { if (0.0 > acc(mx + j)) acc(mx + j) = 0.0; j += 1 }
+      }
+      BackendKernels.foreachStored(x) { (j, vx) =>
+        acc(j) += vx
+        acc(sq + j) += vx * vx
+        if (vx > acc(mx + j)) acc(mx + j) = vx
+        var k = 0
+        while (k < m) { acc(xv + k * pInt + j + off) += vx * v(k); k += 1 }
+      }
+      acc(countAt(p)) += 1
+      var k = 0
+      while (k < m) {
+        acc(sy + k) += y(k); acc(syy + k) += y(k) * y(k); acc(sv + k) += v(k)
+        k += 1
+      }
     }
     acc
+  }
+  override def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
+    val mx = maxAt(p)
+    var i = 0
+    while (i < a.length) {
+      if (i >= mx && i < mx + p) { if (b(i) > a(i)) a(i) = b(i) }
+      else a(i) += b(i)
+      i += 1
+    }
+    a
+  }
+}
+
+/** What one [[MomentsPass]] measured, and the set-up statistics a fit
+  * derives from it with the formulas of the reference
+  * (`src/standardize.h`, `src/lambdaMax.h`). */
+final class Moments private[slope] (p: Int, m: Int, pInt: Int, fitIntercept: Boolean,
+                                    res: Array[Double]) {
+  import Moments._
+  private def cnt: Double = res(countAt(p))
+
+  /** Per-feature raw means (length p). */
+  def featureMeans: Array[Double] = Array.tabulate(p)(j => res(j) / cnt)
+
+  /** Whether any row uses a sparse representation — counted exactly,
+    * not sampled, since the flag steers the centering default. */
+  def anySparse: Boolean = res(sparseAt(p)) > 0
+
+  /** The "l2" | "sd" | "max" scale statistic per feature about `center`
+    * (0s if no centering); centered l2 and sd derive from the moments. */
+  def spread(center: Array[Double], scale: String): Array[Double] = {
+    val sq = sumSqAt(p); val mx = maxAt(p)
+    scale match {
+      case "l2" =>
+        Array.tabulate(p)(j => math.sqrt(math.max(0.0, res(sq + j) - cnt * center(j) * center(j))))
+      case "sd" =>
+        Array.tabulate(p)(j =>
+          math.sqrt(math.max(0.0, res(sq + j) - cnt * center(j) * center(j)) / (cnt - 1.0)))
+      case "max" =>
+        Array.tabulate(p)(j => res(mx + j) - center(j))
+    }
+  }
+
+  /** Per-target label mean and population sd. */
+  def yMoments: (Array[Double], Array[Double]) = {
+    val sy = ySumAt(p)
+    labelMoments(java.util.Arrays.copyOfRange(res, sy, sy + m),
+      java.util.Arrays.copyOfRange(res, sy + m, sy + 2 * m), cnt)
+  }
+
+  /** Xs^T v over all pInt coefficient rows (pInt x m, column-major),
+    * standardized by `xCenter`/`xScale` (coefficient-row numbering). */
+  def xtv(xCenter: Array[Double], xScale: Array[Double]): Array[Double] = {
+    val xv = xtvAt(p, m); val sv = xv + pInt * m
+    val out = new Array[Double](pInt * m)
+    var k = 0
+    while (k < m) {
+      val vSum = res(sv + k)
+      var r = 0
+      while (r < pInt) {
+        out(k * pInt + r) =
+          if (fitIntercept && r == 0) vSum / xScale(0)
+          else (res(xv + k * pInt + r) - xCenter(r) * vSum) / xScale(r)
+        r += 1
+      }
+      k += 1
+    }
+    out
+  }
+}
+
+private[slope] object Moments {
+  // buffer offsets of a MomentsPass
+  def countAt(p: Int): Int = p
+  def sparseAt(p: Int): Int = p + 1
+  def sumSqAt(p: Int): Int = p + 2
+  def maxAt(p: Int): Int = 2 * p + 2
+  def ySumAt(p: Int): Int = 3 * p + 2
+  def xtvAt(p: Int, m: Int): Int = 3 * p + 2 + 2 * m
+  def sizeAt(p: Int, m: Int, pInt: Int): Int = xtvAt(p, m) + pInt * m + m
+
+  /** Per-target mean and population sd (multinomial lambdaMax needs
+    * stddev(y, 1) — reference `src/lambdaMax.h:30-31`) from label sums
+    * and sums of squares over `cnt` rows. */
+  def labelMoments(sum: Array[Double], sumSq: Array[Double], cnt: Double)
+    : (Array[Double], Array[Double]) = {
+    val mean = sum.map(_ / cnt)
+    val sd = Array.tabulate(sum.length)(k =>
+      math.sqrt(math.max(0.0, sumSq(k) / cnt - mean(k) * mean(k))))
+    (mean, sd)
   }
 }
 
@@ -495,59 +606,6 @@ private[slope] final class L1Pass(p: Int, center: Option[Shipped[Array[Double]]]
       val x = rows.next()._1
       if (c == null) BackendKernels.foreachStored(x)((j, v) => acc(j) += math.abs(v))
       else { var j = 0; while (j < p) { acc(j) += math.abs(x(j) - c(j)); j += 1 } }
-    }
-    acc
-  }
-}
-
-/** Sufficient statistics of the l2 / sd / max scales:
-  * [sumsq(p), max(p), n]; implicit zeros of sparse rows count in max. */
-private[slope] final class SpreadPass(p: Int) extends RowPass {
-  def zero(): Array[Double] = {
-    val z = new Array[Double](2 * p + 1)
-    java.util.Arrays.fill(z, p, 2 * p, Double.NegativeInfinity)
-    z
-  }
-  def apply(ctx: TaskContext, rows: Iterator[(Vector, Array[Double])]): Array[Double] = {
-    val acc = zero()
-    while (rows.hasNext) {
-      val x = rows.next()._1
-      BackendKernels.foreachStored(x)((j, v) => acc(j) += v * v)
-      x match {
-        case d: DenseVector =>
-          var j = 0
-          while (j < p) { if (d.values(j) > acc(p + j)) acc(p + j) = d.values(j); j += 1 }
-        case s: SparseVector =>
-          var j = 0
-          while (j < p) { if (0.0 > acc(p + j)) acc(p + j) = 0.0; j += 1 }
-          BackendKernels.foreachStored(s)((j, v) => if (v > acc(p + j)) acc(p + j) = v)
-      }
-      acc(2 * p) += 1
-    }
-    acc
-  }
-  override def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
-    var j = 0
-    while (j < p) {
-      a(j) += b(j)
-      if (b(p + j) > a(p + j)) a(p + j) = b(p + j)
-      j += 1
-    }
-    a(2 * p) += b(2 * p)
-    a
-  }
-}
-
-/** Label moments per target: [sum(m), sumsq(m), n]. */
-private[slope] final class YMomentsPass(m: Int) extends RowPass {
-  def zero(): Array[Double] = new Array[Double](2 * m + 1)
-  def apply(ctx: TaskContext, rows: Iterator[(Vector, Array[Double])]): Array[Double] = {
-    val acc = zero()
-    while (rows.hasNext) {
-      val y = rows.next()._2
-      var k = 0
-      while (k < m) { acc(k) += y(k); acc(m + k) += y(k) * y(k); k += 1 }
-      acc(2 * m) += 1
     }
     acc
   }
@@ -606,23 +664,35 @@ private[slope] final class GramPass(slots: Shipped[Array[Int]], a: Int, m: Int)
   }
 }
 
-/** Raw X^T v over every coefficient row plus sum v: [A(pInt*m), vSum(m)]. */
-private[slope] final class XtvPass(rowV: Array[Double] => Array[Double], pInt: Int,
-                                   m: Int, fitIntercept: Boolean) extends RowPass {
-  def zero(): Array[Double] = new Array[Double](pInt * m + m)
-  def apply(ctx: TaskContext, rows: Iterator[(Vector, Array[Double])]): Array[Double] = {
-    val acc = zero()
-    val off = if (fitIntercept) 1 else 0
-    while (rows.hasNext) {
-      val (x, y) = rows.next()
-      val v = rowV(y)
-      var k = 0
-      while (k < m) { acc(pInt * m + k) += v(k); k += 1 }
-      BackendKernels.foreachStored(x) { (j, vx) =>
-        var kk = 0
-        while (kk < m) { acc(kk * pInt + j + off) += vx * v(kk); kk += 1 }
+/** The one launcher of a fit's ordered jobs — the input probe
+  * (`Slope.probe`) and every [[RowPass]] on up to 64 partitions. */
+private[slope] object OrderedFold {
+  /** Runs ONE Spark job through `launch`, which calls
+    * `runJob(rdd, task, 0 until parts, handler)` with the handler it is
+    * given, so the job's call site names its caller; the job is described
+    * as `label` (e.g. `slope GramPass`). The handler folds partition
+    * results on the driver in partition-index order: a result that
+    * arrives early waits for its predecessors, so a repeated job gives
+    * the same bits. The held results are bounded by the job's result
+    * bytes, which `spark.driver.maxResultSize` caps. None when there are
+    * no partitions. */
+  def run[U <: AnyRef](sc: SparkContext, parts: Int, label: String, merge: (U, U) => U)
+                      (launch: ((Int, U) => Unit) => Unit): Option[U] = {
+    val held = new Array[AnyRef](parts)
+    var next = 0
+    var acc: Option[U] = None
+    val key = "spark.job.description"
+    val prev = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, label)
+    try launch { (i: Int, part: U) =>
+      held(i) = part
+      while (next < parts && held(next) != null) {
+        val r = held(next).asInstanceOf[U]
+        acc = Some(acc.fold(r)(merge(_, r)))
+        held(next) = null
+        next += 1
       }
-    }
+    } finally sc.setLocalProperty(key, prev)
     acc
   }
 }
@@ -633,10 +703,10 @@ private[slope] final class XtvPass(rowV: Array[Double] => Array[Double], pInt: I
   * state in one broadcast destroyed after the job (the MLlib pattern,
   * cf. Spark's `LeastSquaresAggregator`). Up to 64 partitions a pass is
   * a plain `runJob` whose partition results fold on the driver in
-  * partition order; wider inputs reduce through a `treeAggregate` of
-  * depth `treeDepth`. A 1000-executor cluster does one shuffle-free
-  * map + reduction per solver pass, and the driver adds no per-job
-  * bookkeeping on top (see [[RowPass]]).
+  * partition order ([[OrderedFold]]); wider inputs reduce through a
+  * `treeAggregate` of depth `treeDepth`. A 1000-executor cluster does
+  * one shuffle-free map + reduction per solver pass, and the driver adds
+  * no per-job bookkeeping on top (see [[RowPass]]).
   */
 class DistributedBackend(
     rowsIn: RDD[(Vector, Array[Double])],
@@ -668,8 +738,9 @@ class DistributedBackend(
   // 100-TB scale cells/100k far exceeds both the scan layout and the
   // core count, so the policy only ever coalesces there (the pre-r17
   // behavior).
-  // Inputs with no prior count (knownN < 0) keep their layout: sizing
-  // is not worth an extra full pass.
+  // The row count comes from `Slope.fit`'s input probe, which runs
+  // before the rows are persisted; inputs with no prior count
+  // (knownN < 0) keep their layout: sizing is not worth an extra pass.
   val rows: RDD[(Vector, Array[Double])] =
     if (knownN < 0) rowsIn
     else {
@@ -692,8 +763,7 @@ class DistributedBackend(
 
   rows.persist(StorageLevel.MEMORY_AND_DISK)
 
-  // callers that already counted (Slope.fit does, for the backend
-  // decision) pass n in — saves a full scan per fit
+  // Slope.fit passes in the probe's count, which also chose this backend
   lazy val n: Long = if (knownN >= 0) knownN else rows.count()
 
   private def sc = rows.sparkContext
@@ -703,34 +773,20 @@ class DistributedBackend(
 
   /** With <= 64 partitions a tree level would only add a scheduled
     * stage: `runJob` runs the pass object itself as the task function,
-    * and the handler folds partition results on the driver in partition
-    * order — a buffer that arrives early waits for its predecessors, so
-    * repeated passes agree bit for bit. The held buffers are bounded by
-    * the job's result bytes, which `spark.driver.maxResultSize` caps.
-    * This is what `treeAggregate(depth = 1)` does, minus its closure
-    * cleaning (five cleaner runs per job, two of them parsing Spark's
-    * own RDD and SparkContext bytecode). Wider inputs keep
-    * `treeAggregate`'s tree. Must stay in this file: job call sites
-    * read `... at Backend.scala:`. */
+    * and [[OrderedFold]] folds partition results on the driver in
+    * partition order, so repeated passes agree bit for bit. This is what
+    * `treeAggregate(depth = 1)` does, minus its closure cleaning (five
+    * cleaner runs per job, two of them parsing Spark's own RDD and
+    * SparkContext bytecode). Wider inputs keep `treeAggregate`'s tree.
+    * Must stay in this file: job call sites read `... at Backend.scala:`. */
   private[slope] def runPass(pass: RowPass): Array[Double] = {
     val parts = rows.getNumPartitions
-    if (parts <= 64) {
-      val held = new Array[Array[Double]](parts)
-      var next = 0
-      var acc: Array[Double] = null
-      sc.runJob(rows, pass, 0 until parts, (i: Int, part: Array[Double]) => {
-        held(i) = part
-        while (next < parts && held(next) != null) {
-          acc = if (acc == null) held(next) else pass.merge(acc, held(next))
-          held(next) = null
-          next += 1
-        }
-      })
-      if (acc == null) pass.zero() else acc
-    } else {
+    if (parts <= 64)
+      OrderedFold.run[Array[Double]](sc, parts, "slope " + pass.getClass.getSimpleName,
+        pass.merge)(h => sc.runJob(rows, pass, 0 until parts, h)).getOrElse(pass.zero())
+    else
       rows.mapPartitions(it => Iterator.single(pass(TaskContext.get(), it)))
         .treeAggregate(pass.zero())(pass.merge, pass.merge, treeDepth)
-    }
   }
 
   def unpersist(): Unit = rows.unpersist()

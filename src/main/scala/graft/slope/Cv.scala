@@ -91,9 +91,10 @@ object SlopeCv {
       // imposes), and a cell's train multiset is identical either way, so
       // the fitted values are bit-for-bit unchanged. Above the gate every
       // cell fit stays fully distributed.
-      val headRow = withFolds.take(1)
-      require(headRow.nonEmpty, "empty input")
-      val pFeat = Slope.toVec(headRow(0).get(0)).size
+      // n and p for that gate from the fit's own input probe: one job,
+      // which also caches the folded rows
+      val (_, shape) = Slope.probe(Slope.selectFrame(withFolds, featuresCol, labelCol,
+        family), featuresCol, labelCol, family)
       // vectorize and content-sort the shared collect ONCE: the r11
       // scale gate caught per-cell toVec + sortRowsInPlace re-doing
       // O(n log n) work (and O(n) vector allocation) number*repeats*|qs|
@@ -105,8 +106,7 @@ object SlopeCv {
       // results, one sort instead of twelve.
       val localData: (Array[org.apache.spark.ml.linalg.Vector],
           Array[Any], Array[Array[Int]]) =
-        if (withFolds.count() * pFeat.toLong <=
-              Slope.effectiveLocalCellLimit(params)) {
+        if (shape.n * shape.p.toLong <= Slope.effectiveLocalCellLimit(params)) {
           // project through the SAME casts Slope.fit applies before its
           // own collect, so slice values (and the content-sort keys
           // derived from them) are identical to what a per-cell fit sees

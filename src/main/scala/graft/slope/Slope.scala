@@ -1,9 +1,11 @@
 package graft.slope
 
 import graft.slope.kernels.{LambdaSequence, Screening}
+import org.apache.spark.TaskContext
 import org.apache.spark.ml.linalg.{DenseVector, SparseVector, Vector, Vectors}
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{avg, col}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
 
 /** Fit configuration — field-for-field the reference's `owl()` surface
@@ -164,6 +166,7 @@ object Slope {
   }
 
   private[slope] def toVec(a: Any): Vector = a match {
+    case null => throw new IllegalArgumentException("null feature vector")
     case v: Vector => v
     case s: scala.collection.Seq[_] =>
       Vectors.dense(s.map(_.asInstanceOf[Double]).toArray)
@@ -212,6 +215,28 @@ object Slope {
     (xs, rawY)
   }
 
+  /** The one scan of a fit's input before anything is cached: ONE Spark
+    * job over `sel.rdd` (`sel` as [[selectFrame]] projects it) that
+    * counts the rows, takes p from the first row and summarizes the
+    * labels — the sum per target for gaussian, a count per class for
+    * binomial and multinomial ([[ProbeTask]]). Null features or labels
+    * fail here, naming their column. Partition results fold in partition
+    * order ([[OrderedFold]]), so the gaussian sums are a function of the
+    * data and its partitioning. Returns the planned rows with the
+    * summary, so a distributed fit persists the rows this job read. */
+  private[slope] def probe(sel: DataFrame, featuresCol: String, labelCol: String,
+                           family: String): (RDD[Row], ProbeStats) = {
+    val rows = sel.rdd
+    val task = new ProbeTask(featuresCol, labelCol, family,
+      sel.schema("l").dataType.isInstanceOf[ArrayType])
+    val sc = rows.sparkContext
+    val parts = rows.getNumPartitions
+    val stats = OrderedFold.run[ProbeStats](sc, parts, "slope probe", ProbeStats.merge)(h =>
+      sc.runJob(rows, task, 0 until parts, h)).getOrElse(new ProbeStats)
+    require(stats.n > 0, "empty input")
+    (rows, stats)
+  }
+
   /** Fit from a DataFrame with a features column (ml Vector or
     * array<double>) and a label column (numeric, string for
     * classification families, or array<double> for the multi-task
@@ -223,23 +248,24 @@ object Slope {
     * them — a documented behavioral divergence — with semantics
     * certified independently by `MultiTaskSpec` (constant-λ
     * separability + joint duality-gap certificate).
+    *
+    * The input is scanned once by [[probe]], whose n and p choose the
+    * backend and size the distributed one, and whose label summary gives
+    * the gaussian centers and the class names and counts; the
+    * distributed backend then persists the rows that scan planned.
     */
   def fit(df: DataFrame, featuresCol: String, labelCol: String,
           params: SlopeParams = SlopeParams()): SlopeModel = {
     val family = Family(params.family)
-    val labelIsClass = params.family == "binomial" || params.family == "multinomial"
     val labelIsArray = df.schema(labelCol).dataType.isInstanceOf[ArrayType]
     require(!labelIsArray || params.family == "gaussian",
       s"array-typed (multi-target) labels are only supported for " +
         s"family=gaussian, got ${params.family}")
 
     val sel = selectFrame(df, featuresCol, labelCol, params.family)
-
-    val first = sel.take(1)
-    require(first.nonEmpty, "empty input")
-    val p = toVec(first(0).get(0)).size
-    val n = sel.count()
-    require(n > 0, "empty input")
+    val (selRdd, probed) = probe(sel, featuresCol, labelCol, params.family)
+    val n = probed.n
+    val p = probed.p
 
     if (n * p.toLong <= effectiveLocalCellLimit(params)) {
       // driver-local path: zero Spark jobs inside the solver loop
@@ -248,29 +274,20 @@ object Slope {
       // (fitLocal validates per-row feature lengths and values)
     } else {
       // distributed path
-      val yDim =
-        if (labelIsArray) first(0).getAs[scala.collection.Seq[_]](1).length else 1
-      val (classNames, yCenter) = params.family match {
-        case "gaussian" if labelIsArray =>
-          // per-target means in ONE aggregation (m is driver-sized)
-          val aggs = (0 until yDim)
-            .map(k => avg(org.apache.spark.sql.functions.element_at(col("l"), k + 1)))
-          (Array.empty[String],
-            sel.agg(aggs.head, aggs.tail: _*).head().toSeq
-              .map(_.asInstanceOf[Double]).toArray)
-        case "gaussian" =>
-          (Array.empty[String], Array(sel.agg(avg(col("l"))).head().getDouble(0)))
+      val yCenter =
+        if (params.family == "gaussian") probed.ySum.map(_ / n) else Array.empty[Double]
+      val (classNames, classCounts) = params.family match {
         case "binomial" | "multinomial" =>
-          (sortClassNames(sel.select("l").distinct().collect().map(_.getString(0))),
-            Array.empty[Double])
-        case _ => (Array.empty[String], Array.empty[Double])
+          val names = sortClassNames(probed.classCounts.keys.toArray)
+          (names, names.map(probed.classCounts))
+        case _ => (Array.empty[String], Array.empty[Long])
       }
       val nClasses = if (classNames.nonEmpty) classNames.length else 1
       checkClasses(params.family, classNames)
-      val m = if (labelIsArray) yDim else family.nTargets(nClasses)
+      val m = if (labelIsArray) yCenter.length else family.nTargets(nClasses)
       val enc = responseEncoder(params.family, classNames, yCenter, m)
       val pExpected = p
-      val rdd = sel.rdd.map { r =>
+      val rdd = selRdd.map { r =>
         val v = toVec(r.get(0))
         // a short dense row would otherwise silently compute a partial
         // dot product; a long one would AIOOBE mid-job with no context
@@ -282,7 +299,7 @@ object Slope {
       }
       val backend = new DistributedBackend(rdd, p, m, params.fitIntercept,
         params.treeDepth, knownN = n)
-      try fitBackend(backend, params, yCenter, classNames, nClasses)
+      try fitBackend(backend, params, yCenter, classNames, nClasses, classCounts)
       finally backend.unpersist()
     }
   }
@@ -291,16 +308,18 @@ object Slope {
   def fitLocal(xs: Array[Vector], rawY: Array[Any],
                params: SlopeParams): SlopeModel = {
     val family = Family(params.family)
-    val p = xs(0).size
     var vi = 0
     while (vi < xs.length) {
-      require(xs(vi).size == p,
-        s"feature vector length ${xs(vi).size} at row $vi != expected $p " +
+      require(xs(vi) != null, s"null feature vector at row $vi")
+      require(rawY(vi) != null, s"null label at row $vi")
+      require(xs(vi).size == xs(0).size,
+        s"feature vector length ${xs(vi).size} at row $vi != expected ${xs(0).size} " +
           "(all rows must have the same dimensionality)")
       require(allFinite(xs(vi)),
         s"non-finite (NaN or infinite) feature values are not allowed (row $vi)")
       vi += 1
     }
+    val p = xs(0).size
     val labelIsArray = rawY(0) match {
       case _: scala.collection.Seq[_] | _: Array[Double] => true
       case _ => false
@@ -308,7 +327,7 @@ object Slope {
     require(!labelIsArray || params.family == "gaussian",
       s"array-typed (multi-target) labels are only supported for " +
         s"family=gaussian, got ${params.family}")
-    val (classNames, yCenter) = params.family match {
+    val (classNames, yCenter, classCounts) = params.family match {
       case "gaussian" if labelIsArray =>
         val rows = rawY.map(anyToDoubleArray)
         val w = rows(0).length
@@ -322,13 +341,16 @@ object Slope {
           while (k < w) { sums(k) += rows(i)(k); k += 1 }
           i += 1
         }
-        (Array.empty[String], sums.map(_ / rows.length))
+        (Array.empty[String], sums.map(_ / rows.length), Array.empty[Long])
       case "gaussian" =>
         val ys = rawY.map(anyToDouble)
-        (Array.empty[String], Array(ys.sum / ys.length))
+        (Array.empty[String], Array(ys.sum / ys.length), Array.empty[Long])
       case "binomial" | "multinomial" =>
-        (sortClassNames(rawY.map(_.toString).distinct), Array.empty[Double])
-      case _ => (Array.empty[String], Array.empty[Double])
+        val labels = rawY.map(_.toString)
+        val counts = labels.groupMapReduce(identity)(_ => 1L)(_ + _)
+        val names = sortClassNames(labels.distinct)
+        (names, Array.empty[Double], names.map(counts))
+      case _ => (Array.empty[String], Array.empty[Double], Array.empty[Long])
     }
     val nClasses = if (classNames.nonEmpty) classNames.length else 1
     checkClasses(params.family, classNames)
@@ -336,7 +358,7 @@ object Slope {
     val enc = responseEncoder(params.family, classNames, yCenter, m)
     val ys = rawY.map(enc)
     val backend = new LocalBackend(xs, ys, p, m, params.fitIntercept)
-    fitBackend(backend, params, yCenter, classNames, nClasses)
+    fitBackend(backend, params, yCenter, classNames, nClasses, classCounts)
   }
 
   /** Content-order rows (label first, then features lexicographically):
@@ -526,10 +548,11 @@ object Slope {
 
   /** The path loop proper (mirrors `src/owl.cpp:88-394`). `yCenter` has
     * one entry per gaussian target; empty for other families (their
-    * responses are not centered). */
+    * responses are not centered). `classCounts` holds the row count of
+    * each of `classNames` for binomial and multinomial; empty otherwise. */
   def fitBackend(backend: SlopeBackend, params: SlopeParams,
                  yCenter: Array[Double], classNames: Array[String],
-                 nClasses: Int): SlopeModel = {
+                 nClasses: Int, classCounts: Array[Long]): SlopeModel = {
     val family = Family(params.family)
     val n = backend.n
     val p = backend.pRaw
@@ -538,25 +561,45 @@ object Slope {
     val intercept = backend.fitIntercept
     val off = if (intercept) 1 else 0
 
-    // ---- standardization (reference src/standardize.h, lazily folded
-    // into the row kernels — the data itself is never rewritten) ----
-    // One moments pass always runs: it yields the means, validates row
-    // shapes, and detects sparse representation EXACTLY (the former
-    // 100-row sample could miss late sparse partitions and flip the
-    // centering default between runs). An explicit params.center still
-    // wins; unlike the reference (which mutates X and must refuse
-    // center+sparse, R/owl.R:359-360) centering here is folded into the
-    // row kernels, so it is safe on sparse data either way.
-    val (featMeans, anySparse) = backend.featureMeansAndSparsity()
-    val center = params.center.getOrElse(!anySparse)
+    // ---- set-up: ONE moments pass (src/standardize.h, lambdaMax.h) ----
+    // Binomial and multinomial labels are class codes (+-1, one-hot), so
+    // their sums and sums of squares are exact integers: taken from the
+    // class counts they have the bits a pass over the coded rows gives,
+    // and they are known before the pass, whose lambda-max row weights
+    // need the mean (and the multinomial sd).
+    val classMoments = family match {
+      case Binomial =>
+        Some(Moments.labelMoments(Array((classCounts(1) - classCounts(0)).toDouble),
+          Array(classCounts.sum.toDouble), classCounts.sum.toDouble))
+      case Multinomial =>
+        val sums = Array.tabulate(m)(k => classCounts(k).toDouble)
+        Some(Moments.labelMoments(sums, sums, classCounts.sum.toDouble))
+      case _ => None
+    }
+    val moments = backend.moments(lambdaMaxRowWeights(family, m, classMoments))
+    val (yMean, ySd) = classMoments.getOrElse(moments.yMoments)
+
+    // standardization, lazily folded into the row kernels — the data
+    // itself is never rewritten. The moments pass yields the means and
+    // detects sparse representation EXACTLY (the former 100-row sample
+    // could miss late sparse partitions and flip the centering default
+    // between runs). An explicit params.center still wins; unlike the
+    // reference (which mutates X and must refuse center+sparse,
+    // R/owl.R:359-360) centering here is folded into the row kernels, so
+    // it is safe on sparse data either way.
+    val featMeans = moments.featureMeans
+    val center = params.center.getOrElse(!moments.anySparse)
 
     val xCenterRaw = if (center) featMeans else new Array[Double](p)
     // "sd" always measures spread about the mean even when the data is
     // not centered (reference sparse branch, standardize.h:56-58)
     val scaleCenters =
       if (params.scale == "sd" && !center) featMeans else xCenterRaw
-    val xScaleRaw = backend.scaleStats(scaleCenters, params.scale)
-      .map(s => if (s == 0.0) 1.0 else s) // zero-variance guard
+    val xScaleRaw = (params.scale match {
+      case "none" => Array.fill(p)(1.0)
+      case "l1" => backend.l1Norms(scaleCenters)
+      case scale => moments.spread(scaleCenters, scale)
+    }).map(s => if (s == 0.0) 1.0 else s) // zero-variance guard
     // coefficient-row numbering: slot 0 = intercept. The intercept
     // coordinate is scaled by sqrt(n) — exact reparameterization that
     // keeps the ones-column curvature at 1 instead of n, so first-order
@@ -576,8 +619,7 @@ object Slope {
     val lambda = LambdaSequence.build(params.lambdaType, nLambda, qv, n,
       params.userLambda)
 
-    val (yMean, ySd) = backend.yMoments()
-    val absGrad = lambdaMaxGradient(backend, family, yMean, ySd)
+    val absGrad = lambdaMaxGradient(moments.xtv(xCenter, xScale), family, ySd, m, pInt, off)
     val sigmaMax = LambdaSequence.sigmaMax(absGrad, lambda)
 
     val sigmaIsUser = params.sigma.isDefined
@@ -630,6 +672,22 @@ object Slope {
     val z = new Array[Double](pInt)
     val u = new Array[Double](pInt)
     var fullFact: Admm.Factorization = null
+    // Standardized Gram and Xs^T y of U, the union of the active sets
+    // factorized so far: a set inside U takes its entries as a slice,
+    // which holds the bits of a Gram pass over that set
+    // (BackendKernels.sliceGram); a set with new features runs ONE Gram
+    // pass over U and the set, or over the set alone (restarting U) when
+    // that union exceeds admmMaxActive.
+    var gramSet = Array.empty[Int]
+    var gramU: (Array[Double], Array[Double]) = null
+    def gramOf(active: Array[Int]): (Array[Double], Array[Double]) =
+      (if (gramU == null) None
+       else BackendKernels.sliceGram(gramSet, gramU._1, gramU._2, active, m)).getOrElse {
+        val union = Screening.union(gramSet, active)
+        gramSet = if (union.length <= params.admmMaxActive) union else active
+        gramU = backend.gramXty(gramSet)
+        BackendKernels.sliceGram(gramSet, gramU._1, gramU._2, active, m).get
+      }
     // FISTA learning rate carried across sigma steps / KKT growth
     // iterations when params.carryLearningRate is set
     var carriedLr = 1.0
@@ -701,7 +759,7 @@ object Slope {
               case Some((xmat, xty)) =>
                 Admm.factorizeWide(xmat, n.toInt, a, xty, lambdaMaxSig)
               case None =>
-                val (gram, xty) = backend.gramXty(active)
+                val (gram, xty) = gramOf(active)
                 Admm.factorize(gram, xty, a, lambdaMaxSig)
             }
             if (isFull) fullFact = f
@@ -902,32 +960,34 @@ object Slope {
       diagnostics = diagOut.toArray)
   }
 
-  /** |gradient| of the null model — the lambda_max pass
-    * (src/lambdaMax.h:8-60), one distributed aggregation. Returns the
-    * penalized entries only (intercept row shed), length p*m.
-    */
-  private def lambdaMaxGradient(backend: SlopeBackend, family: Family,
-                                yMean: Array[Double], ySd: Array[Double]): Array[Double] = {
-    val m = backend.m
-    val pInt = backend.pInt
-    val off = if (backend.fitIntercept) 1 else 0
-    val rowV: Array[Double] => Array[Double] = family match {
-      case Gaussian => (y: Array[Double]) => y
-      case Binomial =>
-        // y_new = (y+1)/2 centered by its mean (lambdaMax.h:19-24)
-        val muNew = (yMean(0) + 1.0) / 2.0
-        (y: Array[Double]) => Array((y(0) + 1.0) / 2.0 - muNew)
-      case Poisson => (y: Array[Double]) => Array(1.0 - y(0))
-      case Multinomial =>
-        // standardized one-hot columns (lambdaMax.h:28-40)
-        (y: Array[Double]) => {
-          val out = new Array[Double](m)
-          var k = 0
-          while (k < m) { out(k) = (y(k) - yMean(k)) / ySd(k); k += 1 }
-          out
-        }
-    }
-    val g = backend.xtv(rowV)
+  /** The lambda-max row weights v(y) (`src/lambdaMax.h:8-40`) over
+    * internal labels; binomial and multinomial read the label `moments`
+    * (mean, population sd) their class counts give. */
+  private def lambdaMaxRowWeights(family: Family, m: Int,
+                                  moments: Option[(Array[Double], Array[Double])])
+    : Array[Double] => Array[Double] = family match {
+    case Gaussian => (y: Array[Double]) => y
+    case Binomial =>
+      // y_new = (y+1)/2 centered by its mean (lambdaMax.h:19-24)
+      val muNew = (moments.get._1(0) + 1.0) / 2.0
+      (y: Array[Double]) => Array((y(0) + 1.0) / 2.0 - muNew)
+    case Poisson => (y: Array[Double]) => Array(1.0 - y(0))
+    case Multinomial =>
+      // standardized one-hot columns (lambdaMax.h:28-40)
+      val (yMean, ySd) = moments.get
+      (y: Array[Double]) => {
+        val out = new Array[Double](m)
+        var k = 0
+        while (k < m) { out(k) = (y(k) - yMean(k)) / ySd(k); k += 1 }
+        out
+      }
+  }
+
+  /** |gradient| of the null model from the standardized X^T v of the
+    * moments pass (`src/lambdaMax.h:42-60`). Returns the penalized
+    * entries only (intercept row shed), length p*m. */
+  private def lambdaMaxGradient(g: Array[Double], family: Family, ySd: Array[Double],
+                                m: Int, pInt: Int, off: Int): Array[Double] = {
     // multinomial: multiply column k back by y_std(k) (lambdaMax.h:42-45)
     if (family == Multinomial) {
       var k = 0
@@ -949,5 +1009,67 @@ object Slope {
       k += 1
     }
     out
+  }
+}
+
+/** What [[Slope.probe]] learns of a fit's input: the row count, the
+  * feature count of the first row (-1 before any row), and the label
+  * summary — `ySum` per gaussian target, `classCounts` per class label
+  * of the binomial and multinomial families. */
+private[slope] final class ProbeStats extends Serializable {
+  var n = 0L
+  var p = -1
+  var ySum: Array[Double] = Array.empty
+  val classCounts = scala.collection.mutable.HashMap.empty[String, Long]
+}
+
+private[slope] object ProbeStats {
+  /** `b`, a later run of rows, folded into `a`. */
+  def merge(a: ProbeStats, b: ProbeStats): ProbeStats = {
+    if (a.n == 0) { a.p = b.p; a.ySum = b.ySum }
+    else if (b.n > 0) {
+      require(b.ySum.length == a.ySum.length,
+        s"label array length ${b.ySum.length} != expected ${a.ySum.length} " +
+          "(all rows must have the same number of targets)")
+      var k = 0
+      while (k < a.ySum.length) { a.ySum(k) += b.ySum(k); k += 1 }
+    }
+    a.n += b.n
+    b.classCounts.foreach { case (c, k) =>
+      a.classCounts(c) = a.classCounts.getOrElse(c, 0L) + k }
+    a
+  }
+}
+
+/** The probe's task: folds a run of [[Slope.selectFrame]] rows into a
+  * [[ProbeStats]], rejecting null features or labels with a message
+  * that names their column. */
+private[slope] final class ProbeTask(featuresCol: String, labelCol: String,
+                                     family: String, labelIsArray: Boolean)
+    extends ((TaskContext, Iterator[Row]) => ProbeStats) with Serializable {
+  def apply(ctx: TaskContext, rows: Iterator[Row]): ProbeStats = {
+    val s = new ProbeStats
+    val gaussian = family == "gaussian"
+    val classes = family == "binomial" || family == "multinomial"
+    while (rows.hasNext) {
+      val r = rows.next()
+      require(!r.isNullAt(0), s"null feature vector in column '$featuresCol'")
+      require(!r.isNullAt(1), s"null label in column '$labelCol'")
+      if (s.n == 0) s.p = Slope.toVec(r.get(0)).size
+      if (gaussian) {
+        val y = if (labelIsArray) Slope.anyToDoubleArray(r.get(1)) else Array(r.getDouble(1))
+        if (s.n == 0) s.ySum = new Array[Double](y.length)
+        require(y.length == s.ySum.length,
+          s"label array length ${y.length} != expected ${s.ySum.length} " +
+            "(all rows must have the same number of targets)")
+        var k = 0
+        while (k < y.length) { s.ySum(k) += y(k); k += 1 }
+      } else if (classes) {
+        val c = r.getString(1)
+        s.classCounts(c) = s.classCounts.getOrElse(c, 0L) + 1
+      }
+      s.n += 1
+    }
+    s
   }
 }

@@ -265,6 +265,131 @@ class MlApiSpec extends AnyFunSuite {
     }
   }
 
+  test("null features and labels fail early with a message that names them") {
+    import spark.implicits._
+    val rng = new scala.util.Random(67)
+    for (family <- Seq("gaussian", "binomial")) {
+      def label(i: Int): Option[String] =
+        if (family == "gaussian") Some(rng.nextGaussian().toString)
+        else Some(if (i % 2 == 0) "yes" else "no")
+      val rows = (0 until 40).map(i => (Option(Array.fill(3)(rng.nextGaussian())), label(i)))
+      val nullFeature = rows.updated(11, (None, label(11))).toDF("feats", "target")
+      val nullLabel = rows.updated(23, (rows(23)._1, None)).toDF("feats", "target")
+      val cast = if (family == "gaussian") "double" else "string"
+      for ((df, msg) <- Seq(nullFeature -> "null feature vector in column 'feats'",
+                            nullLabel -> "null label in column 'target'");
+           limit <- Seq(SlopeParams().localCellLimit, 0L)) {
+        val e = intercept[Exception](Slope.fit(df.withColumn("target", col("target").cast(cast)),
+          "feats", "target", SlopeParams(family = family, nSigma = 4, localCellLimit = limit)))
+        val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+          .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
+        assert(msgs.contains(msg), s"$family, localCellLimit $limit: $msgs")
+      }
+      // fitLocal's own row loop names the row
+      val xs = rows.map(_._1.get).map(a => org.apache.spark.ml.linalg.Vectors.dense(a)).toArray
+      val ys: Array[Any] = rows.map(r => if (family == "gaussian") r._2.get.toDouble else r._2.get)
+        .toArray
+      val params = SlopeParams(family = family, nSigma = 4)
+      val ef = intercept[IllegalArgumentException](Slope.fitLocal(xs.updated(11, null), ys, params))
+      assert(ef.getMessage.contains("null feature vector at row 11"), ef.getMessage)
+      val el = intercept[IllegalArgumentException](Slope.fitLocal(xs, ys.updated(23, null), params))
+      assert(el.getMessage.contains("null label at row 23"), el.getMessage)
+    }
+  }
+
+  test("distributed fit set-up: one probe and two passes, no SQL query job") {
+    import org.apache.spark.graft.ListenerBusShim
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val gen = RandomProblem.generate(spark, 2000, 8, family = "gaussian", seed = 71,
+      slices = 4)
+    val sc = spark.sparkContext
+    val group = "graft-setup-budget"
+    // (description, stage names) of every job of the fit, in start order
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Seq[String])]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+          e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add((e.jobId, e.properties.getProperty("spark.job.description"),
+            e.stageInfos.map(_.name)))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "set-up budget")
+    val model =
+      try Slope.fit(gen.df, "features", "label",
+        SlopeParams(nSigma = 10, localCellLimit = 0))
+      finally {
+        sc.clearJobGroup()
+        ListenerBusShim.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(model.nSteps > 1)
+    import scala.jdk.CollectionConverters._
+    val seen = jobs.asScala.toSeq.sortBy(_._1)
+    val labels = seen.map(_._2)
+    // every job is the probe or a backend pass: no SQL query job
+    for ((_, desc, stages) <- seen) {
+      assert(desc != null && desc.startsWith("slope "), s"job not launched by a fit: $stages")
+      val site = if (desc == "slope probe") " at Slope.scala:" else " at Backend.scala:"
+      assert(stages.forall(_.contains(site)), s"$desc: $stages")
+    }
+    assert(labels.count(_ == "slope probe") == 1, labels.mkString(", "))
+    // the probe, the moments pass and the null evaluation; then the path
+    assert(labels.take(3) == Seq("slope probe", "slope MomentsPass", "slope EvalPass"),
+      labels.mkString(", "))
+    assert(labels.indexWhere(_ == "slope GramPass") == 3, labels.mkString(", "))
+  }
+
+  test("gaussian path: no Gram pass over a subset of an earlier Gram's set") {
+    import org.apache.spark.ml.linalg.{Vector, Vectors}
+    val rng = new scala.util.Random(73)
+    val n = 400; val p = 20
+    val beta = Array.tabulate(p)(j => if (j % 4 == 0) 2.0 / (1 + j) else 0.0)
+    val xs = Array.fill(n)(Vectors.dense(Array.fill(p)(rng.nextGaussian())): Vector)
+    val ys = xs.map(x => Array(x.toArray.zip(beta).map { case (a, b) => a * b }.sum +
+      0.5 * rng.nextGaussian()))
+    val yMean = ys.map(_(0)).sum / n
+    val backend = new CountingBackend(
+      new LocalBackend(xs, ys.map(y => Array(y(0) - yMean)), p, 1, true))
+    val model = Slope.fitBackend(backend, SlopeParams(nSigma = 20), Array(yMean),
+      Array.empty, 1, Array.empty)
+    val grams = backend.calls.filter(_.kind == "gramXty").map(_.active)
+    assert(model.activeSets.map(_.length).max > grams.head.length, "active set never grew")
+    for ((a, i) <- grams.zipWithIndex; (u, k) <- grams.take(i).zipWithIndex)
+      assert(!a.forall(u.contains), s"Gram $i (${a.mkString(",")}) lies inside Gram $k")
+  }
+
+  test("a Gram slice equals the Gram pass over the subset, bit for bit") {
+    import org.apache.spark.ml.linalg.{Vector, Vectors}
+    val rng = new scala.util.Random(79)
+    val p = 7
+    def rows(n: Int) = Array.fill(n)((
+      Vectors.dense(Array.fill(p)(rng.nextGaussian() * 3 + 1)): Vector,
+      Array(rng.nextGaussian())))
+    val small = rows(3000)
+    // 20k rows: the local backend splits Gram passes into chunks
+    val large = rows(20000)
+    val dist = new DistributedBackend(spark.sparkContext.parallelize(small.toSeq, 4),
+      p, 1, true, knownN = small.length)
+    val local = new LocalBackend(large.map(_._1), large.map(_._2), p, 1, true)
+    try {
+      for ((name, backend) <- Seq("distributed" -> dist, "local chunked" -> local)) {
+        val rs = if (name == "distributed") small else large
+        val c = 0.0 +: Array.tabulate(p)(j => rs.map(_._1(j)).sum / rs.length)
+        val sc = math.sqrt(rs.length.toDouble) +: Array.tabulate(p)(j => 1.0 + j * 0.37)
+        backend.setStandardization(c, sc)
+        val u = Array(0, 1, 2, 4, 5, 7)
+        val (gu, xu) = backend.gramXty(u)
+        for (a <- Seq(Array(0, 2, 5), Array(1, 4, 7), Array(0), Array(7), u)) {
+          val (ga, xa) = backend.gramXty(a)
+          val (gs, xs) = BackendKernels.sliceGram(u, gu, xu, a, 1).get
+          assert(gs.sameElements(ga) && xs.sameElements(xa), s"$name ${a.mkString(",")}")
+        }
+        assert(BackendKernels.sliceGram(u, gu, xu, Array(0, 3), 1).isEmpty)
+      }
+    } finally dist.unpersist()
+  }
+
   test("a failed parallel CV stops its pool and releases its cached folds") {
     import spark.implicits._
     val rng = new scala.util.Random(61)
@@ -315,7 +440,8 @@ class MlApiSpec extends AnyFunSuite {
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "pass budget")
     val model =
-      try Slope.fitBackend(backend, params, Array.empty, Array("a", "b"), 2)
+      try Slope.fitBackend(backend, params, Array.empty, Array("a", "b"), 2,
+        Array(rows.count(_._2(0) < 0).toLong, rows.count(_._2(0) > 0).toLong))
       finally {
         sc.clearJobGroup()
         ListenerBusShim.drain(sc)
@@ -553,14 +679,11 @@ class CountingBackend(inner: SlopeBackend)
       full
     })
 
-  override def featureMeansAndSparsity(): (Array[Double], Boolean) = {
-    record("featureMeansAndSparsity"); super.featureMeansAndSparsity()
+  override def moments(rowV: Array[Double] => Array[Double]): Moments = {
+    record("moments"); super.moments(rowV)
   }
-  override def scaleStats(center: Array[Double], scale: String): Array[Double] = {
-    record("scaleStats"); super.scaleStats(center, scale)
-  }
-  override def yMoments(): (Array[Double], Array[Double]) = {
-    record("yMoments"); super.yMoments()
+  override def l1Norms(center: Array[Double]): Array[Double] = {
+    record("l1Norms"); super.l1Norms(center)
   }
   override def evalActive(active: Array[Int], betaActive: Array[Double], family: Family,
                           needDual: Boolean, needGrad: Boolean)
@@ -575,10 +698,7 @@ class CountingBackend(inner: SlopeBackend)
     super.evalPairActive(active, candActive, nextActive, family)
   }
   override def gramXty(active: Array[Int]): (Array[Double], Array[Double]) = {
-    record("gramXty"); super.gramXty(active)
-  }
-  override def xtv(rowV: Array[Double] => Array[Double]): Array[Double] = {
-    record("xtv"); super.xtv(rowV)
+    record("gramXty", active); super.gramXty(active)
   }
 }
 

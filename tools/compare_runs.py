@@ -1,16 +1,37 @@
 #!/usr/bin/env python3
 """Compare two Verify output dirs bit-exactly (atol=0) to detect
-run-to-run nondeterminism. Usage: compare_runs.py outA outB"""
+run-to-run nondeterminism, or check a Verify output against the goldens.
+Usage: compare_runs.py outA outB
+
+A query's output is read from <dir>/<name>/*.parquet (a Verify output)
+or <dir>/<name>.parquet (a golden file), so `compare_runs.py golden out`
+checks every golden that `out` holds. Names present on one side only are
+listed as skipped."""
 import duckdb, os, sys
 
+
+def outputs(d):
+    """Query name -> parquet glob of every q_* output in `d`."""
+    out = {}
+    for e in os.listdir(d):
+        if not e.startswith('q_'):
+            continue
+        if os.path.isdir(os.path.join(d, e)):
+            out[e] = f"{d}/{e}/*.parquet"
+        elif e.endswith('.parquet'):
+            out[e[:-len('.parquet')]] = f"{d}/{e}"
+    return out
+
+
 a, b = sys.argv[1], sys.argv[2]
+pa, pb = outputs(a), outputs(b)
 con = duckdb.connect()
-names = sorted(d for d in os.listdir(a) if d.startswith('q_'))
+names = sorted(set(pa) & set(pb))
 bad = 0
 for name in names:
     try:
-        da = con.sql(f"SELECT * FROM '{a}/{name}/*.parquet'").df()
-        db = con.sql(f"SELECT * FROM '{b}/{name}/*.parquet'").df()
+        da = con.sql(f"SELECT * FROM '{pa[name]}'").df()
+        db = con.sql(f"SELECT * FROM '{pb[name]}'").df()
         cols = sorted(da.columns)
         da = da[cols].sort_values(by=cols).reset_index(drop=True)
         db = db[cols].sort_values(by=cols).reset_index(drop=True)
@@ -20,7 +41,6 @@ for name in names:
         for c in cols:
             x, y = da[c], db[c]
             if x.dtype.kind == 'f':
-                import numpy as np
                 neq = ~((x == y) | (x.isna() & y.isna()))
                 if neq.any():
                     mx = float(abs(x[neq] - y[neq]).max())
@@ -35,4 +55,8 @@ for name in names:
             print(f"{name}: identical rows={len(da)}")
     except Exception as e:
         print(f"{name}: ERROR {str(e)[:150]}"); bad += 1
-sys.exit(1 if bad else 0)
+for side, only in ((a, sorted(set(pa) - set(pb))), (b, sorted(set(pb) - set(pa)))):
+    if only:
+        print(f"skipped, only in {side}: {', '.join(only)}")
+print(f"{len(names)} compared, {bad} differ")
+sys.exit(1 if bad or not names else 0)
