@@ -1,12 +1,10 @@
 package graft.slope
 
 import org.apache.spark.{SparkContext, TaskContext}
-import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.graft.{CachedBlockMissing, CachedBlocksRDD}
 import org.apache.spark.ml.linalg.{Vector, DenseVector, SparseVector}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
-
-import scala.reflect.ClassTag
 
 /** Data-access layer for the SLOPE solvers.
   *
@@ -29,7 +27,10 @@ import scala.reflect.ClassTag
   * where the rows live and how a pass runs over them ([[runPass]]) —
   * one Spark job, or pinned chunks on the driver — and merges partial
   * buffers in a fixed order, so a pass is a function of the data and
-  * its partitioning. The passes: [[moments]] (a fit's set-up: feature
+  * its partitioning. A pass object holds the driver state its rows read
+  * as plain fields, sized by the active set rather than by p
+  * ([[ActiveColumns]]), so a Spark job ships the pass and no broadcast
+  * is made. The passes: [[moments]] (a fit's set-up: feature
   * and label moments plus the lambda-max X^T v, in one scan) and
   * [[l1Norms]] (the "l1" scale only); per path step, [[evalActive]]
   * and [[evalPairActive]] (one evaluation scan at one or two points)
@@ -54,19 +55,10 @@ abstract class SlopeBackend(val pRaw: Int, // feature count, excluding intercept
   }
 
   /** The one launcher: folds every row through `pass` and merges the
-    * partial buffers with `pass.merge` in a fixed order. */
+    * partial buffers with `pass.merge` in a fixed order. A pass carries
+    * its own driver state, so launching it ships the pass and nothing
+    * else: no broadcast is made or destroyed. */
   private[slope] def runPass(pass: RowPass): Array[Double]
-
-  /** `state` as a pass's tasks read it: one broadcast on a cluster, the
-    * plain reference on the driver. */
-  private[slope] def ship[S: ClassTag](state: S): Shipped[S]
-
-  /** [[runPass]] of a pass that reads driver `state`, released after. */
-  private def runPassWith[S: ClassTag](state: S)(pass: Shipped[S] => RowPass)
-    : Array[Double] = {
-    val shipped = ship(state)
-    try runPass(pass(shipped)) finally shipped.release()
-  }
 
   /** The set-up moments of a fit in ONE pass ([[MomentsPass]]): feature
     * sums, squares and maxima, the row and sparse-row counts, label sums
@@ -83,22 +75,18 @@ abstract class SlopeBackend(val pRaw: Int, // feature count, excluding intercept
     * l1 needs every slot; with all-zero centers (sparse path) the stored
     * entries suffice. */
   def l1Norms(center: Array[Double]): Array[Double] =
-    if (center.exists(_ != 0.0)) runPassWith(center)(c => new L1Pass(pRaw, Some(c)))
-    else runPass(new L1Pass(pRaw, None))
+    runPass(new L1Pass(pRaw, if (center.exists(_ != 0.0)) Some(center) else None))
 
   /** One [[EvalPass]] at `points` (each |active| x m): primals at every
     * point, dual and gradient terms at the last. */
   private def evalPass(active: Array[Int], points: Seq[Array[Double]], family: Family,
                        needDual: Boolean, needGrad: Boolean): Array[Double] = {
     val weights = points.map { beta =>
-      val (w, b) = BackendKernels.effectiveWeights(
-        active, beta, m, pRaw, fitIntercept, xCenter, xScale)
+      val (w, b) = BackendKernels.effectiveWeights(active, beta, m, fitIntercept, xCenter, xScale)
       new PointWeights(w, b)
     }
-    val state = new EvalState(weights.toArray,
-      BackendKernels.slotMap(active, pRaw, fitIntercept))
-    runPassWith(state)(s =>
-      new EvalPass(s, points.length, family, active.length, m, needDual, needGrad))
+    runPass(new EvalPass(ActiveColumns(active, pRaw, fitIntercept), weights.toArray, family,
+      active.length, m, needDual, needGrad))
   }
 
   /** Raw gradient terms at `from` in a pass buffer -> standardized
@@ -150,8 +138,7 @@ abstract class SlopeBackend(val pRaw: Int, // feature count, excluding intercept
     * of a subset are a slice of a superset's ([[BackendKernels.sliceGram]]). */
   def gramXty(active: Array[Int]): (Array[Double], Array[Double]) = {
     val a = active.length
-    val res = runPassWith(BackendKernels.slotMap(active, pRaw, fitIntercept))(s =>
-      new GramPass(s, a, m))
+    val res = runPass(new GramPass(ActiveColumns(active, pRaw, fitIntercept), a, m))
     BackendKernels.assembleGram(active, res, a, m, n, fitIntercept, xCenter, xScale)
   }
 
@@ -187,38 +174,63 @@ private[slope] object BackendKernels extends Serializable {
       while (t < idx.length) { f(idx(t), v(t)); t += 1 }
   }
 
+  /** `f(slot, x_j)` for every active feature j of `x` ([[ActiveColumns]]):
+    * the active features of a dense row in ascending index order, the
+    * stored entries of a sparse row whose feature is active (`look`, the
+    * columns' [[ActiveColumns.lookup]]), in index order. */
+  def foreachActive(x: Vector, cols: ActiveColumns, look: Array[Int])
+                   (f: (Int, Double) => Unit): Unit = x match {
+    case d: DenseVector =>
+      val v = d.values; val feat = cols.features; val slots = cols.slots
+      var i = 0
+      while (i < feat.length) { f(slots(i), v(feat(i))); i += 1 }
+    case s: SparseVector =>
+      val idx = s.indices; val v = s.values
+      var t = 0
+      while (t < idx.length) {
+        val slot = look(idx(t))
+        if (slot >= 0) f(slot, v(t))
+        t += 1
+      }
+  }
+
   /** Adds one row's gradient terms at pseudo-gradient `pg` into `buf`:
     * s0 (m) at `from`, then A = x_j * pg_k over active feature slots
-    * (a x m, column-major) — the raw form [[standardizeGrad]] folds. */
-  def gradRowUpdate(x: Vector, pg: Array[Double], slots: Array[Int],
+    * (a x m, column-major) — the raw form [[standardizeGrad]] folds. Each
+    * slot takes one term per row, so the loop order within a row moves
+    * no bit. */
+  def gradRowUpdate(x: Vector, pg: Array[Double], cols: ActiveColumns, look: Array[Int],
                     buf: Array[Double], from: Int, a: Int, m: Int): Unit = {
     var k = 0
     while (k < m) { buf(from + k) += pg(k); k += 1 }
     val aFrom = from + m
-    foreachStored(x) { (j, v) =>
-      val slot = slots(j)
-      if (slot >= 0) {
-        var kk = 0
-        while (kk < m) { buf(aFrom + kk * a + slot) += v * pg(kk); kk += 1 }
-      }
+    foreachActive(x, cols, look) { (slot, v) =>
+      var kk = 0
+      while (kk < m) { buf(aFrom + kk * a + slot) += v * pg(kk); kk += 1 }
     }
   }
 
-  /** lp_k = b_k + sum_j w_jk x_j computed over nnz only. */
-  def linPred(x: Vector, w: Array[Array[Double]], b: Array[Double],
-              out: Array[Double]): Unit = {
+  /** lp_k = b_k + sum_j w_jk x_j over the active features of `x`, where
+    * `w(k)(slot)` is the weight of the feature in active slot `slot`: a
+    * dense row loops over the active features, a sparse row over its
+    * stored entries through `look`. The skipped terms are those of a
+    * zero weight, each an exact ±0 (features are finite); adding ±0 to a
+    * partial sum that starts at +0.0 never changes it, so the sum holds
+    * the bits of a loop over every feature. */
+  def linPred(x: Vector, cols: ActiveColumns, look: Array[Int], w: Array[Array[Double]],
+              b: Array[Double], out: Array[Double]): Unit = {
     val m = b.length
     var k = 0
     while (k < m) { out(k) = b(k); k += 1 }
     x match {
       case d: DenseVector =>
-        val v = d.values
+        val v = d.values; val feat = cols.features; val slots = cols.slots
         k = 0
         while (k < m) {
           val wk = w(k)
-          var j = 0
+          var i = 0
           var s = 0.0
-          while (j < v.length) { s += wk(j) * v(j); j += 1 }
+          while (i < feat.length) { s += wk(slots(i)) * v(feat(i)); i += 1 }
           out(k) += s
           k += 1
         }
@@ -229,17 +241,22 @@ private[slope] object BackendKernels extends Serializable {
           val wk = w(k)
           var t = 0
           var acc = 0.0
-          while (t < idx.length) { acc += wk(idx(t)) * v(t); t += 1 }
+          while (t < idx.length) {
+            val slot = look(idx(t))
+            if (slot >= 0) acc += wk(slot) * v(t)
+            t += 1
+          }
           out(k) += acc
           k += 1
         }
     }
   }
 
-  /** Effective dense weights/offsets so that
+  /** Effective weights/offsets so that
     * lp = W^T x + b  ==  sum_{j active} beta_j * (x_j - c_j)/s_j
     *                     + beta_0 / s_0.
-    * Returns (w: m arrays of length pRaw, b: length m).
+    * Returns (w: m arrays of length |active|, indexed by active slot, the
+    * intercept's slot left 0; b: length m).
     *
     * The intercept coordinate carries its own scale s_0 (set to sqrt(n)
     * by the orchestrator): the raw ones-column has squared norm n, which
@@ -248,11 +265,11 @@ private[slope] object BackendKernels extends Serializable {
     * reparameterization (the intercept is unpenalized) that pins its
     * curvature at 1 regardless of data size. */
   def effectiveWeights(active: Array[Int], betaActive: Array[Double],
-                       m: Int, pRaw: Int, fitIntercept: Boolean,
+                       m: Int, fitIntercept: Boolean,
                        xCenter: Array[Double], xScale: Array[Double])
     : (Array[Array[Double]], Array[Double]) = {
     val a = active.length
-    val w = Array.fill(m)(new Array[Double](pRaw))
+    val w = Array.fill(m)(new Array[Double](a))
     val b = new Array[Double](m)
     var k = 0
     while (k < m) {
@@ -262,9 +279,8 @@ private[slope] object BackendKernels extends Serializable {
         val beta = betaActive(k * a + i)
         if (fitIntercept && row == 0) b(k) += beta / xScale(0)
         else {
-          val j = if (fitIntercept) row - 1 else row
           val wv = beta / xScale(row)
-          w(k)(j) = wv
+          w(k)(i) = wv
           b(k) -= wv * xCenter(row)
         }
         i += 1
@@ -274,28 +290,15 @@ private[slope] object BackendKernels extends Serializable {
     (w, b)
   }
 
-  /** Raw-feature-index -> active-slot map (-1 = inactive). */
-  def slotMap(active: Array[Int], pRaw: Int, fitIntercept: Boolean): Array[Int] = {
-    val s = Array.fill(pRaw)(-1)
-    var i = 0
-    while (i < active.length) {
-      val row = active(i)
-      if (!(fitIntercept && row == 0)) s(if (fitIntercept) row - 1 else row) = i
-      i += 1
-    }
-    s
-  }
-
   /** Per-row raw accumulation for the Gram pass. Buffer layout:
     * [G_raw(a*a), colSum(a), xty_raw(a*m), ySum(m)]. */
-  def gramRowUpdate(x: Vector, y: Array[Double], slots: Array[Int],
+  def gramRowUpdate(x: Vector, y: Array[Double], cols: ActiveColumns, look: Array[Int],
                     buf: Array[Double], a: Int, m: Int,
                     tmpSlot: Array[Int], tmpVal: Array[Double]): Unit = {
     val gLen = a * a
     var cnt = 0
-    foreachStored(x) { (j, v) =>
-      val s = slots(j)
-      if (s >= 0 && v != 0.0) { tmpSlot(cnt) = s; tmpVal(cnt) = v; cnt += 1 }
+    foreachActive(x, cols, look) { (s, v) =>
+      if (v != 0.0) { tmpSlot(cnt) = s; tmpVal(cnt) = v; cnt += 1 }
     }
     var t1 = 0
     while (t1 < cnt) {
@@ -413,9 +416,13 @@ private[slope] object BackendKernels extends Serializable {
   * chunk of the driver's rows) into a fresh accumulator, with per-run
   * scratch allocated there, once; `merge` combines two accumulators.
   * Every pass is a named top-level class holding only what its tasks
-  * read, so launching one on Spark costs the serializability check and
-  * nothing more: the closure cleaner returns at once for a class that
-  * is not a lambda, and no pass captures the backend. */
+  * read — its driver state included, as plain fields that travel in the
+  * task binary (broadcast once per executor by Spark with the stage), so
+  * no pass makes a broadcast of its own. Launching one on Spark costs
+  * the serializability check and nothing more: the closure cleaner
+  * returns at once for a class that is not a lambda, and no pass
+  * captures the backend. A p-length lookup is built once per run of
+  * rows, in `apply`, never per row. */
 private[slope] abstract class RowPass
     extends ((TaskContext, Iterator[(Vector, Array[Double])]) => Array[Double])
     with Serializable {
@@ -431,32 +438,36 @@ private[slope] abstract class RowPass
   def chunked: Boolean = false
 }
 
-/** Driver state a pass reads ([[SlopeBackend.ship]]); `release` frees
-  * it once the pass has run. */
-private[slope] abstract class Shipped[S] extends Serializable {
-  def value: S
-  def release(): Unit
+/** The active feature columns of a pass, as its tasks read them: the raw
+  * index of each active non-intercept coefficient row, ascending, and
+  * that row's slot (its position in the active set). Its size is the
+  * active set's, whatever p is; a task expands it to a p-length
+  * [[lookup]] once, never per row. */
+private[slope] final class ActiveColumns(val pRaw: Int, val features: Array[Int],
+                                         val slots: Array[Int]) extends Serializable {
+  /** Raw feature index -> active slot (-1 = inactive). */
+  def lookup(): Array[Int] = {
+    val look = Array.fill(pRaw)(-1)
+    var i = 0
+    while (i < features.length) { look(features(i)) = slots(i); i += 1 }
+    look
+  }
 }
 
-/** One broadcast, destroyed on release. */
-private[slope] final class BroadcastState[S](bc: Broadcast[S]) extends Shipped[S] {
-  def value: S = bc.value
-  def release(): Unit = bc.destroy()
-}
-
-/** The plain reference, for passes that never leave the driver. */
-private[slope] final class HeldState[S](val value: S) extends Shipped[S] {
-  def release(): Unit = ()
+private[slope] object ActiveColumns {
+  /** The columns of `active` (coefficient rows; an intercept row 0 has no
+    * column). */
+  def apply(active: Array[Int], pRaw: Int, fitIntercept: Boolean): ActiveColumns = {
+    val off = if (fitIntercept) 1 else 0
+    val slots = active.indices.filterNot(i => fitIntercept && active(i) == 0)
+      .sortBy(active(_)).toArray
+    new ActiveColumns(pRaw, slots.map(active(_) - off), slots)
+  }
 }
 
 /** Effective weights/offsets of one evaluated point
   * ([[BackendKernels.effectiveWeights]]). */
 private[slope] final class PointWeights(val w: Array[Array[Double]], val b: Array[Double])
-  extends Serializable
-
-/** The driver state of one evaluation pass — its points and the
-  * raw-feature -> active-slot map — shipped as ONE value. */
-private[slope] final class EvalState(val points: Array[PointWeights], val slots: Array[Int])
   extends Serializable
 
 /** The set-up moments pass behind [[SlopeBackend.moments]]. Buffer (see
@@ -596,12 +607,12 @@ private[slope] object Moments {
 
 /** sum_i |x_ij - c_j| per feature. Uncentered (`center` None) only the
   * stored entries contribute. */
-private[slope] final class L1Pass(p: Int, center: Option[Shipped[Array[Double]]])
+private[slope] final class L1Pass(p: Int, center: Option[Array[Double]])
     extends RowPass {
   def zero(): Array[Double] = new Array[Double](p)
   def apply(ctx: TaskContext, rows: Iterator[(Vector, Array[Double])]): Array[Double] = {
     val acc = zero()
-    val c = center.map(_.value).orNull
+    val c = center.orNull
     while (rows.hasNext) {
       val x = rows.next()._1
       if (c == null) BackendKernels.foreachStored(x)((j, v) => acc(j) += math.abs(v))
@@ -612,19 +623,20 @@ private[slope] final class L1Pass(p: Int, center: Option[Shipped[Array[Double]]]
 }
 
 /** The fused evaluation pass behind `evalActive` (one point) and
-  * `evalPairActive` (two points). Buffer: the primal at every point but
-  * the last, then [primal, dual, s0(m), A(a*m)] at the last; the dual
-  * and gradient parts only when asked for. */
-private[slope] final class EvalPass(state: Shipped[EvalState], nPoints: Int,
+  * `evalPairActive` (two points), at `points` over the active `cols`.
+  * Buffer: the primal at every point but the last, then [primal, dual,
+  * s0(m), A(a*m)] at the last; the dual and gradient parts only when
+  * asked for. */
+private[slope] final class EvalPass(cols: ActiveColumns, points: Array[PointWeights],
                                     family: Family, a: Int, m: Int,
                                     needDual: Boolean, needGrad: Boolean)
     extends RowPass {
   override def chunked: Boolean = true
   def zero(): Array[Double] =
-    new Array[Double](nPoints + 1 + (if (needGrad) m + a * m else 0))
+    new Array[Double](points.length + 1 + (if (needGrad) m + a * m else 0))
   def apply(ctx: TaskContext, rows: Iterator[(Vector, Array[Double])]): Array[Double] = {
-    val st = state.value
-    val last = nPoints - 1
+    val look = cols.lookup()
+    val last = points.length - 1
     val acc = zero()
     val lp = new Array[Double](m)
     val pg = new Array[Double](m)
@@ -632,14 +644,14 @@ private[slope] final class EvalPass(state: Shipped[EvalState], nPoints: Int,
       val (x, y) = rows.next()
       var t = 0
       while (t <= last) {
-        BackendKernels.linPred(x, st.points(t).w, st.points(t).b, lp)
+        BackendKernels.linPred(x, cols, look, points(t).w, points(t).b, lp)
         acc(t) += family.primalRow(y, lp)
         t += 1
       }
       if (needDual) acc(last + 1) += family.dualRow(y, lp)
       if (needGrad) {
         family.pseudoGradientRow(y, lp, pg)
-        BackendKernels.gradRowUpdate(x, pg, st.slots, acc, last + 2, a, m)
+        BackendKernels.gradRowUpdate(x, pg, cols, look, acc, last + 2, a, m)
       }
     }
     acc
@@ -647,18 +659,18 @@ private[slope] final class EvalPass(state: Shipped[EvalState], nPoints: Int,
 }
 
 /** Raw Gram + X^T y accumulation ([[BackendKernels.gramRowUpdate]]). */
-private[slope] final class GramPass(slots: Shipped[Array[Int]], a: Int, m: Int)
+private[slope] final class GramPass(cols: ActiveColumns, a: Int, m: Int)
     extends RowPass {
   override def chunked: Boolean = true
   def zero(): Array[Double] = new Array[Double](a * a + a + a * m + m)
   def apply(ctx: TaskContext, rows: Iterator[(Vector, Array[Double])]): Array[Double] = {
     val acc = zero()
-    val s = slots.value
+    val look = cols.lookup()
     val tmpSlot = new Array[Int](a)
     val tmpVal = new Array[Double](a)
     while (rows.hasNext) {
       val (x, y) = rows.next()
-      BackendKernels.gramRowUpdate(x, y, s, acc, a, m, tmpSlot, tmpVal)
+      BackendKernels.gramRowUpdate(x, y, cols, look, acc, a, m, tmpSlot, tmpVal)
     }
     acc
   }
@@ -681,10 +693,7 @@ private[slope] object OrderedFold {
     val held = new Array[AnyRef](parts)
     var next = 0
     var acc: Option[U] = None
-    val key = "spark.job.description"
-    val prev = sc.getLocalProperty(key)
-    sc.setLocalProperty(key, label)
-    try launch { (i: Int, part: U) =>
+    described(sc, label)(launch { (i: Int, part: U) =>
       held(i) = part
       while (next < parts && held(next) != null) {
         val r = held(next).asInstanceOf[U]
@@ -692,21 +701,34 @@ private[slope] object OrderedFold {
         held(next) = null
         next += 1
       }
-    } finally sc.setLocalProperty(key, prev)
+    })
     acc
+  }
+
+  /** Runs `body` with every job it starts described as `label`, and
+    * restores the caller's description after. */
+  def described[T](sc: SparkContext, label: String)(body: => T): T = {
+    val key = "spark.job.description"
+    val prev = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, label)
+    try body finally sc.setLocalProperty(key, prev)
   }
 }
 
 /** Distributed backend over an RDD of (features, preprocessed labels):
   * input sizing, persistence, and [[runPass]], which makes every solver
-  * pass ONE Spark job over the persisted rows, with the pass's driver
-  * state in one broadcast destroyed after the job (the MLlib pattern,
-  * cf. Spark's `LeastSquaresAggregator`). Up to 64 partitions a pass is
-  * a plain `runJob` whose partition results fold on the driver in
-  * partition order ([[OrderedFold]]); wider inputs reduce through a
-  * `treeAggregate` of depth `treeDepth`. A 1000-executor cluster does
-  * one shuffle-free map + reduction per solver pass, and the driver adds
-  * no per-job bookkeeping on top (see [[RowPass]]).
+  * pass ONE Spark job that ships the pass object and nothing else: the
+  * pass holds its own driver state, sized by the active set, so no
+  * broadcast is made per pass. The first pass runs over `rows` and
+  * caches them; every later pass runs over a lineage-free view of the
+  * cached blocks ([[org.apache.spark.graft.CachedBlocksRDD]], the only
+  * code of the engine that calls Spark internals), so its task binary
+  * carries no input lineage (SQL plan, generated code). Up to 64
+  * partitions a pass is a plain `runJob` whose partition results fold on
+  * the driver in partition order ([[OrderedFold]]); wider inputs reduce
+  * through a `treeAggregate` of depth `treeDepth`. A 1000-executor
+  * cluster does one shuffle-free map + reduction per solver pass, and
+  * the driver adds no per-job bookkeeping on top (see [[RowPass]]).
   */
 class DistributedBackend(
     rowsIn: RDD[(Vector, Array[Double])],
@@ -768,26 +790,49 @@ class DistributedBackend(
 
   private def sc = rows.sparkContext
 
-  private[slope] def ship[S: ClassTag](state: S): Shipped[S] =
-    new BroadcastState(sc.broadcast(state))
+  // the cached blocks of `rows`, once the first pass has cached them
+  @volatile private var cached: RDD[(Vector, Array[Double])] = null
 
-  /** With <= 64 partitions a tree level would only add a scheduled
+  /** Runs `pass` over the cached view of `rows` once a pass has cached
+    * them, over `rows` before that. A view job that fails because a
+    * cached block is gone (a lost executor) runs again over `rows`: Spark
+    * recomputes only the lost partitions from lineage and caches them
+    * again, and the ordered fold returns the bits the view would have
+    * (when the lineage recomputes a partition's rows in their order). Any
+    * other failure propagates unchanged.
+    *
+    * With <= 64 partitions a tree level would only add a scheduled
     * stage: `runJob` runs the pass object itself as the task function,
     * and [[OrderedFold]] folds partition results on the driver in
     * partition order, so repeated passes agree bit for bit. This is what
     * `treeAggregate(depth = 1)` does, minus its closure cleaning (five
     * cleaner runs per job, two of them parsing Spark's own RDD and
     * SparkContext bytecode). Wider inputs keep `treeAggregate`'s tree.
+    * Every job of a pass is described as `slope <Pass class>`.
     * Must stay in this file: job call sites read `... at Backend.scala:`. */
   private[slope] def runPass(pass: RowPass): Array[Double] = {
-    val parts = rows.getNumPartitions
-    if (parts <= 64)
-      OrderedFold.run[Array[Double]](sc, parts, "slope " + pass.getClass.getSimpleName,
-        pass.merge)(h => sc.runJob(rows, pass, 0 until parts, h)).getOrElse(pass.zero())
-    else
-      rows.mapPartitions(it => Iterator.single(pass(TaskContext.get(), it)))
-        .treeAggregate(pass.zero())(pass.merge, pass.merge, treeDepth)
+    val label = "slope " + pass.getClass.getSimpleName
+    def over(input: RDD[(Vector, Array[Double])]): Array[Double] = {
+      val parts = input.getNumPartitions
+      if (parts <= 64)
+        OrderedFold.run[Array[Double]](sc, parts, label, pass.merge)(h =>
+          sc.runJob(input, pass, 0 until parts, h)).getOrElse(pass.zero())
+      else OrderedFold.described(sc, label)(
+        input.mapPartitions(it => Iterator.single(pass(TaskContext.get(), it)))
+          .treeAggregate(pass.zero())(pass.merge, pass.merge, treeDepth))
+    }
+    val view = cached
+    if (view == null) {
+      val res = over(rows)
+      cached = new CachedBlocksRDD(rows)
+      res
+    } else
+      try over(view)
+      catch { case e: Exception if lostBlock(e) => over(rows) }
   }
+
+  private def lostBlock(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(_.isInstanceOf[CachedBlockMissing])
 
   def unpersist(): Unit = rows.unpersist()
 }
@@ -809,8 +854,6 @@ class LocalBackend(
   private val rows: Array[(Vector, Array[Double])] = xs.zip(ys)
 
   val n: Long = rows.length.toLong
-
-  private[slope] def ship[S: ClassTag](state: S): Shipped[S] = new HeldState(state)
 
   /** A [[RowPass.chunked]] pass over 16,384 rows or more runs as 32
     * chunks on the common ForkJoin pool; any other pass, as one run.

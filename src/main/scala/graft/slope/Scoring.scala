@@ -257,9 +257,12 @@ private[slope] final class StepErrors(model: SlopeModel, measures: Seq[String])
   }
   private val w = linPredWeights(model)
   private val b = model.intercepts
+  // every feature is a column, in its own slot: linPred adds every term
+  private val cols = new ActiveColumns(p, Array.range(0, p), Array.range(0, p))
   private val positive = model.classNames.lift(1).orNull // binomial's class 1
   private val classIndex: Map[String, Int] = model.classNames.zipWithIndex.toMap
 
+  @transient private lazy val look = cols.lookup()
   @transient private lazy val lp = new Array[Double](m)
   @transient private lazy val prob = new Array[Double](m + 1)
 
@@ -276,7 +279,7 @@ private[slope] final class StepErrors(model: SlopeModel, measures: Seq[String])
     val yi = if (kind == Multinomial) classIndex.getOrElse(y.toString, -1) else -1
     var s = 0
     while (s < nSteps) {
-      BackendKernels.linPred(x, w(s), b(s), lp)
+      BackendKernels.linPred(x, cols, look, w(s), b(s), lp)
       if (kind == Binomial) prob(0) = 1.0 / (1.0 + math.exp(-lp(0)))
       else if (kind == Multinomial) softmax()
       var i = 0

@@ -100,4 +100,82 @@ class KernelsSpec extends AnyFunSuite {
     assert(Screening.diff(Array(1, 2, 3), Array(2)).sameElements(Array(1, 3)))
     assert(Screening.intersect(Array(3, 1, 2), Array(2, 3)).sameElements(Array(2, 3)))
   }
+
+  test("compact linPred and gradient terms equal a dense loop over every feature, bit for bit") {
+    import org.apache.spark.ml.linalg.{Vector, Vectors}
+    val rng = new scala.util.Random(107)
+    val p = 40; val m = 2
+    for (fitIntercept <- Seq(true, false); sparse <- Seq(false, true)) {
+      val off = if (fitIntercept) 1 else 0
+      val active = ((if (fitIntercept) Seq(0) else Nil) ++
+        rng.shuffle((off until p + off).toList).take(9).sorted).toArray
+      val a = active.length
+      // exact zeros and negatives among the coefficients
+      val beta = Array.tabulate(a * m)(i => if (i % 4 == 1) 0.0 else rng.nextGaussian() * 2)
+      val center = Array.tabulate(p + off)(r => if (fitIntercept && r == 0) 0.0 else rng.nextGaussian())
+      val scale = Array.tabulate(p + off)(_ => 0.5 + rng.nextDouble())
+      val (w, b) = BackendKernels.effectiveWeights(active, beta, m, fitIntercept, center, scale)
+      // the dense reference: p-long weights, every feature in the loop
+      val wd = Array.fill(m)(new Array[Double](p))
+      val bd = new Array[Double](m)
+      val slotOf = Array.fill(p)(-1)
+      for (k <- 0 until m; i <- 0 until a) {
+        val row = active(i)
+        if (fitIntercept && row == 0) bd(k) += beta(k * a + i) / scale(0)
+        else {
+          val wv = beta(k * a + i) / scale(row)
+          wd(k)(row - off) = wv
+          bd(k) -= wv * center(row)
+          slotOf(row - off) = i
+        }
+      }
+      val cols = ActiveColumns(active, p, fitIntercept)
+      val look = cols.lookup()
+      val buf = new Array[Double](m + a * m)
+      val ref = new Array[Double](m + a * m)
+      val lp = new Array[Double](m)
+      val pg = new Array[Double](m)
+      for (r <- 0 until 300) {
+        val xs = Array.fill(p)(if (rng.nextDouble() < 0.3) 0.0 else rng.nextGaussian() * 3)
+        val x: Vector = if (sparse) Vectors.dense(xs).toSparse else Vectors.dense(xs)
+        BackendKernels.linPred(x, cols, look, w, b, lp)
+        for (k <- 0 until m) {
+          var s = 0.0
+          for (j <- 0 until p) s += wd(k)(j) * xs(j)
+          val want = bd(k) + s
+          assert(java.lang.Double.doubleToRawLongBits(lp(k)) ==
+            java.lang.Double.doubleToRawLongBits(want),
+            s"intercept $fitIntercept sparse $sparse row $r target $k: ${lp(k)} vs $want")
+          pg(k) = rng.nextGaussian()
+        }
+        BackendKernels.gradRowUpdate(x, pg, cols, look, buf, 0, a, m)
+        for (k <- 0 until m) ref(k) += pg(k)
+        for (j <- 0 until p if slotOf(j) >= 0; k <- 0 until m)
+          ref(m + k * a + slotOf(j)) += xs(j) * pg(k)
+      }
+      assert(buf.map(java.lang.Double.doubleToRawLongBits)
+        .sameElements(ref.map(java.lang.Double.doubleToRawLongBits)),
+        s"intercept $fitIntercept sparse $sparse: gradient terms differ")
+    }
+  }
+
+  test("an evaluation pass's size follows its active set, not p") {
+    def bytes(p: Int): Int = {
+      val active = Array(0, 3, p)
+      val beta = Array(0.5, -1.0, 2.0)
+      val (w, b) = BackendKernels.effectiveWeights(active, beta, 1, true,
+        new Array[Double](p + 1), Array.fill(p + 1)(1.0))
+      val pass = new EvalPass(ActiveColumns(active, p, true),
+        Array(new PointWeights(w, b), new PointWeights(w, b)), Family("binomial"), 3, 1,
+        needDual = true, needGrad = true)
+      val out = new java.io.ByteArrayOutputStream
+      val oos = new java.io.ObjectOutputStream(out)
+      oos.writeObject(pass)
+      oos.close()
+      out.size
+    }
+    val large = bytes(100000)
+    assert(large < 4096, s"$large bytes")
+    assert(large == bytes(10))
+  }
 }

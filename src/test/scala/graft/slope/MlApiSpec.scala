@@ -246,6 +246,197 @@ class MlApiSpec extends AnyFunSuite {
     }
   }
 
+  /** Seeded binomial rows over `p` features for the pass-launch cases. */
+  private def binomialRows(seed: Int, n: Int, p: Int) = {
+    import org.apache.spark.ml.linalg.{Vector, Vectors}
+    val rng = new scala.util.Random(seed)
+    Array.fill(n) {
+      val x = Array.fill(p)(rng.nextGaussian())
+      (Vectors.dense(x): Vector, Array(if (x(0) + rng.nextGaussian() > 0) 1.0 else -1.0))
+    }
+  }
+
+  /** Runs `body` under a job group and returns it with the description
+    * and stage infos of every job it started, in start order. */
+  private def withJobs[T](group: String)(body: => T)
+    : (T, Seq[(String, Seq[org.apache.spark.scheduler.StageInfo])]) = {
+    import org.apache.spark.graft.ListenerBusShim
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[
+      (Int, String, Seq[org.apache.spark.scheduler.StageInfo])]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add((e.jobId, e.properties.getProperty("spark.job.description"), e.stageInfos))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    val out =
+      try body
+      finally {
+        sc.clearJobGroup()
+        ListenerBusShim.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    import scala.jdk.CollectionConverters._
+    (out, jobs.asScala.toSeq.sortBy(_._1).map(j => (j._2, j._3)))
+  }
+
+  test("passes after a backend's first run over the cached blocks alone") {
+    val p = 6
+    val rows = binomialRows(83, 3000, p)
+    // a map over the input: the first pass's stage holds two RDDs
+    val backend = new DistributedBackend(
+      spark.sparkContext.parallelize(rows.toSeq, 4).map(identity), p, 1, true,
+      knownN = rows.length)
+    try {
+      backend.setStandardization(new Array[Double](p + 1), Array.fill(p + 1)(1.0))
+      val fam = Family("binomial")
+      val active = Array(0, 2, 5)
+      val beta = Array(0.1, -0.4, 0.0)
+      val (_, jobs) = withJobs("graft-view") {
+        backend.moments(y => y)
+        backend.evalActive(active, beta, fam, needDual = true, needGrad = true)
+        backend.evalPairActive(active, beta, beta.map(_ * 0.5), fam)
+        backend.gramXty(active)
+        backend.l1Norms(Array.fill(p)(0.25))
+      }
+      assert(jobs.map(_._1) == Seq("slope MomentsPass", "slope EvalPass", "slope EvalPass",
+        "slope GramPass", "slope L1Pass"), jobs.map(_._1).mkString(", "))
+      assert(jobs.head._2.head.rddInfos.length == 2)
+      for ((desc, stages) <- jobs.tail) {
+        assert(stages.length == 1, desc)
+        val rdds = stages.head.rddInfos
+        assert(rdds.length == 1 && rdds.head.parentIds.isEmpty,
+          s"$desc: ${rdds.map(r => s"${r.name} <- ${r.parentIds}")}")
+      }
+    } finally backend.unpersist()
+  }
+
+  test("a lost cached block is recomputed from lineage, with the same bits") {
+    import org.apache.spark.graft.BlockShim
+    val p = 8
+    val rows = binomialRows(89, 4000, p)
+    val backend = new DistributedBackend(spark.sparkContext.parallelize(rows.toSeq, 4),
+      p, 1, true)
+    try {
+      backend.setStandardization(new Array[Double](p + 1), Array.fill(p + 1)(1.0))
+      val fam = Family("binomial")
+      val active = Array(0, 1, 3, 4, 8)
+      val cand = Array(0.2, -0.3, 0.0, 0.7, -0.1)
+      val next = cand.map(_ * 0.9)
+      // the first pass runs over the rows and caches them; the second over the view
+      val first = backend.evalPairActive(active, cand, next, fam)
+      val viewed = backend.evalPairActive(active, cand, next, fam)
+      BlockShim.removeCached(backend.rows, 2)
+      assert(!BlockShim.isCached(backend.rows, 2))
+      val (recovered, jobs) = withJobs("graft-lost-block") {
+        backend.evalPairActive(active, cand, next, fam)
+      }
+      // the view job fails, and the pass runs once more over the rows
+      assert(jobs.length == 2, jobs.map(_._1).mkString(", "))
+      assert(BlockShim.isCached(backend.rows, 2))
+      for (r <- Seq(viewed, recovered)) {
+        assert(r._1 == first._1 && r._2 == first._2 && r._3 == first._3)
+        assert(r._4.sameElements(first._4))
+      }
+      assert(backend.evalPairActive(active, cand, next, fam)._4.sameElements(first._4))
+    } finally backend.unpersist()
+  }
+
+  test("a distributed fit that loses a cached block equals the undisturbed fit") {
+    import org.apache.spark.graft.BlockShim
+    val p = 6
+    val rows = binomialRows(97, 3000, p)
+    val counts = Array(rows.count(_._2(0) < 0).toLong, rows.count(_._2(0) > 0).toLong)
+    val params = SlopeParams(family = "binomial", nSigma = 8)
+    def fit(disturb: Boolean): (SlopeModel, Boolean) = {
+      val dist = new DistributedBackend(spark.sparkContext.parallelize(rows.toSeq, 4),
+        p, 1, true)
+      // drops a cached block of the rows after the 5th pass
+      val backend = new SlopeBackend(p, 1, true) {
+        private var passes = 0
+        def n: Long = dist.n
+        private[slope] def runPass(pass: RowPass): Array[Double] = {
+          val res = dist.runPass(pass)
+          passes += 1
+          if (disturb && passes == 5) BlockShim.removeCached(dist.rows, 1)
+          res
+        }
+      }
+      try (Slope.fitBackend(backend, params, Array.empty, Array("a", "b"), 2, counts),
+        BlockShim.isCached(dist.rows, 1))
+      finally dist.unpersist()
+    }
+    val (base, _) = fit(disturb = false)
+    val (lost, recached) = fit(disturb = true)
+    assert(recached, "the lost block was not cached again")
+    assert(lost.nSteps == base.nSteps && base.nSteps > 1)
+    for (s <- 0 until base.nSteps) {
+      assert(lost.coefs(s).sameElements(base.coefs(s)), s"step $s")
+      assert(lost.intercepts(s).sameElements(base.intercepts(s)), s"step $s")
+    }
+    assert(lost.passes.sameElements(base.passes))
+  }
+
+  test("a pass that fails for another reason fails once, with its own exception") {
+    val p = 4
+    val rows = binomialRows(101, 500, p)
+    val backend = new DistributedBackend(spark.sparkContext.parallelize(rows.toSeq, 4),
+      p, 1, true)
+    try {
+      backend.l1Norms(new Array[Double](p))
+      val (e, jobs) = withJobs("graft-failing-pass") {
+        intercept[Exception](backend.runPass(new FailingPass))
+      }
+      val causes = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
+        c.getMessage == FailingPass.message), causes.mkString(" | "))
+      assert(jobs.map(_._1) == Seq("slope FailingPass"), jobs.map(_._1).mkString(", "))
+    } finally backend.unpersist()
+  }
+
+  test("every job of a wide (treeAggregate) pass carries the pass's description") {
+    import org.apache.spark.graft.ListenerBusShim
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    val p = 5
+    val rows = binomialRows(103, 2000, p)
+    val sc = spark.sparkContext
+    // no knownN: the backend keeps the 80-partition layout
+    val backend = new DistributedBackend(sc.parallelize(rows.toSeq, 80), p, 1, true)
+    val group = "graft-wide-pass"
+    val stageDescs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          stageDescs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    try {
+      assert(backend.rows.getNumPartitions == 80)
+      backend.setStandardization(new Array[Double](p + 1), Array.fill(p + 1)(1.0))
+      val active = (0 to p).toArray
+      val beta = Array.tabulate(p + 1)(j => 0.2 - 0.05 * j)
+      sc.addSparkListener(listener)
+      val (_, jobs) = withJobs(group) {
+        // over the rows, then over the view
+        for (_ <- 0 until 2)
+          backend.evalActive(active, beta, Family("binomial"), needDual = true, needGrad = true)
+      }
+      ListenerBusShim.drain(sc)
+      assert(jobs.nonEmpty && jobs.forall(_._1 == "slope EvalPass"), jobs.map(_._1).mkString(", "))
+      // the tree's reduce stage runs in the same job, with the same description
+      assert(jobs.forall(_._2.length >= 2), jobs.map(_._2.length).mkString(", "))
+      import scala.jdk.CollectionConverters._
+      val descs = stageDescs.asScala.toSeq
+      assert(descs.length >= 2 * jobs.length && descs.forall(_ == "slope EvalPass"),
+        descs.mkString(", "))
+    } finally {
+      sc.removeSparkListener(listener)
+      backend.unpersist()
+    }
+  }
+
   test("non-finite features fail at ingest with a message that names them") {
     import spark.implicits._
     val rng = new scala.util.Random(59)
@@ -667,8 +858,6 @@ class CountingBackend(inner: SlopeBackend)
   val calls = scala.collection.mutable.ArrayBuffer[Call]()
   def n: Long = inner.n
   private[slope] def runPass(pass: RowPass): Array[Double] = inner.runPass(pass)
-  private[slope] def ship[S: scala.reflect.ClassTag](state: S): Shipped[S] =
-    inner.ship(state)
 
   private def record(kind: String, active: Array[Int] = Array.empty,
                      points: Seq[Array[Double]] = Nil, full: Boolean = false): Unit =
@@ -705,4 +894,16 @@ class CountingBackend(inner: SlopeBackend)
 object CountingBackend {
   final case class Call(kind: String, active: Array[Int], full: Boolean,
                         points: Seq[Array[Double]])
+}
+
+/** A pass whose tasks fail with an exception of their own. */
+private[slope] final class FailingPass extends RowPass {
+  def zero(): Array[Double] = new Array[Double](1)
+  def apply(ctx: org.apache.spark.TaskContext,
+            rows: Iterator[(org.apache.spark.ml.linalg.Vector, Array[Double])]): Array[Double] =
+    throw new IllegalStateException(FailingPass.message)
+}
+
+object FailingPass {
+  val message = "a pass that fails on purpose"
 }
