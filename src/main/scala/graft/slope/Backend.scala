@@ -676,8 +676,9 @@ private[slope] final class GramPass(cols: ActiveColumns, a: Int, m: Int)
   }
 }
 
-/** The one launcher of a fit's ordered jobs — the input probe
-  * (`Slope.probe`) and every [[RowPass]] on up to 64 partitions. */
+/** The one launcher of the engine's ordered jobs — a fit's input probe
+  * (`Slope.probe`), every [[RowPass]] on up to 64 partitions, and
+  * scoring's [[ScorePass]] at any width. */
 private[slope] object OrderedFold {
   /** Runs ONE Spark job through `launch`, which calls
     * `runJob(rdd, task, 0 until parts, handler)` with the handler it is
@@ -721,9 +722,8 @@ private[slope] object OrderedFold {
   * pass holds its own driver state, sized by the active set, so no
   * broadcast is made per pass. The first pass runs over `rows` and
   * caches them; every later pass runs over a lineage-free view of the
-  * cached blocks ([[org.apache.spark.graft.CachedBlocksRDD]], the only
-  * code of the engine that calls Spark internals), so its task binary
-  * carries no input lineage (SQL plan, generated code). Up to 64
+  * cached blocks ([[org.apache.spark.graft.CachedBlocksRDD]]), so its
+  * task binary carries no input lineage (SQL plan, generated code). Up to 64
   * partitions a pass is a plain `runJob` whose partition results fold on
   * the driver in partition order ([[OrderedFold]]); wider inputs reduce
   * through a `treeAggregate` of depth `treeDepth`. A 1000-executor

@@ -1,6 +1,7 @@
 package graft.slope
 
 import graft.slope.kernels.Stats
+import org.apache.spark.graft.JobTags
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -45,6 +46,9 @@ object SlopeCv {
       t
     }
   }
+
+  // numbers each parallel CV's job tag
+  private val CvTags = new java.util.concurrent.atomic.AtomicInteger
 
   def trainSlope(df: DataFrame, featuresCol: String, labelCol: String,
                  params: SlopeParams = SlopeParams(),
@@ -161,18 +165,32 @@ object SlopeCv {
       val results: Seq[((Double, Int, Int), Seq[((Double, String), Array[Double])])] =
         if (parallelism <= 1) grid.map(c => c -> runCell(c))
         else {
-          // concurrent Spark jobs from a driver pool (thread-safe in Spark).
-          // The first failed cell fails the sequence; shutdownNow then
-          // keeps the cells still queued from starting.
+          // concurrent Spark jobs from a driver pool (thread-safe in Spark),
+          // every one tagged with this CV's tag. The first failed cell
+          // fails the sequence: shutdownNow keeps the queued cells from
+          // starting and interrupts the running ones, which stop at their
+          // next wait; once no cell can start a job, the CV's running jobs
+          // are cancelled.
+          val sc = df.sparkSession.sparkContext
+          val tag = s"slope-cv-${CvTags.incrementAndGet()}"
           val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism,
             CvThreads)
           try {
             implicit val ec: scala.concurrent.ExecutionContext =
               scala.concurrent.ExecutionContext.fromExecutor(pool)
-            val futures = grid.map(c => scala.concurrent.Future(c -> runCell(c)))
+            val futures = grid.map(c => scala.concurrent.Future {
+              sc.addJobTag(tag)
+              c -> runCell(c)
+            })
             scala.concurrent.Await.result(
               scala.concurrent.Future.sequence(futures),
               scala.concurrent.duration.Duration.Inf)
+          } catch {
+            case e: Throwable =>
+              pool.shutdownNow()
+              pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+              JobTags.cancel(sc, tag, "a cell of this cross-validation failed")
+              throw e
           } finally pool.shutdownNow()
         }
 

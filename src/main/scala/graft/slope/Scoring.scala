@@ -1,8 +1,11 @@
 package graft.slope
 
+import org.apache.spark.TaskContext
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
 
 /** Model scoring over a DataFrame (reference `R/score.R`): per-path-step
   * mse / mae / deviance / misclass / AUC with the reference's
@@ -12,12 +15,15 @@ import org.apache.spark.sql.functions._
   * kernel ([[StepErrors]]). It computes a row's linear predictor at
   * every path step over the row's nonzeros, applies the family's
   * per-measure formula, and adds the results into a (measure x step)
-  * buffer plus a row count. A DataFrame is scored by one
-  * `treeAggregate` of that kernel (combiner-only: no explode, no
-  * shuffle, nMeasures x nSteps + 1 doubles per task result);
-  * driver-resident rows (a local CV cell's held-out fold) run the same
-  * kernel in a loop, with no Spark job. AUC aggregates per distinct
-  * probability first (midrank identity), never a global row rank.
+  * buffer plus a row count. A DataFrame is scored by one Spark job of
+  * that kernel over Catalyst's internal rows ([[ScorePass]], described
+  * `slope score`; no explode, no shuffle, nMeasures x nSteps + 1 doubles
+  * per task result), whose partition results fold on the driver in
+  * partition order ([[OrderedFold]]), so a repeated score gives the
+  * same bits at any width; driver-resident rows (a local CV cell's
+  * held-out fold) run the same kernel in a loop, with no Spark job.
+  * AUC aggregates per distinct probability first (midrank identity),
+  * never a global row rank.
   */
 object SlopeScore {
 
@@ -38,7 +44,8 @@ object SlopeScore {
 
   /** Score several measures; returns measure -> one value per path step.
     * Every non-AUC measure shares ONE pass over the rows; AUC needs its
-    * own ranked aggregation and runs separately.
+    * own ranked aggregation and runs separately. Every Spark job of the
+    * call is described as `slope score`.
     *
     * Counted rows: every row whose features and label are both non-null.
     * Rows with a null feature vector or a null label are skipped in
@@ -51,14 +58,18 @@ object SlopeScore {
   def scoreMany(model: SlopeModel, df: DataFrame, featuresCol: String,
                 labelCol: String, measures: Seq[String]): Map[String, Array[Double]] = {
     val (aucMs, sumMs) = splitMeasures(model, measures)
-    kernelSums(model, sumMs) { kernel =>
-      Slope.selectFrame(df, featuresCol, labelCol, model.family).rdd
-        .treeAggregate(kernel.zero)(
-          (buf, r) =>
-            if (r.isNullAt(0) || r.isNullAt(1)) buf
-            else kernel.add(buf, Slope.toVec(r.get(0)), r.get(1)),
-          kernel.merge)
-    } ++ aucMs.map(m => m -> scoreAuc(model, df, featuresCol, labelCol))
+    val sc = df.sparkSession.sparkContext
+    // planning the input may run jobs of its own (adaptive query stages)
+    OrderedFold.described(sc, "slope score") {
+      kernelSums(model, sumMs) { kernel =>
+        val sel = Slope.selectFrame(df, featuresCol, labelCol, model.family)
+        val rows = sel.queryExecution.toRdd
+        val pass = new ScorePass(kernel, sel.schema("f").dataType, sel.schema("l").dataType)
+        val parts = rows.getNumPartitions
+        OrderedFold.run[Array[Double]](sc, parts, "slope score", kernel.merge)(h =>
+          sc.runJob(rows, pass, 0 until parts, h)).getOrElse(kernel.zero)
+      } ++ aucMs.map(m => m -> scoreAuc(model, df, featuresCol, labelCol))
+    }
   }
 
   /** [[scoreMany]] over driver-resident rows, with no Spark job: `xs`
@@ -224,14 +235,14 @@ object SlopeScore {
 
 /** The per-row kernel behind [[SlopeScore.scoreMany]]: for one row it
   * computes the linear predictor at every path step
-  * ([[BackendKernels.linPred]], over the row's nonzeros) and adds each
+  * ([[PathPredictor]], over the row's nonzeros) and adds each
   * requested measure's per-row term into `buf(measure * nSteps + step)`;
   * the last slot counts rows, and [[result]] divides by it. The
   * per-measure formulas are the reference's (`R/score.R`): gaussian
   * and poisson errors on the link scale, binomial and multinomial on
   * the response scale, multi-task gaussian averaged over the m targets.
   *
-  * Serializable so `treeAggregate` ships it to the tasks; the scratch
+  * Serializable so [[ScorePass]] ships it to the tasks; the scratch
   * arrays are transient, so each task's deserialized copy (and each
   * driver-side instance) has its own. */
 private[slope] final class StepErrors(model: SlopeModel, measures: Seq[String])
@@ -240,7 +251,6 @@ private[slope] final class StepErrors(model: SlopeModel, measures: Seq[String])
 
   private val nSteps = model.nSteps
   private val m = model.m
-  private val p = model.p
   private val nClasses = model.nClasses
   private val nMeasures = measures.length
   private val codes: Array[Int] = measures.map {
@@ -255,14 +265,10 @@ private[slope] final class StepErrors(model: SlopeModel, measures: Seq[String])
     case "binomial" => Binomial
     case "multinomial" => Multinomial
   }
-  private val w = linPredWeights(model)
-  private val b = model.intercepts
-  // every feature is a column, in its own slot: linPred adds every term
-  private val cols = new ActiveColumns(p, Array.range(0, p), Array.range(0, p))
+  private val predictor = model.predictor
   private val positive = model.classNames.lift(1).orNull // binomial's class 1
   private val classIndex: Map[String, Int] = model.classNames.zipWithIndex.toMap
 
-  @transient private lazy val look = cols.lookup()
   @transient private lazy val lp = new Array[Double](m)
   @transient private lazy val prob = new Array[Double](m + 1)
 
@@ -270,7 +276,7 @@ private[slope] final class StepErrors(model: SlopeModel, measures: Seq[String])
 
   /** Adds one row (non-null features and label) to `buf`. */
   def add(buf: Array[Double], x: Vector, y: Any): Array[Double] = {
-    require(x.size == p, s"feature vector length ${x.size} != model's $p")
+    predictor.check(x)
     val yv = if (kind == Link) Slope.anyToDouble(y) else 0.0
     val ya = if (kind == MultiTask) Slope.anyToDoubleArray(y) else null
     require(ya == null || ya.length == m,
@@ -279,7 +285,7 @@ private[slope] final class StepErrors(model: SlopeModel, measures: Seq[String])
     val yi = if (kind == Multinomial) classIndex.getOrElse(y.toString, -1) else -1
     var s = 0
     while (s < nSteps) {
-      BackendKernels.linPred(x, cols, look, w(s), b(s), lp)
+      predictor.at(x, s, lp)
       if (kind == Binomial) prob(0) = 1.0 / (1.0 + math.exp(-lp(0)))
       else if (kind == Multinomial) softmax()
       var i = 0
@@ -377,11 +383,34 @@ private object StepErrors {
   final val Binomial = 2
   final val Multinomial = 3
 
-  /** linPred's layout: w(step)(k) is coefficient column k of that step. */
-  private def linPredWeights(model: SlopeModel): Array[Array[Array[Double]]] =
-    Array.tabulate(model.nSteps, model.m)((s, k) => java.util.Arrays.copyOfRange(
-      model.coefs(s), k * model.p, (k + 1) * model.p))
-
   private def sq(v: Double): Double = v * v
   private def clamp(pr: Double): Double = math.min(math.max(pr, 1e-5), 1.0 - 1e-5)
+}
+
+/** [[SlopeScore.scoreMany]]'s task: adds every row of a partition of the
+  * scoring frame ([[Slope.selectFrame]]'s `f` and `l`, as Catalyst's
+  * internal rows) to one [[StepErrors]] buffer, skipping rows with a null
+  * features value or a null label. Features decode through
+  * [[LinearPredictors.vector]], the serving expression's decoder; labels
+  * to the values an external `Row` holds. A named class, so launching it
+  * runs no closure cleaning. */
+private[slope] final class ScorePass(kernel: StepErrors, featureType: DataType,
+                                     labelType: DataType)
+    extends ((TaskContext, Iterator[InternalRow]) => Array[Double]) with Serializable {
+  def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[Double] = {
+    val buf = kernel.zero
+    while (rows.hasNext) {
+      val r = rows.next()
+      if (!r.isNullAt(0) && !r.isNullAt(1))
+        kernel.add(buf, LinearPredictors.vector(r.get(0, featureType)), label(r))
+    }
+    buf
+  }
+
+  private def label(r: InternalRow): Any = labelType match {
+    case DoubleType => r.getDouble(1)
+    case StringType => r.getUTF8String(1).toString
+    // read at once, before the row moves on
+    case ArrayType(et, _) => r.getArray(1).toSeq[Any](et)
+  }
 }

@@ -1,14 +1,23 @@
 package graft.slope
 
+import org.apache.spark.ml.linalg.{DenseVector, SQLDataTypes, Vector}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
-import org.apache.spark.ml.functions.vector_to_array
+import org.apache.spark.sql.graft.ColumnShim
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, UserDefinedType}
 
 /** Prediction / coefficient-serving layer (reference `R/predict.R`,
   * `R/coef.R`, `R/interpolatePenalty.R`, `R/interpolateCoefficients.R`).
   *
-  * The coefficient cube is p/m/steps-dimensional (driver state) and is
-  * broadcast into one narrow map stage — predictions never shuffle.
+  * The coefficient cube is p/m/steps-dimensional (driver state). It
+  * travels by reference inside one codegen'd expression
+  * ([[LinearPredictors]]) of one narrow map stage: predictions never
+  * shuffle.
   */
 object SlopeServe {
 
@@ -86,45 +95,18 @@ object SlopeServe {
     }
   }
 
-  private def toArrayCol(df: DataFrame, featuresCol: String): Column =
-    df.schema(featuresCol).dataType match {
-      case _: org.apache.spark.sql.types.ArrayType =>
-        col(featuresCol).cast("array<double>")
-      case _ => // ml VectorUDT
-        vector_to_array(col(featuresCol)).cast("array<double>")
-    }
-
   /** Linear predictors for every path step: adds `linpred` =
-    * array(steps) of array(m). Pure Catalyst expressions — the
-    * coefficient cube is inlined as literals (p and nSteps are
-    * driver-sized by design), so the stage stays codegen'd. */
+    * array(steps) of array(m), lp_k = b_k + sum_j w_jk x_j
+    * ([[PathPredictor]], the sum scoring and CV compute). One codegen'd
+    * expression holds the coefficient cube by reference and decodes each
+    * row's features from Catalyst's internal row, so a sparse row stays
+    * sparse. A null features value gives a null `linpred`; a feature
+    * vector whose length is not the model's p fails the query with an
+    * `IllegalArgumentException` that names both lengths. */
   def withLinearPredictors(model: SlopeModel, df: DataFrame,
-                           featuresCol: String): DataFrame = {
-    val f = toArrayCol(df, featuresCol)
-    // small cubes unroll to plain element_at arithmetic (whole-stage
-    // codegen, no higher-order functions — HOFs evaluate interpreted
-    // and cost ~10x on wide scoring passes); big cubes fall back to the
-    // HOF form to keep the expression tree bounded
-    val unroll = model.nSteps.toLong * model.m * model.p <= 20000
-    val steps = (0 until model.nSteps).map { s =>
-      val perTarget = (0 until model.m).map { k =>
-        if (unroll) {
-          val terms = (0 until model.p).collect {
-            case j if model.coefs(s)(k * model.p + j) != 0.0 =>
-              element_at(f, j + 1) * lit(model.coefs(s)(k * model.p + j))
-          }
-          terms.foldLeft(lit(model.intercepts(s)(k)): Column)(_ + _)
-        } else {
-          val coefArr = array((0 until model.p)
-            .map(j => lit(model.coefs(s)(k * model.p + j))): _*)
-          aggregate(zip_with(f, coefArr, (x, c) => x * c), lit(0.0),
-            (acc, v) => acc + v) + lit(model.intercepts(s)(k))
-        }
-      }
-      array(perTarget: _*)
-    }
-    df.withColumn("linpred", array(steps: _*))
-  }
+                           featuresCol: String): DataFrame =
+    df.withColumn("linpred", ColumnShim.column(LinearPredictors(
+      ColumnShim.expression(Slope.featuresColumn(df, featuresCol)), model.predictor)))
 
   /** Family response map applied to a length-m linear predictor column
     * entry (reference `R/predict.R:73-197`). For multinomial the result
@@ -195,5 +177,89 @@ object SlopeServe {
       j <- 0 until model.p
     } yield (s, model.sigma(s), k, j, model.coefs(s)(k * model.p + j))
     rows.toDF("step", "sigma", "target", "feature_idx", "coefficient")
+  }
+}
+
+/** A model's linear predictor at every path step,
+  * lp_k = b_k + sum_j w_jk x_j, through [[BackendKernels.linPred]] with
+  * every feature a column: prediction ([[LinearPredictors]]), scoring and
+  * CV ([[StepErrors]]) and [[SlopeModel.linearPredictor]] compute this
+  * one sum in this one order. Serializable: it travels inside a serving
+  * expression or a scoring pass, and each copy builds its own lookup. */
+private[slope] final class PathPredictor(model: SlopeModel) extends Serializable {
+  val nSteps: Int = model.nSteps
+  val m: Int = model.m
+  val p: Int = model.p
+  // w(step)(k): coefficient column k of that step
+  private val w = Array.tabulate(nSteps, m)((s, k) =>
+    java.util.Arrays.copyOfRange(model.coefs(s), k * p, (k + 1) * p))
+  private val b = model.intercepts
+  private val cols = new ActiveColumns(p, Array.range(0, p), Array.range(0, p))
+  @transient private lazy val look = cols.lookup()
+
+  /** Fails unless `x` has the model's p features. */
+  def check(x: Vector): Unit =
+    require(x.size == p, s"feature vector length ${x.size} != model's $p")
+
+  /** The m linear predictors of `x` (of length p) at `step`, into `out`. */
+  def at(x: Vector, step: Int, out: Array[Double]): Unit =
+    BackendKernels.linPred(x, cols, look, w(step), b(step), out)
+}
+
+/** `linpred` of [[SlopeServe.withLinearPredictors]]: the features value
+  * of a row (array<double> or an ml `Vector`) to array(steps) of
+  * array(m) through [[PathPredictor]]. The generated code calls
+  * [[linpred]] on this object, which the stage holds by reference, so
+  * its size does not grow with the cube. Null features give null. */
+private[slope] case class LinearPredictors(child: Expression, predictor: PathPredictor)
+    extends UnaryExpression {
+
+  override def dataType: DataType =
+    ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
+
+  override def prettyName: String = "slope_linpred"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case t if t == SQLDataTypes.VectorType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"slope_linpred requires array<double> or vector features, got ${t.catalogString}")
+  }
+
+  /** Shared by the interpreted and generated paths. */
+  def linpred(features: Any): ArrayData = {
+    val x = LinearPredictors.vector(features)
+    predictor.check(x)
+    val steps = new Array[Any](predictor.nSteps)
+    val lp = new Array[Double](predictor.m)
+    var s = 0
+    while (s < steps.length) {
+      predictor.at(x, s, lp)
+      steps(s) = UnsafeArrayData.fromPrimitiveArray(lp)
+      s += 1
+    }
+    new GenericArrayData(steps)
+  }
+
+  override protected def nullSafeEval(features: Any): Any = linpred(features)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("slopeLinpred", this, classOf[LinearPredictors].getName)
+    defineCodeGen(ctx, ev, f => s"$self.linpred($f)")
+  }
+
+  override protected def withNewChildInternal(c: Expression): LinearPredictors =
+    copy(child = c)
+}
+
+private[slope] object LinearPredictors {
+  private val VectorType = SQLDataTypes.VectorType.asInstanceOf[UserDefinedType[Vector]]
+
+  /** The row decoder of serving and scoring: a features value as
+    * Catalyst holds it, array<double> data or an ml `Vector` struct
+    * (dense or sparse, as stored), to a `Vector`. */
+  def vector(features: Any): Vector = features match {
+    case a: ArrayData => new DenseVector(a.toDoubleArray())
+    case r: InternalRow => VectorType.deserialize(r)
   }
 }

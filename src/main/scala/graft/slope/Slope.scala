@@ -106,20 +106,17 @@ case class SlopeModel(
   /** Deviance per step = (1 - ratio) * null (reference `R/deviance.R:13-18`). */
   def devianceAt(step: Int): Double = (1.0 - devianceRatios(step)) * nullDeviance
 
-  /** Linear predictor for one feature row at one path step (length m). */
+  /** Linear predictor for one feature row (of length p) at one path step
+    * (length m): b + sum_j w_j x_j, the sum serving and scoring compute
+    * ([[PathPredictor]]). */
   def linearPredictor(x: Vector, step: Int): Array[Double] = {
+    predictor.check(x)
     val out = new Array[Double](m)
-    val c = coefs(step)
-    var k = 0
-    while (k < m) {
-      var s = intercepts(step)(k)
-      val offset = k * p
-      BackendKernels.foreachStored(x)((j, v) => s += c(offset + j) * v)
-      out(k) = s
-      k += 1
-    }
+    predictor.at(x, step, out)
     out
   }
+
+  @transient private[slope] lazy val predictor = new PathPredictor(this)
 }
 
 /** The path-fit orchestrator: the reference's `owlCpp` main loop
@@ -154,16 +151,20 @@ object Slope {
                                  extra: Seq[Column] = Nil): DataFrame = {
     val labelIsClass = family == "binomial" || family == "multinomial"
     val labelIsArray = df.schema(labelCol).dataType.isInstanceOf[ArrayType]
-    val featExpr = df.schema(featuresCol).dataType match {
-      case _: ArrayType => col(featuresCol).cast(ArrayType(DoubleType))
-      case _            => col(featuresCol)
-    }
     val labExpr =
       if (labelIsClass) col(labelCol).cast(StringType)
       else if (labelIsArray) col(labelCol).cast(ArrayType(DoubleType))
       else col(labelCol).cast(DoubleType)
-    df.select(featExpr.as("f") +: labExpr.as("l") +: extra: _*)
+    df.select(featuresColumn(df, featuresCol).as("f") +: labExpr.as("l") +: extra: _*)
   }
+
+  /** The features column as the engine reads it: an ml Vector as is, an
+    * array cast to array<double>. */
+  private[slope] def featuresColumn(df: DataFrame, featuresCol: String): Column =
+    df.schema(featuresCol).dataType match {
+      case _: ArrayType => col(featuresCol).cast(ArrayType(DoubleType))
+      case _            => col(featuresCol)
+    }
 
   private[slope] def toVec(a: Any): Vector = a match {
     case null => throw new IllegalArgumentException("null feature vector")

@@ -603,6 +603,48 @@ class MlApiSpec extends AnyFunSuite {
     assert(sc.getPersistentRDDs.size == cachedBefore)
   }
 
+  test("a failed parallel CV of distributed cells cancels its running jobs") {
+    import org.apache.spark.graft.ListenerBusShim
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val rng = new scala.util.Random(71)
+    // one rare-class row: the cell that holds it out fails at its probe
+    // while the other cells run their distributed fits
+    val df = (0 until 3000).map { i =>
+      (Array.fill(4)(rng.nextGaussian()), if (i == 0) "rare" else "common")
+    }.toDF("features", "label")
+    val sc = spark.sparkContext
+    val cachedBefore = sc.getPersistentRDDs.size
+    val tagged = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .foreach(_.split(",").filter(_.startsWith("slope-cv-")).foreach(tagged.add))
+    }
+    sc.addSparkListener(listener)
+    val e =
+      try intercept[Exception] {
+        SlopeCv.trainSlope(df, "features", "label",
+          SlopeParams(family = "binomial", nSigma = 8, localCellLimit = 0), number = 4,
+          measures = Seq("deviance"), parallelism = 4)
+      } finally {
+        ListenerBusShim.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(e.getMessage.contains("exactly 2 classes"), e.getMessage)
+    import scala.jdk.CollectionConverters._
+    val tags = tagged.asScala.toSet
+    assert(tags.size == 1, s"one tag for the CV's jobs: $tags")
+    val running = sc.statusTracker.getActiveJobIds.toSet
+      .intersect(sc.statusTracker.getJobIdsForTag(tags.head).toSet)
+    assert(running.isEmpty, s"jobs of the failed CV still running: $running")
+    def cvThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(_.getName.startsWith("slope-cv-"))
+    cvThreads.foreach(_.join(30000))
+    assert(cvThreads.forall(!_.isAlive), cvThreads.map(_.getName).mkString(", "))
+    assert(sc.getPersistentRDDs.size == cachedBefore)
+  }
+
   test("distributed fit: one job per backend pass, no repeated evaluation") {
     import org.apache.spark.graft.ListenerBusShim
     import org.apache.spark.ml.linalg.{Vector, Vectors}

@@ -41,7 +41,7 @@ class ServingSpec extends AnyFunSuite with BeforeAndAfterAll {
       val row = pred(i).getSeq[scala.collection.Seq[Double]](0)
       for (s <- 0 until model.nSteps) {
         val expect = model.linearPredictor(xs(i), s)(0)
-        assert(math.abs(row(s).head - expect) < 1e-10, s"row $i step $s")
+        assert(row(s).head == expect, s"row $i step $s: ${row(s).head} vs $expect")
       }
     }
   }
@@ -208,6 +208,139 @@ class ServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     spark.createDataFrame(rows.asJava, StructType(Seq(
       StructField("features", featType), StructField("label", labelType))))
+  }
+
+  /** Served `linpred` of `df`, one Array(step)(target) per row (null for
+    * a null `linpred`). With `cached` the frame is cached first, so the
+    * expression runs in generated code; a frame of local rows is
+    * evaluated by the optimizer, through the interpreted path. */
+  private def servedLinpred(model: SlopeModel, df: org.apache.spark.sql.DataFrame,
+                            cached: Boolean) = {
+    val in = if (cached) df.cache() else df
+    try SlopeServe.withLinearPredictors(model, in, "features").select("linpred").collect()
+      .map(r => if (r.isNullAt(0)) null
+        else r.getSeq[scala.collection.Seq[Double]](0).map(_.toArray).toArray)
+    finally if (cached) in.unpersist()
+  }
+
+  test("predictions: array, dense and sparse features serve the same bits") {
+    // exact zeros, so the sparse encoding has gaps; m = 2 targets
+    val rng = new scala.util.Random(31)
+    val xs = Array.fill(120)(Vectors.dense(Array.fill(5) {
+      val g = rng.nextGaussian(); if (math.abs(g) < 0.5) 0.0 else g }))
+    val ys: Array[Any] = xs.map(x => Array(x(0) - 2.0 * x(3) + 0.1 * rng.nextGaussian(),
+      1.5 * x(1) + 0.1 * rng.nextGaussian()))
+    val model = Slope.fitLocal(xs, ys, SlopeParams(nSigma = 6))
+    assert(model.m == 2)
+    for (e <- Seq("array", "dense", "sparse"); cached <- Seq(false, true)) {
+      val got = servedLinpred(model, scoringFrame(xs, ys, e), cached)
+      for (i <- xs.indices; s <- 0 until model.nSteps) {
+        val want = model.linearPredictor(xs(i), s)
+        assert(got(i)(s).sameElements(want),
+          s"$e cached=$cached row $i step $s: ${got(i)(s).mkString(",")} vs ${want.mkString(",")}")
+      }
+    }
+  }
+
+  test("predictions: wrong feature length fails with both lengths; null features give null") {
+    val (xs, ys) = fixture(32, 80, 4, "gaussian")
+    val model = Slope.fitLocal(xs, ys, SlopeParams(nSigma = 4))
+    for (len <- Seq(3, 5)) {
+      val bad = xs.updated(7, Vectors.dense(Array.tabulate(len)(_ + 1.0)))
+      for (encoding <- Seq("array", "dense"); cached <- Seq(false, true)) {
+        val e = intercept[Exception](
+          servedLinpred(model, scoringFrame(bad, ys, encoding), cached))
+        val found = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+          .exists(t => t.isInstanceOf[IllegalArgumentException] &&
+            t.getMessage.contains(s"feature vector length $len != model's 4"))
+        assert(found, s"length $len, $encoding, cached=$cached: $e")
+      }
+    }
+    for (cached <- Seq(false, true)) {
+      val withNull = servedLinpred(model, scoringFrame(xs.updated(3, null), ys, "array"), cached)
+      assert(withNull(3) == null, s"cached=$cached")
+      assert(withNull(4)(0).sameElements(model.linearPredictor(xs(4), 0)), s"cached=$cached")
+    }
+  }
+
+  test("predictions: a 50-feature x 20-step model serves in whole-stage codegen") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    val rng = new scala.util.Random(33)
+    val p = 50
+    val xs = Array.fill(400)(Vectors.dense(Array.fill(p)(rng.nextGaussian())))
+    val ys: Array[Any] = xs.map(x => (0 until 10).map(j => x(j) * (j + 1)).sum +
+      rng.nextGaussian())
+    val model = Slope.fitLocal(xs, ys, SlopeParams(sigma = Some(
+      Array.tabulate(20)(s => math.pow(0.8, s)))))
+    assert(model.nSteps == 20 && model.p == p)
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    val frame = scoringFrame(xs, ys, "array").cache()
+    try {
+      val served = SlopeServe.withLinearPredictors(model, frame, "features")
+      val stages = served.queryExecution.executedPlan.collect {
+        case w: WholeStageCodegenExec if w.child.exists(_.expressions.exists(
+          _.exists(_.isInstanceOf[LinearPredictors]))) => w
+      }
+      assert(stages.size == 1, served.queryExecution.executedPlan.toString)
+      // the stage compiles, and under the limit above which Spark runs
+      // the plan without whole-stage codegen
+      val (_, stats) = CodeGenerator.compile(stages.head.doCodeGen()._2)
+      assert(stats.maxMethodCodeSize <= spark.sessionState.conf.hugeMethodLimit,
+        s"largest generated method ${stats.maxMethodCodeSize} bytes")
+      val got = served.select("linpred").collect()
+      for (i <- 0 until 20; s <- 0 until model.nSteps)
+        assert(got(i).getSeq[scala.collection.Seq[Double]](0)(s).head ==
+          model.linearPredictor(xs(i), s)(0), s"row $i step $s")
+    } finally {
+      frame.unpersist()
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
+
+  test("score: repeated scoring over 200 partitions gives the same bits") {
+    val (xs, ys) = fixture(34, 2000, 4, "gaussian")
+    val model = Slope.fitLocal(xs, ys, SlopeParams(nSigma = 6))
+    val wide = scoringFrame(xs, ys, "array").repartition(200).cache()
+    try {
+      val first = SlopeScore.scoreMany(model, wide, "features", "label", Seq("mse", "mae"))
+      for (r <- 1 until 20) {
+        val again = SlopeScore.scoreMany(model, wide, "features", "label", Seq("mse", "mae"))
+        for (m <- Seq("mse", "mae"))
+          assert(again(m).sameElements(first(m)), s"repeat $r $m")
+      }
+    } finally wide.unpersist()
+  }
+
+  test("score: every job is described as slope score, and the caller's description returns") {
+    import org.apache.spark.graft.ListenerBusShim
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (xs, ys) = fixture(35, 300, 3, "binomial")
+    val model = Slope.fitLocal(xs, ys, SlopeParams(family = "binomial", nSigma = 4))
+    val df = scoringFrame(xs, ys, "array").repartition(3)
+    val sc = spark.sparkContext
+    val group = "score-labels"
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          descs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "caller's description")
+    try {
+      SlopeScore.scoreMany(model, df, "features", "label", Seq("mse", "deviance"))
+      assert(sc.getLocalProperty("spark.job.description") == "caller's description")
+    } finally {
+      sc.clearJobGroup()
+      ListenerBusShim.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    assert(descs.asScala.nonEmpty && descs.asScala.forall(_ == "slope score"),
+      descs.asScala.mkString(", "))
   }
 
   test("score: every family's measures match a row-by-row reference") {
