@@ -58,7 +58,7 @@ object ScalingGate {
     * — the exponent measured the crossover, not the algorithm. The
     * gate now pins that row to the DISTRIBUTED path at both points
     * (localCellLimitOverride=0), so its exponent certifies the
-    * treeAggregate CV itself and the default bound applies (r11
+    * distributed CV itself and the default bound applies (r11
     * verdict ask #5): t(n) = passes·(job_overhead + B·n) is affine in
     * n, so the two-point log-log slope sits strictly below 1. */
   val ExponentBound: Map[String, Double] =

@@ -2981,7 +2981,7 @@ object SparkEntry {
         .orderBy("q", "measure", "sigma")
     }),
 
-    // ---- distributed solver path: forced treeAggregate backend ----
+    // ---- distributed solver path: forced distributed backend ----
     // Every other SLOPE bench query at sf0.1 fits under the
     // localCellLimit driver gate, so the cluster-scale path the engine
     // exists for would have no recorded cost. Each _dist query forces
@@ -2991,9 +2991,8 @@ object SparkEntry {
     // fit against the driver-local fit of the SAME problem — its BENCH
     // row records the distributed cost and its CORRECTNESS row is a
     // real local≡distributed equivalence check. The row also pays for
-    // the local fit; graft.BenchDistributed isolates the dist-only
-    // cost with Spark-job and FISTA-pass counts (bench_distributed
-    // .json, PERF_DISTRIBUTED.md).
+    // the local fit; perfbench's traced slope_fit_dist workload reports
+    // the dist-only Spark jobs and solver passes.
     "q_slope_fit_dist" -> ((s, dir) => {
       val df = li(s, dir).select(
         array(Feats.map(col): _*).as("features"), signalLabel.as("label"))
@@ -3031,9 +3030,9 @@ object SparkEntry {
     }),
 
     "q_slope_binom_dist" -> ((s, dir) => {
-      // non-gaussian: every FISTA pass is a distributed treeAggregate
-      // job (1-2 jobs/pass) — THE cost that decides non-gaussian
-      // feasibility at 100 TB; see PERF_DISTRIBUTED.md for the budget
+      // non-gaussian: every FISTA pass is one ordered distributed job
+      // (OrderedFold, 1-2 jobs/pass) — THE cost that decides
+      // non-gaussian feasibility at 100 TB
       val base = li(s, dir).select(
         array(Feats.map(col): _*).as("features"),
         when(col("l_returnflag") === "A", "A").otherwise("other").as("label"))

@@ -3,7 +3,7 @@ package graft.slope
 import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.graft.{CachedBlockMissing, CachedBlocksRDD}
 import org.apache.spark.ml.linalg.{Vector, DenseVector, SparseVector}
-import org.apache.spark.rdd.RDD
+import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
 import org.apache.spark.storage.StorageLevel
 
 /** Data-access layer for the SLOPE solvers.
@@ -426,7 +426,9 @@ private[slope] object BackendKernels extends Serializable {
 private[slope] abstract class RowPass
     extends ((TaskContext, Iterator[(Vector, Array[Double])]) => Array[Double])
     with Serializable {
-  def zero(): Array[Double]
+  /** The accumulator's length, which also sizes a task's result. */
+  def length: Int
+  def zero(): Array[Double] = new Array[Double](length)
   def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
     var i = 0
     while (i < a.length) { a(i) += b(i); i += 1 }
@@ -479,8 +481,9 @@ private[slope] final class MomentsPass(p: Int, m: Int, pInt: Int, fitIntercept: 
                                        rowV: Array[Double] => Array[Double])
     extends RowPass {
   import Moments._
-  def zero(): Array[Double] = {
-    val z = new Array[Double](sizeAt(p, m, pInt))
+  def length: Int = sizeAt(p, m, pInt)
+  override def zero(): Array[Double] = {
+    val z = new Array[Double](length)
     java.util.Arrays.fill(z, maxAt(p), maxAt(p) + p, Double.NegativeInfinity)
     z
   }
@@ -609,7 +612,7 @@ private[slope] object Moments {
   * stored entries contribute. */
 private[slope] final class L1Pass(p: Int, center: Option[Array[Double]])
     extends RowPass {
-  def zero(): Array[Double] = new Array[Double](p)
+  def length: Int = p
   def apply(ctx: TaskContext, rows: Iterator[(Vector, Array[Double])]): Array[Double] = {
     val acc = zero()
     val c = center.orNull
@@ -632,8 +635,7 @@ private[slope] final class EvalPass(cols: ActiveColumns, points: Array[PointWeig
                                     needDual: Boolean, needGrad: Boolean)
     extends RowPass {
   override def chunked: Boolean = true
-  def zero(): Array[Double] =
-    new Array[Double](points.length + 1 + (if (needGrad) m + a * m else 0))
+  def length: Int = points.length + 1 + (if (needGrad) m + a * m else 0)
   def apply(ctx: TaskContext, rows: Iterator[(Vector, Array[Double])]): Array[Double] = {
     val look = cols.lookup()
     val last = points.length - 1
@@ -662,7 +664,7 @@ private[slope] final class EvalPass(cols: ActiveColumns, points: Array[PointWeig
 private[slope] final class GramPass(cols: ActiveColumns, a: Int, m: Int)
     extends RowPass {
   override def chunked: Boolean = true
-  def zero(): Array[Double] = new Array[Double](a * a + a + a * m + m)
+  def length: Int = a * a + a + a * m + m
   def apply(ctx: TaskContext, rows: Iterator[(Vector, Array[Double])]): Array[Double] = {
     val acc = zero()
     val look = cols.lookup()
@@ -676,33 +678,60 @@ private[slope] final class GramPass(cols: ActiveColumns, a: Int, m: Int)
   }
 }
 
-/** The one launcher of the engine's ordered jobs — a fit's input probe
-  * (`Slope.probe`), every [[RowPass]] on up to 64 partitions, and
-  * scoring's [[ScorePass]] at any width. */
+/** The one launcher of the engine's jobs: a fit's input probe
+  * (`Slope.probe`), every [[RowPass]] and scoring's [[ScorePass]], at
+  * any width. It alone decides how a job runs, from the partition count
+  * and the byte size of one task result, and folds task results on the
+  * driver in task-index order, so a repeated job gives the same bits.
+  *
+  * The width rule: while `parts x resultBytes` fits the driver budget
+  * ([[budget]]), each task runs one partition (the direct case). Above
+  * it, one fixed fan-in level: the tasks are consecutive index ranges of
+  * partitions ([[RangeCoalescer]]), as many as fit the budget, each task
+  * runs its range in index order, and the driver folds the group results
+  * in group order. So the driver holds no more than the budget, unless a
+  * single result is larger. */
 private[slope] object OrderedFold {
-  /** Runs ONE Spark job through `launch`, which calls
-    * `runJob(rdd, task, 0 until parts, handler)` with the handler it is
-    * given, so the job's call site names its caller; the job is described
-    * as `label` (e.g. `slope GramPass`). The handler folds partition
-    * results on the driver in partition-index order: a result that
-    * arrives early waits for its predecessors, so a repeated job gives
-    * the same bits. The held results are bounded by the job's result
-    * bytes, which `spark.driver.maxResultSize` caps. None when there are
-    * no partitions. */
-  def run[U <: AnyRef](sc: SparkContext, parts: Int, label: String, merge: (U, U) => U)
-                      (launch: ((Int, U) => Unit) => Unit): Option[U] = {
-    val held = new Array[AnyRef](parts)
+  /** The driver's budget for the task results of one job: half of
+    * `spark.driver.maxResultSize` (Spark fails a job whose results
+    * exceed it), taken as 1 GiB when that is unlimited (0). */
+  def budget(sc: SparkContext): Long = {
+    val max = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    (if (max > 0) max else 1L << 30) / 2
+  }
+
+  /** The task count of a job over `parts` partitions whose results take
+    * `resultBytes` each: `parts` while they fit `budget`, else as many
+    * as fit (at least one). */
+  def groups(parts: Int, resultBytes: Long, budget: Long): Int =
+    if (parts.toLong * resultBytes <= budget) parts
+    else math.max(1L, budget / resultBytes).toInt
+
+  /** Runs ONE Spark job over `rdd`, or over its [[groups]] ranges,
+    * through `launch`, which calls `runJob(input, task, handler)` with
+    * the input and handler it is given, so the job's call site names its
+    * caller; the job is described as `label` (e.g. `slope GramPass`). A
+    * task result that arrives early waits for its predecessors. None
+    * when there are no partitions. */
+  def run[T, U <: AnyRef](rdd: RDD[T], label: String, resultBytes: Long, budget: Long,
+                          merge: (U, U) => U)
+                         (launch: (RDD[T], (Int, U) => Unit) => Unit): Option[U] = {
+    val parts = rdd.getNumPartitions
+    val tasks = groups(parts, resultBytes, budget)
+    val input =
+      if (tasks == parts) rdd else rdd.coalesce(tasks, shuffle = false, Some(new RangeCoalescer))
+    val held = new Array[AnyRef](tasks)
     var next = 0
     var acc: Option[U] = None
-    described(sc, label)(launch { (i: Int, part: U) =>
+    described(rdd.sparkContext, label)(launch(input, { (i: Int, part: U) =>
       held(i) = part
-      while (next < parts && held(next) != null) {
+      while (next < tasks && held(next) != null) {
         val r = held(next).asInstanceOf[U]
         acc = Some(acc.fold(r)(merge(_, r)))
         held(next) = null
         next += 1
       }
-    })
+    }))
     acc
   }
 
@@ -716,6 +745,23 @@ private[slope] object OrderedFold {
   }
 }
 
+/** [[OrderedFold]]'s grouping: a parent's partitions as `maxPartitions`
+  * consecutive index ranges of near-equal size, in index order, each
+  * preferring its first partition's location. Spark's default coalescer
+  * groups by locality, which would break the fold order. */
+private[slope] final class RangeCoalescer extends PartitionCoalescer with Serializable {
+  def coalesce(maxPartitions: Int, parent: RDD[_]): Array[PartitionGroup] = {
+    val ps = parent.partitions
+    val g = math.min(maxPartitions, ps.length)
+    Array.tabulate(g) { k =>
+      val range = ps.slice((k.toLong * ps.length / g).toInt, ((k + 1L) * ps.length / g).toInt)
+      val group = new PartitionGroup(parent.preferredLocations(range.head).headOption)
+      group.partitions ++= range
+      group
+    }
+  }
+}
+
 /** Distributed backend over an RDD of (features, preprocessed labels):
   * input sizing, persistence, and [[runPass]], which makes every solver
   * pass ONE Spark job that ships the pass object and nothing else: the
@@ -723,19 +769,18 @@ private[slope] object OrderedFold {
   * broadcast is made per pass. The first pass runs over `rows` and
   * caches them; every later pass runs over a lineage-free view of the
   * cached blocks ([[org.apache.spark.graft.CachedBlocksRDD]]), so its
-  * task binary carries no input lineage (SQL plan, generated code). Up to 64
-  * partitions a pass is a plain `runJob` whose partition results fold on
-  * the driver in partition order ([[OrderedFold]]); wider inputs reduce
-  * through a `treeAggregate` of depth `treeDepth`. A 1000-executor
-  * cluster does one shuffle-free map + reduction per solver pass, and
-  * the driver adds no per-job bookkeeping on top (see [[RowPass]]).
+  * task binary carries no input lineage (SQL plan, generated code). A
+  * pass is one `runJob` through [[OrderedFold]] at every width, whose
+  * task results fit the driver's budget and fold in task order. A
+  * 1000-executor cluster does one shuffle-free job per solver pass,
+  * repeated passes agree bit for bit, and the driver adds no per-job
+  * bookkeeping on top (see [[RowPass]]).
   */
 class DistributedBackend(
     rowsIn: RDD[(Vector, Array[Double])],
     pRaw: Int,
     m: Int,
     fitIntercept: Boolean,
-    treeDepth: Int = 2,
     knownN: Long = -1L) extends SlopeBackend(pRaw, m, fitIntercept) {
 
   // Size-aware task sizing: every solver pass is ONE job over these
@@ -744,7 +789,7 @@ class DistributedBackend(
   // on the bench box (r17 optimization round, guide §2.5):
   //  - too MANY near-empty tasks: a small fit forced down the
   //    distributed path pays ~110 ms/job of launch + collection when
-  //    the pass runs 32 near-empty tasks (PERF_DISTRIBUTED.md) —
+  //    the pass runs 32 near-empty tasks (600k rows, local[32]) —
   //    COALESCE down to the work-derived width (narrow, no shuffle);
   //  - too FEW tasks: a sub-128MB parquet scan arrives as 1-3 splits,
   //    so every one of the path's hundreds of sequential passes ran on
@@ -790,6 +835,9 @@ class DistributedBackend(
 
   private def sc = rows.sparkContext
 
+  // the driver's budget for one pass's task results
+  private val budget = OrderedFold.budget(rowsIn.sparkContext)
+
   // the cached blocks of `rows`, once the first pass has cached them
   @volatile private var cached: RDD[(Vector, Array[Double])] = null
 
@@ -801,26 +849,18 @@ class DistributedBackend(
     * (when the lineage recomputes a partition's rows in their order). Any
     * other failure propagates unchanged.
     *
-    * With <= 64 partitions a tree level would only add a scheduled
-    * stage: `runJob` runs the pass object itself as the task function,
-    * and [[OrderedFold]] folds partition results on the driver in
-    * partition order, so repeated passes agree bit for bit. This is what
-    * `treeAggregate(depth = 1)` does, minus its closure cleaning (five
-    * cleaner runs per job, two of them parsing Spark's own RDD and
-    * SparkContext bytecode). Wider inputs keep `treeAggregate`'s tree.
-    * Every job of a pass is described as `slope <Pass class>`.
-    * Must stay in this file: job call sites read `... at Backend.scala:`. */
+    * `runJob` runs the pass object itself as the task function, so no
+    * closure is cleaned, and [[OrderedFold]] sets the job's width from
+    * the pass's buffer size and folds task results in task order, so
+    * repeated passes agree bit for bit at any width. Every job of a pass
+    * is described as `slope <Pass class>`. The `runJob` call must stay in
+    * this file: job call sites read `... at Backend.scala:`. */
   private[slope] def runPass(pass: RowPass): Array[Double] = {
     val label = "slope " + pass.getClass.getSimpleName
-    def over(input: RDD[(Vector, Array[Double])]): Array[Double] = {
-      val parts = input.getNumPartitions
-      if (parts <= 64)
-        OrderedFold.run[Array[Double]](sc, parts, label, pass.merge)(h =>
-          sc.runJob(input, pass, 0 until parts, h)).getOrElse(pass.zero())
-      else OrderedFold.described(sc, label)(
-        input.mapPartitions(it => Iterator.single(pass(TaskContext.get(), it)))
-          .treeAggregate(pass.zero())(pass.merge, pass.merge, treeDepth))
-    }
+    def over(input: RDD[(Vector, Array[Double])]): Array[Double] =
+      OrderedFold.run[(Vector, Array[Double]), Array[Double]](
+          input, label, 8L * pass.length, budget, pass.merge)((in, h) =>
+        sc.runJob(in, pass, h)).getOrElse(pass.zero())
     val view = cached
     if (view == null) {
       val res = over(rows)

@@ -116,7 +116,7 @@ object SlopeCv {
           // derived from them) are identical to what a per-cell fit sees
           val rows = Slope.selectFrame(withFolds, featuresCol, labelCol, family,
             (0 until repeats).map(r => col(s"__fold_$r"))).collect()
-          val xs = rows.map(r => Slope.toVec(r.get(0)))
+          val xs = rows.map(r => Slope.toVec(r.get(0), featuresCol))
           val ys: Array[Any] = rows.map(_.get(1))
           val folds = rows.map(r =>
             Array.tabulate(repeats)(i => r.getInt(2 + i)))

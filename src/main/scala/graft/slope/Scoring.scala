@@ -18,9 +18,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
   * buffer plus a row count. A DataFrame is scored by one Spark job of
   * that kernel over Catalyst's internal rows ([[ScorePass]], described
   * `slope score`; no explode, no shuffle, nMeasures x nSteps + 1 doubles
-  * per task result), whose partition results fold on the driver in
-  * partition order ([[OrderedFold]]), so a repeated score gives the
-  * same bits at any width; driver-resident rows (a local CV cell's
+  * per task result), launched through [[OrderedFold]], whose task
+  * results fold on the driver in task order, so a repeated score gives
+  * the same bits at any width; driver-resident rows (a local CV cell's
   * held-out fold) run the same kernel in a loop, with no Spark job.
   * AUC aggregates per distinct probability first (midrank identity),
   * never a global row rank.
@@ -63,11 +63,12 @@ object SlopeScore {
     OrderedFold.described(sc, "slope score") {
       kernelSums(model, sumMs) { kernel =>
         val sel = Slope.selectFrame(df, featuresCol, labelCol, model.family)
-        val rows = sel.queryExecution.toRdd
-        val pass = new ScorePass(kernel, sel.schema("f").dataType, sel.schema("l").dataType)
-        val parts = rows.getNumPartitions
-        OrderedFold.run[Array[Double]](sc, parts, "slope score", kernel.merge)(h =>
-          sc.runJob(rows, pass, 0 until parts, h)).getOrElse(kernel.zero)
+        // the optimized schema: a cast that cannot add null elements is gone from it
+        val schema = sel.queryExecution.optimizedPlan.schema
+        val pass = new ScorePass(kernel, schema("f").dataType, schema("l").dataType, featuresCol)
+        OrderedFold.run[InternalRow, Array[Double]](sel.queryExecution.toRdd, "slope score",
+            8L * kernel.zero.length, OrderedFold.budget(sc), kernel.merge)((in, h) =>
+          sc.runJob(in, pass, h)).getOrElse(kernel.zero)
       } ++ aucMs.map(m => m -> scoreAuc(model, df, featuresCol, labelCol))
     }
   }
@@ -395,14 +396,16 @@ private object StepErrors {
   * to the values an external `Row` holds. A named class, so launching it
   * runs no closure cleaning. */
 private[slope] final class ScorePass(kernel: StepErrors, featureType: DataType,
-                                     labelType: DataType)
+                                     labelType: DataType, featuresCol: String)
     extends ((TaskContext, Iterator[InternalRow]) => Array[Double]) with Serializable {
+  private val checkNulls = LinearPredictors.nullElements(featureType)
   def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[Double] = {
     val buf = kernel.zero
     while (rows.hasNext) {
       val r = rows.next()
       if (!r.isNullAt(0) && !r.isNullAt(1))
-        kernel.add(buf, LinearPredictors.vector(r.get(0, featureType)), label(r))
+        kernel.add(buf, LinearPredictors.vector(r.get(0, featureType), featuresCol, checkNulls),
+          label(r))
     }
     buf
   }

@@ -102,11 +102,14 @@ object SlopeServe {
     * row's features from Catalyst's internal row, so a sparse row stays
     * sparse. A null features value gives a null `linpred`; a feature
     * vector whose length is not the model's p fails the query with an
-    * `IllegalArgumentException` that names both lengths. */
+    * `IllegalArgumentException` that names both lengths, and a null
+    * element of an array value with one that names the column and the
+    * element's index. */
   def withLinearPredictors(model: SlopeModel, df: DataFrame,
                            featuresCol: String): DataFrame =
     df.withColumn("linpred", ColumnShim.column(LinearPredictors(
-      ColumnShim.expression(Slope.featuresColumn(df, featuresCol)), model.predictor)))
+      ColumnShim.expression(Slope.featuresColumn(df, featuresCol)), model.predictor,
+      featuresCol)))
 
   /** Family response map applied to a length-m linear predictor column
     * entry (reference `R/predict.R:73-197`). For multinomial the result
@@ -210,9 +213,15 @@ private[slope] final class PathPredictor(model: SlopeModel) extends Serializable
   * of a row (array<double> or an ml `Vector`) to array(steps) of
   * array(m) through [[PathPredictor]]. The generated code calls
   * [[linpred]] on this object, which the stage holds by reference, so
-  * its size does not grow with the cube. Null features give null. */
-private[slope] case class LinearPredictors(child: Expression, predictor: PathPredictor)
+  * its size does not grow with the cube. Null features give null; a null
+  * element of `column`'s array fails. */
+private[slope] case class LinearPredictors(child: Expression, predictor: PathPredictor,
+                                           column: String)
     extends UnaryExpression {
+
+  // from the optimized child's type: a cast that cannot add null
+  // elements is gone by then, so arrays that hold none are not scanned
+  private lazy val checkNulls = LinearPredictors.nullElements(child.dataType)
 
   override def dataType: DataType =
     ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
@@ -228,7 +237,7 @@ private[slope] case class LinearPredictors(child: Expression, predictor: PathPre
 
   /** Shared by the interpreted and generated paths. */
   def linpred(features: Any): ArrayData = {
-    val x = LinearPredictors.vector(features)
+    val x = LinearPredictors.vector(features, column, checkNulls)
     predictor.check(x)
     val steps = new Array[Any](predictor.nSteps)
     val lp = new Array[Double](predictor.m)
@@ -255,11 +264,26 @@ private[slope] case class LinearPredictors(child: Expression, predictor: PathPre
 private[slope] object LinearPredictors {
   private val VectorType = SQLDataTypes.VectorType.asInstanceOf[UserDefinedType[Vector]]
 
+  /** Whether an array features value of `dataType` can hold a null
+    * element. */
+  def nullElements(dataType: DataType): Boolean = dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => false
+  }
+
   /** The row decoder of serving and scoring: a features value as
     * Catalyst holds it, array<double> data or an ml `Vector` struct
-    * (dense or sparse, as stored), to a `Vector`. */
-  def vector(features: Any): Vector = features match {
-    case a: ArrayData => new DenseVector(a.toDoubleArray())
+    * (dense or sparse, as stored), to a `Vector`. With `checkNulls`, a
+    * null array element fails with an `IllegalArgumentException` that
+    * names `column` and the element's index. */
+  def vector(features: Any, column: String, checkNulls: Boolean): Vector = features match {
+    case a: ArrayData =>
+      var i = 0
+      while (checkNulls && i < a.numElements()) {
+        if (a.isNullAt(i)) throw Slope.nullElement(column, i)
+        i += 1
+      }
+      new DenseVector(a.toDoubleArray())
     case r: InternalRow => VectorType.deserialize(r)
   }
 }

@@ -55,7 +55,6 @@ case class SlopeParams(
     /** ADMM needs an |active|^2 Gram on the driver; above this active-set
       * size fall back to FISTA (never materialize huge Grams). */
     admmMaxActive: Int = 4096,
-    treeDepth: Int = 2,
     /** Carry the converged FISTA learning rate across sigma steps (the
       * reference resets it per step, family.h:111 — a local): each
       * backtracking halving is a full distributed pass, and warm starts
@@ -166,14 +165,28 @@ object Slope {
       case _            => col(featuresCol)
     }
 
-  private[slope] def toVec(a: Any): Vector = a match {
+  /** A features value of `column` (an ml Vector or a sequence of
+    * doubles) as a Vector; a null value or element fails. */
+  private[slope] def toVec(a: Any, column: String): Vector = a match {
     case null => throw new IllegalArgumentException("null feature vector")
     case v: Vector => v
     case s: scala.collection.Seq[_] =>
-      Vectors.dense(s.map(_.asInstanceOf[Double]).toArray)
+      val out = new Array[Double](s.length)
+      var i = 0
+      s.foreach { e =>
+        if (e == null) throw nullElement(column, i)
+        out(i) = e.asInstanceOf[Double]
+        i += 1
+      }
+      Vectors.dense(out)
     case other => throw new IllegalArgumentException(
       s"unsupported features type: ${other.getClass}")
   }
+
+  /** The error for a null element of an array features value. */
+  private[slope] def nullElement(column: String, index: Int): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"null element at index $index of the feature vector in column '$column'")
 
   /** Whether every stored value of `v` is finite (implicit zeros are).
     * NaN or infinite features would poison every pass sum, so both fit
@@ -210,7 +223,7 @@ object Slope {
     val rawY = new Array[Any](rows.length)
     var i = 0
     while (i < rows.length) {
-      xs(i) = toVec(rows(i).get(0)); rawY(i) = rows(i).get(1); i += 1
+      xs(i) = toVec(rows(i).get(0), featuresCol); rawY(i) = rows(i).get(1); i += 1
     }
     sortRowsInPlace(xs, rawY)
     (xs, rawY)
@@ -221,9 +234,9 @@ object Slope {
     * counts the rows, takes p from the first row and summarizes the
     * labels — the sum per target for gaussian, a count per class for
     * binomial and multinomial ([[ProbeTask]]). Null features or labels
-    * fail here, naming their column. Partition results fold in partition
-    * order ([[OrderedFold]]), so the gaussian sums are a function of the
-    * data and its partitioning. Returns the planned rows with the
+    * fail here, naming their column. Task results fold in task order
+    * ([[OrderedFold]]), so the gaussian sums are a function of the data
+    * and its partitioning. Returns the planned rows with the
     * summary, so a distributed fit persists the rows this job read. */
   private[slope] def probe(sel: DataFrame, featuresCol: String, labelCol: String,
                            family: String): (RDD[Row], ProbeStats) = {
@@ -231,9 +244,9 @@ object Slope {
     val task = new ProbeTask(featuresCol, labelCol, family,
       sel.schema("l").dataType.isInstanceOf[ArrayType])
     val sc = rows.sparkContext
-    val parts = rows.getNumPartitions
-    val stats = OrderedFold.run[ProbeStats](sc, parts, "slope probe", ProbeStats.merge)(h =>
-      sc.runJob(rows, task, 0 until parts, h)).getOrElse(new ProbeStats)
+    val stats = OrderedFold.run[Row, ProbeStats](rows, "slope probe", ProbeStats.Bytes,
+        OrderedFold.budget(sc), ProbeStats.merge)((in, h) =>
+      sc.runJob(in, task, h)).getOrElse(new ProbeStats)
     require(stats.n > 0, "empty input")
     (rows, stats)
   }
@@ -289,7 +302,7 @@ object Slope {
       val enc = responseEncoder(params.family, classNames, yCenter, m)
       val pExpected = p
       val rdd = selRdd.map { r =>
-        val v = toVec(r.get(0))
+        val v = toVec(r.get(0), featuresCol)
         // a short dense row would otherwise silently compute a partial
         // dot product; a long one would AIOOBE mid-job with no context
         require(v.size == pExpected,
@@ -298,8 +311,7 @@ object Slope {
         require(allFinite(v), "non-finite (NaN or infinite) feature values are not allowed")
         (v, enc(r.get(1)))
       }
-      val backend = new DistributedBackend(rdd, p, m, params.fitIntercept,
-        params.treeDepth, knownN = n)
+      val backend = new DistributedBackend(rdd, p, m, params.fitIntercept, knownN = n)
       try fitBackend(backend, params, yCenter, classNames, nClasses, classCounts)
       finally backend.unpersist()
     }
@@ -1025,6 +1037,10 @@ private[slope] final class ProbeStats extends Serializable {
 }
 
 private[slope] object ProbeStats {
+  /** A task result's size as [[OrderedFold]] budgets it: a few label
+    * sums or class counts. */
+  val Bytes = 1024L
+
   /** `b`, a later run of rows, folded into `a`. */
   def merge(a: ProbeStats, b: ProbeStats): ProbeStats = {
     if (a.n == 0) { a.p = b.p; a.ySum = b.ySum }
@@ -1056,7 +1072,7 @@ private[slope] final class ProbeTask(featuresCol: String, labelCol: String,
       val r = rows.next()
       require(!r.isNullAt(0), s"null feature vector in column '$featuresCol'")
       require(!r.isNullAt(1), s"null label in column '$labelCol'")
-      if (s.n == 0) s.p = Slope.toVec(r.get(0)).size
+      if (s.n == 0) s.p = Slope.toVec(r.get(0), featuresCol).size
       if (gaussian) {
         val y = if (labelIsArray) Slope.anyToDoubleArray(r.get(1)) else Array(r.getDouble(1))
         if (s.n == 0) s.ySum = new Array[Double](y.length)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * Spark job (two when the speculative line-search candidate is
   * rejected), so total passes IS the 100-TB cost model — this
   * probe is the evidence artifact for the round-9 "≥25% fewer passes"
-  * criterion (PERF_DISTRIBUTED.md records the output).
+  * criterion.
   */
 object FistaPassProbe {
   def main(args: Array[String]): Unit = {

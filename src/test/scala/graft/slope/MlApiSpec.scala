@@ -214,36 +214,50 @@ class MlApiSpec extends AnyFunSuite {
       val x = Array.fill(p)(rng.nextGaussian())
       (Vectors.dense(x): Vector, Array(if (x(0) + rng.nextGaussian() > 0) 1.0 else -1.0))
     }
-    // no knownN: the backend keeps the 8-partition layout
-    val backend = new DistributedBackend(
-      spark.sparkContext.parallelize(rows.toSeq, 8), p, 1, true)
-    try {
-      assert(backend.rows.getNumPartitions == 8)
-      backend.setStandardization(new Array[Double](p + 1), Array.fill(p + 1)(1.0))
-      val active = (0 to p).toArray
-      val beta = Array.tabulate(p + 1)(j => 0.3 / (j + 1))
-      val fam = Family("binomial")
-      def eval() = backend.evalActive(active, beta, fam, needDual = true, needGrad = true)
-      val (g0, d0, gr0) = eval()
-      for (r <- 1 until 20) {
-        val (g, d, gr) = eval()
-        assert(g == g0 && d == d0 && gr.sameElements(gr0), s"repeat $r differs")
-      }
-    } finally backend.unpersist()
+    for (parts <- Seq(8, 200)) {
+      // no knownN: the backend keeps the input's layout
+      val backend = new DistributedBackend(
+        spark.sparkContext.parallelize(rows.toSeq, parts), p, 1, true)
+      try {
+        assert(backend.rows.getNumPartitions == parts)
+        backend.setStandardization(new Array[Double](p + 1), Array.fill(p + 1)(1.0))
+        val active = (0 to p).toArray
+        val beta = Array.tabulate(p + 1)(j => 0.3 / (j + 1))
+        val fam = Family("binomial")
+        def eval() = backend.evalActive(active, beta, fam, needDual = true, needGrad = true)
+        val (g0, d0, gr0) = eval()
+        for (r <- 1 until 20) {
+          val (g, d, gr) = eval()
+          assert(g == g0 && d == d0 && gr.sameElements(gr0), s"$parts partitions: repeat $r differs")
+        }
+      } finally backend.unpersist()
+    }
   }
 
   test("repeated distributed binomial fits agree bit for bit") {
+    def sameFits(fits: Seq[SlopeModel], what: String): Unit =
+      for ((f, r) <- fits.zipWithIndex.tail) {
+        assert(f.nSteps == fits.head.nSteps, s"$what: fit $r")
+        for (s <- 0 until f.nSteps) {
+          assert(f.coefs(s).sameElements(fits.head.coefs(s)), s"$what: fit $r step $s")
+          assert(f.intercepts(s).sameElements(fits.head.intercepts(s)), s"$what: fit $r step $s")
+        }
+      }
     val gen = RandomProblem.generate(spark, 8000, 10, family = "binomial",
       seed = 31, slices = 8)
     val params = SlopeParams(family = "binomial", nSigma = 8, localCellLimit = 0)
-    val fits = Seq.fill(3)(Slope.fit(gen.df, "features", "label", params))
-    for ((f, r) <- fits.zipWithIndex.tail) {
-      assert(f.nSteps == fits.head.nSteps, s"fit $r")
-      for (s <- 0 until f.nSteps) {
-        assert(f.coefs(s).sameElements(fits.head.coefs(s)), s"fit $r step $s")
-        assert(f.intercepts(s).sameElements(fits.head.intercepts(s)), s"fit $r step $s")
-      }
-    }
+    sameFits(Seq.fill(3)(Slope.fit(gen.df, "features", "label", params)), "sized rows")
+    // every pass over 200 partitions: no knownN, so the backend keeps the layout
+    val p = 6
+    val rows = binomialRows(31, 4000, p)
+    val counts = Array(rows.count(_._2(0) < 0).toLong, rows.count(_._2(0) > 0).toLong)
+    sameFits(Seq.fill(2) {
+      val backend = new DistributedBackend(spark.sparkContext.parallelize(rows.toSeq, 200),
+        p, 1, true)
+      try Slope.fitBackend(backend, SlopeParams(family = "binomial", nSigma = 3),
+        Array.empty, Array("a", "b"), 2, counts)
+      finally backend.unpersist()
+    }, "200-partition backend")
   }
 
   /** Seeded binomial rows over `p` features for the pass-launch cases. */
@@ -397,7 +411,7 @@ class MlApiSpec extends AnyFunSuite {
     } finally backend.unpersist()
   }
 
-  test("every job of a wide (treeAggregate) pass carries the pass's description") {
+  test("a pass over 80 partitions is one job, every stage described by the pass") {
     import org.apache.spark.graft.ListenerBusShim
     import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
     val p = 5
@@ -424,16 +438,78 @@ class MlApiSpec extends AnyFunSuite {
           backend.evalActive(active, beta, Family("binomial"), needDual = true, needGrad = true)
       }
       ListenerBusShim.drain(sc)
-      assert(jobs.nonEmpty && jobs.forall(_._1 == "slope EvalPass"), jobs.map(_._1).mkString(", "))
-      // the tree's reduce stage runs in the same job, with the same description
-      assert(jobs.forall(_._2.length >= 2), jobs.map(_._2.length).mkString(", "))
+      assert(jobs.map(_._1) == Seq("slope EvalPass", "slope EvalPass"), jobs.map(_._1).mkString(", "))
+      // one stage of one task per partition
+      assert(jobs.forall(j => j._2.map(_.numTasks) == Seq(80)),
+        jobs.map(_._2.map(_.numTasks)).mkString(", "))
       import scala.jdk.CollectionConverters._
       val descs = stageDescs.asScala.toSeq
-      assert(descs.length >= 2 * jobs.length && descs.forall(_ == "slope EvalPass"),
-        descs.mkString(", "))
+      assert(descs == Seq("slope EvalPass", "slope EvalPass"), descs.mkString(", "))
     } finally {
       sc.removeSparkListener(listener)
       backend.unpersist()
+    }
+  }
+
+  test("a pass over the driver budget runs in ordered groups that fit it") {
+    import org.apache.spark.ml.linalg.Vector
+    import org.apache.spark.rdd.RDD
+    val p = 30
+    val rows = binomialRows(107, 3000, p)
+    val sc = spark.sparkContext
+    val rdd = sc.parallelize(rows.toSeq, 16).cache()
+    val a = p + 1
+    val pass = new GramPass(ActiveColumns((0 to p).toArray, p, fitIntercept = true), a, 1)
+    val bytes = 8L * pass.length
+    // the results of five partitions fit, of six do not
+    val budget = 5 * bytes + bytes / 2
+    def gram(budget: Long) = withJobs("graft-grouped-pass") {
+      OrderedFold.run[(Vector, Array[Double]), Array[Double]](rdd, "slope GramPass", bytes,
+          budget, pass.merge)((in: RDD[(Vector, Array[Double])], h) =>
+        sc.runJob(in, pass, h)).get
+    }
+    try {
+      val (direct, directJobs) = gram(Long.MaxValue)
+      assert(directJobs.map(_._2.map(_.numTasks)) == Seq(Seq(16)))
+      assert(OrderedFold.groups(16, bytes, budget) == 5)
+      // consecutive ranges, in index order
+      val ranges = new RangeCoalescer().coalesce(5, rdd).map(_.partitions.map(_.index).toSeq)
+      assert(ranges.flatten.toSeq == (0 until 16) &&
+        ranges.forall(r => r == (r.head to r.last)), ranges.mkString(", "))
+      val (first, _) = gram(budget)
+      for (r <- 1 until 5) {
+        val (again, jobs) = gram(budget)
+        // one job of five tasks: the driver holds at most five results, within the budget
+        assert(jobs.map(_._1) == Seq("slope GramPass"))
+        assert(jobs.map(_._2.map(_.numTasks)) == Seq(Seq(5)), s"repeat $r")
+        assert(again.sameElements(first), s"repeat $r differs")
+      }
+      for (i <- direct.indices)
+        assert(math.abs(first(i) - direct(i)) <= 1e-12 * math.abs(direct(i)),
+          s"entry $i: ${first(i)} vs ${direct(i)}")
+    } finally rdd.unpersist()
+  }
+
+  test("a null element in array features fails a fit on either backend, naming it") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rng = new scala.util.Random(73)
+    // row 0 fails in the input probe, row 17 where the rows are read
+    for (bad <- Seq(0, 17); limit <- Seq(SlopeParams().localCellLimit, 0L)) {
+      val rows = (0 until 40).map { i =>
+        val f: Seq[Any] = if (i == bad) Seq(0.5, null, -1.0) else Seq.fill(3)(rng.nextGaussian())
+        Row(f, rng.nextGaussian())
+      }
+      val df = spark.createDataFrame(rows.asJava, StructType(Seq(
+        StructField("feats", ArrayType(DoubleType, containsNull = true)),
+        StructField("target", DoubleType))))
+      val e = intercept[Exception](Slope.fit(df, "feats", "target",
+        SlopeParams(nSigma = 4, localCellLimit = limit)))
+      val found = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+        .exists(t => t.isInstanceOf[IllegalArgumentException] &&
+          t.getMessage.contains("null element at index 1 of the feature vector in column 'feats'"))
+      assert(found, s"row $bad, localCellLimit $limit: $e")
     }
   }
 
@@ -940,7 +1016,7 @@ object CountingBackend {
 
 /** A pass whose tasks fail with an exception of their own. */
 private[slope] final class FailingPass extends RowPass {
-  def zero(): Array[Double] = new Array[Double](1)
+  def length: Int = 1
   def apply(ctx: org.apache.spark.TaskContext,
             rows: Iterator[(org.apache.spark.ml.linalg.Vector, Array[Double])]): Array[Double] =
     throw new IllegalStateException(FailingPass.message)

@@ -263,6 +263,46 @@ class ServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("predictions and scoreMany: a null array element fails, naming column and index") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val (xs, ys) = fixture(36, 80, 4, "gaussian")
+    val model = Slope.fitLocal(xs, ys, SlopeParams(nSigma = 4))
+    def frame(containsNull: Boolean, nullAt: Int) = spark.createDataFrame(
+      xs.indices.map { i =>
+        val f: Seq[Any] = if (i == nullAt) Seq(1.0, 2.0, null, 4.0) else xs(i).toArray.toSeq
+        Row(f, ys(i))
+      }.asJava,
+      StructType(Seq(StructField("feats", ArrayType(DoubleType, containsNull)),
+        StructField("target", DoubleType))))
+    def named(e: Throwable) = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(t => t.isInstanceOf[IllegalArgumentException] &&
+        t.getMessage.contains("null element at index 2 of the feature vector in column 'feats'"))
+    for (cached <- Seq(false, true)) {
+      val in = if (cached) frame(containsNull = true, 9).cache() else frame(containsNull = true, 9)
+      try {
+        val ep = intercept[Exception](SlopeServe.predictions(model, in, "feats").collect())
+        assert(named(ep), s"predictions, cached=$cached: $ep")
+        val es = intercept[Exception](
+          SlopeScore.scoreMany(model, in, "feats", "target", Seq("mse", "mae")))
+        assert(named(es), s"scoreMany, cached=$cached: $es")
+      } finally if (cached) in.unpersist()
+    }
+    // an array type that holds no null element is not scanned for one
+    // (cached, so the optimizer does not evaluate the local rows itself)
+    val plain = frame(containsNull = false, -1).cache()
+    try {
+      val served = SlopeServe.withLinearPredictors(model, plain, "feats").queryExecution
+        .optimizedPlan.flatMap(_.expressions.flatMap(_.collect { case lp: LinearPredictors => lp }))
+      assert(served.nonEmpty &&
+        served.forall(lp => !LinearPredictors.nullElements(lp.child.dataType)), served)
+      val scored = Slope.selectFrame(plain, "feats", "target", "gaussian")
+        .queryExecution.optimizedPlan.schema("f").dataType
+      assert(!LinearPredictors.nullElements(scored), scored)
+    } finally plain.unpersist()
+  }
+
   test("predictions: a 50-feature x 20-step model serves in whole-stage codegen") {
     import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
     import org.apache.spark.sql.execution.WholeStageCodegenExec
