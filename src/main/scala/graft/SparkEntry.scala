@@ -3,7 +3,8 @@ package graft
 import graft.functions.TextFunctions
 import graft.functions.VectorFunctions
 import graft.operators.{Dedup, Sampling, Similarity}
-import graft.slope.{Slope, SlopeCv, SlopeParams, SlopeScore, SlopeServe}
+import graft.slope.{Slope, SlopeCv, SlopeModel, SlopeParams, SlopeScore,
+  SlopeServe}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -169,9 +170,6 @@ object SparkEntry {
     col("l_quantity") * 2.0 + col("l_discount") * (-30.0) +
       col("l_tax") * 5.0 + col("l_extendedprice") / 30000.0
 
-  /** Long-form coefficient path of a gaussian SLOPE fit over lineitem
-    * numeric features (the engine's flagship ML operator; not
-    * SQL-expressible — validated by the differential test suite). */
   /** Max |a_i - b_i|; length mismatch counts as infinite divergence. */
   private def maxAbsDiff(a: Array[Double], b: Array[Double]): Double =
     if (a.length != b.length) Double.MaxValue
@@ -185,6 +183,46 @@ object SparkEntry {
       m
     }
 
+  /** The two halves of a dist ≡ local certificate, run CONCURRENTLY on
+    * a 2-thread pool: the local half burns one driver thread while the
+    * distributed half waits on executor jobs, so wall time is
+    * max(dist, local) instead of their sum. The halves share no
+    * mutable state (no warm-start coupling), which is what makes the
+    * match a real certificate. The pool shuts down in finally: a
+    * throwing half must not leave non-daemon pool threads pinning the
+    * forked JVM open. */
+  private def distAndLocal[T](dist: => T, local: => T): (T, T) = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    try {
+      val fd = Future(dist)
+      val fl = Future(local)
+      (Await.result(fd, Duration.Inf), Await.result(fl, Duration.Inf))
+    } finally pool.shutdown()
+  }
+
+  /** One `dist_matches_local` row per path step: the distributed and
+    * the local fit's coefficients and intercepts at that step agree to
+    * 1e-4. Every row reads false when either path has other than
+    * `nSteps` steps. */
+  private def stepMatches(s: SparkSession, dist: SlopeModel,
+                          loc: SlopeModel, nSteps: Int): DataFrame = {
+    import s.implicits._
+    val shapeOk = dist.nSteps == nSteps && loc.nSteps == nSteps
+    (0 until nSteps).map { st =>
+      val d = if (!shapeOk) Double.MaxValue
+        else math.max(maxAbsDiff(dist.coefs(st), loc.coefs(st)),
+          maxAbsDiff(dist.intercepts(st), loc.intercepts(st)))
+      (st.toLong, d <= 1e-4)
+    }.toDF("step", "dist_matches_local").orderBy("step")
+  }
+
+  /** Long-form coefficient path of a gaussian SLOPE fit over lineitem
+    * numeric features (the engine's flagship ML operator; not
+    * SQL-expressible — validated by the differential test suite). */
   private def slopeFitQuery(s: SparkSession, dir: String): DataFrame = {
     val df = li(s, dir).select(
       array(Feats.map(col): _*).as("features"),
@@ -2930,7 +2968,8 @@ object SparkEntry {
         SlopeParams(family = "binomial", nSigma = 12))
       // scoring side spread (r17, guide §2.5): the sub-128MB parquet
       // arrives as 3 splits, so the 12-step response/class projection
-      // over 600k rows ran on 3 of 32 cores (0.9 s stage, QueryProfile);
+      // over 600k rows ran on 3 of 32 cores (0.9 s stage,
+      // OPTIMIZATION_r17.md);
       // the exchange moves raw (features, label) rows only. Verified
       // value-identical vs the DuckDB oracle after the change.
       SlopeServe.predictions(m, base.repartition(OpParallelism),
@@ -2998,35 +3037,10 @@ object SparkEntry {
         array(Feats.map(col): _*).as("features"), signalLabel.as("label"))
       val pp = SlopeParams(family = "gaussian", nSigma = 20,
         tolDevChange = 0.0, tolDevRatio = 2.0)
-      // the two certificate halves run CONCURRENTLY (the established
-      // q_slope_binom_dist / q_slope_cv_dist pattern, extended here in
-      // the r16 optimization round): the local half burns one driver
-      // thread while the distributed half waits on executor jobs, so
-      // wall time is max(dist, local) instead of their sum; the halves
-      // stay fully independent, which is what makes the 1e-4 match a
-      // real certificate
-      val (dist, loc) = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        val fd = Future(Slope.fit(df, "features", "label",
-          pp.copy(localCellLimit = 0)))
-        val fl = Future(Slope.fit(df, "features", "label", pp))
-        // shutdown in finally: a throwing fit must not leave non-daemon
-        // pool threads pinning the forked JVM open
-        try (Await.result(fd, Duration.Inf), Await.result(fl, Duration.Inf))
-        finally pool.shutdown()
-      }
-      import s.implicits._
-      val shapeOk = dist.nSteps == 20 && loc.nSteps == 20
-      (0 until 20).map { st =>
-        val d = if (!shapeOk) Double.MaxValue
-          else math.max(maxAbsDiff(dist.coefs(st), loc.coefs(st)),
-            maxAbsDiff(dist.intercepts(st), loc.intercepts(st)))
-        (st.toLong, d <= 1e-4)
-      }.toDF("step", "dist_matches_local").orderBy("step")
+      val (dist, loc) = distAndLocal(
+        Slope.fit(df, "features", "label", pp.copy(localCellLimit = 0)),
+        Slope.fit(df, "features", "label", pp))
+      stepMatches(s, dist, loc, 20)
     }),
 
     "q_slope_binom_dist" -> ((s, dir) => {
@@ -3044,34 +3058,10 @@ object SparkEntry {
       val pp = SlopeParams(family = "binomial", nSigma = 6,
         tolDevChange = 0.0, tolDevRatio = 2.0,
         carryLearningRate = true, adaptiveRestart = true)
-      // the two certificate halves run CONCURRENTLY (r9 ask #7, the
-      // q_slope_cv_dist pattern): the local half burns one driver
-      // thread while the distributed half waits on executor jobs, so
-      // wall time is max(dist, local) instead of their sum — the
-      // halves stay fully independent (no warm-start coupling), which
-      // is what makes the 1e-4 match a real certificate
-      val (dist, loc) = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        val fd = Future(Slope.fit(base, "features", "label",
-          pp.copy(localCellLimit = 0)))
-        val fl = Future(Slope.fit(base, "features", "label", pp))
-        // shutdown in finally: if either fit throws, the non-daemon
-        // pool threads must still die or the forked JVM never exits
-        try (Await.result(fd, Duration.Inf), Await.result(fl, Duration.Inf))
-        finally pool.shutdown()
-      }
-      import s.implicits._
-      val shapeOk = dist.nSteps == 6 && loc.nSteps == 6
-      (0 until 6).map { st =>
-        val d = if (!shapeOk) Double.MaxValue
-          else math.max(maxAbsDiff(dist.coefs(st), loc.coefs(st)),
-            maxAbsDiff(dist.intercepts(st), loc.intercepts(st)))
-        (st.toLong, d <= 1e-4)
-      }.toDF("step", "dist_matches_local").orderBy("step")
+      val (dist, loc) = distAndLocal(
+        Slope.fit(base, "features", "label", pp.copy(localCellLimit = 0)),
+        Slope.fit(base, "features", "label", pp))
+      stepMatches(s, dist, loc, 6)
     }),
 
     "q_slope_cv_dist" -> ((s, dir) => {
@@ -3083,24 +3073,12 @@ object SparkEntry {
       val pp = SlopeParams(family = "gaussian", nSigma = 6,
         tolDevChange = 0.0, tolDevRatio = 2.0)
       // parallelism 6 = all grid cells concurrent (judge r8 ask #1);
-      // the two certificate halves ALSO run concurrently — they share
-      // no mutable state and each is internally deterministic
+      // the two certificate halves ALSO run concurrently
       def run(p: SlopeParams) = SlopeCv.trainSlope(df, "features", "label",
         p, qs = Seq(0.1, 0.2), number = 3, repeats = 1,
         measures = Seq("mse", "mae"), parallelism = 6)
-      val (dCells, lCells) = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        val fd = Future(run(pp.copy(localCellLimit = 0)).summary)
-        val fl = Future(run(pp).summary)
-        // shutdown in finally: a throwing fit must not leave non-daemon
-        // pool threads pinning the forked JVM open
-        try (Await.result(fd, Duration.Inf), Await.result(fl, Duration.Inf))
-        finally pool.shutdown()
-      }
+      val (dCells, lCells) = distAndLocal(
+        run(pp.copy(localCellLimit = 0)).summary, run(pp).summary)
       val ok = dCells.length == lCells.length &&
         dCells.zip(lCells).forall { case (a, b) =>
           a.q == b.q && a.measure == b.measure &&

@@ -1167,8 +1167,8 @@ object Similarity {
     * shuffles AT ALL: the probe join's corpus side reads
     * hash-clustered from the files and only the batch side exchanges —
     * plan-asserted in OperatorsSpec ("bucketed keeper table") and
-    * measured flat in corpus size by `graft.SemanticProbeScale`
-    * (SCALING.md). In-batch candidates reuse the batch's own
+    * measured flat in corpus size (0.48 s at 200k vs 0.47 s at 2M
+    * corpus rows, SCALING.md). In-batch candidates reuse the batch's own
     * single-cell index rows with the strict `earlier id` join, exactly
     * the MinHash stage's shape. */
   def incrementalSemanticFlags(model: SemanticIndexModel,

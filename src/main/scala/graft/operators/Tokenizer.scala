@@ -111,8 +111,8 @@ object Tokenizer {
     * (~80·(len−1)), and count-map/heap entries — estimated as
     * `140·len + 64` bytes per row. Callers pin a path explicitly via
     * the `localByteLimit` parameter (0 forces distributed,
-    * Long.MaxValue forces local — what the specs and the scaling
-    * probe do). */
+    * Long.MaxValue forces local — what the specs and the
+    * `q_bpe_train`/`q_wordpiece_train` queries do). */
   val DefaultLocalByteLimit: Long = 256L * 1024 * 1024
 
   /** Fold cadence of the distributed-incremental loop: every this
@@ -465,9 +465,8 @@ object Tokenizer {
   /** The WORDPIECE argmax as one scan over live pairs maximizing the
     * likelihood score with the [[beats]] tie-break — retained as the
     * reference form the [[ScoreArgmax]] heap must agree with
-    * (TokenizerSpec drives both over random update sequences) and as
-    * the rebuild-from-scratch fallback. Returns null when no pair is
-    * live. */
+    * (TokenizerSpec drives both over random update sequences); no
+    * trainer calls it. Returns null when no pair is live. */
   private[operators] def likelihoodArgmax(
       pairCounts: scala.collection.mutable.HashMap[(String, String), Long],
       symCounts: scala.collection.mutable.HashMap[String, Long])
@@ -566,9 +565,7 @@ object Tokenizer {
     }
 
     val sam: ScoreArgmax =
-      if (wordpiece && !probeForceScanArgmax)
-        new ScoreArgmax(pairCounts, symCounts)
-      else null
+      if (wordpiece) new ScoreArgmax(pairCounts, symCounts) else null
     if (!wordpiece) fam = new FreqArgmax(pairCounts)
     if (wordpiece) {
       chPairs = scala.collection.mutable.Set.empty[(String, String)]
@@ -580,12 +577,10 @@ object Tokenizer {
     var done = false
     while (m < nMerges && !done) {
       // argmax: O(log P) amortized heap pop in both modes (FreqArgmax
-      // on raw counts / ScoreArgmax on likelihood snapshots; the
-      // probe-only scan fallback measures the r14 baseline)
+      // on raw counts / ScoreArgmax on likelihood snapshots; the heap's
+      // gain over the r14 O(live pairs) scan is recorded in SCALING.md)
       val best: (String, String) =
-        if (fam != null) fam.pop()
-        else if (sam != null) sam.pop()
-        else likelihoodArgmax(pairCounts, symCounts)
+        if (wordpiece) sam.pop() else fam.pop()
       if (best == null) done = true
       else {
         val (a, b) = best
@@ -765,19 +760,13 @@ object Tokenizer {
     true
   }
 
-  /** MergeScaleProbe-only ledger: when non-null, the distributed
-    * trainer appends one (scanned base partitions, total base
-    * partitions) row per merge — the skip-scan's read-cost evidence
-    * for SCALING.md. Production callers never set it. */
+  /** Skip-scan ledger: when non-null, the distributed trainer appends
+    * one (scanned base partitions, total base partitions) row per
+    * merge. TokenizerSpec asserts on it that the deep merges scan
+    * fewer base partitions than the early ones (the read-cost figures
+    * are in SCALING.md). Production callers never set it. */
   private[graft] var probeScanLedger
       : scala.collection.mutable.ArrayBuffer[(Int, Int)] = null
-
-  /** MergeScaleProbe-only switch: force the WordPiece argmax back to
-    * the naive O(live pairs) [[likelihoodArgmax]] scan instead of the
-    * [[ScoreArgmax]] heap, so the heap's win is measured against the
-    * r14 baseline ON THE SAME build (byte-identity asserted by the
-    * probe). Production callers never set it. */
-  private[graft] var probeForceScanArgmax: Boolean = false
 
   /** Distributed-incremental trainer over the distinct table (w, cnt):
     * driver-held pair/symbol count maps updated by affected-rows-only
@@ -912,9 +901,7 @@ object Tokenizer {
 
     val fam: FreqArgmax = if (!wp) new FreqArgmax(pairCounts) else null
     val sam: ScoreArgmax =
-      if (wp && !probeForceScanArgmax)
-        new ScoreArgmax(pairCounts, symCounts)
-      else null
+      if (wp) new ScoreArgmax(pairCounts, symCounts) else null
 
     val merges = Vector.newBuilder[(String, String)]
     var m = 0
@@ -925,11 +912,8 @@ object Tokenizer {
     try {
     while (m < nMerges && !done) {
       // argmax on the driver — no job, no shuffle; O(log P) amortized
-      // heap pop in both modes (probe-only scan fallback: r14 baseline)
-      val best: (String, String) =
-        if (fam != null) fam.pop()
-        else if (sam != null) sam.pop()
-        else likelihoodArgmax(pairCounts, symCounts)
+      // heap pop in both modes
+      val best: (String, String) = if (wp) sam.pop() else fam.pop()
       if (best == null) done = true
       else {
         val (a, b) = best

@@ -793,7 +793,7 @@ class DistributedBackend(
   //    COALESCE down to the work-derived width (narrow, no shuffle);
   //  - too FEW tasks: a sub-128MB parquet scan arrives as 1-3 splits,
   //    so every one of the path's hundreds of sequential passes ran on
-  //    3 of 32 cores (150-380 ms/pass at sf0.1, QueryProfile r17) —
+  //    3 of 32 cores (150-380 ms/pass at sf0.1, OPTIMIZATION_r17.md) —
   //    REPARTITION up to the same work-derived width (one shuffle of
   //    the training rows, amortized over every solver pass).
   // The width derives from WORK (feature cells), never from a core

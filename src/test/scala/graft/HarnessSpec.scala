@@ -123,4 +123,35 @@ class HarnessSpec extends AnyFunSuite {
       s"bench/registry drift — unbenched: ${unbenched.toSeq.sorted.mkString(", ")}; " +
       s"stale bench rows: ${stale.toSeq.sorted.mkString(", ")}")
   }
+
+  test("src/test defines a main only in the fixture generators, BenchOne and PlanDump") {
+    // A test-scope main that no test, benchmark or build step runs
+    // still compiles on every run and has to follow every engine API
+    // change. The kept ones: five generators of committed fixtures,
+    // BenchOne (graft.Bench reads the bench_isolation.json it writes)
+    // and PlanDump (the plan-dump tool).
+    val kept = Set("BenchOne", "Gpt2VocabGen", "PlanDump",
+      "PretrainedVocabGen", "SubwordTrainMain", "UnigramVocabGen",
+      "WordPieceVocabGen").map(n => s"src/test/scala/graft/$n.scala")
+    val root = Paths.get("src/test")
+    assert(Files.isDirectory(root), s"run from the repo root: no $root")
+    val mainDef = """\bdef\s+main\s*\(""".r
+    import scala.jdk.CollectionConverters._
+    val withMain = {
+      val files = Files.walk(root)
+      try files.iterator().asScala
+        .filter(f => f.toString.endsWith(".scala") &&
+          mainDef.findFirstIn(Files.readString(f)).isDefined)
+        .map(_.toString.replace('\\', '/')).toSet
+      finally files.close()
+    }
+    val added = withMain -- kept
+    val missing = kept -- withMain
+    assert(added.isEmpty && missing.isEmpty,
+      "test-scope mains differ from the kept set — new: " +
+      s"${added.toSeq.sorted.mkString(", ")}; gone: " +
+      s"${missing.toSeq.sorted.mkString(", ")}. Put a new measurement " +
+      "in a perfbench workload (perfbench/README.md) or assert it in a " +
+      "spec, not in a main that nothing runs.")
+  }
 }

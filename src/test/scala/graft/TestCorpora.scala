@@ -6,12 +6,10 @@ object TestCorpora {
   /** A corpus RICH enough for deep tokenizer-trainer merge counts:
     * the committed testdata's ~40-word vocabulary exhausts every
     * learnable BPE pair at 127 merges, so the 512-merge three-way
-    * differential (TokenizerSpec) and the depth-scaling measurement
-    * (MergeScaleProbe `rich`) both need thousands of distinct
+    * differential (TokenizerSpec) needs thousands of distinct
     * pretokens. Base-26 words of varying length with Zipf-ish
-    * repetition; ONE definition so the probe's ledger numbers in
-    * SCALING.md and the spec's byte-identity assertion provably run
-    * on the same corpus. */
+    * repetition; the depth-scaling and skip-scan figures in
+    * SCALING.md were measured on this same corpus (`rich`). */
   def richTexts: Seq[String] = {
     def word(i: Int): String = {
       var n = i
@@ -25,13 +23,12 @@ object TestCorpora {
     }
   }
 
-  /** The DEEP-octave corpus (MergeScaleProbe `rich2`): ~8000 distinct
+  /** The DEEP-octave corpus (`rich2` in SCALING.md): ~8000 distinct
     * base-26 words up to length 4 (plus digit suffixes for pair
     * variety), so the merge supply survives past 4096 — richTexts
-    * exhausts its learnable pairs in the low thousands. Used only for
-    * the 2048-4096 fold-cadence measurement (r14 verdict ask #7);
-    * byte-identity across paths is asserted inside the probe run
-    * itself. */
+    * exhausts its learnable pairs in the low thousands. SCALING.md's
+    * 2048-4096 fold-cadence figures (r14 verdict ask #7) were measured
+    * on it; TokenizerSpec's unigram resume case trains on it. */
   def richTexts2: Seq[String] = {
     def word(i: Int): String = {
       var n = i

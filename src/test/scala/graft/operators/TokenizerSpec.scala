@@ -104,9 +104,8 @@ class TokenizerSpec extends AnyFunSuite {
   }
 
   /** The shared deep-merge corpus ([[graft.TestCorpora.richTexts]] —
-    * one definition for this spec's byte-identity differentials AND
-    * MergeScaleProbe's SCALING.md ledger, so they provably measure
-    * the same corpus): the fixture corpus's ~40-word vocabulary
+    * the corpus SCALING.md's merge-depth figures were measured on):
+    * the fixture corpus's ~40-word vocabulary
     * exhausts every learnable pair at 127 merges (exactly the
     * committed merges.txt), so the 512-merge differential needs
     * thousands of distinct pretokens. */

@@ -89,6 +89,26 @@ class ServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("coefTable: one row per (step, target, feature) of a multinomial path") {
+    val (xs, ys) = fixture(3, 200, 3, "multinomial")
+    val model = Slope.fitLocal(xs, ys,
+      SlopeParams(family = "multinomial", nSigma = 5))
+    val (nSteps, m, p) = (model.nSteps, model.m, model.p)
+    assert(m > 1 && nSteps > 1, s"m=$m nSteps=$nSteps")
+    val rows = SlopeServe.coefTable(model, spark)
+      .select("step", "sigma", "target", "feature_idx", "coefficient")
+      .collect()
+    assert(rows.length == nSteps * m * p)
+    val keys = rows.map(r => (r.getInt(0), r.getInt(2), r.getInt(3)))
+    assert(keys.distinct.length == rows.length)
+    rows.foreach { r =>
+      val (step, target, j) = (r.getInt(0), r.getInt(2), r.getInt(3))
+      assert(r.getDouble(1) == model.sigma(step), s"sigma at step $step")
+      assert(r.getDouble(4) == model.coefs(step)(target * p + j),
+        s"coefficient at step $step target $target feature $j")
+    }
+  }
+
   test("coefAt: exact on path, interpolated between, clamped outside") {
     val (xs, ys) = fixture(4, 150, 4, "gaussian")
     val model = Slope.fitLocal(xs, ys, SlopeParams(nSigma = 10))
