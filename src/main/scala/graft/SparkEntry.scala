@@ -3102,7 +3102,7 @@ object SparkEntry {
       // IS the local path's prep, so fitLocal/coefExact over its
       // output are bit-identical to the former per-fit Slope.fit
       // calls, minus the second full collect + O(n log n) sort
-      val (xsL, ysL) = Slope.collectLocal(df, "features", "label",
+      val (xsL, ysL, _) = Slope.collectLocal(df, "features", "label",
         SlopeParams(family = "gaussian"))
       val m = Slope.fitLocal(xsL, ysL,
         SlopeParams(family = "gaussian", nSigma = 20))

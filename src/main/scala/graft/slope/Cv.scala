@@ -88,40 +88,25 @@ object SlopeCv {
       } yield (q, rep, fold)
 
       // Collect-once cell path: when the training data is driver-sized
-      // (the same n*p gate Slope.fit applies per fit), pull the folded
-      // rows ONE time and slice per cell instead of re-collecting the
-      // train split number*repeats*|qs| times. Each slice is re-sorted by
-      // content (Slope.sortRowsInPlace — the same order Slope.fit
-      // imposes), and a cell's train multiset is identical either way, so
-      // the fitted values are bit-for-bit unchanged. Above the gate every
-      // cell fit stays fully distributed.
-      // n and p for that gate from the fit's own input probe: one job,
-      // which also caches the folded rows
+      // (the local-dispatch rule of Slope.fit, over the fit's own input
+      // probe — one job, which also caches the folded rows), pull the
+      // folded rows ONE time, content-sorted with their fold columns
+      // (Slope.collectLocal), and slice per cell instead of re-collecting
+      // and re-sorting the train split number*repeats*|qs| times (the r11
+      // scale gate measured that as a 12x allocation storm at sf1). A
+      // filtered subset of a content-sorted sequence is itself
+      // content-sorted with the identical value sequence (ties are
+      // exact-duplicate rows), so each cell selects SHARED vector
+      // references and its fit is bit-identical to a per-cell Slope.fit.
+      // Above the gate every cell fit stays fully distributed.
       val (_, shape) = Slope.probe(Slope.selectFrame(withFolds, featuresCol, labelCol,
         family), featuresCol, labelCol, family)
-      // vectorize and content-sort the shared collect ONCE: the r11
-      // scale gate caught per-cell toVec + sortRowsInPlace re-doing
-      // O(n log n) work (and O(n) vector allocation) number*repeats*|qs|
-      // times — at the sf1 frame that was a 12x allocation storm (128 s,
-      // 7-11 s GC per rep). A filtered subset of a content-sorted
-      // sequence is itself content-sorted with the identical value
-      // sequence (ties are exact-duplicate rows), so each cell now just
-      // selects SHARED vector references and fits — bit-identical
-      // results, one sort instead of twelve.
       val localData: (Array[org.apache.spark.ml.linalg.Vector],
           Array[Any], Array[Array[Int]]) =
-        if (shape.n * shape.p.toLong <= Slope.effectiveLocalCellLimit(params)) {
-          // project through the SAME casts Slope.fit applies before its
-          // own collect, so slice values (and the content-sort keys
-          // derived from them) are identical to what a per-cell fit sees
-          val rows = Slope.selectFrame(withFolds, featuresCol, labelCol, family,
-            (0 until repeats).map(r => col(s"__fold_$r"))).collect()
-          val xs = rows.map(r => Slope.toVec(r.get(0), featuresCol))
-          val ys: Array[Any] = rows.map(_.get(1))
-          val folds = rows.map(r =>
-            Array.tabulate(repeats)(i => r.getInt(2 + i)))
-          val ord = Slope.contentOrderIndices(xs, ys)
-          (ord.map(xs), ord.map(ys), ord.map(folds))
+        if (Slope.runsLocal(shape, params)) {
+          val (xs, ys, rows) = Slope.collectLocal(withFolds, featuresCol, labelCol, params,
+            (0 until repeats).map(r => col(s"__fold_$r")))
+          (xs, ys, rows.map(r => Array.tabulate(repeats)(i => r.getInt(2 + i))))
         } else null
 
       // initial full fit fixes the sigma path (R/trainOwl.R:69,84) —

@@ -74,8 +74,8 @@ object SlopeServe {
     }
   }
 
-  /** [[coefExact]] over pre-collected, content-sorted rows
-    * ([[Slope.collectLocal]]'s output) — for callers that already hold
+  /** [[coefExact]] over pre-collected, content-sorted rows (the
+    * features and labels [[Slope.collectLocal]] returns) — for callers that already hold
     * the local-path data from the main fit (r17 optimization round:
     * q_coef_interp paid a second full collect + content sort of the
     * same frame for its exact-refit path). Identical mechanics: one

@@ -188,68 +188,54 @@ object Slope {
     new IllegalArgumentException(
       s"null element at index $index of the feature vector in column '$column'")
 
-  /** Whether every stored value of `v` is finite (implicit zeros are).
-    * NaN or infinite features would poison every pass sum, so both fit
-    * paths check each row at ingest, next to its length check (the
-    * reference rejects NA too, `R/owl.R:350`). */
-  private def allFinite(v: Vector): Boolean = {
-    val vals = v match {
-      case d: DenseVector => d.values
-      case s: SparseVector => s.values
-    }
-    var i = 0
-    while (i < vals.length && java.lang.Double.isFinite(vals(i))) i += 1
-    i == vals.length
-  }
-
-  /** The local path's data prep as a reusable surface (r17
-    * optimization round): the exact collect → cast → vectorize →
-    * content-sort pipeline `fit` runs before [[fitLocal]]. A caller
-    * that fits SEVERAL models over the SAME frame (q_coef_interp: the
-    * path fit plus the exact-refit path) collects and sorts once
-    * instead of once per fit; feeding the result to [[fitLocal]] is
-    * bit-identical to `fit(df, ...)` on the local path because this IS
-    * that path's prep. (collect() order follows the parquet split
-    * plan, which shifts with spark.default.parallelism — the content
-    * sort makes the FP summation order, and thus every fitted path, a
-    * function of the DATA only; ties are exact-duplicate rows, so the
-    * order is total where it matters.) */
+  /** The local path's rows: collect → cast ([[selectFrame]]) →
+    * vectorize → content sort, as [[fitLocal]] reads them inside `fit`.
+    * Returns the features, the labels and the collected rows (for
+    * `extra` columns, which follow the label at index 2), all in
+    * content order ([[contentOrderIndices]]). A caller that fits several
+    * models over one frame (q_coef_interp; SlopeCv, which carries its
+    * fold columns as `extra`) collects and sorts once, and feeding the
+    * result to [[fitLocal]] is bit-identical to `fit(df, ...)` on the
+    * local path. (collect() order follows the parquet split plan, which
+    * shifts with spark.default.parallelism — the content sort makes the
+    * FP summation order, and thus every fitted path, a function of the
+    * DATA only; ties are exact-duplicate rows, so the order is total
+    * where it matters.) Rows are checked by [[fitLocal]], not here. */
   def collectLocal(df: DataFrame, featuresCol: String, labelCol: String,
-                   params: SlopeParams = SlopeParams())
-      : (Array[Vector], Array[Any]) = {
-    val rows = selectFrame(df, featuresCol, labelCol, params.family).collect()
-    require(rows.nonEmpty, "empty input")
-    val xs = new Array[Vector](rows.length)
-    val rawY = new Array[Any](rows.length)
-    var i = 0
-    while (i < rows.length) {
-      xs(i) = toVec(rows(i).get(0), featuresCol); rawY(i) = rows(i).get(1); i += 1
-    }
-    sortRowsInPlace(xs, rawY)
-    (xs, rawY)
+                   params: SlopeParams = SlopeParams(), extra: Seq[Column] = Nil)
+      : (Array[Vector], Array[Any], Array[Row]) = {
+    val rows = selectFrame(df, featuresCol, labelCol, params.family, extra).collect()
+    val xs = rows.map(r => toVec(r.get(0), featuresCol))
+    val rawY = rows.map(_.get(1))
+    val ord = contentOrderIndices(xs, rawY)
+    (ord.map(xs), ord.map(rawY), ord.map(rows))
   }
 
   /** The one scan of a fit's input before anything is cached: ONE Spark
     * job over `sel.rdd` (`sel` as [[selectFrame]] projects it) that
-    * counts the rows, takes p from the first row and summarizes the
-    * labels — the sum per target for gaussian, a count per class for
-    * binomial and multinomial ([[ProbeTask]]). Null features or labels
-    * fail here, naming their column. Task results fold in task order
-    * ([[OrderedFold]]), so the gaussian sums are a function of the data
-    * and its partitioning. Returns the planned rows with the
+    * folds every row into a [[ProbeStats]] ([[ProbeTask]]): the row
+    * count, p, and the label summary. Null features or labels fail here,
+    * naming their column, and so does any row [[ProbeStats.add]] rejects
+    * (a ragged or non-finite features row, a ragged label array), so
+    * nothing is cached before the rows are checked. Task results fold in
+    * task order ([[OrderedFold]]), so the gaussian sums are a function of
+    * the data and its partitioning. Returns the planned rows with the
     * summary, so a distributed fit persists the rows this job read. */
   private[slope] def probe(sel: DataFrame, featuresCol: String, labelCol: String,
                            family: String): (RDD[Row], ProbeStats) = {
     val rows = sel.rdd
-    val task = new ProbeTask(featuresCol, labelCol, family,
-      sel.schema("l").dataType.isInstanceOf[ArrayType])
+    val task = new ProbeTask(featuresCol, labelCol, family)
     val sc = rows.sparkContext
     val stats = OrderedFold.run[Row, ProbeStats](rows, "slope probe", ProbeStats.Bytes,
         OrderedFold.budget(sc), ProbeStats.merge)((in, h) =>
-      sc.runJob(in, task, h)).getOrElse(new ProbeStats)
-    require(stats.n > 0, "empty input")
+      sc.runJob(in, task, h)).getOrElse(new ProbeStats(family))
     (rows, stats)
   }
+
+  /** Whether a fit over the rows `stats` summarizes runs on the
+    * driver-local backend: n*p at most the effective local cell limit. */
+  private[slope] def runsLocal(stats: ProbeStats, params: SlopeParams): Boolean =
+    stats.n * stats.p.toLong <= effectiveLocalCellLimit(params)
 
   /** Fit from a DataFrame with a features column (ml Vector or
     * array<double>) and a label column (numeric, string for
@@ -263,144 +249,91 @@ object Slope {
     * certified independently by `MultiTaskSpec` (constant-λ
     * separability + joint duality-gap certificate).
     *
-    * The input is scanned once by [[probe]], whose n and p choose the
-    * backend and size the distributed one, and whose label summary gives
-    * the gaussian centers and the class names and counts; the
-    * distributed backend then persists the rows that scan planned.
+    * The input is scanned once by [[probe]], which checks every row and
+    * whose n and p choose the backend. The driver-local backend then
+    * collects the rows and [[fitLocal]] summarizes them again in
+    * content order; the distributed one persists the rows the probe
+    * planned and takes its response set-up from the probe's summary.
     */
   def fit(df: DataFrame, featuresCol: String, labelCol: String,
           params: SlopeParams = SlopeParams()): SlopeModel = {
-    val family = Family(params.family)
-    val labelIsArray = df.schema(labelCol).dataType.isInstanceOf[ArrayType]
-    require(!labelIsArray || params.family == "gaussian",
-      s"array-typed (multi-target) labels are only supported for " +
-        s"family=gaussian, got ${params.family}")
-
+    checkArrayLabel(df.schema(labelCol).dataType.isInstanceOf[ArrayType], params.family)
     val sel = selectFrame(df, featuresCol, labelCol, params.family)
     val (selRdd, probed) = probe(sel, featuresCol, labelCol, params.family)
-    val n = probed.n
-    val p = probed.p
 
-    if (n * p.toLong <= effectiveLocalCellLimit(params)) {
+    if (runsLocal(probed, params)) {
       // driver-local path: zero Spark jobs inside the solver loop
-      val (xs, rawY) = collectLocal(df, featuresCol, labelCol, params)
+      val (xs, rawY, _) = collectLocal(df, featuresCol, labelCol, params)
       fitLocal(xs, rawY, params)
-      // (fitLocal validates per-row feature lengths and values)
     } else {
-      // distributed path
-      val yCenter =
-        if (params.family == "gaussian") probed.ySum.map(_ / n) else Array.empty[Double]
-      val (classNames, classCounts) = params.family match {
-        case "binomial" | "multinomial" =>
-          val names = sortClassNames(probed.classCounts.keys.toArray)
-          (names, names.map(probed.classCounts))
-        case _ => (Array.empty[String], Array.empty[Long])
-      }
-      val nClasses = if (classNames.nonEmpty) classNames.length else 1
-      checkClasses(params.family, classNames)
-      val m = if (labelIsArray) yCenter.length else family.nTargets(nClasses)
-      val enc = responseEncoder(params.family, classNames, yCenter, m)
-      val pExpected = p
-      val rdd = selRdd.map { r =>
-        val v = toVec(r.get(0), featuresCol)
-        // a short dense row would otherwise silently compute a partial
-        // dot product; a long one would AIOOBE mid-job with no context
-        require(v.size == pExpected,
-          s"feature vector length ${v.size} != expected $pExpected " +
-            "(all rows must have the same dimensionality)")
-        require(allFinite(v), "non-finite (NaN or infinite) feature values are not allowed")
-        (v, enc(r.get(1)))
-      }
-      val backend = new DistributedBackend(rdd, p, m, params.fitIntercept, knownN = n)
-      try fitBackend(backend, params, yCenter, classNames, nClasses, classCounts)
+      // distributed path: the probe has checked these rows
+      val r = response(probed, params.family)
+      val enc = r.encode
+      val rdd = selRdd.map(row => (toVec(row.get(0), featuresCol), enc(row.get(1))))
+      val backend = new DistributedBackend(rdd, probed.p, r.m, params.fitIntercept,
+        knownN = probed.n)
+      try fitBackend(backend, params, r.yCenter, r.classNames, r.nClasses, r.classCounts)
       finally backend.unpersist()
     }
   }
 
-  /** Fully driver-local fit (also the unit-test entry — no SparkSession). */
+  /** Fully driver-local fit (also the unit-test entry — no SparkSession).
+    * Every row is checked here: a null feature vector or label names
+    * its row, and the rest is [[ProbeStats.add]]'s check. The label
+    * summary, and so the gaussian center, is folded over the rows in the
+    * order given (content order, from [[collectLocal]]). */
   def fitLocal(xs: Array[Vector], rawY: Array[Any],
                params: SlopeParams): SlopeModel = {
-    val family = Family(params.family)
-    var vi = 0
-    while (vi < xs.length) {
-      require(xs(vi) != null, s"null feature vector at row $vi")
-      require(rawY(vi) != null, s"null label at row $vi")
-      require(xs(vi).size == xs(0).size,
-        s"feature vector length ${xs(vi).size} at row $vi != expected ${xs(0).size} " +
-          "(all rows must have the same dimensionality)")
-      require(allFinite(xs(vi)),
-        s"non-finite (NaN or infinite) feature values are not allowed (row $vi)")
-      vi += 1
+    require(xs.length == rawY.length,
+      s"${xs.length} feature vectors but ${rawY.length} labels")
+    val stats = new ProbeStats(params.family)
+    var i = 0
+    while (i < xs.length) {
+      require(xs(i) != null, s"null feature vector at row $i")
+      require(rawY(i) != null, s"null label at row $i")
+      stats.add(xs(i), rawY(i))
+      i += 1
     }
-    val p = xs(0).size
-    val labelIsArray = rawY(0) match {
-      case _: scala.collection.Seq[_] | _: Array[Double] => true
-      case _ => false
-    }
-    require(!labelIsArray || params.family == "gaussian",
-      s"array-typed (multi-target) labels are only supported for " +
-        s"family=gaussian, got ${params.family}")
-    val (classNames, yCenter, classCounts) = params.family match {
-      case "gaussian" if labelIsArray =>
-        val rows = rawY.map(anyToDoubleArray)
-        val w = rows(0).length
-        val sums = new Array[Double](w)
-        var i = 0
-        while (i < rows.length) {
-          require(rows(i).length == w,
-            s"label array length ${rows(i).length} at row $i != expected $w " +
-              "(all rows must have the same number of targets)")
-          var k = 0
-          while (k < w) { sums(k) += rows(i)(k); k += 1 }
-          i += 1
-        }
-        (Array.empty[String], sums.map(_ / rows.length), Array.empty[Long])
-      case "gaussian" =>
-        val ys = rawY.map(anyToDouble)
-        (Array.empty[String], Array(ys.sum / ys.length), Array.empty[Long])
-      case "binomial" | "multinomial" =>
-        val labels = rawY.map(_.toString)
-        val counts = labels.groupMapReduce(identity)(_ => 1L)(_ + _)
-        val names = sortClassNames(labels.distinct)
-        (names, Array.empty[Double], names.map(counts))
-      case _ => (Array.empty[String], Array.empty[Double], Array.empty[Long])
-    }
+    val r = response(stats, params.family)
+    val backend = new LocalBackend(xs, rawY.map(r.encode), stats.p, r.m, params.fitIntercept)
+    fitBackend(backend, params, r.yCenter, r.classNames, r.nClasses, r.classCounts)
+  }
+
+  /** A fit's response set-up from the summary of its rows (reference
+    * `R/preProcessResponse.R:1-104`): the class names (sorted as
+    * [[sortClassNames]] does) and their counts, the gaussian center per
+    * target, the class count, m and the row encoder. */
+  private final case class Response(classNames: Array[String], classCounts: Array[Long],
+                                    yCenter: Array[Double], nClasses: Int, m: Int,
+                                    encode: Any => Array[Double])
+
+  private def response(stats: ProbeStats, family: String): Response = {
+    require(stats.n > 0, "empty input")
+    val yCenter = stats.ySum.map(_ / stats.n)
+    val classNames = sortClassNames(stats.classCounts.keys.toArray)
+    checkClasses(family, classNames)
     val nClasses = if (classNames.nonEmpty) classNames.length else 1
-    checkClasses(params.family, classNames)
-    val m = if (labelIsArray) yCenter.length else family.nTargets(nClasses)
-    val enc = responseEncoder(params.family, classNames, yCenter, m)
-    val ys = rawY.map(enc)
-    val backend = new LocalBackend(xs, ys, p, m, params.fitIntercept)
-    fitBackend(backend, params, yCenter, classNames, nClasses, classCounts)
+    val m = if (yCenter.nonEmpty) yCenter.length else Family(family).nTargets(nClasses)
+    Response(classNames, classNames.map(stats.classCounts), yCenter, nClasses, m,
+      responseEncoder(family, classNames, yCenter, m))
   }
 
-  /** Content-order rows (label first, then features lexicographically):
-    * a deterministic total preorder whose ties are exact-duplicate rows,
-    * making driver-local FP reductions independent of partition layout.
-    * Label keys are materialized once (not per comparison), and vectors
-    * compare over merged active entries — O(nnz), no per-element
-    * binary search on sparse rows. (`private[slope]`: SlopeCv's
-    * collect-once cell path sorts its slices with the same order, so a
-    * sliced fit is bit-identical to a per-cell `Slope.fit`.) */
-  private[slope] def sortRowsInPlace(xs: Array[Vector], rawY: Array[Any]): Unit = {
-    val n = xs.length
-    val sorted = contentOrderIndices(xs, rawY)
-    val xs2 = sorted.map(xs)
-    val ys2 = sorted.map(rawY)
-    System.arraycopy(xs2, 0, xs, 0, n)
-    System.arraycopy(ys2, 0, rawY, 0, n)
-  }
+  /** Array-typed (multi-target) labels are for the gaussian family only. */
+  private[slope] def checkArrayLabel(labelIsArray: Boolean, family: String): Unit =
+    require(!labelIsArray || family == "gaussian",
+      s"array-typed (multi-target) labels are only supported for " +
+        s"family=gaussian, got $family")
 
-  /** The content-order permutation behind [[sortRowsInPlace]] (stable,
-    * so ties — which are exact-duplicate rows — keep input order).
-    * Exposed separately so SlopeCv can sort its shared collect ONCE
-    * and carry fold columns through the same permutation: a FILTERED
-    * subset of a content-sorted sequence is itself content-sorted, so
-    * per-cell re-sorts are pure waste — and because ties are rows with
-    * identical values, the sliced value SEQUENCE (hence every FP fold)
-    * is bit-identical to sorting the slice directly. */
-  private[slope] def contentOrderIndices(xs: Array[Vector],
-                                         rawY: Array[Any]): Array[Int] = {
+  /** Content order (label first, then features lexicographically) as a
+    * stable permutation: a deterministic total preorder whose ties are
+    * exact-duplicate rows, making driver-local FP reductions independent
+    * of partition layout. Label keys are materialized once (not per
+    * comparison), and vectors compare over merged active entries —
+    * O(nnz), no per-element binary search on sparse rows. A FILTERED
+    * subset of a content-sorted sequence is itself content-sorted, with
+    * the value SEQUENCE (hence every FP fold) of sorting the subset
+    * directly, so SlopeCv slices its one sorted collect per cell. */
+  private def contentOrderIndices(xs: Array[Vector], rawY: Array[Any]): Array[Int] = {
     val n = xs.length
     val labelKey = new Array[String](n)
     var i = 0
@@ -518,14 +451,13 @@ object Slope {
     * gaussian centered per target (scalar m=1 or matrix m>1, the
     * reference's `NROW(y)`/`NCOL(y)` branch); binomial {-1,+1};
     * multinomial one-hot over the first K-1 classes; poisson raw
-    * nonnegative. `yCenter` has length m for gaussian, 0 otherwise. */
+    * nonnegative. `yCenter` has length m for gaussian, 0 otherwise. Its
+    * rows have passed [[ProbeStats.add]], so label arrays have m entries. */
   private def responseEncoder(family: String, classNames: Array[String],
                               yCenter: Array[Double], m: Int): Any => Array[Double] =
     family match {
       case "gaussian" if m > 1 => (a: Any) => {
         val row = anyToDoubleArray(a)
-        require(row.length == m,
-          s"label array length ${row.length} != expected $m targets")
         val out = new Array[Double](m)
         var k = 0
         while (k < m) {
@@ -1025,15 +957,45 @@ object Slope {
   }
 }
 
-/** What [[Slope.probe]] learns of a fit's input: the row count, the
-  * feature count of the first row (-1 before any row), and the label
-  * summary — `ySum` per gaussian target, `classCounts` per class label
-  * of the binomial and multinomial families. */
-private[slope] final class ProbeStats extends Serializable {
+/** The summary of a fit's rows, and the one check of their values
+  * ([[add]]; a null row is rejected before it, by a caller that names
+  * its column or its row). [[Slope.probe]] folds a fit's input into it
+  * before anything is cached, and [[Slope.fitLocal]] its own rows. It
+  * holds the row count, the feature count p of the first row (-1 before
+  * any row), and the label summary — `ySum` per gaussian target,
+  * `classCounts` per class label of the binomial and multinomial
+  * families. */
+private[slope] final class ProbeStats(family: String) extends Serializable {
   var n = 0L
   var p = -1
   var ySum: Array[Double] = Array.empty
   val classCounts = scala.collection.mutable.HashMap.empty[String, Long]
+  private val gaussian = family == "gaussian"
+  private val classes = family == "binomial" || family == "multinomial"
+
+  /** Checks one row and adds it to the summary. The features must be as
+    * long as the first row's and finite (NaN or infinite values would
+    * poison every pass sum; the reference rejects NA too,
+    * `R/owl.R:350`), and a gaussian label array as long as the first
+    * row's. Labels sum in the order rows are added. */
+  def add(x: Vector, y: Any): Unit = {
+    if (n == 0) p = x.size
+    require(x.size == p, ProbeStats.featureLength(x.size, p))
+    require(ProbeStats.allFinite(x), "non-finite (NaN or infinite) feature values are not allowed")
+    val labelIsArray = y.isInstanceOf[scala.collection.Seq[_]] || y.isInstanceOf[Array[Double]]
+    Slope.checkArrayLabel(labelIsArray, family)
+    if (gaussian) {
+      val ys = if (labelIsArray) Slope.anyToDoubleArray(y) else Array(Slope.anyToDouble(y))
+      if (n == 0) ySum = new Array[Double](ys.length)
+      require(ys.length == ySum.length, ProbeStats.labelLength(ys.length, ySum.length))
+      var k = 0
+      while (k < ys.length) { ySum(k) += ys(k); k += 1 }
+    } else if (classes) {
+      val c = y.toString
+      classCounts(c) = classCounts.getOrElse(c, 0L) + 1
+    }
+    n += 1
+  }
 }
 
 private[slope] object ProbeStats {
@@ -1041,13 +1003,32 @@ private[slope] object ProbeStats {
     * sums or class counts. */
   val Bytes = 1024L
 
-  /** `b`, a later run of rows, folded into `a`. */
+  private def featureLength(got: Int, expected: Int): String =
+    s"feature vector length $got != expected $expected " +
+      "(all rows must have the same dimensionality)"
+
+  private def labelLength(got: Int, expected: Int): String =
+    s"label array length $got != expected $expected " +
+      "(all rows must have the same number of targets)"
+
+  /** Whether every stored value of `v` is finite (implicit zeros are). */
+  private def allFinite(v: Vector): Boolean = {
+    val vals = v match {
+      case d: DenseVector => d.values
+      case s: SparseVector => s.values
+    }
+    var i = 0
+    while (i < vals.length && java.lang.Double.isFinite(vals(i))) i += 1
+    i == vals.length
+  }
+
+  /** `b`, a later run of rows, folded into `a`; both runs' rows must
+    * agree on p and on the number of gaussian targets. */
   def merge(a: ProbeStats, b: ProbeStats): ProbeStats = {
     if (a.n == 0) { a.p = b.p; a.ySum = b.ySum }
     else if (b.n > 0) {
-      require(b.ySum.length == a.ySum.length,
-        s"label array length ${b.ySum.length} != expected ${a.ySum.length} " +
-          "(all rows must have the same number of targets)")
+      require(b.p == a.p, featureLength(b.p, a.p))
+      require(b.ySum.length == a.ySum.length, labelLength(b.ySum.length, a.ySum.length))
       var k = 0
       while (k < a.ySum.length) { a.ySum(k) += b.ySum(k); k += 1 }
     }
@@ -1060,32 +1041,16 @@ private[slope] object ProbeStats {
 
 /** The probe's task: folds a run of [[Slope.selectFrame]] rows into a
   * [[ProbeStats]], rejecting null features or labels with a message
-  * that names their column. */
-private[slope] final class ProbeTask(featuresCol: String, labelCol: String,
-                                     family: String, labelIsArray: Boolean)
+  * that names their column; [[ProbeStats.add]] checks the rest. */
+private[slope] final class ProbeTask(featuresCol: String, labelCol: String, family: String)
     extends ((TaskContext, Iterator[Row]) => ProbeStats) with Serializable {
   def apply(ctx: TaskContext, rows: Iterator[Row]): ProbeStats = {
-    val s = new ProbeStats
-    val gaussian = family == "gaussian"
-    val classes = family == "binomial" || family == "multinomial"
+    val s = new ProbeStats(family)
     while (rows.hasNext) {
       val r = rows.next()
       require(!r.isNullAt(0), s"null feature vector in column '$featuresCol'")
       require(!r.isNullAt(1), s"null label in column '$labelCol'")
-      if (s.n == 0) s.p = Slope.toVec(r.get(0), featuresCol).size
-      if (gaussian) {
-        val y = if (labelIsArray) Slope.anyToDoubleArray(r.get(1)) else Array(r.getDouble(1))
-        if (s.n == 0) s.ySum = new Array[Double](y.length)
-        require(y.length == s.ySum.length,
-          s"label array length ${y.length} != expected ${s.ySum.length} " +
-            "(all rows must have the same number of targets)")
-        var k = 0
-        while (k < y.length) { s.ySum(k) += y(k); k += 1 }
-      } else if (classes) {
-        val c = r.getString(1)
-        s.classCounts(c) = s.classCounts.getOrElse(c, 0L) + 1
-      }
-      s.n += 1
+      s.add(Slope.toVec(r.get(0), featuresCol), r.get(1))
     }
     s
   }

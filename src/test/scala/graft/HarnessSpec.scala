@@ -110,7 +110,7 @@ class HarnessSpec extends AnyFunSuite {
     // cover the SAME names in the same commit, so this test fails the
     // build whenever a query is added (or renamed) without re-running
     // `runMain graft.Bench` to refresh bench_out.json.
-    val p = Paths.get("/root/repo/bench_out.json")
+    val p = Paths.get("bench_out.json")
     assert(Files.exists(p), "bench_out.json missing — run graft.Bench")
     val node = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(p.toFile)

@@ -561,6 +561,48 @@ class MlApiSpec extends AnyFunSuite {
       assert(ef.getMessage.contains("null feature vector at row 11"), ef.getMessage)
       val el = intercept[IllegalArgumentException](Slope.fitLocal(xs, ys.updated(23, null), params))
       assert(el.getMessage.contains("null label at row 23"), el.getMessage)
+      // no rows, and labels that do not pair with the rows one to one
+      val e0 = intercept[IllegalArgumentException](
+        Slope.fitLocal(Array.empty[org.apache.spark.ml.linalg.Vector], Array.empty[Any], params))
+      assert(e0.getMessage.contains("empty input"), e0.getMessage)
+      for (labels <- Seq(ys :+ ys(0), ys.init)) {
+        val e = intercept[IllegalArgumentException](Slope.fitLocal(xs, labels, params))
+        assert(e.getMessage.contains(s"${xs.length} feature vectors but ${labels.length} labels"),
+          e.getMessage)
+      }
+    }
+  }
+
+  test("ragged features or label arrays fail with a length message on either backend") {
+    import spark.implicits._
+    val rng = new scala.util.Random(79)
+    def messages(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
+    val sc = spark.sparkContext
+    // one short features row among rows of 3, next to row 0 in its partition
+    val oneShort = (0 until 40).map(i =>
+      (Array.fill(if (i == 1) 2 else 3)(rng.nextGaussian()), rng.nextGaussian()))
+      .toDF("features", "label")
+    // every row of the first partition has 3 features, every row of the
+    // second 4: each probe task passes, and merging their results fails
+    val byPartition = sc.parallelize(0 until 40, 2)
+      .map(i => (Array.fill(if (i < 20) 3 else 4)(0.5 * i), i.toDouble))
+      .toDF("features", "label")
+    assert(byPartition.rdd.getNumPartitions == 2)
+    // one multi-target gaussian label row of 3 targets among rows of 2
+    val oneLabel = (0 until 40).map(i =>
+      (Array.fill(3)(rng.nextGaussian()), Array.fill(if (i == 1) 3 else 2)(rng.nextGaussian())))
+      .toDF("features", "label")
+    for ((df, msg) <- Seq(oneShort -> "feature vector length 2 != expected 3",
+                          byPartition -> "feature vector length 4 != expected 3",
+                          oneLabel -> "label array length 3 != expected 2");
+         limit <- Seq(SlopeParams().localCellLimit, 0L)) {
+      val cachedBefore = sc.getPersistentRDDs.size
+      val e = intercept[Exception](Slope.fit(df, "features", "label",
+        SlopeParams(nSigma = 4, localCellLimit = limit)))
+      assert(messages(e).contains(msg), s"$msg, localCellLimit $limit: ${messages(e)}")
+      assert(sc.getPersistentRDDs.size == cachedBefore)
     }
   }
 

@@ -66,7 +66,7 @@ class RdaSourceSpec extends AnyFunSuite {
     // re-derive from the rda and compare values (provenance check)
     val (cols, rows) = RdaExport.load(RdaDir, "bodyfat")
     val committed = spark.read
-      .parquet("/root/repo/golden/datasets/bodyfat.parquet")
+      .parquet("golden/datasets/bodyfat.parquet")
       .orderBy("row_id").collect()
     assert(committed.length == rows.length)
     assert(committed.head.schema.fieldNames.toSeq == cols.toSeq)
@@ -76,7 +76,7 @@ class RdaSourceSpec extends AnyFunSuite {
   }
 
   test("bodyfat gaussian: near-saturated step matches closed-form OLS") {
-    val df = spark.read.parquet("/root/repo/golden/datasets/bodyfat.parquet")
+    val df = spark.read.parquet("golden/datasets/bodyfat.parquet")
     val feats = df.columns.filter(c => c != "row_id" && c != "label")
     val m = Slope.fit(
       df.select(array(feats.map(col): _*).as("features"), col("label")),
@@ -100,7 +100,7 @@ class RdaSourceSpec extends AnyFunSuite {
   }
 
   test("abalone poisson and student multi-task fit their real data") {
-    val ab = spark.read.parquet("/root/repo/golden/datasets/abalone.parquet")
+    val ab = spark.read.parquet("golden/datasets/abalone.parquet")
     val abFeats = ab.columns.filter(c => c != "row_id" && c != "label")
     val mp = Slope.fit(
       ab.select(array(abFeats.map(col): _*).as("features"), col("label")),
@@ -110,7 +110,7 @@ class RdaSourceSpec extends AnyFunSuite {
       s"poisson dev ratio ${mp.devianceRatios.last}")
     assert(mp.devianceRatios.toSeq == mp.devianceRatios.sorted.toSeq)
 
-    val st = spark.read.parquet("/root/repo/golden/datasets/student.parquet")
+    val st = spark.read.parquet("golden/datasets/student.parquet")
     val stFeats = st.columns.filter(c => c != "row_id" && !c.startsWith("label_"))
     val mt = Slope.fit(
       st.select(array(stFeats.map(col): _*).as("features"),
