@@ -182,7 +182,7 @@ object BenchScale10 {
     }
     // merge with any prior rows (subset runs must not drop the stable
     // measurements); fresh rows win, overall order = Queries order
-    val outPath = java.nio.file.Paths.get("/root/repo/scaling_nondedup.json")
+    val outPath = java.nio.file.Paths.get("scaling_nondedup.json")
     val prior: Map[String, String] =
       if (java.nio.file.Files.exists(outPath)) {
         val txt = new String(java.nio.file.Files.readAllBytes(outPath), "UTF-8")

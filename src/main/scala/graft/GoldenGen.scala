@@ -8,7 +8,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * [[SparkEntry.goldenQueries]]. Run after any INTENTIONAL behavior
   * change to those surfaces:
   *
-  * {{{ sbt "runMain graft.GoldenGen /root/testdata/sf0.01 /root/repo/golden" }}}
+  * {{{ sbt "runMain graft.GoldenGen /root/testdata/sf0.01 golden" }}}
   *
   * The queries are bit-deterministic (content-sorted local fits, pure
   * hash sketches, driver-local quantizer training), so a regenerated
@@ -19,7 +19,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 object GoldenGen {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val outDir = if (args.length > 1) args(1) else "/root/repo/golden"
+    val outDir = if (args.length > 1) args(1) else "golden"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -76,8 +76,9 @@ object ScalingGate {
       finally System.clearProperty("graft.slope.localCellLimitOverride")
     }
 
-  /** Current round = 1 + the highest committed BENCH_r{N}.json. */
-  def currentRound(repoDir: String = "/root/repo"): Int = {
+  /** Current round = 1 + the highest BENCH_r{N}.json in `repoDir` (by
+    * default the working directory). */
+  def currentRound(repoDir: String = "."): Int = {
     val re = """BENCH_r(\d+)\.json""".r
     val d = new java.io.File(repoDir)
     val rounds = Option(d.list()).getOrElse(Array.empty[String])
@@ -104,7 +105,7 @@ object ScalingGate {
     // always re-measures (re-certify after a suspected regression).
     val round = currentRound()
     val outPath = java.nio.file.Paths.get(
-      f"/root/repo/SCALING_r$round%02d.json")
+      f"SCALING_r$round%02d.json")
     val force = sys.env.getOrElse("SPARK_GRAFT_GATE_FORCE", "0") == "1"
     if (!force && java.nio.file.Files.exists(outPath)) {
       val txt = new String(

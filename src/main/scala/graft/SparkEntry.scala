@@ -2876,7 +2876,7 @@ object SparkEntry {
       // identical 20-row output up to the golden regen.
       val m = Slope.fit(featVec.select(col("features"), col("label")),
         "features", "label", SlopeParams(family = "binomial", nSigma = 10,
-          carryLearningRate = true, adaptiveRestart = true))
+          fistaWarmStart = true))
       SlopeServe.predictions(m, featVec, "features", Seq("response"))
         .withColumn("p_keep",
           element_at(element_at(col("response"), m.nSteps), 1))
@@ -3057,7 +3057,7 @@ object SparkEntry {
       // resets when it fights the prox direction
       val pp = SlopeParams(family = "binomial", nSigma = 6,
         tolDevChange = 0.0, tolDevRatio = 2.0,
-        carryLearningRate = true, adaptiveRestart = true)
+        fistaWarmStart = true)
       val (dist, loc) = distAndLocal(
         Slope.fit(base, "features", "label", pp.copy(localCellLimit = 0)),
         Slope.fit(base, "features", "label", pp))
@@ -6770,5 +6770,6 @@ object SparkEntry {
     "q_compression_ratio", "q_image_dhash_pairs",
     "q_video_frame_dups", "q_audio_dhash_pairs", "q_incremental_semantic")
 
-  private val GoldenDir = "/root/repo/golden"
+  // resolved against the working directory: each checkout reads its own
+  private val GoldenDir = java.nio.file.Paths.get("golden").toAbsolutePath.toString
 }

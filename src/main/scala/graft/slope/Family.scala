@@ -34,10 +34,6 @@ sealed trait Family extends Serializable {
 
   /** Per-row pseudo-gradient, written into `out` (length m). */
   def pseudoGradientRow(y: Array[Double], lp: Array[Double], out: Array[Double]): Unit
-
-  /** Intercept-only model from per-target label means
-    * (reference `fitNullModel`). */
-  def fitNullModel(yMeans: Array[Double]): Array[Double]
 }
 
 object Family {
@@ -76,7 +72,6 @@ case object Gaussian extends Family {
     var k = 0
     while (k < y.length) { out(k) = lp(k) - y(k); k += 1 }
   }
-  def fitNullModel(yMeans: Array[Double]): Array[Double] = yMeans
 }
 
 /** Logistic loss on y in {-1,+1} (reference `src/families/binomial.h:15-44`). */
@@ -90,12 +85,6 @@ case object Binomial extends Family {
   }
   def pseudoGradientRow(y: Array[Double], lp: Array[Double], out: Array[Double]): Unit =
     out(0) = -y(0) / (1.0 + truncExp(y(0) * lp(0)))
-  def fitNullModel(yMeans: Array[Double]): Array[Double] = {
-    // yMeans(0) = mean of (y+1)/2, clamped (reference binomial.h:31-39)
-    val pmin = 1e-9
-    val mu = math.min(math.max(yMeans(0), pmin), 1.0 - pmin)
-    Array(truncLog(mu / (1.0 - mu)))
-  }
 }
 
 /** Poisson negative log-likelihood (reference `src/families/poisson.h:15-38`). */
@@ -107,8 +96,6 @@ case object Poisson extends Family {
     -(truncExp(lp(0)) * (lp(0) - 1.0) - Gamma.logGamma(y(0) + 1.0))
   def pseudoGradientRow(y: Array[Double], lp: Array[Double], out: Array[Double]): Unit =
     out(0) = truncExp(lp(0)) - y(0)
-  def fitNullModel(yMeans: Array[Double]): Array[Double] =
-    Array(truncLog(yMeans(0)))
 }
 
 /** Multinomial logistic with K-1 targets and an implicit zero logit for
@@ -148,13 +135,5 @@ case object Multinomial extends Family {
     val l = lse(lp)
     var k = 0
     while (k < lp.length) { out(k) = truncExp(lp(k) - l) - y(k); k += 1 }
-  }
-
-  def fitNullModel(yMeans: Array[Double]): Array[Double] = {
-    val m = yMeans.length
-    val logMu = yMeans.map(truncLog)
-    val tl = truncLog(1.0 - yMeans.sum)
-    val shift = (logMu.sum + m * tl) / (m + 1.0)
-    logMu.map(_ - shift)
   }
 }

@@ -5,7 +5,6 @@ import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
 
 /** Model scoring over a DataFrame (reference `R/score.R`): per-path-step
   * mse / mae / deviance / misclass / AUC with the reference's
@@ -63,9 +62,7 @@ object SlopeScore {
     OrderedFold.described(sc, "slope score") {
       kernelSums(model, sumMs) { kernel =>
         val sel = Slope.selectFrame(df, featuresCol, labelCol, model.family)
-        // the optimized schema: a cast that cannot add null elements is gone from it
-        val schema = sel.queryExecution.optimizedPlan.schema
-        val pass = new ScorePass(kernel, schema("f").dataType, schema("l").dataType, featuresCol)
+        val pass = new ScorePass(kernel, RowCodec(sel, featuresCol, labelCol))
         OrderedFold.run[InternalRow, Array[Double]](sel.queryExecution.toRdd, "slope score",
             8L * kernel.zero.length, OrderedFold.budget(sc), kernel.merge)((in, h) =>
           sc.runJob(in, pass, h)).getOrElse(kernel.zero)
@@ -391,29 +388,17 @@ private object StepErrors {
 /** [[SlopeScore.scoreMany]]'s task: adds every row of a partition of the
   * scoring frame ([[Slope.selectFrame]]'s `f` and `l`, as Catalyst's
   * internal rows) to one [[StepErrors]] buffer, skipping rows with a null
-  * features value or a null label. Features decode through
-  * [[LinearPredictors.vector]], the serving expression's decoder; labels
-  * to the values an external `Row` holds. A named class, so launching it
-  * runs no closure cleaning. */
-private[slope] final class ScorePass(kernel: StepErrors, featureType: DataType,
-                                     labelType: DataType, featuresCol: String)
+  * features value or a null label. Rows decode through the engine's
+  * [[RowCodec]], the decoder of fitting and serving, before the iterator
+  * moves on. A named class, so launching it runs no closure cleaning. */
+private[slope] final class ScorePass(kernel: StepErrors, codec: RowCodec)
     extends ((TaskContext, Iterator[InternalRow]) => Array[Double]) with Serializable {
-  private val checkNulls = LinearPredictors.nullElements(featureType)
   def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[Double] = {
     val buf = kernel.zero
     while (rows.hasNext) {
       val r = rows.next()
-      if (!r.isNullAt(0) && !r.isNullAt(1))
-        kernel.add(buf, LinearPredictors.vector(r.get(0, featureType), featuresCol, checkNulls),
-          label(r))
+      if (!r.isNullAt(0) && !r.isNullAt(1)) kernel.add(buf, codec.features(r), codec.label(r))
     }
     buf
-  }
-
-  private def label(r: InternalRow): Any = labelType match {
-    case DoubleType => r.getDouble(1)
-    case StringType => r.getUTF8String(1).toString
-    // read at once, before the row moves on
-    case ArrayType(et, _) => r.getArray(1).toSeq[Any](et)
   }
 }

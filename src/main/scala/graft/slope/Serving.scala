@@ -1,15 +1,14 @@
 package graft.slope
 
-import org.apache.spark.ml.linalg.{DenseVector, SQLDataTypes, Vector}
+import org.apache.spark.ml.linalg.{SQLDataTypes, Vector}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnShim
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, UserDefinedType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Prediction / coefficient-serving layer (reference `R/predict.R`,
   * `R/coef.R`, `R/interpolatePenalty.R`, `R/interpolateCoefficients.R`).
@@ -62,33 +61,29 @@ object SlopeServe {
     * one entry per requested sigma, in the caller's order. */
   def coefExact(df: DataFrame, featuresCol: String, labelCol: String,
                 params: SlopeParams, sigmas: Array[Double])
-    : Array[(Array[Double], Array[Double])] = {
-    require(sigmas.nonEmpty, "sigmas must be non-empty")
-    require(sigmas.forall(_ >= 0), "sigma must be non-negative")
-    val sorted = sigmas.distinct.sortBy(-(_: Double))
-    val m = Slope.fit(df, featuresCol, labelCol,
-      params.copy(sigma = Some(sorted)))
-    sigmas.map { s =>
-      val i = sorted.indexWhere(_ == s)
-      (m.intercepts(i), m.coefs(i))
-    }
-  }
+    : Array[(Array[Double], Array[Double])] =
+    exactPath(sigmas)(sorted =>
+      Slope.fit(df, featuresCol, labelCol, params.copy(sigma = Some(sorted))))
 
   /** [[coefExact]] over pre-collected, content-sorted rows (the
-    * features and labels [[Slope.collectLocal]] returns) — for callers that already hold
-    * the local-path data from the main fit (r17 optimization round:
-    * q_coef_interp paid a second full collect + content sort of the
-    * same frame for its exact-refit path). Identical mechanics: one
-    * descending user-sigma path, each point warm-starting from the
-    * previous. */
-  def coefExact(xs: Array[org.apache.spark.ml.linalg.Vector],
-                rawY: Array[Any], params: SlopeParams,
+    * features and labels [[Slope.collectLocal]] returns) — for callers
+    * that already hold the local-path data from the main fit
+    * (q_coef_interp refits the frame it has collected and sorted once).
+    * Identical mechanics: one descending user-sigma path, each point
+    * warm-starting from the previous. */
+  def coefExact(xs: Array[Vector], rawY: Array[Any], params: SlopeParams,
                 sigmas: Array[Double])
+    : Array[(Array[Double], Array[Double])] =
+    exactPath(sigmas)(sorted => Slope.fitLocal(xs, rawY, params.copy(sigma = Some(sorted))))
+
+  /** Fits the distinct `sigmas`, descending, as one user-sigma path and
+    * slices it back into the caller's order. */
+  private def exactPath(sigmas: Array[Double])(fit: Array[Double] => SlopeModel)
     : Array[(Array[Double], Array[Double])] = {
     require(sigmas.nonEmpty, "sigmas must be non-empty")
     require(sigmas.forall(_ >= 0), "sigma must be non-negative")
     val sorted = sigmas.distinct.sortBy(-(_: Double))
-    val m = Slope.fitLocal(xs, rawY, params.copy(sigma = Some(sorted)))
+    val m = fit(sorted)
     sigmas.map { s =>
       val i = sorted.indexWhere(_ == s)
       (m.intercepts(i), m.coefs(i))
@@ -213,15 +208,16 @@ private[slope] final class PathPredictor(model: SlopeModel) extends Serializable
   * of a row (array<double> or an ml `Vector`) to array(steps) of
   * array(m) through [[PathPredictor]]. The generated code calls
   * [[linpred]] on this object, which the stage holds by reference, so
-  * its size does not grow with the cube. Null features give null; a null
-  * element of `column`'s array fails. */
+  * its size does not grow with the cube. Features decode through the
+  * engine's [[RowCodec]], the decoder of fitting and scoring. Null
+  * features give null; a null element of `column`'s array fails. */
 private[slope] case class LinearPredictors(child: Expression, predictor: PathPredictor,
                                            column: String)
     extends UnaryExpression {
 
   // from the optimized child's type: a cast that cannot add null
   // elements is gone by then, so arrays that hold none are not scanned
-  private lazy val checkNulls = LinearPredictors.nullElements(child.dataType)
+  private lazy val codec = RowCodec.features(child.dataType, column)
 
   override def dataType: DataType =
     ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
@@ -237,7 +233,7 @@ private[slope] case class LinearPredictors(child: Expression, predictor: PathPre
 
   /** Shared by the interpreted and generated paths. */
   def linpred(features: Any): ArrayData = {
-    val x = LinearPredictors.vector(features, column, checkNulls)
+    val x = codec.vector(features)
     predictor.check(x)
     val steps = new Array[Any](predictor.nSteps)
     val lp = new Array[Double](predictor.m)
@@ -259,31 +255,4 @@ private[slope] case class LinearPredictors(child: Expression, predictor: PathPre
 
   override protected def withNewChildInternal(c: Expression): LinearPredictors =
     copy(child = c)
-}
-
-private[slope] object LinearPredictors {
-  private val VectorType = SQLDataTypes.VectorType.asInstanceOf[UserDefinedType[Vector]]
-
-  /** Whether an array features value of `dataType` can hold a null
-    * element. */
-  def nullElements(dataType: DataType): Boolean = dataType match {
-    case ArrayType(_, containsNull) => containsNull
-    case _ => false
-  }
-
-  /** The row decoder of serving and scoring: a features value as
-    * Catalyst holds it, array<double> data or an ml `Vector` struct
-    * (dense or sparse, as stored), to a `Vector`. With `checkNulls`, a
-    * null array element fails with an `IllegalArgumentException` that
-    * names `column` and the element's index. */
-  def vector(features: Any, column: String, checkNulls: Boolean): Vector = features match {
-    case a: ArrayData =>
-      var i = 0
-      while (checkNulls && i < a.numElements()) {
-        if (a.isNullAt(i)) throw Slope.nullElement(column, i)
-        i += 1
-      }
-      new DenseVector(a.toDoubleArray())
-    case r: InternalRow => VectorType.deserialize(r)
-  }
 }

@@ -2,11 +2,13 @@ package graft.slope
 
 import graft.slope.kernels.{LambdaSequence, Screening}
 import org.apache.spark.TaskContext
-import org.apache.spark.ml.linalg.{DenseVector, SparseVector, Vector, Vectors}
+import org.apache.spark.ml.linalg.{DenseVector, SQLDataTypes, SparseVector, Vector}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, NullType, StringType, UserDefinedType}
 
 /** Fit configuration — field-for-field the reference's `owl()` surface
   * (jolars/golem `R/owl.R:271-293`), with Spark-specific execution knobs
@@ -55,18 +57,18 @@ case class SlopeParams(
     /** ADMM needs an |active|^2 Gram on the driver; above this active-set
       * size fall back to FISTA (never materialize huge Grams). */
     admmMaxActive: Int = 4096,
-    /** Carry the converged FISTA learning rate across sigma steps (the
-      * reference resets it per step, family.h:111 — a local): each
-      * backtracking halving is a full distributed pass, and warm starts
-      * keep the local curvature nearly unchanged, so re-probing from 1.0
-      * per step is pure waste at 100 TB. Off by default: it perturbs the
-      * iterate trajectory (same fixed point, different rounding tail),
-      * which would churn committed goldens for no local-mode gain. */
-    carryLearningRate: Boolean = false,
-    /** Gradient-based adaptive restart (O'Donoghue & Candes 2015): reset
-      * FISTA momentum when it opposes the prox step. Driver-side check,
-      * zero extra passes; off by default for golden stability. */
-    adaptiveRestart: Boolean = false)
+    /** Warm FISTA across the path: carry the converged learning rate
+      * across sigma steps (the reference resets it per step,
+      * family.h:111 — a local; each backtracking halving is a full
+      * distributed pass, and warm starts keep the local curvature nearly
+      * unchanged, so re-probing from 1.0 per step is pure waste at
+      * 100 TB), and restart momentum when it opposes the prox step
+      * (gradient-based adaptive restart, O'Donoghue & Candes 2015; a
+      * driver-side check, zero extra passes). Off by default: it
+      * perturbs the iterate trajectory (same fixed point, different
+      * rounding tail), which would churn committed goldens for no
+      * local-mode gain. */
+    fistaWarmStart: Boolean = false)
 
 /** Per-path-step diagnostics (reference `R/setupDiagnostics.R:9-25`). */
 case class StepDiagnostics(primals: Array[Double], duals: Array[Double],
@@ -144,7 +146,8 @@ object Slope {
     * array<double> (column `f`), label cast per family (column `l`),
     * then any `extra` columns — ONE definition so [[collectLocal]],
     * `fit`, SlopeCv's shared collect and SlopeScore's scoring pass can
-    * never drift. */
+    * never drift. Its rows are decoded in one place, the [[RowCodec]]
+    * built from its optimized schema. */
   private[slope] def selectFrame(df: DataFrame, featuresCol: String,
                                  labelCol: String, family: String,
                                  extra: Seq[Column] = Nil): DataFrame = {
@@ -165,71 +168,54 @@ object Slope {
       case _            => col(featuresCol)
     }
 
-  /** A features value of `column` (an ml Vector or a sequence of
-    * doubles) as a Vector; a null value or element fails. */
-  private[slope] def toVec(a: Any, column: String): Vector = a match {
-    case null => throw new IllegalArgumentException("null feature vector")
-    case v: Vector => v
-    case s: scala.collection.Seq[_] =>
-      val out = new Array[Double](s.length)
-      var i = 0
-      s.foreach { e =>
-        if (e == null) throw nullElement(column, i)
-        out(i) = e.asInstanceOf[Double]
-        i += 1
-      }
-      Vectors.dense(out)
-    case other => throw new IllegalArgumentException(
-      s"unsupported features type: ${other.getClass}")
-  }
-
-  /** The error for a null element of an array features value. */
-  private[slope] def nullElement(column: String, index: Int): IllegalArgumentException =
-    new IllegalArgumentException(
-      s"null element at index $index of the feature vector in column '$column'")
-
-  /** The local path's rows: collect → cast ([[selectFrame]]) →
-    * vectorize → content sort, as [[fitLocal]] reads them inside `fit`.
-    * Returns the features, the labels and the collected rows (for
-    * `extra` columns, which follow the label at index 2), all in
-    * content order ([[contentOrderIndices]]). A caller that fits several
-    * models over one frame (q_coef_interp; SlopeCv, which carries its
-    * fold columns as `extra`) collects and sorts once, and feeding the
-    * result to [[fitLocal]] is bit-identical to `fit(df, ...)` on the
-    * local path. (collect() order follows the parquet split plan, which
-    * shifts with spark.default.parallelism — the content sort makes the
-    * FP summation order, and thus every fitted path, a function of the
-    * DATA only; ties are exact-duplicate rows, so the order is total
-    * where it matters.) Rows are checked by [[fitLocal]], not here. */
+  /** The local path's rows: collect → cast ([[selectFrame]]) → decode
+    * ([[RowCodec]], over the collected internal rows) → content sort, as
+    * [[fitLocal]] reads them inside `fit`. Returns the features, the
+    * labels and the collected internal rows (for `extra` columns, which
+    * follow the label from ordinal 2), all in content order
+    * ([[contentOrderIndices]]). A null features value or label fails,
+    * naming its column. A caller that fits several models over one frame
+    * (q_coef_interp; SlopeCv, which carries its fold columns as `extra`)
+    * collects and sorts once, and feeding the result to [[fitLocal]] is
+    * bit-identical to `fit(df, ...)` on the local path. (The collect
+    * order follows the parquet split plan, which shifts with
+    * spark.default.parallelism — the content sort makes the FP summation
+    * order, and thus every fitted path, a function of the DATA only;
+    * ties are exact-duplicate rows, so the order is total where it
+    * matters.) Row values are checked by [[fitLocal]], not here. */
   def collectLocal(df: DataFrame, featuresCol: String, labelCol: String,
                    params: SlopeParams = SlopeParams(), extra: Seq[Column] = Nil)
-      : (Array[Vector], Array[Any], Array[Row]) = {
-    val rows = selectFrame(df, featuresCol, labelCol, params.family, extra).collect()
-    val xs = rows.map(r => toVec(r.get(0), featuresCol))
-    val rawY = rows.map(_.get(1))
+      : (Array[Vector], Array[Any], Array[InternalRow]) = {
+    val sel = selectFrame(df, featuresCol, labelCol, params.family, extra)
+    val codec = RowCodec(sel, featuresCol, labelCol)
+    val rows = sel.queryExecution.executedPlan.executeCollect()
+    val (xs, rawY) = rows.map(codec.row).unzip
     val ord = contentOrderIndices(xs, rawY)
     (ord.map(xs), ord.map(rawY), ord.map(rows))
   }
 
   /** The one scan of a fit's input before anything is cached: ONE Spark
-    * job over `sel.rdd` (`sel` as [[selectFrame]] projects it) that
-    * folds every row into a [[ProbeStats]] ([[ProbeTask]]): the row
-    * count, p, and the label summary. Null features or labels fail here,
-    * naming their column, and so does any row [[ProbeStats.add]] rejects
-    * (a ragged or non-finite features row, a ragged label array), so
-    * nothing is cached before the rows are checked. Task results fold in
-    * task order ([[OrderedFold]]), so the gaussian sums are a function of
-    * the data and its partitioning. Returns the planned rows with the
-    * summary, so a distributed fit persists the rows this job read. */
+    * job over `sel.queryExecution.toRdd` (`sel` as [[selectFrame]]
+    * projects it) that decodes every row through its [[RowCodec]] and
+    * folds it into a [[ProbeStats]] ([[ProbeTask]]): the row count, p,
+    * and the label summary. A null features value, label or array
+    * element fails here, naming its column, and so does any row
+    * [[ProbeStats.add]] rejects (a ragged or non-finite features row, a
+    * ragged label array), so nothing is cached before the rows are
+    * checked. Task results fold in task order ([[OrderedFold]]), so the
+    * gaussian sums are a function of the data and its partitioning.
+    * Returns the same rows, decoded the same way, with the summary, so a
+    * distributed fit persists the rows this job read. */
   private[slope] def probe(sel: DataFrame, featuresCol: String, labelCol: String,
-                           family: String): (RDD[Row], ProbeStats) = {
-    val rows = sel.rdd
-    val task = new ProbeTask(featuresCol, labelCol, family)
+                           family: String): (RDD[(Vector, Any)], ProbeStats) = {
+    val codec = RowCodec(sel, featuresCol, labelCol)
+    val rows = sel.queryExecution.toRdd
+    val task = new ProbeTask(codec, family)
     val sc = rows.sparkContext
-    val stats = OrderedFold.run[Row, ProbeStats](rows, "slope probe", ProbeStats.Bytes,
+    val stats = OrderedFold.run[InternalRow, ProbeStats](rows, "slope probe", ProbeStats.Bytes,
         OrderedFold.budget(sc), ProbeStats.merge)((in, h) =>
       sc.runJob(in, task, h)).getOrElse(new ProbeStats(family))
-    (rows, stats)
+    (rows.map(codec.row), stats)
   }
 
   /** Whether a fit over the rows `stats` summarizes runs on the
@@ -259,7 +245,7 @@ object Slope {
           params: SlopeParams = SlopeParams()): SlopeModel = {
     checkArrayLabel(df.schema(labelCol).dataType.isInstanceOf[ArrayType], params.family)
     val sel = selectFrame(df, featuresCol, labelCol, params.family)
-    val (selRdd, probed) = probe(sel, featuresCol, labelCol, params.family)
+    val (rows, probed) = probe(sel, featuresCol, labelCol, params.family)
 
     if (runsLocal(probed, params)) {
       // driver-local path: zero Spark jobs inside the solver loop
@@ -269,9 +255,8 @@ object Slope {
       // distributed path: the probe has checked these rows
       val r = response(probed, params.family)
       val enc = r.encode
-      val rdd = selRdd.map(row => (toVec(row.get(0), featuresCol), enc(row.get(1))))
-      val backend = new DistributedBackend(rdd, probed.p, r.m, params.fitIntercept,
-        knownN = probed.n)
+      val backend = new DistributedBackend(rows.map(xy => (xy._1, enc(xy._2))), probed.p,
+        r.m, params.fitIntercept, knownN = probed.n)
       try fitBackend(backend, params, r.yCenter, r.classNames, r.nClasses, r.classCounts)
       finally backend.unpersist()
     }
@@ -338,11 +323,10 @@ object Slope {
     val labelKey = new Array[String](n)
     var i = 0
     while (i < n) {
-      // arrays/seqs (multi-task labels) key by CONTENT — Array.toString
-      // is an identity hash and Seq subclasses render differently
+      // arrays (multi-task labels) key by CONTENT — Array.toString is
+      // an identity hash
       labelKey(i) = rawY(i) match {
         case a: Array[Double] => a.mkString(",")
-        case s: scala.collection.Seq[_] => s.mkString(",")
         case other => String.valueOf(other)
       }
       i += 1
@@ -415,15 +399,13 @@ object Slope {
     case s: String => s.toDouble
     // a length-1 array<double> label infers m = 1 and lands on the
     // scalar encoder; unwrap it instead of failing mid-job
-    case s: scala.collection.Seq[_] if s.length == 1 => anyToDouble(s.head)
     case arr: Array[Double] if arr.length == 1 => arr(0)
     case other => throw new IllegalArgumentException(s"non-numeric label: $other")
   }
 
-  /** Multi-target label row -> Array[Double] (Spark hands back Seq). */
+  /** Multi-target label row -> Array[Double] (as [[RowCodec]] decodes it). */
   private[slope] def anyToDoubleArray(a: Any): Array[Double] = a match {
     case arr: Array[Double] => arr
-    case s: scala.collection.Seq[_] => s.map(anyToDouble).toArray
     case other => throw new IllegalArgumentException(
       s"expected an array-typed multi-target label, got: $other")
   }
@@ -634,7 +616,7 @@ object Slope {
         BackendKernels.sliceGram(gramSet, gramU._1, gramU._2, active, m).get
       }
     // FISTA learning rate carried across sigma steps / KKT growth
-    // iterations when params.carryLearningRate is set
+    // iterations when params.fistaWarmStart is set
     var carriedLr = 1.0
 
     val betasOut = scala.collection.mutable.ArrayBuffer[Array[Double]]()
@@ -732,8 +714,7 @@ object Slope {
         val res = Fista.fit(backend, active, betaA, lamSig, family, intercept,
           params.maxPasses, params.tolRelGap, params.tolInfeas,
           params.diagnostics,
-          lrInit = if (params.carryLearningRate) carriedLr else 1.0,
-          adaptiveRestart = params.adaptiveRestart, init = init)
+          warmLr = if (params.fistaWarmStart) Some(carriedLr) else None, init = init)
         carriedLr = res.finalLr
         // a full-set solve ends holding the full-set evaluation at its
         // result, which the KKT check and the next solve then reuse
@@ -982,7 +963,7 @@ private[slope] final class ProbeStats(family: String) extends Serializable {
     if (n == 0) p = x.size
     require(x.size == p, ProbeStats.featureLength(x.size, p))
     require(ProbeStats.allFinite(x), "non-finite (NaN or infinite) feature values are not allowed")
-    val labelIsArray = y.isInstanceOf[scala.collection.Seq[_]] || y.isInstanceOf[Array[Double]]
+    val labelIsArray = y.isInstanceOf[Array[Double]]
     Slope.checkArrayLabel(labelIsArray, family)
     if (gaussian) {
       val ys = if (labelIsArray) Slope.anyToDoubleArray(y) else Array(Slope.anyToDouble(y))
@@ -1039,19 +1020,92 @@ private[slope] object ProbeStats {
   }
 }
 
-/** The probe's task: folds a run of [[Slope.selectFrame]] rows into a
-  * [[ProbeStats]], rejecting null features or labels with a message
-  * that names their column; [[ProbeStats.add]] checks the rest. */
-private[slope] final class ProbeTask(featuresCol: String, labelCol: String, family: String)
-    extends ((TaskContext, Iterator[Row]) => ProbeStats) with Serializable {
-  def apply(ctx: TaskContext, rows: Iterator[Row]): ProbeStats = {
+/** The probe's task: decodes a run of [[Slope.selectFrame]]'s Catalyst
+  * rows through the fit's [[RowCodec]] (which rejects nulls, naming their
+  * column) and folds them into a [[ProbeStats]], whose
+  * [[ProbeStats.add]] checks the rest. */
+private[slope] final class ProbeTask(codec: RowCodec, family: String)
+    extends ((TaskContext, Iterator[InternalRow]) => ProbeStats) with Serializable {
+  def apply(ctx: TaskContext, rows: Iterator[InternalRow]): ProbeStats = {
     val s = new ProbeStats(family)
     while (rows.hasNext) {
-      val r = rows.next()
-      require(!r.isNullAt(0), s"null feature vector in column '$featuresCol'")
-      require(!r.isNullAt(1), s"null label in column '$labelCol'")
-      s.add(Slope.toVec(r.get(0), featuresCol), r.get(1))
+      val (x, y) = codec.row(rows.next())
+      s.add(x, y)
     }
     s
+  }
+}
+
+/** The engine's one row decoder, of [[Slope.selectFrame]]'s Catalyst rows
+  * (features at ordinal 0, the label at 1), for the probe, the
+  * distributed fit's row map, [[Slope.collectLocal]], [[ScorePass]] and
+  * [[LinearPredictors]]. Features (array<double> data or an ml `Vector`
+  * struct) become a `Vector`, dense or sparse as stored; a label becomes
+  * a `Double`, a `String` or an `Array[Double]`, as `selectFrame` casts
+  * it. An array is scanned for null elements only when its type can hold
+  * one, and a null element fails, naming the column and the index.
+  * Decoded values are copies, so a reused row (`toRdd`) may move on. */
+private[slope] final class RowCodec(featureType: DataType, featuresCol: String,
+                                    labelType: DataType, labelCol: String)
+    extends Serializable {
+  require(featureType == SQLDataTypes.VectorType || featureType.isInstanceOf[ArrayType],
+    s"unsupported features type in column '$featuresCol': ${featureType.catalogString}")
+  private val featureNulls = RowCodec.nullElements(featureType)
+  private val labelNulls = RowCodec.nullElements(labelType)
+
+  /** A features value as Catalyst holds it, as a `Vector`. */
+  def vector(value: Any): Vector = value match {
+    case a: ArrayData => new DenseVector(doubles(a, featureNulls, "feature vector", featuresCol))
+    case r: InternalRow => RowCodec.VectorType.deserialize(r)
+  }
+
+  /** The features of a row whose features are not null. */
+  def features(row: InternalRow): Vector = vector(row.get(0, featureType))
+
+  /** The label of a row whose label is not null. */
+  def label(row: InternalRow): Any = labelType match {
+    case DoubleType => row.getDouble(1)
+    case StringType => row.getUTF8String(1).toString
+    case _: ArrayType => doubles(row.getArray(1), labelNulls, "label array", labelCol)
+  }
+
+  /** The features and the label of a fit's row; a null one fails,
+    * naming its column. */
+  def row(r: InternalRow): (Vector, Any) = {
+    require(!r.isNullAt(0), s"null feature vector in column '$featuresCol'")
+    require(!r.isNullAt(1), s"null label in column '$labelCol'")
+    (features(r), label(r))
+  }
+
+  private def doubles(a: ArrayData, checkNulls: Boolean, what: String,
+                      column: String): Array[Double] = {
+    var i = 0
+    while (checkNulls && i < a.numElements()) {
+      if (a.isNullAt(i)) throw new IllegalArgumentException(
+        s"null element at index $i of the $what in column '$column'")
+      i += 1
+    }
+    a.toDoubleArray()
+  }
+}
+
+private[slope] object RowCodec {
+  private val VectorType = SQLDataTypes.VectorType.asInstanceOf[UserDefinedType[Vector]]
+
+  /** The codec of `sel`, a [[Slope.selectFrame]] projection, from its
+    * optimized schema. */
+  def apply(sel: DataFrame, featuresCol: String, labelCol: String): RowCodec = {
+    val schema = sel.queryExecution.optimizedPlan.schema
+    new RowCodec(schema("f").dataType, featuresCol, schema("l").dataType, labelCol)
+  }
+
+  /** Serving's codec, of features values of `featureType` alone. */
+  def features(featureType: DataType, featuresCol: String): RowCodec =
+    new RowCodec(featureType, featuresCol, NullType, "")
+
+  /** Whether an array value of `dataType` can hold a null element. */
+  def nullElements(dataType: DataType): Boolean = dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => false
   }
 }

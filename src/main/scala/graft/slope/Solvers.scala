@@ -42,8 +42,7 @@ private[slope] object Fista {
           tolRelGap: Double,
           tolInfeas: Double,
           diagnostics: Boolean,
-          lrInit: Double = 1.0,
-          adaptiveRestart: Boolean = false,
+          warmLr: Option[Double] = None,
           init: Option[(Double, Double, Array[Double])] = None): SolveResult = {
 
     val a = active.length
@@ -57,11 +56,12 @@ private[slope] object Fista {
 
     // The reference resets learning_rate = 1.0 per fit (family.h:111,
     // a local), so every sigma step re-pays the backtracking halvings —
-    // each one a full distributed pass. `lrInit` lets the path loop
+    // each one a full distributed pass. `warmLr` lets the path loop
     // carry the converged rate across sigma steps (warm starts keep the
-    // local curvature nearly unchanged), opt-in via
-    // SlopeParams.carryLearningRate.
-    var learningRate = if (lrInit > 0 && !lrInit.isNaN) lrInit else 1.0
+    // local curvature nearly unchanged) and turns on adaptive restart,
+    // opt-in via SlopeParams.fistaWarmStart.
+    val adaptiveRestart = warmLr.isDefined
+    var learningRate = warmLr.filter(lr => lr > 0 && !lr.isNaN).getOrElse(1.0)
     val eta = 0.5
     var t = 1.0
 

@@ -13,7 +13,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * rda objects themselves (including the reference's `foream` typo) so
   * a reference user's column references port verbatim.
   *
-  * {{{ sbt "runMain graft.sources.RdaExport /root/reference/data /root/repo/golden/datasets" }}}
+  * {{{ sbt "runMain graft.sources.RdaExport /root/reference/data golden/datasets" }}}
   */
 object RdaExport {
 
@@ -96,7 +96,7 @@ object RdaExport {
   def main(args: Array[String]): Unit = {
     val rdaDir = if (args.nonEmpty) args(0) else "/root/reference/data"
     val outDir =
-      if (args.length > 1) args(1) else "/root/repo/golden/datasets"
+      if (args.length > 1) args(1) else "golden/datasets"
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -513,6 +513,50 @@ class MlApiSpec extends AnyFunSuite {
     }
   }
 
+  test("a null element in an array label fails a fit on either backend, naming it") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rng = new scala.util.Random(83)
+    val rows = (0 until 40).map { i =>
+      val y: Seq[Any] = if (i == 17) Seq(0.5, null) else Seq.fill(2)(rng.nextGaussian())
+      Row(Seq.fill(3)(rng.nextGaussian()), y)
+    }
+    val df = spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("feats", ArrayType(DoubleType, containsNull = false)),
+      StructField("target", ArrayType(DoubleType, containsNull = true)))))
+    for (limit <- Seq(SlopeParams().localCellLimit, 0L)) {
+      val e = intercept[Exception](Slope.fit(df, "feats", "target",
+        SlopeParams(nSigma = 4, localCellLimit = limit)))
+      val found = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+        .exists(t => t.isInstanceOf[IllegalArgumentException] &&
+          t.getMessage.contains("null element at index 1 of the label array in column 'target'"))
+      assert(found, s"localCellLimit $limit: $e")
+    }
+  }
+
+  test("collectLocal returns sparse ml Vector features sparse, equal to the input") {
+    import org.apache.spark.ml.linalg.{SparseVector, Vectors}
+    import spark.implicits._
+    val rng = new scala.util.Random(97)
+    val rows = (0 until 30).map { i =>
+      val idx = (0 until 6).filter(_ => rng.nextDouble() < 0.4).toArray
+      (Vectors.sparse(6, idx, idx.map(_ => rng.nextGaussian())), i.toDouble)
+    }
+    val (xs, ys, _) = Slope.collectLocal(rows.toDF("features", "label"), "features", "label")
+    assert(xs.length == rows.length)
+    // content order moves the rows; each label names its input row
+    for ((x, y) <- xs.zip(ys)) {
+      val want = rows(y.asInstanceOf[Double].toInt)._1.toSparse
+      x match {
+        case s: SparseVector =>
+          assert(s.size == want.size && s.indices.sameElements(want.indices) &&
+            s.values.sameElements(want.values), s"row $y: $s vs $want")
+        case other => fail(s"row $y decoded dense: $other")
+      }
+    }
+  }
+
   test("non-finite features fail at ingest with a message that names them") {
     import spark.implicits._
     val rng = new scala.util.Random(59)

@@ -316,11 +316,39 @@ class ServingSpec extends AnyFunSuite with BeforeAndAfterAll {
       val served = SlopeServe.withLinearPredictors(model, plain, "feats").queryExecution
         .optimizedPlan.flatMap(_.expressions.flatMap(_.collect { case lp: LinearPredictors => lp }))
       assert(served.nonEmpty &&
-        served.forall(lp => !LinearPredictors.nullElements(lp.child.dataType)), served)
+        served.forall(lp => !RowCodec.nullElements(lp.child.dataType)), served)
       val scored = Slope.selectFrame(plain, "feats", "target", "gaussian")
         .queryExecution.optimizedPlan.schema("f").dataType
-      assert(!LinearPredictors.nullElements(scored), scored)
+      assert(!RowCodec.nullElements(scored), scored)
     } finally plain.unpersist()
+  }
+
+  test("scoreMany: a null element of an array label fails, naming column and index") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rng = new scala.util.Random(89)
+    val xs = Array.fill(40)(Vectors.dense(Array.fill(3)(rng.nextGaussian())))
+    val ys = Array.fill(40)(Array.fill(2)(rng.nextGaussian()))
+    val model = Slope.fitLocal(xs.map(x => x: Vector), ys.map(y => y: Any), SlopeParams(nSigma = 4))
+    assert(model.m == 2)
+    val df = spark.createDataFrame(
+      xs.indices.map { i =>
+        val y: Seq[Any] = if (i == 9) Seq(0.5, null) else ys(i).toSeq
+        Row(xs(i).toArray.toSeq, y)
+      }.asJava,
+      StructType(Seq(StructField("feats", ArrayType(DoubleType, containsNull = false)),
+        StructField("target", ArrayType(DoubleType, containsNull = true)))))
+    for (cached <- Seq(false, true)) {
+      val in = if (cached) df.cache() else df
+      try {
+        val e = intercept[Exception](SlopeScore.scoreMany(model, in, "feats", "target", Seq("mse")))
+        val found = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+          .exists(t => t.isInstanceOf[IllegalArgumentException] &&
+            t.getMessage.contains("null element at index 1 of the label array in column 'target'"))
+        assert(found, s"cached=$cached: $e")
+      } finally if (cached) in.unpersist()
+    }
   }
 
   test("predictions: a 50-feature x 20-step model serves in whole-stage codegen") {
