@@ -8,7 +8,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * [[SparkEntry.goldenQueries]]. Run after any INTENTIONAL behavior
   * change to those surfaces:
   *
-  * {{{ sbt "runMain graft.GoldenGen /root/testdata/sf0.01 golden" }}}
+  * {{{ sbt "runMain graft.GoldenGen <sf0.01 dir> golden" }}}
   *
   * The queries are bit-deterministic (content-sorted local fits, pure
   * hash sketches, driver-local quantizer training), so a regenerated

@@ -13,7 +13,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * rda objects themselves (including the reference's `foream` typo) so
   * a reference user's column references port verbatim.
   *
-  * {{{ sbt "runMain graft.sources.RdaExport /root/reference/data golden/datasets" }}}
+  * {{{ sbt "runMain graft.sources.RdaExport <reference data dir> golden/datasets" }}}
   */
 object RdaExport {
 
